@@ -89,27 +89,30 @@ _MUT_SCHEMA = (
 _MUT_COLS = [f.split()[0] for f in _MUT_SCHEMA.split(", ")]
 
 
-def _max_deletion_us(kinds, writetimes, ttls) -> int:
-    """Max (writetime + ttl) over the given mutation rows, or -1 when
-    any row can never expire (a no-TTL cell, any tombstone, a counter
-    increment) — the reference's per-SSTable maxLocalDeletionTime.
-    -1 marks a segment that may NEVER be whole-dropped."""
-    mx = 0
-    for k, w, t in zip(kinds, writetimes, ttls):
-        if k not in (CELL, MARKER) or not t:
-            return -1
-        mx = max(mx, w + t)
-    return mx
-
-
-def _mut_arrow_types():
+def _mut_table(rows: list[tuple]):
+    """Mutation-log rows (mut_row tuples) as a pyarrow table in log
+    column order."""
     import pyarrow as pa
 
-    return [
+    types = [
         pa.string(), pa.string(), pa.string(), pa.string(), pa.string(),
         pa.string(), pa.int64(), pa.int64(), pa.int64(),
         pa.string(), pa.string(), pa.bool_(), pa.bool_(),
     ]
+    cols = list(zip(*rows))
+    return pa.table(
+        {c: pa.array(cols[i], type=t) for i, (c, t) in
+         enumerate(zip(_MUT_COLS, types))}
+    )
+
+
+def _pk_tokens(keys: list):
+    """Murmur3 tokens (int64 numpy array) of distinct partition keys,
+    hashed as text. A NULL key hashes as the empty key: it only has to
+    land inside its segment's token hull; reads of it never prune."""
+    from cassandra_spark.operators.murmur3 import tokens_of_texts
+
+    return tokens_of_texts(["" if k is None else k for k in keys])
 
 
 def mut_row(
@@ -1106,8 +1109,7 @@ class CqlTable:
         self.bloom_stats = {"checked": 0, "skipped": 0}
         # per-(segment, indexed column) Bloom filters over the column's
         # cell VALUES — the 2i read path's segment-pruning leg (lazy,
-        # sidecar-persisted; entries for compacted-away paths are never
-        # queried again since probes iterate self._segments)
+        # sidecar-persisted; _retire_into drops a retired path's entries)
         self._value_blooms: dict[tuple[str, str], object] = {}
         # per-(segment, indexed column) [min, max] value ranges — the SAI
         # per-SSTable min/max term metadata analogue; serves RANGE
@@ -2285,15 +2287,12 @@ class CqlTable:
         compaction/SizeTieredCompactionStrategy, unverified]`): segments
         bucket by size tier (log4 of file bytes, the reference's default
         bucket ratio); any tier holding >= min_threshold segments merges
-        into ONE new segment in the next tier up. Unlike
-        :meth:`compact_segments` (major), untiered segments are left
-        alone, so write amplification stays logarithmic in data volume.
-        Returns the new segment paths (possibly empty)."""
+        (:meth:`_merge`, level 0, no byte budget) into ONE new segment
+        in the next tier up. Unlike :meth:`compact_segments` (major),
+        untiered segments are left alone, so write amplification stays
+        logarithmic in data volume. Returns the new segment paths
+        (possibly empty)."""
         import math
-
-        import pyarrow.parquet as pq
-
-        from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
 
         tiers: dict[int, list[str]] = {}
         for seg in self._segments:
@@ -2304,68 +2303,150 @@ class CqlTable:
             members = tiers[tier]
             if len(members) < self.schema.compaction_min_threshold:
                 continue
-            created.append(self._merge_segments(members, "stcs"))
+            created += self._merge(members, "stcs")
         return created
 
-    def _merge_segments(self, members: list[str], tag: str) -> str:
-        """Merge the given flushed segments into one new segment (shared
-        by the STCS tier merge and the TWCS closed-window merge): history
-        preserved byte-for-byte, bloom sidecar rebuilt, max-deletion
-        stamp recomputed, members retired (not deleted — readers may
-        still hold them; GC is purge_retired's job)."""
+    def _new_segment_path(self, tag: str) -> str:
+        """Canonical segment file name ``{table}-{tag}{seq:06d}.parquet``;
+        the sequence is monotone, so names never recycle."""
+        self._seg_counter += 1
+        return os.path.join(
+            self.spill_dir,
+            f"{self.schema.name}-{tag}{self._seg_counter:06d}.parquet",
+        )
+
+    def _write_segment(self, tbl, tag: str, level: int = 0) -> str:
+        """Write mutation rows ``tbl`` (a pyarrow table in log column
+        order) as one new segment — the single home of the segment
+        format: the file name, the WITH compression codec, the footer
+        stamps, the partition-key Bloom sidecar (Filter.db analogue,
+        persisted so snapshots carry it) and the in-session bloom /
+        token-range / level entries. Footer stamps (the only key-value
+        metadata written, so an input's stale stamps never carry over):
+
+        - ``max_deletion_us``: max(writetime + ttl), or -1 when any row
+          can never expire (a no-TTL cell, any tombstone, a counter
+          increment) — the reference's per-SSTable maxLocalDeletionTime;
+          -1 marks a segment that may NEVER be whole-dropped (TWCS);
+        - ``min_token`` / ``max_token``: the Murmur3 token hull of the
+          partition keys (the point-read path's range prune);
+        - ``lcs_level`` when ``level`` >= 1 (the leveled manifest entry
+          a keyspace restore rehydrates).
+
+        The caller registers the path in ``_segments``."""
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
 
-        bytes_in = sum(os.path.getsize(p) for p in members)
+        expiring = pc.and_(
+            pc.is_in(tbl.column("kind"), value_set=pa.array([CELL, MARKER])),
+            pc.fill_null(pc.not_equal(tbl.column("ttl"), 0), False),
+        )
+        if pc.all(expiring, min_count=0).as_py():
+            # exact sum: writetime + ttl may pass the int64 range
+            exact = pa.decimal128(20, 0)
+            expiry = pc.max(
+                pc.add(
+                    tbl.column("writetime").cast(exact),
+                    tbl.column("ttl").cast(exact),
+                )
+            ).as_py()
+            mdl = max(0, int(expiry or 0))
+        else:
+            mdl = -1
+        keys = pc.unique(tbl.column("pk")).to_pylist()
+        toks = _pk_tokens(keys)
+        meta = {b"max_deletion_us": str(mdl).encode()}
+        path = self._new_segment_path(tag)
+        if len(toks):
+            rng = (int(toks.min()), int(toks.max()))
+            meta[b"min_token"] = str(rng[0]).encode()
+            meta[b"max_token"] = str(rng[1]).encode()
+            self._seg_tokens[path] = rng
+        if level >= 1:
+            meta[b"lcs_level"] = str(level).encode()
+            self._seg_level[path] = level
+        pq.write_table(
+            tbl.replace_schema_metadata(meta), path, compression=self._codec()
+        )
+        bf = BloomFilter.for_keys(keys)
+        bf.save(sidecar_path(path))
+        self._blooms[path] = bf
+        return path
+
+    def _merge(
+        self, inputs: list[str], tag: str, level: int = 0,
+        budget: int | None = None,
+    ) -> list[str]:
+        """Merge segments ``inputs`` into new ``level`` segments — the one
+        compaction merge every strategy (STCS, TWCS, LCS, UCS, major
+        compaction) runs; strategies differ only in which inputs they
+        pick. History rows are a SET and pass through unchanged (LWW
+        stays a read-time reconcile, so asof/PITR reads keep working);
+        only their order changes: every output is a run sorted by
+        (token, pk), as an SSTable is. ``budget`` (estimated bytes)
+        re-splits the run on whole-partition boundaries only (same-token
+        pks stay together, so inclusive token ranges never touch across
+        outputs — the disjoint-range invariant leveled reads prune on);
+        None means one output. Inputs retire (not deleted — lazy
+        DataFrames may still read them; GC is purge_retired's job) and
+        compaction history records the merge.
+
+        Past ``distributed_merge_bytes`` of input the merge runs as one
+        Spark job (:meth:`_merge_spark`) instead of on the driver."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        bytes_in = sum(os.path.getsize(p) for p in inputs)
         if (
             self.distributed_merge_bytes is not None
             and bytes_in >= self.distributed_merge_bytes
         ):
-            return self._merge_segments_spark(members, tag, bytes_in)
-        merged = pa.concat_tables([pq.read_table(p) for p in members])
-        self._seg_counter += 1
-        path = os.path.join(
-            self.spill_dir,
-            f"{self.schema.name}-{tag}{self._seg_counter:06d}.parquet",
+            return self._merge_spark(inputs, tag, level, budget)
+        merged = pa.concat_tables([pq.read_table(p) for p in inputs])
+        pk = merged.column("pk")
+        keys = pc.unique(pk)
+        key_toks = pa.array(_pk_tokens(keys.to_pylist()), type=pa.int64())
+        tok = key_toks.take(pc.index_in(pk, value_set=keys))
+        order = pc.sort_indices(
+            pa.table({"tok": tok, "pk": pk}),
+            sort_keys=[("tok", "ascending"), ("pk", "ascending")],
         )
-        mdl = _max_deletion_us(
-            merged.column("kind").to_pylist(),
-            merged.column("writetime").to_pylist(),
-            merged.column("ttl").to_pylist(),
-        )
-        merged = merged.replace_schema_metadata(
-            {
-                **(merged.schema.metadata or {}),
-                b"max_deletion_us": str(mdl).encode(),
-            }
-        )
-        pq.write_table(merged, path, compression=self._codec())
-        bf = BloomFilter.for_keys(merged.column("pk").to_pylist())
-        bf.save(sidecar_path(path))
-        self._blooms[path] = bf
-        for m in members:
-            self._blooms.pop(m, None)
-            self._seg_level.pop(m, None)
-            self._seg_tokens.pop(m, None)
-        self._retired.extend(members)
-        self._segments = [
-            p for p in self._segments if p not in set(members)
-        ]
-        self._segments.append(path)
+        merged = merged.take(order)
+        pieces = [merged]
+        if budget is not None:
+            # pack whole partitions (token runs) greedily by estimated
+            # bytes; a piece ends only where the token changes
+            import numpy as np
+
+            tok = tok.take(order).to_numpy()
+            row_bytes = max(1, merged.nbytes // max(1, len(tok)))
+            starts = [0, *(np.flatnonzero(np.diff(tok)) + 1).tolist()]
+            pieces, c_start = [], 0
+            for g_start, g_end in zip(starts, starts[1:] + [len(tok)]):
+                if g_start > c_start and (g_end - c_start) * row_bytes > budget:
+                    pieces.append(merged.slice(c_start, g_start - c_start))
+                    c_start = g_start
+            if len(tok):
+                pieces.append(merged.slice(c_start))
+        created = [self._write_segment(p, tag, level) for p in pieces]
+        self._retire_into(inputs, created)
         self._record_compaction(
-            tag, len(members), 1, bytes_in, os.path.getsize(path),
+            tag, len(inputs), len(created), bytes_in,
+            sum(os.path.getsize(p) for p in created),
             merged.num_rows, merged.num_rows,
         )
-        return path
+        return created
 
     def garbage_collect(self, gc_horizon_us: int | None = None) -> dict:
         """``nodetool garbagecollect`` analogue (`[C* db/compaction/
         CompactionController :: getPurgeEvaluator — gc_grace_seconds,
         unverified]`): the EXPLICITLY destructive rewrite that ordinary
-        compaction here deliberately is not (merges preserve history
-        byte-for-byte so asof/PITR reads keep working). Drops, across
+        compaction here deliberately is not (merges keep every history
+        row so asof/PITR reads keep working). Drops, across
         the full flushed history, exactly what the reference's purge
         evaluator drops:
 
@@ -2397,8 +2478,9 @@ class CqlTable:
         tombstone PITR are unaffected; both contracts are pinned by
         tests/test_gc.py's GC-then-PITR differential fuzz.
 
-        Flushes the memtable first, rewrites survivors as ``gc``
-        segments, retires the inputs, records compaction history.
+        Flushes the memtable first, writes the survivors as one ``gc``
+        segment (:meth:`_write_segment`), retires the inputs, records
+        compaction history.
         Past ``distributed_merge_bytes`` the whole reconcile runs as
         ONE Spark write action (:meth:`_garbage_collect_spark`) — the
         same distribute-past-a-threshold rule as every other segment
@@ -2406,10 +2488,7 @@ class CqlTable:
         faster. Returns {"dropped": n, "kept": n}. Snapshot-at-head
         equality and driver≡Spark path equality are pinned by
         tests/test_gc.py's differential fuzzes."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
-
-        from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
 
         if gc_horizon_us is None:
             # WITH gc_grace_seconds: tombstones younger than the grace
@@ -2499,28 +2578,8 @@ class CqlTable:
         rows_in = len(rows)
         created: list[str] = []
         if survivors:
-            cols = list(zip(*survivors))
-            arrays = [
-                pa.array(cols[i], type=t)
-                for i, t in enumerate(_mut_arrow_types())
-            ]
-            out = pa.table(dict(zip(_MUT_COLS, arrays)))
-            mdl = _max_deletion_us(cols[5], cols[6], cols[7])
-            out = out.replace_schema_metadata(
-                {b"max_deletion_us": str(mdl).encode()}
-            )
-            self._seg_counter += 1
-            path = os.path.join(
-                self.spill_dir,
-                f"{self.schema.name}-gc{self._seg_counter:06d}.parquet",
-            )
-            pq.write_table(out, path, compression=self._codec())
-            bf = BloomFilter.for_keys(set(cols[0]))
-            bf.save(sidecar_path(path))
-            self._blooms[path] = bf
-            created = [path]
+            created = [self._write_segment(_mut_table(survivors), "gc")]
         self._retire_into(list(self._segments), created)
-        self._value_blooms.clear()  # cell sets changed: rebuild lazily
         self._record_compaction(
             "gc", n_in, len(created), bytes_in,
             sum(os.path.getsize(p) for p in created),
@@ -2659,7 +2718,6 @@ class CqlTable:
         rows_in = sum(_pq_num_rows(p) for p in inputs)
         rows_out = sum(_pq_num_rows(p) for p in created)
         self._retire_into(inputs, created)
-        self._value_blooms.clear()  # cell sets changed: rebuild lazily
         self._record_compaction(
             "gc", len(inputs), len(created), bytes_in,
             sum(os.path.getsize(p) for p in created), rows_in, rows_out,
@@ -2687,13 +2745,15 @@ class CqlTable:
 
     def _spark_write_merge(self, df, tag: str) -> list[str]:
         """Write a merge plan's output via Spark into canonical segment
-        file names: executors read/decode/encode; the driver only
-        renames. Empty part files (range partitioner slack) are
-        dropped. Outputs carry parquet column statistics (so TWCS
-        window bucketing by max writetime keeps working) but no
-        max-deletion footer stamp — like bulk_load segments they read
-        as never-whole-droppable until a later driver-side merge
-        restamps them, the safe default."""
+        file names (:meth:`_new_segment_path`): executors read/decode/
+        encode; the driver only renames. Empty part files (range
+        partitioner slack) are dropped. Outputs carry parquet column
+        statistics (so TWCS window bucketing by max writetime keeps
+        working) but none of :meth:`_write_segment`'s footer stamps or
+        Bloom sidecars — like bulk_load segments they read as never-
+        whole-droppable until a later driver-side merge restamps them
+        (the safe default), and token ranges and blooms derive lazily
+        from the pk column."""
         import glob
         import uuid
 
@@ -2707,11 +2767,7 @@ class CqlTable:
             if _pq_num_rows(f) == 0:
                 os.remove(f)
                 continue
-            self._seg_counter += 1
-            path = os.path.join(
-                self.spill_dir,
-                f"{self.schema.name}-{tag}{self._seg_counter:06d}.parquet",
-            )
+            path = self._new_segment_path(tag)
             os.replace(f, path)
             out.append(path)
         # Spark leaves _SUCCESS + .crc markers behind: remove the temp
@@ -2722,79 +2778,67 @@ class CqlTable:
         return out
 
     def _retire_into(self, inputs: list[str], created: list[str]) -> None:
+        """Swap ``inputs`` for ``created`` in the live segment list — the
+        one place a segment is forgotten: its bloom, level, token-range
+        and 2i value-bloom / value-range entries go with it, and the
+        file moves to ``_retired`` for purge_retired."""
+        drop = set(inputs)
         for m in inputs:
             self._blooms.pop(m, None)
             self._seg_level.pop(m, None)
             self._seg_tokens.pop(m, None)
+        for cache in (self._value_blooms, self._value_ranges):
+            for key in [k for k in cache if k[0] in drop]:
+                del cache[key]
         self._retired.extend(inputs)
-        drop = set(inputs)
         self._segments = [p for p in self._segments if p not in drop]
         self._segments.extend(created)
 
-    def _merge_segments_spark(
-        self, members: list[str], tag: str, bytes_in: int
-    ) -> str:
-        """Distributed form of :meth:`_merge_segments` (input bytes >=
-        ``distributed_merge_bytes``): ONE Spark job — parallel read and
-        decode of every input segment, a single-partition shuffle, one
-        executor-side encode — instead of materializing the whole merge
-        on the driver. History rows are a SET (reconcile orders by
-        writetime/seq, never file position), so the shuffle's row order
-        is immaterial. N→1 stays the contract (STCS tier / TWCS window
-        steady state); blooms rebuild lazily on first point read, the
-        bulk_load precedent."""
-        plan = (
-            self.spark.read.schema(_MUT_SCHEMA)
-            .parquet(*members)
-            .repartition(1)
-        )
-        created = self._spark_write_merge(plan, tag)
-        assert len(created) == 1, "repartition(1) must yield one segment"
-        self._retire_into(members, created)
-        rows_in = sum(_pq_num_rows(p) for p in members)
-        self._record_compaction(
-            tag, len(members), 1, bytes_in,
-            os.path.getsize(created[0]), rows_in, _pq_num_rows(created[0]),
-        )
-        return created[0]
-
-    def _merge_sharded_spark(
-        self, inputs: list[str], target: int, budget: int, tag: str,
-        bytes_in: int,
+    def _merge_spark(
+        self, inputs: list[str], tag: str, level: int = 0,
+        budget: int | None = None,
     ) -> list[str]:
-        """Distributed form of :meth:`_merge_sorted_sharded` (LCS
-        promotion / UCS sharded merge past the byte threshold): range-
-        partition by the bit-exact Murmur3 token of pk (the Arrow-
-        batched ``cassandra_token`` UDF) into ~bytes/budget shards and
-        write executor-side. Same token → same shard, so the whole-
-        partition rule and pairwise-disjoint token ranges hold by
-        construction; ranges and blooms derive lazily from the pk
-        column. The level travels in ``_seg_level`` (in-session) only —
-        a keyspace restore rehydrates these shards at L0 and the next
-        compaction re-levels them, a documented degradation that never
-        affects answers."""
-        from cassandra_spark.operators.murmur3 import (
-            ensure_token_registered,
-        )
+        """Distributed form of :meth:`_merge` (input bytes >=
+        ``distributed_merge_bytes``): ONE Spark job — parallel read and
+        decode of every input, one shuffle, executor-side encode —
+        instead of materializing the merge on the driver. When
+        ``budget`` yields more than one shard the shuffle range-
+        partitions by the bit-exact Murmur3 token of pk (the Arrow-
+        batched ``cassandra_token`` UDF): same token → same shard, so
+        the whole-partition rule and pairwise-disjoint token ranges hold
+        by construction. Otherwise it is a single-partition shuffle and
+        one output. History rows are a SET (reconcile orders by
+        writetime/seq, never file position), so row order within a
+        shard is immaterial. The level travels in ``_seg_level``
+        (in-session) only — a keyspace restore rehydrates these shards
+        at L0 and the next compaction re-levels them, a documented
+        degradation that never affects answers."""
+        bytes_in = sum(os.path.getsize(p) for p in inputs)
+        n_shards = 1 if budget is None else max(1, -(-bytes_in // budget))
+        plan = self.spark.read.schema(_MUT_SCHEMA).parquet(*inputs)
+        if n_shards > 1:
+            from cassandra_spark.operators.murmur3 import (
+                ensure_token_registered,
+            )
 
-        ensure_token_registered(self.spark)
-        n_shards = max(1, -(-bytes_in // budget))
-        plan = (
-            self.spark.read.schema(_MUT_SCHEMA)
-            .parquet(*inputs)
-            .withColumn("__tok", F.expr("cassandra_token(pk)"))
-            .repartitionByRange(n_shards, "__tok")
-            .drop("__tok")
-        )
+            ensure_token_registered(self.spark)
+            plan = (
+                plan.withColumn("__tok", F.expr("cassandra_token(pk)"))
+                .repartitionByRange(n_shards, "__tok")
+                .drop("__tok")
+            )
+        else:
+            plan = plan.repartition(1)
         created = self._spark_write_merge(plan, tag)
         self._retire_into(inputs, created)
-        for p in created:
-            self._seg_level[p] = target
-        rows_in = sum(_pq_num_rows(p) for p in inputs)
+        if level >= 1:
+            for p in created:
+                self._seg_level[p] = level
         self._record_compaction(
             tag, len(inputs), len(created), bytes_in,
             sum(os.path.getsize(p) for p in created),
-            rows_in, sum(_pq_num_rows(p) for p in created),
+            sum(_pq_num_rows(p) for p in inputs),
+            sum(_pq_num_rows(p) for p in created),
         )
         return created
 
@@ -2823,9 +2867,10 @@ class CqlTable:
         compaction/TimeWindowCompactionStrategy, unverified]`): segments
         bucket by the writetime window of their max writetime; every
         CLOSED window (every window except the one holding the global
-        max) with >= 2 segments merges into one — so steady-state is one
-        segment per window and expiring a retention period is a
-        whole-segment DROP, not a rewrite.
+        max) with >= 2 segments merges into one (:meth:`_merge`, level
+        0, no byte budget) — so steady-state is one segment per window
+        and expiring a retention period is a whole-segment DROP, not a
+        rewrite.
 
         The drop is footer-stats-only and resurrection-guarded, the
         reference's fully-expired-SSTable rule: a segment may drop only
@@ -2855,7 +2900,7 @@ class CqlTable:
             for w, members in sorted(windows.items()):
                 if w == open_w or len(members) < 2:
                     continue
-                created.append(self._merge_segments(members, "twcs"))
+                created += self._merge(members, "twcs")
         # whole-segment expiry: drop fully-expired, strictly-oldest
         # segments (loop: dropping the oldest may unblock the next).
         # Stats and the memtable minimum are loop-invariant — dropping a
@@ -2886,11 +2931,7 @@ class CqlTable:
                 "twcs-drop", 1, 0, os.path.getsize(victim), 0,
                 _pq_num_rows(victim), 0,
             )
-            self._retired.append(victim)
-            self._blooms.pop(victim, None)
-            self._seg_level.pop(victim, None)
-            self._seg_tokens.pop(victim, None)
-            self._segments.remove(victim)
+            self._retire_into([victim], [])
             del stats[victim]
 
     def _seg_token_range(self, path: str) -> tuple[int, int]:
@@ -2952,9 +2993,11 @@ class CqlTable:
           the memtable) — bounded read amplification, the reason LCS
           exists. A partition (one token) never splits across segments.
 
-        History rows are preserved byte-for-byte through merges (LWW
-        stays a read-time reconcile, same as STCS/TWCS); inputs retire
-        to ``_retired`` for deferred GC. Returns new segment paths."""
+        Merges run through :meth:`_merge` at the target level with the
+        ``sstable_size`` byte budget: every history row survives, only
+        row order changes (LWW stays a read-time reconcile, same as
+        STCS/TWCS); inputs retire to ``_retired`` for deferred GC.
+        Returns new segment paths."""
         created: list[str] = []
         l0 = [s for s in self._segments if self._seg_level.get(s, 0) == 0]
         if len(l0) >= self.schema.compaction_min_threshold:
@@ -3006,98 +3049,7 @@ class CqlTable:
             )
         ]
         inputs = members + overlap
-        return self._merge_sorted_sharded(
-            inputs, target, self._lcs_target(), "lcs"
-        )
-
-    def _merge_sorted_sharded(
-        self, inputs: list[str], target: int, budget: int, tag: str
-    ) -> list[str]:
-        """Merge ``inputs``, sort by (token, pk), re-split into segments
-        of at most ``budget`` estimated bytes on whole-partition
-        boundaries only (same-token pks stay together so inclusive token
-        ranges can never touch across outputs), stamp min/max token +
-        level ``target`` in the footer, register the outputs and retire
-        the inputs. Shared by LCS promotion and UCS sharded merges —
-        both need the same disjoint-range invariant the point-read path
-        prunes on."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
-        from cassandra_spark.operators.murmur3 import token_of_text
-
-        bytes_in = sum(os.path.getsize(p) for p in inputs)
-        if (
-            self.distributed_merge_bytes is not None
-            and bytes_in >= self.distributed_merge_bytes
-        ):
-            return self._merge_sharded_spark(
-                inputs, target, budget, tag, bytes_in
-            )
-        merged = pa.concat_tables([pq.read_table(p) for p in inputs])
-        pks = merged.column("pk").to_pylist()
-        tok = {p: token_of_text(p) for p in set(pks)}
-        order = sorted(
-            range(len(pks)), key=lambda i: (tok[pks[i]], pks[i], i)
-        )
-        merged = merged.take(order)
-        pks = [pks[i] for i in order]
-        # split points only between partitions: group rows by pk run,
-        # pack greedily by estimated bytes
-        row_bytes = max(1, merged.nbytes // max(1, len(pks)))
-        groups: list[tuple[int, int]] = []  # (start_row, n_rows)
-        start = 0
-        for i in range(1, len(pks) + 1):
-            if i == len(pks) or tok[pks[i]] != tok[pks[start]]:
-                groups.append((start, i - start))
-                start = i
-        chunks: list[tuple[int, int]] = []
-        c_start, c_rows = 0, 0
-        for g_start, g_rows in groups:
-            if c_rows and (c_rows + g_rows) * row_bytes > budget:
-                chunks.append((c_start, c_rows))
-                c_start, c_rows = g_start, 0
-            c_rows += g_rows
-        if c_rows:
-            chunks.append((c_start, c_rows))
-        created: list[str] = []
-        for c_start, c_rows in chunks:
-            part = merged.slice(c_start, c_rows)
-            self._seg_counter += 1
-            path = os.path.join(
-                self.spill_dir,
-                f"{self.schema.name}-{tag}{self._seg_counter:06d}.parquet",
-            )
-            mdl = _max_deletion_us(
-                part.column("kind").to_pylist(),
-                part.column("writetime").to_pylist(),
-                part.column("ttl").to_pylist(),
-            )
-            rng = (tok[pks[c_start]], tok[pks[c_start + c_rows - 1]])
-            part = part.replace_schema_metadata(
-                {
-                    **(part.schema.metadata or {}),
-                    b"max_deletion_us": str(mdl).encode(),
-                    b"min_token": str(rng[0]).encode(),
-                    b"max_token": str(rng[1]).encode(),
-                    b"lcs_level": str(target).encode(),
-                }
-            )
-            pq.write_table(part, path, compression=self._codec())
-            bf = BloomFilter.for_keys(part.column("pk").to_pylist())
-            bf.save(sidecar_path(path))
-            self._blooms[path] = bf
-            self._seg_level[path] = target
-            self._seg_tokens[path] = rng
-            created.append(path)
-        self._retire_into(inputs, created)
-        self._record_compaction(
-            tag, len(inputs), len(created), bytes_in,
-            sum(os.path.getsize(p) for p in created),
-            merged.num_rows, merged.num_rows,
-        )
-        return created
+        return self._merge(inputs, "lcs", target, self._lcs_target())
 
     def ucs_compact(self) -> list[str]:
         """UnifiedCompactionStrategy minor compaction (`[C* db/
@@ -3133,8 +3085,10 @@ class CqlTable:
         split points for the same reason: parallel compaction +
         bounded reads). Runs to a fixpoint: a merged run can overlap
         level l+1's residents and cascade one more merge there.
-        History rows survive byte-for-byte (LWW stays a read-time
-        reconcile); inputs retire for deferred GC. Returns new paths."""
+        Merges run through :meth:`_merge` at level l+1 with the per-
+        shard byte budget: every history row survives, only row order
+        changes (LWW stays a read-time reconcile); inputs retire for
+        deferred GC. Returns new paths."""
         params = parse_ucs_scaling(self.schema.compaction_scaling)
         created_all: list[str] = []
         while True:
@@ -3174,9 +3128,7 @@ class CqlTable:
                 while total / shards > self.schema.ucs_target_bytes:
                     shards *= 2
                 budget = max(1, -(-total // shards))
-                created_all += self._merge_sorted_sharded(
-                    group, lvl + 1, budget, "ucs"
-                )
+                created_all += self._merge(group, "ucs", lvl + 1, budget)
                 merged_any = True
                 break  # levels changed: recompute the buckets
             if not merged_any:
@@ -3400,38 +3352,8 @@ class CqlTable:
         # auto-provision the spill dir: an explicit nodetool-style flush
         # must never fail for lack of configuration
         self._ensure_spill_dir()
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         os.makedirs(self.spill_dir, exist_ok=True)
-        self._seg_counter += 1
-        path = os.path.join(
-            self.spill_dir,
-            f"{self.schema.name}-seg{self._seg_counter:06d}.parquet",
-        )
-        cols = list(zip(*self._log))
-        arrays = [
-            pa.array(cols[i], type=t)
-            for i, t in enumerate(_mut_arrow_types())
-        ]
-        # TWCS whole-segment expiry stamp (footer key-value metadata):
-        # kind/writetime/ttl are log columns 5/6/7 (mut_row order)
-        mdl = _max_deletion_us(cols[5], cols[6], cols[7])
-        tbl = pa.table(dict(zip(_MUT_COLS, arrays)))
-        tbl = tbl.replace_schema_metadata(
-            {
-                **(tbl.schema.metadata or {}),
-                b"max_deletion_us": str(mdl).encode(),
-            }
-        )
-        pq.write_table(tbl, path, compression=self._codec())
-        # Filter.db analogue: bloom over this segment's partition keys,
-        # persisted as a sidecar so snapshots carry it with the segment
-        from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
-
-        bf = BloomFilter.for_keys(row[0] for row in self._log)
-        bf.save(sidecar_path(path))
-        self._blooms[path] = bf
+        path = self._write_segment(_mut_table(self._log), "seg")
         self._segments.append(path)
         self._log.clear()
         return path
@@ -3934,11 +3856,13 @@ class CqlTable:
         """Merge all flushed segments into one (minor compaction's
         file-count half: N small parquet files → one, so the per-segment
         listing/footer overhead in mutation_log() and the per-segment
-        pk-filtered LWT reads stay O(1) instead of O(flush count)). The
-        mutation HISTORY is preserved byte-for-byte — unlike the
-        reference's cell-merging compaction, asof snapshots must keep
-        working, and the semantic LWW merge already lives in
-        operators/compaction.py for materialized tables.
+        pk-filtered LWT reads stay O(1) instead of O(flush count)) via
+        :meth:`_merge` (level 0, no byte budget). Every mutation HISTORY
+        row is kept, only their order changes (the output is one token-
+        sorted run) — unlike the reference's cell-merging compaction,
+        asof snapshots must keep working, and the semantic LWW merge
+        already lives in operators/compaction.py for materialized
+        tables.
 
         Superseded files are RETIRED, not deleted (the reference's
         nodetool-visible "compacted but not yet GC'd" SSTable state): a
@@ -3949,10 +3873,11 @@ class CqlTable:
         Retired files are reclaimed by purge_retired() / TRUNCATE; until
         then disk holds the raw flush segments plus superseded compacted
         generations. Returns the new segment path (None if fewer than two
-        segments exist)."""
+        segments exist or the merge wrote no rows)."""
         if len(self._segments) < 2:
             return None
-        return self._merge_segments(list(self._segments), "compact")
+        created = self._merge(list(self._segments), "compact")
+        return created[0] if created else None
 
     def purge_retired(self) -> int:
         """Delete segments superseded by compaction (the GC half the
@@ -4037,7 +3962,7 @@ class CqlTable:
                 mask = pc.or_(
                     mask, pc.greater(tbl.column("writetime"), horizon_us)
                 )
-            pq.write_table(tbl.filter(mask), path)
+            pq.write_table(tbl.filter(mask), path, compression=self._codec())
 
     # --- snapshot reconciliation -----------------------------------------
 
@@ -4105,8 +4030,8 @@ class CqlTable:
         (``restore_point_in_time``, `[C* db/commitlog/
         CommitLogArchiver, unverified]`: restore a snapshot, then replay
         archived mutations whose commit time <= the target). This
-        engine preserves the full mutation history byte-for-byte
-        through flushes AND compactions (LWW is a read-time reconcile),
+        engine keeps every row of the mutation history through
+        flushes AND compactions (LWW is a read-time reconcile),
         so PITR needs no archive: reconcile only mutations with
         ``writetime <= ts_us`` and evaluate TTL expiry at ``ts_us``.
         Works identically on a live table and on one rehydrated by

@@ -13,10 +13,28 @@ Design notes (SURVEY.md §4):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """Default ``spark.driver.memory``: half the machine's physical
+    memory (``MemTotal`` of ``meminfo``, read from /proc/meminfo when
+    not given), capped at 24g; 24g when the total cannot be read."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as fh:
+                meminfo = fh.read()
+        except OSError:
+            return "24g"
+    m = re.search(r"^MemTotal:\s*(\d+)\s*kB", meminfo, re.M)
+    if m is None:
+        return "24g"
+    mib = int(m.group(1)) // 2048
+    return "24g" if mib >= 24 << 10 else f"{mib}m"
 
 
 def apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -49,9 +67,13 @@ def apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         # GC-bound — r13 measured the same 115-query tier, same code, at
         # 8g vs 24g: untouched queries halved (a10 7.4->3.3, a11
         # 7.6->3.8, x37 5.4->2.9 s) purely from heap room (guide §5).
-        # 24g is ~19% of the 128 GiB sandbox; a real cluster sizes
-        # executor memory per host and ignores this knob.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # 24g is the cap; on smaller machines the default is half of
+        # physical memory so the heap can never outgrow the box. A real
+        # cluster sizes executor memory per host and ignores this knob.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         # State-store SNAPSHOT maintenance (default every 60s) contends
         # with per-epoch delta commits: measured on the s13 drain at the
         # x10 corpus, default-interval commits hit 23-161 s per epoch vs

@@ -318,6 +318,27 @@ def test_sai_range_matches_full_scan(spark, tmp_path):
         assert got == want, q
 
 
+def test_merge_forgets_retired_segments_index_stats(spark, tmp_path):
+    """A compaction merge drops the value-Bloom and value-range entries
+    of the segments it retires, and the indexed reads still answer the
+    same over the merged segment."""
+    s = _build_range(spark, tmp_path, True)
+    t = s.table("rng")
+    queries = (
+        "SELECT k, v FROM rng WHERE v = 7",
+        "SELECT k, v FROM rng WHERE v >= 20",
+    )
+    before = [sorted(tuple(r) for r in s.execute(q).collect()) for q in queries]
+    assert t._value_blooms and t._value_ranges
+    assert t.stcs_compact(), "equal-size flushes form a full tier"
+    retired = set(t._retired)
+    assert retired
+    for cache in (t._value_blooms, t._value_ranges):
+        assert not [k for k in cache if k[0] in retired]
+    after = [sorted(tuple(r) for r in s.execute(q).collect()) for q in queries]
+    assert after == before and before[0] == [("k07", 7)]
+
+
 def test_sai_range_skips_segments(spark, tmp_path):
     s = _build_range(spark, tmp_path, True)
     t = s.table("rng")

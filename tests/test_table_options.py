@@ -35,6 +35,12 @@ def test_compression_option_sets_segment_codec(spark, tmp_path):
         assert r.compression == "ZSTD"
         assert r.rows > 0 and r.bytes > 0
         assert r.min_writetime <= r.max_writetime
+    # ALTER TABLE DROP rewrites segments in place: the codec survives
+    s.execute("ALTER TABLE z DROP v")
+    for seg in t._segments:
+        md = pq.ParquetFile(seg).metadata
+        assert md.row_group(0).column(0).compression == "ZSTD"
+    assert s.execute("SELECT count(*) AS n FROM z").collect()[0].n == 80
 
 
 def test_unknown_compressor_rejected(spark):
@@ -367,6 +373,23 @@ def test_sstable_metadata_reports_max_deletion(spark, tmp_path):
     vals = sorted(r.max_deletion for r in meta.values())
     assert vals == [-1, 15]  # live row pins -1; TTL'd segment = wt+ttl
 
+    # a merged segment restamps by the same rule: all-TTL inputs give
+    # max(wt + ttl) over every input row...
+    s2, t2 = _twcs_session(spark, tmp_path / "merge")
+    for k, ts, ttl in (("a", 10, 5), ("b", 30, 2), ("c", 20, 40)):
+        s2.execute(
+            f"INSERT INTO tw (k, n) VALUES ('{k}', 1) "
+            f"USING TIMESTAMP {ts} AND TTL {ttl}"
+        )
+        t2.flush()
+    t2.compact_segments()
+    assert [r.max_deletion for r in t2.sstable_metadata().collect()] == [60]
+    # ...and a tombstone merged in pins -1
+    s2.execute("DELETE FROM tw USING TIMESTAMP 50 WHERE k = 'a'")
+    t2.flush()
+    t2.compact_segments()
+    assert [r.max_deletion for r in t2.sstable_metadata().collect()] == [-1]
+
 
 def test_cdc_option_gates_the_feed(spark, tmp_path):
     """WITH cdc = true is required before cdc_stream serves a table
@@ -416,3 +439,46 @@ def test_comment_option_roundtrips(spark, tmp_path):
     s2 = CqlSession(spark, spill_dir=None)
     s2.execute(ddl2)
     assert s2.table("cm").schema.comment == "v2"
+
+
+def test_max_deletion_stamp_matches_row_loop(spark, tmp_path):
+    """The vectorized footer stamp equals the row-at-a-time rule:
+    max(writetime + ttl) with Python-int arithmetic (no int64 wrap), or
+    -1 as soon as one row is not an expiring cell or marker."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from cassandra_spark import cql_dml as D
+
+    def loop(rows):
+        mx = 0
+        for r in rows:
+            kind, wt, ttl = r[5], r[6], r[7]
+            if kind not in (D.CELL, D.MARKER) or not ttl:
+                return -1
+            mx = max(mx, wt + ttl)
+        return mx
+
+    s = CqlSession(spark, spill_dir=str(tmp_path))
+    s.execute("CREATE TABLE st (k text PRIMARY KEY, n int)")
+    t = s.table("st")
+    os.makedirs(t.spill_dir, exist_ok=True)
+    rnd = random.Random(7)
+    n_expiring = 0
+    for _ in range(200):
+        rows = [
+            D.mut_row(
+                rnd.choice(["a", "b", "é"]), None, "n", "1",
+                rnd.choice([D.CELL, D.MARKER] * 30 + [D.ROW_TOMB, D.INCR]),
+                rnd.choice([rnd.randint(-5, 1000), 2**63 - 3]),
+                rnd.choice([None, 0] + [5, 100] * 30), i,
+            )
+            for i in range(rnd.randint(1, 12))
+        ]
+        want = loop(rows)
+        n_expiring += want >= 0
+        path = t._write_segment(D._mut_table(rows), "seg")
+        meta = pq.ParquetFile(path).schema_arrow.metadata
+        assert int(meta[b"max_deletion_us"]) == want, rows
+    assert 20 <= n_expiring <= 180  # both branches exercised
