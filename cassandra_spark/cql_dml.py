@@ -1115,26 +1115,22 @@ class CqlTable:
         # per-SSTable min/max term metadata analogue; serves RANGE
         # predicates the way the Blooms serve equality (lazy, sidecar)
         self._value_ranges: dict[tuple[str, str], tuple] = {}
+        # 2i probe counters (tablestats): segments consulted, segments
+        # pruned by a value Bloom ("skipped") or by value-range stats
+        # ("range_skipped"), and probes that passed the collect cap
         self.index_stats = {
             "checked": 0,
             "skipped": 0,
             "range_skipped": 0,
-            "distributed_jobs": 0,
             "probe_overflows": 0,
         }
-        # past this many Bloom/stats-surviving segments, phase 1 of the
-        # 2i probe runs as ONE Spark job over the survivor list instead
-        # of a driver-side pyarrow loop (N sequential reads); below it
-        # the pyarrow path is faster (no job-scheduling overhead)
-        self.index_probe_distribute_threshold = 8
-        # the candidate-pk set a probe may materialize on the driver:
-        # past this many DISTINCT candidates the index gives no useful
-        # selectivity (the reference's low-cardinality-2i anti-pattern)
-        # and the probe reports None — the read falls back to the full
+        # the candidate-pk set a probe may collect: past this many
+        # DISTINCT candidates the index gives no useful selectivity (the
+        # reference's low-cardinality-2i anti-pattern) and the probe
+        # stops and reports None — the read falls back to the full
         # reconcile, which at that selectivity is the better plan
-        # anyway. In the distributed form the cap is enforced INSIDE
-        # the Spark job (limit cap+1 on the distinct-pk aggregate), so
-        # driver memory is O(cap) regardless of match count.
+        # anyway. The probe checks the cap after every segment, so it
+        # holds at most cap + one segment's matching pks.
         self.index_probe_collect_cap = 20_000
         # LCS bookkeeping: segment -> level (absent = L0, where every
         # flush/bulk-load lands), cached [min,max] pk-token ranges, and
@@ -2307,13 +2303,17 @@ class CqlTable:
         return created
 
     def _new_segment_path(self, tag: str) -> str:
-        """Canonical segment file name ``{table}-{tag}{seq:06d}.parquet``;
-        the sequence is monotone, so names never recycle."""
+        """Canonical segment file name ``{table}-{tag}{seq:06d}.parquet``.
+        The sequence is monotone within a table's life, but a re-created
+        table restarts it, so any sidecar already at the new name belongs
+        to dead data and is removed here."""
         self._seg_counter += 1
-        return os.path.join(
+        path = os.path.join(
             self.spill_dir,
             f"{self.schema.name}-{tag}{self._seg_counter:06d}.parquet",
         )
+        self._remove_sidecars(path)
+        return path
 
     def _write_segment(self, tbl, tag: str, level: int = 0) -> str:
         """Write mutation rows ``tbl`` (a pyarrow table in log column
@@ -3370,6 +3370,21 @@ class CqlTable:
             self._blooms[path] = bf
         return bf
 
+    @staticmethod
+    def _column_cells(path: str, col: str):
+        """``col``'s CELL mutations in one segment — the one reader behind
+        the value Bloom, the value-range stats and the 2i probe. Returns
+        the pyarrow ``(pk, val)`` table and its distinct non-null values."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(
+            path,
+            columns=["pk", "val"],
+            filters=[("col", "=", col), ("kind", "=", CELL)],
+        )
+        return tbl, pc.unique(pc.drop_null(tbl.column("val")))
+
     def _value_bloom_for(self, path: str, col: str):
         """Per-(segment, indexed column) Bloom over the column's cell
         values — the Filter.db construction extended from partition keys
@@ -3391,21 +3406,9 @@ class CqlTable:
             except Exception:
                 bf = None  # corrupt sidecar: rebuild, never fail
         if bf is None:
-            import pyarrow.parquet as pq
-
             typ = index_probe_type(self.schema, col) or ""
-            vals = (
-                pq.read_table(
-                    path,
-                    columns=["val"],
-                    filters=[("col", "=", col), ("kind", "=", CELL)],
-                )
-                .column("val")
-                .to_pylist()
-            )
-            bf = BloomFilter.for_keys(
-                _index_norm(v, typ) for v in vals if v is not None
-            )
+            vals = self._column_cells(path, col)[1].to_pylist()
+            bf = BloomFilter.for_keys(_index_norm(v, typ) for v in vals)
             try:
                 bf.save(sc)
             except OSError:
@@ -3413,187 +3416,47 @@ class CqlTable:
         self._value_blooms[key] = bf
         return bf
 
-    def _probe_pairs(self, survivors: list[str], col: str):
-        """Phase-1 cell fetch, driver form: (pk, val) pairs of ``col``'s
-        cell mutations across the Bloom/stats-surviving segments — a
-        pyarrow loop, used below the distribute threshold where job-
-        scheduling overhead would dominate a handful of file reads.
-        Past the threshold callers use :meth:`_probe_pks_spark`, which
-        filters AND caps inside the Spark job."""
-        import pyarrow.parquet as pq
-
-        pairs: list[tuple] = []
-        for path in survivors:
-            tbl = pq.read_table(
-                path,
-                columns=["pk", "val"],
-                filters=[("col", "=", col), ("kind", "=", CELL)],
-            )
-            pairs.extend(
-                zip(
-                    tbl.column("pk").to_pylist(),
-                    tbl.column("val").to_pylist(),
-                )
-            )
-        return pairs
-
-    def _use_distributed_probe(self, survivors: list[str]) -> bool:
-        return (
-            len(survivors) > self.index_probe_distribute_threshold
-            and self.spark is not None
-        )
-
-    def _probe_pks_spark(self, survivors, col: str, val_pred) -> set | None:
-        """Phase-1 cell fetch, distributed form (survivor count past
-        ``index_probe_distribute_threshold``): ONE Spark job — the value
-        predicate filters executor-side, candidates aggregate to
-        DISTINCT pks, and the collect is capped at
-        ``index_probe_collect_cap`` + 1 INSIDE the job, so the driver
-        never materializes an unbounded candidate set (the round-9
-        verdict's O(matches) term). Returns None on overflow — the
-        index has no useful selectivity and the caller full-scans."""
-        self.index_stats["distributed_jobs"] += 1
-        cap = self.index_probe_collect_cap
-        rows = (
-            self.spark.read.schema(_MUT_SCHEMA)
-            .parquet(*survivors)
-            .filter(
-                (F.col("col") == col)
-                & (F.col("kind") == CELL)
-                & F.col("val").isNotNull()
-                & val_pred
-            )
-            .select("pk")
-            .distinct()
-            .limit(cap + 1)
-            .collect()
-        )
-        if len(rows) > cap:
-            self.index_stats["probe_overflows"] += 1
-            return None
-        return {r.pk for r in rows}
-
-    @staticmethod
-    def _eq_pred_spark(typ: str, probe: str):
-        """Spark Column twin of ``_index_norm(val, typ) == probe`` for
-        the executor-side phase-1 filter. Int-family equality compares
-        through a decimal cast — the SAME cast the phase-2 snapshot
-        applies, so an unparseable cell (NULL both phases) can never be
-        a phase-2 hit the phase-1 filter missed; rounding collisions
-        only ADD candidates (superset, rechecked)."""
-        t = typ.split("<")[0].strip().lower()
-        if t in ("int", "bigint", "smallint", "tinyint", "varint"):
-            return F.col("val").cast("decimal(38,0)") == F.lit(probe).cast(
-                "decimal(38,0)"
-            )
-        if t == "boolean":
-            return F.lower(F.col("val")) == F.lit(probe)
-        return F.col("val") == F.lit(probe)
-
-    def index_candidate_pks(self, col: str, lit: str) -> set[str] | None:
-        """2i read, phase 1 (`[C* index/internal CassandraIndexSearcher,
-        unverified]`): the partition keys whose CURRENT row could satisfy
-        ``col = lit`` — every winning cell with that value was written by
-        SOME mutation, so scanning cell mutations for the value yields a
-        superset of the true partitions (extra candidates fall to the
-        phase-2 recheck, exactly the reference's post-index filtering).
-        Each segment's value Bloom is consulted first; definitely-absent
-        segments are skipped without touching the file (tablestats-style
-        ``index_stats`` counters record it). The surviving segments are
-        read via ``_probe_pks_spark`` (one capped Spark job) past the
-        segment-count threshold, ``_probe_pairs`` (pyarrow) below it.
-        Returns None past ``index_probe_collect_cap`` candidates — the
-        unselective-index signal; the caller falls back to the full
-        reconcile."""
-        typ = index_probe_type(self.schema, col) or ""
-        probe = _index_norm(lit, typ)
-        survivors: list[str] = []
-        for path in self._segments:
-            self.index_stats["checked"] += 1
-            if not self._value_bloom_for(path, col).might_contain(probe):
-                self.index_stats["skipped"] += 1
-                continue
-            survivors.append(path)
-        if self._use_distributed_probe(survivors):
-            cand = self._probe_pks_spark(
-                survivors, col, self._eq_pred_spark(typ, probe)
-            )
-            if cand is None:
-                return None
-        else:
-            cand = {
-                p
-                for p, v in self._probe_pairs(survivors, col)
-                if v is not None and _index_norm(v, typ) == probe
-            }
-        pi, ci, vi, ki = (
-            _MUT_COLS.index("pk"),
-            _MUT_COLS.index("col"),
-            _MUT_COLS.index("val"),
-            _MUT_COLS.index("kind"),
-        )
-        for row in self._log:
-            if (
-                row[ki] == CELL
-                and row[ci] == col
-                and row[vi] is not None
-                and _index_norm(row[vi], typ) == probe
-            ):
-                cand.add(row[pi])
-        if len(cand) > self.index_probe_collect_cap:
-            self.index_stats["probe_overflows"] += 1
-            return None
-        return cand
-
-    def _value_range_for(self, path: str, col: str) -> tuple:
+    def _value_range_for(self, path: str, col: str, numeric: bool) -> tuple:
         """Exact [min, max] over ``col``'s non-null cell values in one
-        segment — the SAI per-SSTable min/max term metadata analogue
-        (`[C* index/sai/disk SegmentMetadata, unverified]`). Values parse
-        as Decimal (canonical strings order lexicographically, which is
-        WRONG for numerics — parquet's own string stats can't serve
-        this). Returns ("empty",) when the segment has no cells of the
-        column (always skippable), ("all",) when any value failed to
-        parse (never skip — the safe default), or ("range", lo, hi).
-        Sidecar ``<segment>.<col>.vrange``; rebuilt when missing, so a
-        restored segment never reads wrong, only slower."""
+        segment. ``numeric`` orders the values as Decimal — the SAI
+        per-SSTable min/max term metadata analogue (`[C* index/sai/disk
+        SegmentMetadata, unverified]`); canonical strings order
+        lexicographically, which is WRONG for numerics, so parquet's own
+        string stats can't serve this. Otherwise the values order as
+        strings — the SASI per-SSTable term range that serves PREFIX
+        searches (`[C* index/sasi/disk OnDiskIndex metadata,
+        unverified]`). Returns ("empty",) when the segment has no cells
+        of the column (always skippable), ("all",) when a numeric value
+        failed to parse (never skip — the safe default), or ("range",
+        lo, hi). Sidecar ``<segment>.<col>.vrange`` (numeric) or
+        ``.svrange`` (string); rebuilt when missing, so a restored
+        segment never reads wrong, only slower."""
         import json
         from decimal import Decimal, InvalidOperation
 
-        key = (path, col)
+        key = (path, col) if numeric else (path, col, "s")
         vr = self._value_ranges.get(key)
         if vr is not None:
             return vr
-        sc = f"{path}.{col}.vrange"
+        parse = Decimal if numeric else str
+        sc = f"{path}.{col}.{'vrange' if numeric else 'svrange'}"
         if os.path.exists(sc):
             try:
                 d = json.loads(open(sc).read())
-                if d["state"] == "range":
-                    vr = ("range", Decimal(d["min"]), Decimal(d["max"]))
-                else:
-                    vr = (d["state"],)
+                vr = (
+                    ("range", parse(d["min"]), parse(d["max"]))
+                    if d["state"] == "range"
+                    else (d["state"],)
+                )
             except Exception:
                 vr = None  # corrupt sidecar: rebuild, never fail
         if vr is None:
-            import pyarrow.parquet as pq
-
-            vals = (
-                pq.read_table(
-                    path,
-                    columns=["val"],
-                    filters=[("col", "=", col), ("kind", "=", CELL)],
-                )
-                .column("val")
-                .to_pylist()
-            )
-            vals = [v for v in vals if v is not None]
-            if not vals:
-                vr = ("empty",)
-            else:
-                try:
-                    ds = [Decimal(v) for v in vals]
-                    vr = ("range", min(ds), max(ds))
-                except InvalidOperation:
-                    vr = ("all",)
+            vals = self._column_cells(path, col)[1].to_pylist()
+            try:
+                vs = [parse(v) for v in vals]
+                vr = ("range", min(vs), max(vs)) if vs else ("empty",)
+            except InvalidOperation:
+                vr = ("all",)
             d = {"state": vr[0]}
             if vr[0] == "range":
                 d["min"], d["max"] = str(vr[1]), str(vr[2])
@@ -3605,6 +3468,81 @@ class CqlTable:
         self._value_ranges[key] = vr
         return vr
 
+    def _index_probe(self, col: str, keep, match, skip_counter: str):
+        """2i read, phase 1 (`[C* index/internal CassandraIndexSearcher,
+        unverified]`): the partition keys whose CURRENT row could satisfy
+        a predicate on ``col``. The equality, range and prefix forms
+        differ only in ``keep(path)``, the segment prune (a pruned
+        segment is not read and counts in ``index_stats[skip_counter]``),
+        and ``match(v)``, the value predicate on a non-null canonical
+        cell string. Every kept segment's cells are read with pyarrow;
+        ``match`` runs once per distinct value and the pks holding a
+        matching value join the candidates, then the matching memtable
+        cells do. Every winning cell was written by SOME mutation, so
+        the candidates are a superset of the true partitions; extras
+        fall to the caller's phase-2 recheck, exactly the reference's
+        post-index filtering. Returns None — and stops reading — once
+        the candidates pass ``index_probe_collect_cap``: the
+        unselective-index signal; the caller falls back to the full
+        reconcile."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cap = self.index_probe_collect_cap
+        cand: set[str] = set()
+        for path in self._segments:
+            self.index_stats["checked"] += 1
+            if not keep(path):
+                self.index_stats[skip_counter] += 1
+                continue
+            tbl, vals = self._column_cells(path, col)
+            hits = vals.filter(
+                pa.array([match(v) for v in vals.to_pylist()], pa.bool_())
+            )
+            pks = tbl.column("pk").filter(
+                pc.is_in(tbl.column("val"), value_set=hits)
+            )
+            cand.update(pc.unique(pks).to_pylist())
+            if len(cand) > cap:
+                break
+        else:
+            pi, ci, vi, ki = (
+                _MUT_COLS.index("pk"),
+                _MUT_COLS.index("col"),
+                _MUT_COLS.index("val"),
+                _MUT_COLS.index("kind"),
+            )
+            cand.update(
+                row[pi]
+                for row in self._log
+                if row[ki] == CELL
+                and row[ci] == col
+                and row[vi] is not None
+                and match(row[vi])
+            )
+        if len(cand) > cap:
+            self.index_stats["probe_overflows"] += 1
+            return None
+        return cand
+
+    def index_candidate_pks(self, col: str, lit: str) -> set[str] | None:
+        """2i probe, EQUALITY form (also CONTAINS on a collection's
+        elements / map values): :meth:`_index_probe` with each segment's
+        value Bloom as the prune (``index_stats['skipped']``) and
+        normalized equality (``_index_norm``: '05' = '5' for an int
+        column) as the value predicate. None past
+        ``index_probe_collect_cap`` candidates."""
+        typ = index_probe_type(self.schema, col) or ""
+        probe = _index_norm(lit, typ)
+        return self._index_probe(
+            col,
+            lambda path: self._value_bloom_for(path, col).might_contain(
+                probe
+            ),
+            lambda v: _index_norm(v, typ) == probe,
+            "skipped",
+        )
+
     def index_candidate_pks_range(
         self,
         col: str,
@@ -3613,215 +3551,61 @@ class CqlTable:
         lo_incl: bool = True,
         hi_incl: bool = True,
     ) -> set[str] | None:
-        """2i read, phase 1, RANGE form (`[C* index/sai, unverified]`:
-        SAI serves range restrictions from its per-SSTable index). The
-        partition keys whose CURRENT row could satisfy
-        ``lo (<|<=) col (<|<=) hi`` (either bound may be None = open).
-        Segments whose [min, max] value range (``_value_range_for``)
-        cannot intersect the probe interval are skipped without reading
-        data — ``index_stats['range_skipped']`` records it; survivors
-        read via ``_probe_pks_spark`` (one capped Spark job, widened
-        prefilter) past the threshold, the exact-Decimal pyarrow loop
-        below it. Candidates are a superset: the phase-2 recheck
-        re-applies the statement's full WHERE, so a stale cell value
-        never leaks. Returns None past ``index_probe_collect_cap``
-        candidates (unselective index → caller full-scans)."""
+        """2i probe, RANGE form (`[C* index/sai, unverified]`: SAI serves
+        range restrictions from its per-SSTable index) for
+        ``lo (<|<=) col (<|<=) hi`` (either bound may be None = open):
+        :meth:`_index_probe` with each segment's numeric [min, max]
+        (:meth:`_value_range_for`) as the prune
+        (``index_stats['range_skipped']``) and an exact-Decimal interval
+        test as the value predicate. None past
+        ``index_probe_collect_cap`` candidates."""
         from decimal import Decimal, InvalidOperation
 
         dlo = Decimal(lo) if lo is not None else None
         dhi = Decimal(hi) if hi is not None else None
 
-        def _in_range(d: "Decimal") -> bool:
-            if dlo is not None and (d < dlo or (d == dlo and not lo_incl)):
-                return False
-            if dhi is not None and (d > dhi or (d == dhi and not hi_incl)):
-                return False
-            return True
+        def above_lo(d: "Decimal") -> bool:
+            return dlo is None or d > dlo or (d == dlo and lo_incl)
 
-        survivors: list[str] = []
-        for path in self._segments:
-            self.index_stats["checked"] += 1
-            vr = self._value_range_for(path, col)
-            if vr[0] == "empty":
-                self.index_stats["range_skipped"] += 1
-                continue
+        def below_hi(d: "Decimal") -> bool:
+            return dhi is None or d < dhi or (d == dhi and hi_incl)
+
+        def keep(path: str) -> bool:
+            vr = self._value_range_for(path, col, numeric=True)
             if vr[0] == "range":
-                mn, mx = vr[1], vr[2]
-                below = dlo is not None and (
-                    mx < dlo or (mx == dlo and not lo_incl)
-                )
-                above = dhi is not None and (
-                    mn > dhi or (mn == dhi and not hi_incl)
-                )
-                if below or above:
-                    self.index_stats["range_skipped"] += 1
-                    continue
-            survivors.append(path)
-        if self._use_distributed_probe(survivors):
-            maybe = self._probe_pks_spark(
-                survivors, col, self._range_pred_spark(dlo, dhi)
-            )
-            if maybe is None:
-                return None
-            cand: set[str] = maybe
-        else:
-            cand = set()
-            for p, v in self._probe_pairs(survivors, col):
-                if v is None:
-                    continue
-                try:
-                    d = Decimal(v)
-                except InvalidOperation:
-                    continue  # non-numeric cell can't satisfy numeric range
-                if _in_range(d):
-                    cand.add(p)
-        pi, ci, vi, ki = (
-            _MUT_COLS.index("pk"),
-            _MUT_COLS.index("col"),
-            _MUT_COLS.index("val"),
-            _MUT_COLS.index("kind"),
-        )
-        for row in self._log:
-            if row[ki] == CELL and row[ci] == col and row[vi] is not None:
-                try:
-                    d = Decimal(row[vi])
-                except InvalidOperation:
-                    continue
-                if _in_range(d):
-                    cand.add(row[pi])
-        if len(cand) > self.index_probe_collect_cap:
-            self.index_stats["probe_overflows"] += 1
-            return None
-        return cand
+                return above_lo(vr[2]) and below_hi(vr[1])
+            return vr[0] == "all"
 
-    def _value_range_str_for(self, path: str, col: str) -> tuple:
-        """Lexicographic [min, max] over ``col``'s non-null cell STRING
-        values in one segment — the SASI per-SSTable term-range analogue
-        for PREFIX searches (`[C* index/sasi/disk OnDiskIndex metadata,
-        unverified]`). Strings order lexicographically exactly (unlike
-        the numeric case _value_range_for parses as Decimal). Sidecar
-        ``<segment>.<col>.svrange``; rebuilt when missing."""
-        import json
-
-        key = (path, col, "s")
-        vr = self._value_ranges.get(key)
-        if vr is not None:
-            return vr
-        sc = f"{path}.{col}.svrange"
-        if os.path.exists(sc):
+        def match(v: str) -> bool:
             try:
-                d = json.loads(open(sc).read())
-                vr = (
-                    ("range", d["min"], d["max"])
-                    if d["state"] == "range"
-                    else (d["state"],)
-                )
-            except Exception:
-                vr = None  # corrupt sidecar: rebuild, never fail
-        if vr is None:
-            import pyarrow.parquet as pq
+                d = Decimal(v)
+            except InvalidOperation:
+                return False  # non-numeric cell can't satisfy numeric range
+            return above_lo(d) and below_hi(d)
 
-            vals = (
-                pq.read_table(
-                    path,
-                    columns=["val"],
-                    filters=[("col", "=", col), ("kind", "=", CELL)],
-                )
-                .column("val")
-                .to_pylist()
-            )
-            vals = [v for v in vals if v is not None]
-            vr = ("empty",) if not vals else ("range", min(vals), max(vals))
-            d = {"state": vr[0]}
-            if vr[0] == "range":
-                d["min"], d["max"] = vr[1], vr[2]
-            try:
-                with open(sc, "w") as fh:
-                    fh.write(json.dumps(d))
-            except OSError:
-                pass  # read-only segment dir: in-memory range still works
-        self._value_ranges[key] = vr
-        return vr
+        return self._index_probe(col, keep, match, "range_skipped")
 
     def index_candidate_pks_prefix(
         self, col: str, prefix: str
     ) -> set[str] | None:
-        """2i read, phase 1, PREFIX form — SASI ``LIKE 'prefix%'``
-        served from the index (`[C* index/sasi/SASIIndex — PREFIX mode,
-        unverified]`). Segments whose lexicographic [min, max] string
-        range cannot contain a value starting with ``prefix`` are
-        skipped without reading data; survivors probe distributed
-        (startswith prefilter) past the threshold, pyarrow below it.
-        Same superset/recheck/cap contract as the eq and range forms."""
+        """2i probe, PREFIX form — SASI ``LIKE 'prefix%'`` served from
+        the index (`[C* index/sasi/SASIIndex — PREFIX mode,
+        unverified]`): :meth:`_index_probe` with each segment's
+        lexicographic [min, max] (:meth:`_value_range_for`) as the prune
+        (``index_stats['range_skipped']``) and ``startswith`` as the
+        value predicate. None past ``index_probe_collect_cap``
+        candidates."""
         hi = _str_prefix_hi(prefix)
-        survivors: list[str] = []
-        for path in self._segments:
-            self.index_stats["checked"] += 1
-            vr = self._value_range_str_for(path, col)
-            if vr[0] == "empty":
-                self.index_stats["range_skipped"] += 1
-                continue
-            mn, mx = vr[1], vr[2]
-            if mx < prefix or (hi is not None and mn >= hi):
-                self.index_stats["range_skipped"] += 1
-                continue
-            survivors.append(path)
-        if self._use_distributed_probe(survivors):
-            maybe = self._probe_pks_spark(
-                survivors, col, F.col("val").startswith(prefix)
-            )
-            if maybe is None:
-                return None
-            cand: set[str] = maybe
-        else:
-            cand = {
-                p
-                for p, v in self._probe_pairs(survivors, col)
-                if v is not None and v.startswith(prefix)
-            }
-        pi, ci, vi, ki = (
-            _MUT_COLS.index("pk"),
-            _MUT_COLS.index("col"),
-            _MUT_COLS.index("val"),
-            _MUT_COLS.index("kind"),
+
+        def keep(path: str) -> bool:
+            vr = self._value_range_for(path, col, numeric=False)
+            if vr[0] == "range":
+                return vr[2] >= prefix and (hi is None or vr[1] < hi)
+            return vr[0] == "all"
+
+        return self._index_probe(
+            col, keep, lambda v: v.startswith(prefix), "range_skipped"
         )
-        for row in self._log:
-            if (
-                row[ki] == CELL
-                and row[ci] == col
-                and row[vi] is not None
-                and row[vi].startswith(prefix)
-            ):
-                cand.add(row[pi])
-        if len(cand) > self.index_probe_collect_cap:
-            self.index_stats["probe_overflows"] += 1
-            return None
-        return cand
-
-    @staticmethod
-    def _range_pred_spark(dlo, dhi):
-        """Spark Column prefilter for the distributed RANGE probe — a
-        SOUND SUPERSET of the driver path's exact-Decimal interval test:
-        comparisons run on a decimal(38,18) cast with INCLUSIVE bounds
-        (cast rounding is monotonic, so widening-inclusive can only add
-        candidates, never drop an in-range value), a NULL cast (non-
-        numeric or overflow — where exact Decimal might still be in
-        range) keeps the row, and a bound too large for the cast is
-        simply not pushed. Phase 2 re-applies the statement's exact
-        WHERE, so extras never leak."""
-        from decimal import Decimal as _D
-
-        vd = F.col("val").cast("decimal(38,18)")
-        fits = lambda d: abs(d) < _D(10) ** 19  # noqa: E731
-        conds = []
-        if dlo is not None and fits(dlo):
-            conds.append(vd >= F.lit(str(dlo)).cast("decimal(38,18)"))
-        if dhi is not None and fits(dhi):
-            conds.append(vd <= F.lit(str(dhi)).cast("decimal(38,18)"))
-        if not conds:
-            return F.lit(True)
-        rng = conds[0] if len(conds) == 1 else conds[0] & conds[1]
-        return vd.isNull() | rng
 
     def _segment_rows_for_pk(self, pk: str | None):
         """Mutation rows for one partition from all flushed segments, in
@@ -3885,8 +3669,6 @@ class CqlTable:
         when every previously-obtained snapshot()/mutation_log() DataFrame
         has been consumed; live reads via self._segments never touch
         retired files. Returns the number of files removed."""
-        from cassandra_spark.operators.bloom import sidecar_path
-
         n = 0
         for p in self._retired:
             try:
@@ -3894,38 +3676,41 @@ class CqlTable:
                 n += 1
             except OSError:
                 pass
-            for side in (sidecar_path(p), *self._stat_sidecars(p)):
-                try:
-                    os.remove(side)
-                except OSError:
-                    pass
+            self._remove_sidecars(p)
         self._retired.clear()
         return n
 
     @staticmethod
-    def _stat_sidecars(path: str) -> list[str]:
-        """Value-range stat sidecars of one segment (*.vrange /
-        *.svrange — per-column, so globbed)."""
+    def _remove_sidecars(path: str) -> None:
+        """Delete every sidecar of segment ``path``: the partition-key
+        Bloom (``.bloom``) and the per-column value Bloom and value-range
+        stats (``.<col>.vbloom`` / ``.vrange`` / ``.svrange``)."""
         import glob as _glob
 
-        return _glob.glob(f"{path}.*.vrange") + _glob.glob(
-            f"{path}.*.svrange"
-        )
+        from cassandra_spark.operators.bloom import sidecar_path
+
+        per_col = (".vbloom", ".vrange", ".svrange")
+        stem = _glob.escape(path)
+        for f in [sidecar_path(path)] + [
+            g for g in _glob.glob(f"{stem}.*.*") if g.endswith(per_col)
+        ]:
+            try:
+                os.remove(f)
+            except OSError:
+                pass
 
     def clear_data(self) -> None:
         """TRUNCATE support: drop the in-memory log and every flushed
         segment (retired generations included — truncate is a purge
         point). Clocks keep ticking (post-truncate writes stay newer)."""
-        from cassandra_spark.operators.bloom import sidecar_path
-
         self._log.clear()
         self.purge_retired()
         for path in self._segments:
-            for f in (path, sidecar_path(path), *self._stat_sidecars(path)):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            try:
+                os.remove(path)
+            except OSError:
+                pass
+            self._remove_sidecars(path)
         self._segments.clear()
         self._blooms.clear()
         self._max_wt = None

@@ -3548,7 +3548,8 @@ class CqlSession:
                     # recheck). Equality/CONTAINS probes value Blooms;
                     # numeric ranges on SAI columns probe per-segment
                     # [min, max] value stats instead (SAI serves ranges
-                    # from its index)
+                    # from its index). A probe past the table's
+                    # index_probe_collect_cap returns None: full scan
                     t = self.tables[key]
                     pks = None
                     hit = self._indexed_eq_prune(key, stmt)
@@ -3562,10 +3563,7 @@ class CqlSession:
                             lhit = self._indexed_like_prune(key, stmt)
                             if lhit is not None:
                                 pks = t.index_candidate_pks_prefix(*lhit)
-                    if pks is not None and len(pks) <= 20_000:
-                        # an unselective predicate would inflate the
-                        # isin list past what a plan should carry —
-                        # fall back to the full scan above that size
+                    if pks is not None:
                         pruned = (
                             t.snapshot(pk_in=pks),
                             self._meta(t.schema, key),

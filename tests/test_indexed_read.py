@@ -6,6 +6,8 @@ segments."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cassandra_spark.cql_session import CqlSession, CQLError
@@ -284,7 +286,7 @@ def test_custom_index_rejected_on_counter_table(spark, tmp_path):
         )
 
 
-# --- round-9 extensions: SAI range pruning + distributed probe ------------
+# --- round-9 extensions: SAI range pruning --------------------------------
 
 
 def _build_range(spark, tmp_path, with_index: bool) -> CqlSession:
@@ -389,32 +391,6 @@ def test_plain_index_does_not_serve_ranges(spark, tmp_path):
     assert t.index_stats["range_skipped"] == before["range_skipped"]
 
 
-def test_distributed_probe_matches_driver_loop(spark, tmp_path):
-    """Past the segment-count threshold, phase 1 runs as ONE Spark job
-    over the survivor list — answers identical to the pyarrow loop."""
-    s = _build_range(spark, tmp_path, True)
-    t = s.table("rng")
-    q_eq = "SELECT k, v FROM rng WHERE v = 7"
-    q_rng = "SELECT k, v FROM rng WHERE v > 2 AND v < 22"
-    # force the driver loop for the baseline, whatever the survivor count
-    t.index_probe_distribute_threshold = 10_000
-    via_loop = {
-        q: sorted(tuple(r) for r in s.execute(q).collect())
-        for q in (q_eq, q_rng)
-    }
-    assert t.index_stats["distributed_jobs"] == 0, (
-        "below the threshold the driver loop must be used"
-    )
-    t.index_probe_distribute_threshold = 0
-    before = t.index_stats["distributed_jobs"]
-    for q, want in via_loop.items():
-        got = sorted(tuple(r) for r in s.execute(q).collect())
-        assert got == want, q
-    assert t.index_stats["distributed_jobs"] >= before + 1, (
-        "past the threshold the probe must issue a Spark job"
-    )
-
-
 def test_range_fuzz_matches_full_scan(spark, tmp_path):
     """Differential fuzz for the RANGE probe: random insert/overwrite/
     delete history on an SAI-indexed int column, then every range SELECT
@@ -486,8 +462,8 @@ def test_constant_value_probe_overflows_to_full_scan(spark, tmp_path):
     """Every row matches the indexed value (the low-cardinality-2i
     anti-pattern): with the collect cap forced below the match count the
     probe must report overflow (None -> full-scan fallback) instead of
-    materializing an unbounded candidate set — on BOTH the pyarrow and
-    the distributed path — and answers stay identical."""
+    materializing an unbounded candidate set, stop reading segments once
+    past the cap, and answers stay identical."""
     s = CqlSession(spark, spill_dir=str(tmp_path), spill_threshold=6)
     s.execute("CREATE TABLE cst (k text PRIMARY KEY, tag text)")
     s.execute("CREATE INDEX cst_tag ON cst (tag)")
@@ -498,24 +474,19 @@ def test_constant_value_probe_overflows_to_full_scan(spark, tmp_path):
     q = "SELECT k FROM cst WHERE tag = 'same'"
     want = {f"u{i:02d}" for i in range(30)}
 
-    # pyarrow path (survivors below the distribute threshold)
-    t.index_probe_distribute_threshold = 10_000
     before = t.index_stats["probe_overflows"]
     assert {r.k for r in s.execute(q).collect()} == want
     assert t.index_stats["probe_overflows"] == before + 1
+    checked = t.index_stats["checked"]
     assert t.index_candidate_pks("tag", "same") is None
-
-    # distributed path: the cap is enforced INSIDE the Spark job
-    t.index_probe_distribute_threshold = 0
-    before = dict(t.index_stats)
-    assert {r.k for r in s.execute(q).collect()} == want
-    assert t.index_stats["probe_overflows"] == before["probe_overflows"] + 1
-    assert t.index_stats["distributed_jobs"] > before["distributed_jobs"]
+    assert t.index_stats["checked"] - checked < len(t._segments), (
+        "an overflowing probe must stop before the last segment"
+    )
 
 
 def test_range_probe_overflow_bounded(spark, tmp_path):
     """RANGE form of the same guarantee: an interval matching every row
-    overflows the cap and falls back, identically on both paths."""
+    overflows the cap and falls back."""
     s = CqlSession(spark, spill_dir=str(tmp_path), spill_threshold=6)
     s.execute("CREATE TABLE rof (k text PRIMARY KEY, v int)")
     s.execute(
@@ -527,16 +498,163 @@ def test_range_probe_overflow_bounded(spark, tmp_path):
     t.index_probe_collect_cap = 5
     q = "SELECT k, v FROM rof WHERE v >= -100"
     want = {(f"u{i:02d}", i) for i in range(30)}
-    for threshold in (10_000, 0):
-        t.index_probe_distribute_threshold = threshold
-        before = t.index_stats["probe_overflows"]
-        assert {(r.k, r.v) for r in s.execute(q).collect()} == want
-        assert t.index_stats["probe_overflows"] == before + 1
+    before = t.index_stats["probe_overflows"]
+    assert {(r.k, r.v) for r in s.execute(q).collect()} == want
+    assert t.index_stats["probe_overflows"] == before + 1
     assert t.index_candidate_pks_range("v", lo="-100") is None
-    # a selective probe still prunes (no overflow): candidates are a
-    # small superset (the distributed prefilter is widened-inclusive,
-    # so the exclusive bound itself may survive to the phase-2 recheck)
+    # a selective probe still prunes (no overflow), exclusive bound exact
     before = t.index_stats["probe_overflows"]
     got = t.index_candidate_pks_range("v", lo="27", lo_incl=False)
-    assert {"u28", "u29"} <= got <= {"u27", "u28", "u29"}
+    assert got == {"u28", "u29"}
     assert t.index_stats["probe_overflows"] == before
+
+
+def test_prefix_fuzz_matches_full_scan(spark, tmp_path):
+    """Differential fuzz for the PREFIX probe: random insert/overwrite/
+    delete history on a SASI-indexed text column, then every
+    ``LIKE 'prefix%'`` SELECT equals the unindexed session's ALLOW
+    FILTERING full scan."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    words = ["a", "ab", "aba", "abb", "b", "ba", "bab", "a'b"]
+    op_st = st.one_of(
+        st.tuples(
+            st.just("ins"), st.integers(0, 7), st.sampled_from(words)
+        ),
+        st.tuples(st.just("del"), st.integers(0, 7), st.just("")),
+    )
+    counter = [0]
+
+    @settings(
+        max_examples=10,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        st.lists(op_st, min_size=1, max_size=14),
+        st.integers(2, 6),
+        st.sampled_from(["a", "ab", "aba", "b", "ba", "a'", "c"]),
+    )
+    def run(history, threshold, prefix):
+        counter[0] += 1
+        base = tmp_path / f"p{counter[0]}"
+        sessions = []
+        for with_index, sub in ((True, "i"), (False, "n")):
+            s = CqlSession(
+                spark,
+                spill_dir=str(base / sub),
+                spill_threshold=threshold,
+            )
+            s.execute("CREATE TABLE fz (k text PRIMARY KEY, v text)")
+            if with_index:
+                s.execute(
+                    "CREATE CUSTOM INDEX fz_v ON fz (v) USING "
+                    "'org.apache.cassandra.index.sasi.SASIIndex'"
+                )
+            for kind, pk, val in history:
+                if kind == "ins":
+                    lit = val.replace("'", "''")
+                    s.execute(
+                        f"INSERT INTO fz (k, v) VALUES ('k{pk}', '{lit}')"
+                    )
+                else:
+                    s.execute(f"DELETE FROM fz WHERE k = 'k{pk}'")
+            sessions.append(s)
+        idx, plain = sessions
+        t = idx.table("fz")
+        checked = t.index_stats["checked"]
+        q = (
+            "SELECT k, v FROM fz WHERE v LIKE "
+            f"'{prefix.replace(chr(39), chr(39) * 2)}%'"
+        )
+        got = sorted(tuple(r) for r in idx.execute(q).collect())
+        want = sorted(
+            tuple(r) for r in plain.execute(q + " ALLOW FILTERING").collect()
+        )
+        assert got == want, (history, threshold, prefix)
+        assert t.index_stats["checked"] - checked == len(t._segments)
+
+    run()
+
+
+# --- sidecar lifecycle ----------------------------------------------------
+
+
+def test_recreated_table_ignores_dropped_tables_value_bloom(spark, tmp_path):
+    """DROP TABLE + CREATE TABLE restarts the segment counter, so the new
+    table's first flush reuses the old first segment's file name; the
+    dropped table's value-Bloom sidecar must not be read as the new
+    segment's (it would prune the segment and hide its rows)."""
+    s = CqlSession(spark, spill_dir=str(tmp_path))
+    for tag in ("alpha", "beta"):
+        s.execute("CREATE TABLE u (k text PRIMARY KEY, tag text)")
+        s.execute("CREATE INDEX u_tag ON u (tag)")
+        for i in range(5):
+            s.execute(f"INSERT INTO u (k, tag) VALUES ('{tag}{i}', '{tag}')")
+        s.table("u").flush()
+        rows = s.execute(f"SELECT k FROM u WHERE tag = '{tag}'").collect()
+        assert {r.k for r in rows} == {f"{tag}{i}" for i in range(5)}, tag
+        if tag == "alpha":
+            s.execute("DROP TABLE u")
+
+
+def test_no_orphan_sidecars(spark, tmp_path):
+    """Every sidecar of a removed segment (pk Bloom, value Bloom,
+    numeric and string value ranges) goes with it: after an STCS merge
+    plus purge_retired(), after TRUNCATE and after DROP TABLE."""
+    s = CqlSession(spark, spill_dir=str(tmp_path), spill_threshold=8)
+    s.execute(
+        "CREATE TABLE orp (k text PRIMARY KEY, tag text, v int, name text)"
+    )
+    s.execute("CREATE INDEX orp_tag ON orp (tag)")
+    s.execute(
+        "CREATE CUSTOM INDEX orp_v ON orp (v) USING 'StorageAttachedIndex'"
+    )
+    s.execute(
+        "CREATE CUSTOM INDEX orp_name ON orp (name) USING "
+        "'org.apache.cassandra.index.sasi.SASIIndex'"
+    )
+    t = s.table("orp")
+
+    def fill_and_read(n):
+        for i in range(n):
+            s.execute(
+                "INSERT INTO orp (k, tag, v, name) VALUES "
+                f"('k{i}', 't{i % 3}', {i}, 'n{i}')"
+            )
+        for q in (
+            "SELECT k FROM orp WHERE tag = 't1'",
+            "SELECT k FROM orp WHERE v >= 3",
+            "SELECT k FROM orp WHERE name LIKE 'n1%'",
+        ):
+            s.execute(q).collect()
+
+    def files_of(paths):
+        return sorted(
+            f
+            for p in paths
+            for f in os.listdir(os.path.dirname(p))
+            if f.startswith(os.path.basename(p))
+        )
+
+    fill_and_read(16)
+    suffixes = (".bloom", ".vbloom", ".vrange", ".svrange")
+    segs = list(t._segments)
+    present = files_of(segs)
+    assert all(any(f.endswith(x) for f in present) for x in suffixes), present
+
+    assert t.stcs_compact(), "equal-size flushes form a full tier"
+    retired = list(t._retired)
+    fill_and_read(16)  # sidecars on the merged segment too
+    t.purge_retired()
+    assert retired and files_of(retired) == []
+
+    live = list(t._segments)
+    s.execute("TRUNCATE orp")
+    assert live and files_of(live) == []
+
+    fill_and_read(16)
+    live = list(t._segments)
+    s.execute("DROP TABLE orp")
+    assert live and files_of(live) == []
