@@ -77,6 +77,9 @@ CELL, MARKER, CELL_TOMB, ROW_TOMB, PART_TOMB, INCR = (
 )
 RANGE_TOMB = "range_tomb"
 COLL_TOMB = "coll_tomb"
+_TOMB_KINDS = frozenset(
+    (CELL_TOMB, ROW_TOMB, PART_TOMB, RANGE_TOMB, COLL_TOMB)
+)
 
 # clustering values join into one log key with an unprintable separator
 SEP = "\x1f"
@@ -658,10 +661,10 @@ class TableSchema:
                 raise CQLError(f"missing partition key {missing[0]}")
             raise CQLError(f"missing partition key component(s) {missing}")
         if not self.pk_composite:
-            return pairs[self.partition_cols[0]]
+            return self.pk_norm(self.partition_cols[0], pairs)
         vals = []
         for c in self.partition_cols:
-            v = pairs[c]
+            v = self.pk_norm(c, pairs)
             if v is None:
                 raise CQLError(
                     f"null is not a valid partition key component ({c!r})"
@@ -676,6 +679,16 @@ class TableSchema:
 
     def key_type(self, col: str) -> str:
         return self.key_types.get(col, "string")
+
+    def pk_norm(self, col: str, pairs: dict[str, str | None]) -> str | None:
+        """Partition key component ``col`` of ``pairs`` in one spelling
+        per value ('05' and '5' are one int partition, as the typed
+        read compares them), so a read can name the stored key."""
+        v = pairs[col]
+        typ = self.key_types.get(col)
+        if v is None or typ not in _KEY_NORM_TYPES:
+            return v
+        return _index_norm(v, typ)
 
     @property
     def scalar_regular(self) -> dict[str, str]:
@@ -859,6 +872,11 @@ INDEX_RANGE_TYPES = frozenset(
 )
 
 
+# key types whose canonical spellings pk_norm rewrites (text keys are
+# already stored as written)
+_KEY_NORM_TYPES = INDEX_EQ_TYPES - {"string"}
+
+
 def index_range_type(schema: "TableSchema", col: str) -> str | None:
     """The scalar type a RANGE probe on ``col`` orders against, or None
     when the column's family doesn't support index-served ranges
@@ -1022,6 +1040,35 @@ def _pykey(v: str, typ: str):
     return float(v) if typ.split("(")[0] in _NUMERIC_TYPES else v
 
 
+def _order_key(v: str | None, typ: str) -> tuple:
+    """Sort key that orders canonical key strings the way Spark orders
+    ``CAST(v AS typ)`` ascending, nulls first: numerics as exact
+    Decimal (NaN above every number), booleans false < true, date and
+    timestamp text as instants (naive = UTC, the session zone), other
+    types as strings (UTF-8 byte order = code point order). A value
+    that does not parse sorts last; the cast then fails it anyway."""
+    from datetime import datetime, timezone
+    from decimal import Decimal, InvalidOperation
+
+    if v is None:
+        return (0,)
+    t = typ.split("(")[0].strip().lower()
+    try:
+        if t in _NUMERIC_TYPES or t in ("varint", "decimal"):
+            d = Decimal(v)
+            return (2,) if d.is_nan() else (1, d)
+        if t in ("timestamp", "date"):
+            ts = datetime.fromisoformat(v.strip().replace("Z", "+00:00"))
+            if ts.tzinfo is None:
+                ts = ts.replace(tzinfo=timezone.utc)
+            return (1, ts)
+    except (InvalidOperation, ValueError):
+        return (3, v)
+    if t == "boolean":
+        return (1, v.lower() == "true")
+    return (1, v)
+
+
 class CqlTable:
     """A mutable CQL table: DML statements append to a cell-mutation log;
     ``snapshot(asof_us)`` reconciles it into the visible rows.
@@ -1107,6 +1154,9 @@ class CqlTable:
         # counters; filters load/rebuild lazily so restored segments work
         self._blooms: dict[str, object] = {}
         self.bloom_stats = {"checked": 0, "skipped": 0}
+        # the last partition read's events in the reference's tracing
+        # wording (the session copies them into system_traces.events)
+        self.read_trace: list[str] = []
         # per-(segment, indexed column) Bloom filters over the column's
         # cell VALUES — the 2i read path's segment-pruning leg (lazy,
         # sidecar-persisted; _retire_into drops a retired path's entries)
@@ -1127,11 +1177,15 @@ class CqlTable:
         # the candidate-pk set a probe may collect: past this many
         # DISTINCT candidates the index gives no useful selectivity (the
         # reference's low-cardinality-2i anti-pattern) and the probe
-        # stops and reports None — the read falls back to the full
-        # reconcile, which at that selectivity is the better plan
-        # anyway. The probe checks the cap after every segment, so it
+        # stops and reports None — the read falls back to the Spark
+        # reconcile of the whole table instead of the driver-side
+        # partition read. 3,000 is the measured crossover: on a
+        # 21,000-partition table of 16-row partitions (4 cores) the
+        # partition read of 3,000 candidates takes ~3.5 s, the Spark
+        # scan 3.2-4.0 s; at 20,000 candidates 18 s against the same
+        # scan. The probe checks the cap after every segment, so it
         # holds at most cap + one segment's matching pks.
-        self.index_probe_collect_cap = 20_000
+        self.index_probe_collect_cap = 3_000
         # LCS bookkeeping: segment -> level (absent = L0, where every
         # flush/bulk-load lands), cached [min,max] pk-token ranges, and
         # read-path range-skip counters (the leveled manifest analogue)
@@ -1562,131 +1616,126 @@ class CqlTable:
                 return False
         return True
 
-    def _row_state(self, pk: str | None, ck) -> dict | None:
-        """Pure-Python reconcile of one (pk, ck) at the current clock — the
-        LWT read phase. Driver-side by design: a condition reads exactly one
-        row, and the reference serves it from one replica's read path, not a
-        scan; mirroring it as a Spark job per statement would be the
-        anti-pattern. Same W4/W3/W2 rules as :meth:`snapshot` (writetime
-        desc, tombstone beats write, arrival seq; row/range/partition
-        shadowing; TTL horizon; collection-tombstone horizons) —
-        ``tests/test_lwt_replay.py`` holds them together.
+    def _reconcile(self, pks, asof: int) -> dict:
+        """Pure-Python reconcile of the partitions ``pks`` at ``asof``:
+        the read of a partition-pinned SELECT, an LWT condition and a
+        list-index write. The reference serves each from one replica's
+        single-partition read, not a scan, and so does this: only the
+        partitions' own mutations are read (:meth:`_partition_rows`).
+        Same W4/W3/W2 rules as :meth:`snapshot`: per (ck, col, elem) the
+        newest writetime wins, a tombstone wins a tie, then arrival seq;
+        a cell at or below its partition, row, covering range or
+        collection tombstone is dead; TTL expires at ``asof``. Static
+        cells (ck NULL) reconcile per column and only a partition
+        tombstone shadows them. ``tests/test_history_fuzz.py`` holds the
+        two reconciles together.
 
-        ``ck`` is the clustering tuple, or None to read the static row."""
-        asof = self._clock
-        ckj = ck_join(tuple(ck)) if ck is not None else None
-        best: dict = {}  # (col, elem) -> (rank, kind, val, ttl)
-        ctomb: dict = {}  # col -> max coll-tomb writetime
-        pt = rt = rg = None
-        rows = (
-            self._log
-            if not self._segments
-            else list(self._segment_rows_for_pk(pk)) + self._log
-        )
+        Returns ``{pk: (rows, statics)}`` for the partitions with live
+        content: ``rows`` maps each live joined clustering key to its
+        live cells ``{(col, elem): (writetime, val)}`` (the row marker is
+        ``(None, None)``), ``statics`` maps each live static column to
+        ``(writetime, val)``. The ``tombstones_per_read`` guardrail is
+        checked per partition."""
+        by_pk: dict = {}
+        for r in self._partition_rows(pks):
+            by_pk.setdefault(r[0], []).append(r)
+        out = {}
         n_tombs = 0
-        for (lpk, lck, col, elem, val, kind, wt, ttl, seq, lo, hi, li, hi_i) in rows:
-            if lpk != pk:
-                continue
-            if kind in (PART_TOMB, RANGE_TOMB, ROW_TOMB, COLL_TOMB, CELL_TOMB):
-                n_tombs += 1
-            if kind == PART_TOMB:
-                pt = wt if pt is None else max(pt, wt)
-                continue
-            if kind == RANGE_TOMB:
-                if ck is not None and self._range_covers(lck, lo, hi, li, hi_i, tuple(ck)):
-                    rg = wt if rg is None else max(rg, wt)
-                continue
-            if lck != ckj:
-                continue
-            if kind == ROW_TOMB:
-                rt = wt if rt is None else max(rt, wt)
-                continue
-            if kind == COLL_TOMB:
-                ctomb[col] = wt if col not in ctomb else max(ctomb[col], wt)
-                continue
-            rank = (wt, 1 if kind == CELL_TOMB else 0, seq)
-            key = (col, elem)
-            prev = best.get(key)
-            if prev is None or rank > prev[0]:
-                best[key] = (rank, kind, val, ttl)
-        # the TombstoneOverwhelmingException analogue: a partition read
-        # that scans too many deletion markers warns, then aborts
-        self._check_guardrail(
-            "tombstones_per_read", n_tombs,
-            f"tombstones scanned reading partition {pk!r}",
+        for pk, muts in by_pk.items():
+            pt = None
+            rts: dict = {}  # ck -> max row-tomb writetime
+            gts: dict = {}  # (ck, col) -> max coll-tomb writetime
+            ranges = []
+            best: dict = {}  # (ck, col, elem) -> (rank, kind, val, ttl)
+            sbest: dict = {}  # static col -> (rank, kind, val, ttl)
+            n = 0
+            for (_, ck, col, elem, val, kind, wt, ttl, seq,
+                 lo, hi, li, hi_i) in muts:
+                if kind in _TOMB_KINDS:
+                    n += 1
+                if kind == PART_TOMB:
+                    pt = wt if pt is None else max(pt, wt)
+                elif kind == ROW_TOMB:
+                    rts[ck] = max(rts.get(ck, wt), wt)
+                elif kind == RANGE_TOMB:
+                    ranges.append((ck, lo, hi, li, hi_i, wt))
+                elif kind == COLL_TOMB:
+                    gts[ck, col] = max(gts.get((ck, col), wt), wt)
+                elif kind in (CELL, MARKER, CELL_TOMB):
+                    if ck is None:
+                        if kind == MARKER:
+                            continue
+                        store, key = sbest, col
+                    else:
+                        store, key = best, (ck, col, elem)
+                    rank = (wt, kind == CELL_TOMB, seq)
+                    prev = store.get(key)
+                    if prev is None or rank > prev[0]:
+                        store[key] = (rank, kind, val, ttl)
+            n_tombs += n
+            # the TombstoneOverwhelmingException analogue: a partition
+            # read that scans too many deletion markers warns, then aborts
+            self._check_guardrail(
+                "tombstones_per_read", n,
+                f"tombstones scanned reading partition {pk!r}",
+            )
+            rows: dict = {}
+            horizon: dict = {}  # ck -> newest partition/row/range tomb
+            for (ck, col, elem), ((wt, _, _), kind, val, ttl) in best.items():
+                if kind == CELL_TOMB or (ttl and wt + ttl <= asof):
+                    continue
+                if ck not in horizon:
+                    hs = [h for h in (pt, rts.get(ck)) if h is not None]
+                    if ranges:
+                        tup = tuple(ck.split(SEP))
+                        hs += [
+                            w for (p, lo, hi, li, hi_i, w) in ranges
+                            if self._range_covers(p, lo, hi, li, hi_i, tup)
+                        ]
+                    horizon[ck] = max(hs) if hs else None
+                h, gt = horizon[ck], gts.get((ck, col))
+                if any(t is not None and wt <= t for t in (h, gt)):
+                    continue
+                rows.setdefault(ck, {})[col, elem] = (wt, val)
+            statics = {
+                col: (wt, val)
+                for col, ((wt, _, _), kind, val, ttl) in sbest.items()
+                if kind != CELL_TOMB
+                and not (ttl and wt + ttl <= asof)
+                and (pt is None or wt > pt)
+            }
+            if rows or statics:
+                out[pk] = (rows, statics)
+        self.read_trace.append(
+            f"Read {sum(len(r) or 1 for r, _ in out.values())} live rows "
+            f"and {n_tombs} tombstone cells"
         )
-        horizons = [h for h in (pt, rt, rg) if h is not None]
-        horizon = max(horizons) if horizons else None
-        live: dict = {}
-        exists = False
-        for (col, elem), ((wt, _, _), kind, val, ttl) in best.items():
-            if kind == CELL_TOMB:
-                continue
-            if ttl and wt + ttl <= asof:
-                continue
-            if horizon is not None and wt <= horizon:
-                continue
-            if col in ctomb and wt <= ctomb[col]:
-                continue
-            exists = True
-            if col is not None and elem is None:
-                live[col] = val
-        return live if exists else None
+        return out
+
+    def _row_state(self, pk: str | None, ck) -> dict | None:
+        """The LWT read phase: live scalar values ``{col: val}`` of one
+        row at the current clock, or None when the row does not exist.
+        ``ck`` is the clustering tuple, or None to read the static row."""
+        rows, statics = self._reconcile([pk], self._clock).get(pk, ({}, {}))
+        if ck is None:
+            return {c: v for c, (_, v) in statics.items()} or None
+        cells = rows.get(ck_join(tuple(ck)))
+        if cells is None:
+            return None
+        return {
+            col: v for (col, elem), (_, v) in cells.items()
+            if col is not None and elem is None
+        }
 
     def _list_positions(self, pk, ckj, col: str) -> list[str]:
         """Live position-elems of list column ``col`` in row (pk, ckj),
         in list order — the read phase of CQL's list index operations
         (``SET l[i] = v`` / ``DELETE l[i]``), which the reference also
-        serves with a read-before-write on the row. Mirrors
-        :meth:`_row_state`'s reconcile rules (LWW rank, tombstone
-        horizons, collection-tombstone horizon, TTL at the current clock);
-        ``tests/test_collection_replay.py`` holds the two together."""
-        asof = self._clock
-        best: dict = {}  # elem -> (rank, kind, ttl)
-        ctomb = None
-        pt = rt = rg = None
-        ck = tuple(ckj.split(SEP)) if ckj else ()
-        rows = (
-            self._log
-            if not self._segments
-            else list(self._segment_rows_for_pk(pk)) + self._log
+        serves with a read-before-write on the row."""
+        rows, _ = self._reconcile([pk], self._clock).get(pk, ({}, {}))
+        return sorted(
+            elem for (c, elem) in rows.get(ckj, {}) if c == col
         )
-        for (lpk, lck, lcol, elem, val, kind, wt, ttl, seq, lo, hi, li, hi_i) in rows:
-            if lpk != pk:
-                continue
-            if kind == PART_TOMB:
-                pt = wt if pt is None else max(pt, wt)
-                continue
-            if kind == RANGE_TOMB:
-                if self._range_covers(lck, lo, hi, li, hi_i, ck):
-                    rg = wt if rg is None else max(rg, wt)
-                continue
-            if lck != ckj:
-                continue
-            if kind == ROW_TOMB:
-                rt = wt if rt is None else max(rt, wt)
-                continue
-            if lcol != col:
-                continue
-            if kind == COLL_TOMB:
-                ctomb = wt if ctomb is None else max(ctomb, wt)
-                continue
-            rank = (wt, 1 if kind == CELL_TOMB else 0, seq)
-            prev = best.get(elem)
-            if prev is None or rank > prev[0]:
-                best[elem] = (rank, kind, ttl)
-        horizons = [h for h in (pt, rt, rg, ctomb) if h is not None]
-        horizon = max(horizons) if horizons else None
-        live = []
-        for elem, ((wt, _, _), kind, ttl) in best.items():
-            if kind == CELL_TOMB:
-                continue
-            if ttl and wt + ttl <= asof:
-                continue
-            if horizon is not None and wt <= horizon:
-                continue
-            live.append(elem)
-        return sorted(live)
 
     def _list_elem_at(self, pk, ckj, col: str, idx_tok: str) -> str:
         try:
@@ -3280,7 +3329,7 @@ class CqlTable:
             null_keys = F.col("pk").isNull() | F.col("ck").isNull()
             if s.pk_composite:
                 # a string key component containing the reserved 0x1f
-                # separator would mis-split in _pk_out_cols and silently
+                # separator would mis-split in _key_exprs and silently
                 # collide two distinct composite keys — reject, mirroring
                 # pk_from_pairs on the statement path (detected as a
                 # component count mismatch in the joined key)
@@ -3607,34 +3656,54 @@ class CqlTable:
             col, keep, lambda v: v.startswith(prefix), "range_skipped"
         )
 
-    def _segment_rows_for_pk(self, pk: str | None):
-        """Mutation rows for one partition from all flushed segments, in
-        canonical tuple order — the LWT read phase's segment leg. Each
-        segment's Bloom filter is consulted first (the reference's
-        SSTable read path does the same): definitely-absent segments are
-        skipped without touching the file; the pk-filtered parquet read
-        of the rest is the same bounded single-partition read a replica
-        serves — cost is O(partition), never O(log)."""
+    def _partition_rows(self, pks):
+        """Mutation rows of the partitions ``pks``, in canonical tuple
+        order: from the flushed segments, then from the memtable. A
+        leveled segment whose token range holds none of the keys is
+        skipped (``lcs_stats``), then one whose Bloom filter rules every
+        key out (``bloom_stats``), both without touching the file, as
+        the reference's SSTable read path does. Each kept segment is
+        read once with a pk IN filter, so the cost is O(partitions),
+        never O(log). Starts ``read_trace`` with the read's events."""
         import pyarrow.parquet as pq
 
-        pk_token = None
+        wanted = {pk for pk in pks if pk is not None}
+        self.read_trace = []
+        if not wanted:
+            return []
+        tokens = None
         if self._seg_level:  # leveled layout: range-prune before bloom
             from cassandra_spark.operators.murmur3 import token_of_text
 
-            pk_token = token_of_text(pk) if pk is not None else None
+            tokens = [token_of_text(pk) for pk in wanted]
+        rows: list[tuple] = []
+        merged = 0
         for path in self._segments:
-            if pk_token is not None and self._seg_level.get(path, 0) > 0:
+            if tokens is not None and self._seg_level.get(path, 0) > 0:
                 self.lcs_stats["checked"] += 1
                 lo, hi = self._seg_token_range(path)
-                if not (lo <= pk_token <= hi):
+                if not any(lo <= t <= hi for t in tokens):
                     self.lcs_stats["range_skipped"] += 1
                     continue
             self.bloom_stats["checked"] += 1
-            if not self._bloom_for(path).might_contain(pk):
+            bf = self._bloom_for(path)
+            keep = [pk for pk in wanted if bf.might_contain(pk)]
+            if not keep:
                 self.bloom_stats["skipped"] += 1
+                gen = re.search(r"(\d+)\.parquet$", path)
+                self.read_trace.append(
+                    "Bloom filter allows skipping sstable "
+                    f"{int(gen.group(1)) if gen else os.path.basename(path)}"
+                )
                 continue
-            tbl = pq.read_table(path, filters=[("pk", "=", pk)])
-            yield from zip(*(tbl.column(c).to_pylist() for c in _MUT_COLS))
+            merged += 1
+            tbl = pq.read_table(path, filters=[("pk", "in", keep)])
+            rows += zip(*(tbl.column(c).to_pylist() for c in _MUT_COLS))
+        rows += [r for r in self._log if r[0] in wanted]
+        self.read_trace.append(
+            f"Merged data from memtables and {merged} sstables"
+        )
+        return rows
 
     def compact_segments(self) -> str | None:
         """Merge all flushed segments into one (minor compaction's
@@ -3827,7 +3896,6 @@ class CqlTable:
     def snapshot(
         self,
         asof_us: int | None = None,
-        pk_in=None,
         max_wt_us: int | None = None,
     ) -> DataFrame:
         """Visible rows after W2 (TTL at ``asof``) + W3 (tombstone
@@ -3836,12 +3904,8 @@ class CqlTable:
         ``__writetime_<col>`` shadows (f2 convention), collection columns
         assembled from live element cells, and static columns joined per
         partition (a static-only partition shows one row with NULL
-        clustering).
-
-        ``pk_in`` (2i read, phase 2): restrict the reconcile to these
-        partition keys. Semantically safe for ANY key subset — every
-        reconcile window partitions by pk, so the restricted result
-        equals the global result filtered to those partitions.
+        clustering). A read of known partitions takes
+        :meth:`partition_frame` instead: same rows, no Spark job.
 
         ``max_wt_us`` (PITR, see :meth:`snapshot_pitr`): drop every
         mutation with a newer writetime BEFORE reconciling — later
@@ -3851,11 +3915,9 @@ class CqlTable:
         s = self.schema
         if not self._log and not self._segments:
             return self._empty()
-        if pk_in is not None and not pk_in:
-            return self._empty()
         # memoize the unrestricted plan (see __init__): identical state
         # -> identical lazy plan; any restricted variant bypasses
-        plain = asof_us is None and pk_in is None and max_wt_us is None
+        plain = asof_us is None and max_wt_us is None
         if plain:
             key = (
                 self._mutver, len(self._log), tuple(self._segments),
@@ -3868,8 +3930,6 @@ class CqlTable:
         mut = self.mutation_log()
         if max_wt_us is not None:
             mut = mut.filter(F.col("writetime") <= F.lit(max_wt_us))
-        if pk_in is not None:
-            mut = mut.filter(F.col("pk").isin(list(pk_in)))
         # TTL is in writetime units here (the logical clock); the batch W2
         # operator does the real seconds→µs conversion. Default asof sees
         # everything un-expired that has no TTL.
@@ -3957,108 +4017,29 @@ class CqlTable:
             .filter("gt_ts IS NULL OR writetime > gt_ts")
         )
 
+        # the wide row per (pk, ck), untyped: the winning cell string of
+        # each scalar column, the live cells of each collection and
+        # non-frozen UDT column, and the writetime maxima.
+        # _visible_exprs types it, exactly as partition_frame does
         aggs = []
-        for c, typ in s.scalar_regular.items():
-            if c in s.nonfrozen:
-                # multi-cell UDT: aggregated with the collections below;
-                # writetime() of a multi-cell column is not a single
-                # value (the reference errors pre-4.1) — shadow NULL
-                aggs.append(
-                    F.lit(None).cast("long").alias(f"__writetime_{c}")
-                )
-                continue
-            cell_val = f"max(CASE WHEN col = '{c}' THEN val END)"
-            cell_wt = f"max(CASE WHEN col = '{c}' THEN writetime END)"
-            if parse_struct_type(typ) is not None:
-                # struct cells carry canonical JSON; from_json re-types them
-                # (a string cast can't produce a StructType)
+        for c in s.regular:
+            if c in s.coll_regular or c in s.nonfrozen:
                 aggs.append(
                     F.expr(
-                        f"from_json({cell_val}, '{spark_type_text(typ)}')"
+                        f"collect_list(CASE WHEN col = '{c}' "
+                        f"THEN struct(elem, val) END)"
                     ).alias(c)
                 )
+                wt_name = f"__maxwritetime_{c}"
             else:
-                aggs.append(F.expr(f"CAST({cell_val} AS {typ})").alias(c))
-            aggs.append(F.expr(cell_wt).alias(f"__writetime_{c}"))
-        def _cell_expr(src: str, typ: str) -> str:
-            # struct-typed (round 11) and frozen-nested-collection
-            # (round 12) elements store canonical JSON: from_json
-            # re-types them; a string cast can't build a struct or array
-            if parse_struct_type(typ) is not None or is_coll_type(typ):
-                return f"from_json({src}, '{spark_type_text(typ)}')"
-            return f"cast({src} AS {typ})"
-
-        for c, (ckind, t1, t2) in s.coll_regular.items():
-            if ckind == "list":
-                agg = F.expr(
-                    f"transform(array_sort(collect_list(CASE WHEN col = '{c}' "
-                    f"THEN struct(elem, val) END)), "
-                    f"x -> {_cell_expr('x.val', t1)})"
+                aggs.append(
+                    F.expr(f"max(CASE WHEN col = '{c}' THEN val END)")
+                    .alias(c)
                 )
-            elif ckind == "set":
-                if is_coll_type(t1):
-                    # nested-collection elements: MAP types are not
-                    # orderable in Spark, but their canonical-JSON cell
-                    # strings are — dedup/sort the strings (canonical
-                    # JSON = element identity), then re-type each
-                    agg = F.expr(
-                        f"transform(array_sort(array_distinct("
-                        f"collect_list(CASE WHEN col = '{c}' THEN val "
-                        f"END))), x -> from_json(x, "
-                        f"'{spark_type_text(t1)}'))"
-                    )
-                else:
-                    agg = F.expr(
-                        f"array_sort(array_distinct(collect_list("
-                        f"CASE WHEN col = '{c}' THEN {_cell_expr('val', t1)} "
-                        f"END)))"
-                    )
-            else:  # map: entries sorted by key for deterministic rendering
-                agg = F.expr(
-                    f"map_from_entries(array_sort(collect_list("
-                    f"CASE WHEN col = '{c}' THEN struct("
-                    f"cast(elem AS {t1}) AS key, "
-                    f"{_cell_expr('val', t2)} AS value) "
-                    f"END)))"
-                )
-            # an empty non-frozen collection IS null (reference semantics)
-            aggs.append(F.when(F.size(agg) > 0, agg).alias(c))
-            # MAXWRITETIME shadow (`[C* CASSANDRA-17425 — 4.1, unverified]`):
-            # for a multi-cell column the selector reads the max LIVE
-            # element-cell writetime; null when the collection is null
+                wt_name = f"__writetime_{c}"
             aggs.append(
                 F.expr(f"max(CASE WHEN col = '{c}' THEN writetime END)")
-                .alias(f"__maxwritetime_{c}")
-            )
-        for c in sorted(s.nonfrozen):
-            # NON-FROZEN UDT (round 13): field cells (elem = the field
-            # name) merged per-field LWW upstream exactly like map
-            # entries; the struct materializes from the field map. A
-            # column with NO live field cells is null (the multi-cell
-            # rule); declared fields missing from the map read as NULL.
-            # The identical collect_list aggregates below deduplicate in
-            # the physical plan, so the per-field repetition costs one
-            # aggregation.
-            fields = parse_struct_type(s.regular[c])
-            m_sql = (
-                f"map_from_entries(collect_list(CASE WHEN col = '{c}' "
-                f"THEN struct(elem, val) END))"
-            )
-            field_sql = ", ".join(
-                "'{fn}', {expr}".format(
-                    fn=fn, expr=_cell_expr(f"{m_sql}['{fn}']", ftype)
-                )
-                for fn, ftype in fields
-            )
-            aggs.append(
-                F.expr(
-                    f"CASE WHEN size({m_sql}) > 0 THEN "
-                    f"named_struct({field_sql}) END"
-                ).alias(c)
-            )
-            aggs.append(
-                F.expr(f"max(CASE WHEN col = '{c}' THEN writetime END)")
-                .alias(f"__maxwritetime_{c}")
+                .alias(wt_name)
             )
         # a table can legally end up with ZERO aggregated columns (every
         # column in the primary key, or ALTER ... DROP removed the last
@@ -4067,15 +4048,6 @@ class CqlTable:
         wide = live.groupBy("pk", "ck").agg(
             *(aggs or [F.count(F.lit(1)).alias("__row_marker")])
         )
-
-        # typed like _empty(): a bigint partition key reads back as bigint,
-        # not the memtable's raw key string (composite keys split back
-        # into their typed component columns, like clustering)
-        out_cols = self._pk_out_cols()
-        ck_arr = F.split("ck", SEP)
-        for i, c in enumerate(s.clustering):
-            out_cols.append(ck_arr[i].cast(s.key_type(c)).alias(c))
-        out_cols += [F.col(c) for c in s.regular]
 
         if s.static:
             statics = mut.filter(
@@ -4099,14 +4071,10 @@ class CqlTable:
                 .filter("pt_ts IS NULL OR writetime > pt_ts")
             )
             s_aggs = []
-            for c, typ in s.static.items():
-                sv = f"max(CASE WHEN col = '{c}' THEN val END)"
+            for c in s.static:
                 s_aggs.append(
-                    F.expr(
-                        f"from_json({sv}, '{spark_type_text(typ)}')"
-                    ).alias(c)
-                    if parse_struct_type(typ) is not None
-                    else F.expr(f"CAST({sv} AS {typ})").alias(c)
+                    F.expr(f"max(CASE WHEN col = '{c}' THEN val END)")
+                    .alias(c)
                 )
                 s_aggs.append(
                     F.expr(f"max(CASE WHEN col = '{c}' THEN writetime END)")
@@ -4120,34 +4088,192 @@ class CqlTable:
             wide = wide.join(F.broadcast(s_wide), "pk", "left").unionByName(
                 lonely, allowMissingColumns=True
             )
-            out_cols += [F.col(c) for c in s.static]
 
-        out_cols += [F.col(f"__writetime_{c}") for c in s.scalar_regular]
-        out_cols += [F.col(f"__writetime_{c}") for c in s.static]
-        out_cols += [
-            F.col(f"__maxwritetime_{c}")
-            for c in (*s.coll_regular, *sorted(s.nonfrozen))
-        ]
-        out = wide.select(*out_cols).orderBy(
+        out = wide.selectExpr(*self._visible_exprs()).orderBy(
             *s.partition_cols, *s.clustering
         )
         if plain:
             self._snap_cache = (key, out)
         return out
 
-    def _pk_out_cols(self) -> list:
-        """Typed user-facing partition-key columns from the log's single
-        ``pk`` string: a cast for single-column keys, a SEP-split (the
-        clustering convention) for composites."""
+    def _key_exprs(self) -> list[str]:
+        """SQL for the typed user-facing key columns: the log's single
+        ``pk`` string cast for a single-column key and SEP-split for a
+        composite (the clustering convention), then each clustering
+        column split out of ``ck``."""
         s = self.schema
-        if not s.pk_composite:
+        if s.pk_composite:
+            out = [
+                f"CAST(split(pk, '{SEP}')[{i}] AS {s.key_type(c)}) AS `{c}`"
+                for i, c in enumerate(s.partition_cols)
+            ]
+        else:
             c = s.partition_cols[0]
-            return [F.col("pk").cast(s.key_type(c)).alias(c)]
-        pk_arr = F.split("pk", SEP)
-        return [
-            pk_arr[i].cast(s.key_type(c)).alias(c)
-            for i, c in enumerate(s.partition_cols)
+            out = [f"CAST(pk AS {s.key_type(c)}) AS `{c}`"]
+        return out + [
+            f"CAST(split(ck, '{SEP}')[{i}] AS {s.key_type(c)}) AS `{c}`"
+            for i, c in enumerate(s.clustering)
         ]
+
+    def _visible_exprs(self) -> list[str]:
+        """The select list that types a reconciled wide row into the
+        table's visible columns — the one definition :meth:`snapshot`
+        and :meth:`partition_frame` both apply. Its input
+        (:meth:`_raw_schema`) holds ``pk``, ``ck`` (NULL on a
+        static-only row), each scalar and static column's winning cell
+        string, each collection and non-frozen UDT column's live cells
+        as ``array<struct<elem, val>>`` and the writetime maxima.
+        Casts and ``from_json`` re-type the canonical strings;
+        collections sort and dedup here, so the order of the input
+        cells never matters. Output: keys, regular columns, statics,
+        the ``__writetime_<col>`` shadows (f2 convention), then the
+        ``__maxwritetime_<col>`` shadows of multi-cell columns."""
+        s = self.schema
+
+        def cell(src: str, typ: str) -> str:
+            # struct-typed (round 11) and frozen-nested-collection
+            # (round 12) cells store canonical JSON: from_json re-types
+            # them; a string cast can't build a struct or array
+            if parse_struct_type(typ) is not None or is_coll_type(typ):
+                return f"from_json({src}, '{spark_type_text(typ)}')"
+            return f"CAST({src} AS {typ})"
+
+        out = self._key_exprs()
+        for c, typ in s.regular.items():
+            coll = s.coll_regular.get(c)
+            if c in s.nonfrozen:
+                # NON-FROZEN UDT (round 13): field cells (elem = the
+                # field name) merged per-field LWW upstream exactly like
+                # map entries; the struct materializes from the field
+                # map. A column with NO live field cells is null (the
+                # multi-cell rule); declared fields missing from the map
+                # read as NULL.
+                m_sql = f"map_from_entries(`{c}`)"
+                fields = []
+                for fn, ft in parse_struct_type(typ):
+                    fields.append(f"'{fn}', " + cell(f"{m_sql}['{fn}']", ft))
+                out.append(
+                    f"CASE WHEN size({m_sql}) > 0 THEN "
+                    f"named_struct({', '.join(fields)}) END AS `{c}`"
+                )
+                continue
+            if coll is None:
+                out.append(f"{cell(f'`{c}`', typ)} AS `{c}`")
+                continue
+            ckind, t1, t2 = coll
+            if ckind == "list":  # position order
+                agg = f"transform(array_sort(`{c}`), x -> {cell('x.val', t1)})"
+            elif ckind == "set" and is_coll_type(t1):
+                # nested-collection elements: MAP types are not
+                # orderable in Spark, but their canonical-JSON cell
+                # strings are — dedup/sort the strings (canonical JSON
+                # = element identity), then re-type each
+                agg = (
+                    f"transform(array_sort(array_distinct(filter("
+                    f"transform(`{c}`, x -> x.val), y -> y IS NOT NULL))), "
+                    f"x -> {cell('x', t1)})"
+                )
+            elif ckind == "set":
+                agg = (
+                    f"array_sort(array_distinct(filter(transform(`{c}`, "
+                    f"x -> {cell('x.val', t1)}), y -> y IS NOT NULL)))"
+                )
+            else:  # map: entries sorted by key for deterministic rendering
+                agg = (
+                    f"map_from_entries(array_sort(transform(`{c}`, "
+                    f"x -> struct(CAST(x.elem AS {t1}) AS key, "
+                    f"{cell('x.val', t2)} AS value))))"
+                )
+            # an empty non-frozen collection IS null (reference semantics)
+            out.append(f"CASE WHEN size({agg}) > 0 THEN {agg} END AS `{c}`")
+        out += [f"{cell(f'`{c}`', t)} AS `{c}`" for c, t in s.static.items()]
+        # writetime() of a multi-cell UDT is not a single value (the
+        # reference errors pre-4.1): its shadow is NULL. MAXWRITETIME
+        # (`[C* CASSANDRA-17425 — 4.1, unverified]`) of a multi-cell
+        # column reads the max LIVE element-cell writetime
+        out += [
+            f"CAST(NULL AS BIGINT) AS `__writetime_{c}`" if c in s.nonfrozen
+            else f"`__writetime_{c}`"
+            for c in (*s.scalar_regular, *s.static)
+        ]
+        out += [
+            f"`__maxwritetime_{c}`"
+            for c in (*s.coll_regular, *sorted(s.nonfrozen))
+        ]
+        return out
+
+    def _raw_schema(self):
+        """pyarrow schema of the untyped wide row :meth:`_visible_exprs`
+        reads (counter tables: the keys and one string per column)."""
+        import pyarrow as pa
+
+        s = self.schema
+        cells = pa.list_(
+            pa.struct([("elem", pa.string()), ("val", pa.string())])
+        )
+        fields = [("pk", pa.string()), ("ck", pa.string())]
+        for c in (*s.regular, *s.static):
+            multi = c in s.coll_regular or c in s.nonfrozen
+            fields.append((c, cells if multi else pa.string()))
+            if not s.counter:
+                wt = "__maxwritetime_" if multi else "__writetime_"
+                fields.append((wt + c, pa.int64()))
+        return pa.schema(fields)
+
+    def partition_frame(self, pks) -> DataFrame:
+        """The visible rows of partitions ``pks`` as a DataFrame with no
+        Spark job behind it — the single-partition read (the reference's
+        ``SinglePartitionReadCommand``) that serves a SELECT whose
+        partitions are known. :meth:`_reconcile` merges the partitions
+        at the snapshot's ``asof`` on the driver; the wide rows go to
+        Spark as one Arrow table (a LocalRelation) and
+        :meth:`_visible_exprs` types them. Columns, types, shadows and
+        row order equal ``snapshot()`` filtered to ``pks``; the rows are
+        pre-sorted here because a Sort on a LocalRelation costs Spark
+        jobs. Not for counter tables (their reconcile is a sum,
+        :meth:`_counter_snapshot`)."""
+        import pyarrow as pa
+
+        s = self.schema
+        state = self._reconcile(pks, (self._max_wt or 0) + 1)
+        schema = self._raw_schema()
+        cols: dict[str, list] = {f.name: [] for f in schema}
+        keys = [(c, s.key_type(c)) for c in s.partition_cols]
+        cks = [(c, s.key_type(c)) for c in s.clustering]
+
+        def order(joined, kts):
+            if joined is None:
+                return [(0,)] * len(kts)
+            parts = joined.split(SEP) if len(kts) > 1 else [joined]
+            return [_order_key(v, t) for v, (_, t) in zip(parts, kts)]
+
+        for pk in sorted(state, key=lambda p: order(p, keys)):
+            rows, statics = state[pk]
+            for ck in sorted(rows, key=lambda k: order(k, cks)) or [None]:
+                cols["pk"].append(pk)
+                cols["ck"].append(ck)
+                cells: dict = {}  # col -> [(elem, writetime, val)]
+                for (col, elem), (wt, v) in rows.get(ck, {}).items():
+                    cells.setdefault(col, []).append((elem, wt, v))
+                for c in s.regular:
+                    cs = cells.get(c, [])
+                    wt = max((w for _, w, _ in cs), default=None)
+                    if c in s.coll_regular or c in s.nonfrozen:
+                        cols[c].append(
+                            [{"elem": e, "val": v} for e, _, v in cs]
+                        )
+                        cols[f"__maxwritetime_{c}"].append(wt)
+                    else:
+                        vals = [v for *_, v in cs if v is not None]
+                        cols[c].append(max(vals, default=None))
+                        cols[f"__writetime_{c}"].append(wt)
+                for c in s.static:
+                    wt, v = statics.get(c, (None, None))
+                    cols[c].append(v)
+                    cols[f"__writetime_{c}"].append(wt)
+        return self.spark.createDataFrame(
+            pa.table(cols, schema=schema)
+        ).selectExpr(*self._visible_exprs())
 
     def _counter_snapshot(self, max_wt_us: int | None = None) -> DataFrame:
         """Counter reconcile (W6 driven from statement text): a counter cell
@@ -4207,36 +4333,20 @@ class CqlTable:
         wide = live.groupBy("pk", "ck").agg(
             *(aggs or [F.count(F.lit(1)).alias("__row_marker")])
         )
-        ck_arr = F.split("ck", SEP)
-        return wide.select(
-            *self._pk_out_cols(),
-            *[
-                ck_arr[i].cast(s.key_type(c)).alias(c)
-                for i, c in enumerate(s.clustering)
-            ],
-            *[c for c in s.regular],
+        return wide.selectExpr(
+            *self._key_exprs(), *(f"`{c}`" for c in s.regular)
         ).orderBy(*s.partition_cols, *s.clustering)
 
     def _empty(self) -> DataFrame:
+        """No rows, with the visible schema: a zero-row Arrow table typed
+        by the same select list as :meth:`snapshot`. Spark keeps it as a
+        LocalRelation, so collecting it runs no job (an empty frame from
+        a Python list costs two)."""
         s = self.schema
-        fields = [f"{c} {s.key_type(c)}" for c in s.partition_cols]
-        for c in s.clustering:
-            fields.append(f"{c} {s.key_type(c)}")
-        for c, t in s.regular.items():
-            p = parse_coll_type(t)
-            if p is None:
-                fields.append(f"{c} {t}")
-            elif p[0] == "map":
-                fields.append(f"{c} map<{p[1]},{p[2]}>")
-            else:
-                fields.append(f"{c} array<{p[1]}>")
-        for c, t in s.static.items():
-            fields.append(f"{c} {t}")
+        df = self.spark.createDataFrame(self._raw_schema().empty_table())
         if not s.counter:
-            fields += [f"__writetime_{c} long" for c in s.scalar_regular]
-            fields += [f"__writetime_{c} long" for c in s.static]
-            fields += [
-                f"__maxwritetime_{c} long"
-                for c in (*s.coll_regular, *sorted(s.nonfrozen))
-            ]
-        return self.spark.createDataFrame([], ", ".join(fields))
+            return df.selectExpr(*self._visible_exprs())
+        return df.selectExpr(
+            *self._key_exprs(),
+            *(f"CAST(`{c}` AS {t}) AS `{c}`" for c, t in s.regular.items()),
+        )

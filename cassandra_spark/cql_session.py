@@ -1117,6 +1117,9 @@ class CqlSession:
         # persist after TRACING OFF, as system_traces rows do
         self._traces: list[tuple] = []
         self._tracing_on = False
+        # activities the running traced statement adds between its
+        # "Parsing" and "Executing statement" events (None: not tracing)
+        self._trace_acts: list[str] | None = None
 
     GUARDRAIL_NAMES = (
         "items_per_collection",
@@ -1675,15 +1678,16 @@ class CqlSession:
                 f"IN cartesian product on {key!r}",
             )
 
-    def _masked_conjunctive_where(self, stmt: str):
+    def _masked_conjunctive_where(self, stmt: str, allow_in: bool = False):
         """(where_text, offset_into_stmt) for a statement whose WHERE is
         a pure conjunction, with string-literal CONTENT masked out
         (length-preserving '_' runs, quotes kept) so structural regexes
         are quote-aware — keywords INSIDE a quoted string can neither
         truncate the WHERE extent nor hide an OR. None when there is no
-        WHERE or the clause carries OR/NOT/IN (an indexed conjunct is
-        not a safe partition pruner under those). Literal text must be
-        recovered from the ORIGINAL stmt by offset (lengths match)."""
+        WHERE or the clause carries OR/NOT, or IN unless ``allow_in``
+        (an indexed conjunct is not a safe partition pruner under
+        those). Literal text must be recovered from the ORIGINAL stmt by
+        offset (lengths match)."""
         masked = re.sub(
             r"'(?:[^']|'')*'",
             lambda m: "'" + "_" * (len(m.group(0)) - 2) + "'",
@@ -1699,9 +1703,115 @@ class CqlSession:
         if not wm:
             return None
         where = wm.group(1)
-        if re.search(r"\b(OR|NOT|IN)\b", where, re.IGNORECASE):
+        banned = r"\b(OR|NOT)\b" if allow_in else r"\b(OR|NOT|IN)\b"
+        if re.search(banned, where, re.IGNORECASE):
             return None
         return where, wm.start(1)
+
+    def _pinned_pks(self, tname: str, stmt: str) -> list[str] | None:
+        """The log partition keys a SELECT on session table ``tname``
+        can match, when its WHERE is a pure conjunction that pins every
+        partition-key component with ``=`` or ``IN`` literals (a
+        composite key pins the product of its components); None
+        otherwise. Only key types stored in one spelling per value
+        qualify (INDEX_EQ_TYPES, see ``TableSchema.pk_norm``), text keys
+        only with quoted literals and integer keys only with integer
+        ones, so a pinned key is exactly the partition the typed WHERE
+        compares equal. The set may be larger than the answer:
+        cql_select re-applies the whole WHERE."""
+        from itertools import product
+
+        from cassandra_spark.cql_dml import (
+            INDEX_EQ_TYPES,
+            SEP,
+            _parse_literal,
+            _split_csv,
+        )
+
+        schema = self.tables[tname].schema
+        if any(
+            schema.key_type(c) not in INDEX_EQ_TYPES
+            for c in schema.partition_cols
+        ):
+            return None
+        mw = self._masked_conjunctive_where(stmt, allow_in=True)
+        if mw is None:
+            return None
+        where, w_off = mw
+        lit_re = r"'(?:[^']|'')*'|-?\d+|true|false"
+        per_col = []
+        for c in schema.partition_cols:
+            m = re.search(
+                rf"(?:^\s*|\bAND\s+){re.escape(c)}\s*"
+                rf"(?:=\s*(?P<eq>{lit_re})|\s+IN\s*\((?P<in>[^)]*)\))"
+                rf"(?=\s*(?:AND\b|;|$))",
+                where,
+                re.IGNORECASE,
+            )
+            if not m:
+                return None
+            g = "eq" if m.group("eq") is not None else "in"
+            toks = _split_csv(
+                stmt[w_off + m.start(g) : w_off + m.end(g)]
+            )
+            typ = schema.key_type(c)
+            vals = []
+            for tok in toks:
+                if not re.fullmatch(lit_re, tok, re.IGNORECASE) or (
+                    typ == "string" and not tok.startswith("'")
+                ):
+                    return None
+                v = schema.pk_norm(c, {c: _parse_literal(tok)})
+                if v is None:
+                    continue  # a NULL key names no partition
+                if typ != "string" and not re.fullmatch(
+                    "true|false" if typ == "boolean" else r"-?\d+", v
+                ):
+                    return None
+                vals.append(v)
+            per_col.append(vals)
+        return [SEP.join(p) for p in product(*per_col)]
+
+    def _read_frame(self, tname: str, stmt: str) -> DataFrame:
+        """The rows a SELECT on session table ``tname`` reads. When the
+        statement's partitions are known — pinned by the WHERE
+        (:meth:`_pinned_pks`) or the candidates of a 2i probe — they
+        come from ``CqlTable.partition_frame``: a driver-side reconcile
+        of those partitions only, no Spark job (the reference's
+        single-partition read). Otherwise the Spark snapshot. The
+        statement's full WHERE still re-applies in cql_select (for a 2i
+        read, the phase-2 recheck of the reference's
+        CassandraIndexSearcher). Equality/CONTAINS probes value Blooms;
+        numeric ranges on SAI columns probe per-segment [min, max] value
+        stats; a probe past the table's ``index_probe_collect_cap``
+        returns None and the read scans. Counter tables always read the
+        snapshot (their reconcile is a sum); a traced pinned counter
+        read says so."""
+        t = self.tables[tname]
+        pks = self._pinned_pks(tname, stmt)
+        if t.schema.counter:
+            if pks is not None and self._trace_acts is not None:
+                self._trace_acts.append(
+                    "Counter table: partitions read through the "
+                    "Spark reconcile"
+                )
+            return t.snapshot()
+        if pks is None:
+            for prune, probe in (
+                (self._indexed_eq_prune, t.index_candidate_pks),
+                (self._indexed_range_prune, t.index_candidate_pks_range),
+                (self._indexed_like_prune, t.index_candidate_pks_prefix),
+            ):
+                hit = prune(tname, stmt)
+                if hit is not None:
+                    pks = probe(*hit)
+                    break
+        if pks is None:
+            return t.snapshot()
+        df = t.partition_frame(pks)
+        if self._trace_acts is not None:
+            self._trace_acts.extend(t.read_trace)
+        return df
 
     def _indexed_eq_prune(self, tname: str, stmt: str):
         """(col, canonical literal) when the statement's WHERE carries a
@@ -1898,68 +2008,46 @@ class CqlSession:
                 )
         return None
 
-    def _catalog_overrides(self) -> dict:
-        """(df, meta) entries for catalog tables this session has indexed:
-        SELECT compilation must see the session's index flags (e.g. SAI →
-        ANN probe routing), which the static Catalog metadata lacks."""
-        out: dict = {}
-        if self.sf_dir is None:
-            return out
+    def _catalog_override(self, tname: str):
+        """(df, meta) for catalog table ``tname`` when this session has
+        indexed it, else None: SELECT compilation must see the session's
+        index flags (e.g. SAI → ANN probe routing), which the static
+        Catalog metadata lacks."""
+        indexed = (
+            set(self.indexes) | set(self.key_indexes)
+            | set(self.sai_indexes) | set(self.sasi_indexes)
+        )
+        if self.sf_dir is None or tname not in indexed:
+            return None
         import dataclasses
 
         from cassandra_spark.catalog import Catalog
 
         cat = Catalog(self.spark, self.sf_dir)
-        indexed = (
-            set(self.indexes) | set(self.key_indexes)
-            | set(self.sai_indexes) | set(self.sasi_indexes)
-        )
-        for tname in indexed - set(self.tables):
-            if "." in tname:
-                continue  # qualified session keys are never catalog tables
-            try:
-                df, meta = cat.table(tname), cat.meta(tname)
-            except KeyError:
-                continue
-            out[tname] = (
-                df,
-                dataclasses.replace(
-                    meta,
-                    indexed=tuple(
-                        sorted(
-                            set(meta.indexed) | self.indexes.get(tname, set())
-                        )
-                    ),
-                    indexed_keys=tuple(
-                        sorted(
-                            set(meta.indexed_keys)
-                            | self.key_indexes.get(tname, set())
-                        )
-                    ),
-                    indexed_sai=tuple(
-                        sorted(
-                            set(meta.indexed_sai)
-                            | self.sai_indexes.get(tname, set())
-                        )
-                    ),
-                    indexed_sasi=tuple(
-                        sorted(
-                            set(meta.indexed_sasi)
-                            | self.sasi_indexes.get(tname, set())
-                        )
-                    ),
-                    sasi_mode=tuple(
-                        sorted(self.sasi_modes.get(tname, {}).items())
-                    ),
-                    vector_index=tuple(
-                        sorted(self.sai_vector_index.get(tname, {}).items())
-                    ),
-                    sai_similarity=tuple(
-                        sorted(self.sai_similarity.get(tname, {}).items())
-                    ),
-                ),
+        try:
+            df, meta = cat.table(tname), cat.meta(tname)
+        except KeyError:
+            return None
+
+        def merged(field: str, registry: dict) -> tuple:
+            return tuple(
+                sorted(set(getattr(meta, field)) | registry.get(tname, set()))
             )
-        return out
+
+        return df, dataclasses.replace(
+            meta,
+            indexed=merged("indexed", self.indexes),
+            indexed_keys=merged("indexed_keys", self.key_indexes),
+            indexed_sai=merged("indexed_sai", self.sai_indexes),
+            indexed_sasi=merged("indexed_sasi", self.sasi_indexes),
+            sasi_mode=tuple(sorted(self.sasi_modes.get(tname, {}).items())),
+            vector_index=tuple(
+                sorted(self.sai_vector_index.get(tname, {}).items())
+            ),
+            sai_similarity=tuple(
+                sorted(self.sai_similarity.get(tname, {}).items())
+            ),
+        )
 
     def _alter_table(self, m: re.Match) -> None:
         """ALTER TABLE ADD/DROP: live schema evolution. ADD declares a new
@@ -2286,6 +2374,7 @@ class CqlSession:
         kind = stmt.strip().split()[0].upper()
         command = "QUERY" if kind in ("SELECT", "LIST") else kind
         events = [(sid, 1, "Parsing " + kind, 0)]
+        outer, self._trace_acts = self._trace_acts, []
         try:
             result = self._execute_stmt(stmt)
         except Exception as exc:
@@ -2301,10 +2390,11 @@ class CqlSession:
             )
             self._audit_record_stmt(stmt, error=str(exc))
             raise
-        events.append(
-            (sid, 2, "Executing statement",
-             int((_time.perf_counter() - t0) * 1e6))
-        )
+        finally:
+            acts, self._trace_acts = self._trace_acts, outer
+        elapsed = int((_time.perf_counter() - t0) * 1e6)
+        for act in (*acts, "Executing statement"):
+            events.append((sid, len(events) + 1, act, elapsed))
         self._traces.append(
             ((sid, command, stmt.strip(),
               int((_time.perf_counter() - t0) * 1e6)), events)
@@ -2939,24 +3029,17 @@ class CqlSession:
         self.mat_views[name] = (base, vpk, vck, sel)
         return None
 
-    def _mv_snapshots(self) -> dict:
-        """(df, meta) per materialized view: the base snapshot re-keyed to
-        the view's primary key, IS NOT NULL filters applied, projection
-        restricted to the selected columns."""
-        from cassandra_spark.catalog import TableMeta
-
-        out = {}
-        for name, (base, vpk, vck, sel) in self.mat_views.items():
-            df = self.tables[base].snapshot()
-            for c in (vpk, *vck):
-                df = df.filter(F.col(c).isNotNull())
-            if sel is not None:
-                df = df.select(*sel)
-            out[name] = (
-                df,
-                TableMeta(self._key_bare(name), (vpk,), tuple(vck)),
-            )
-        return out
+    def _mv_snapshot(self, name: str) -> tuple:
+        """(df, meta) of materialized view ``name``: the base snapshot
+        re-keyed to the view's primary key, IS NOT NULL filters applied,
+        projection restricted to the selected columns."""
+        base, vpk, vck, sel = self.mat_views[name]
+        df = self.tables[base].snapshot()
+        for c in (vpk, *vck):
+            df = df.filter(F.col(c).isNotNull())
+        if sel is not None:
+            df = df.select(*sel)
+        return df, TableMeta(self._key_bare(name), (vpk,), tuple(vck))
 
     def _copy(self, m: re.Match) -> int:
         """cqlsh-style COPY (`[C* tools cqlsh copyutil, unverified]`):
@@ -3491,12 +3574,7 @@ class CqlSession:
             self.create_table(schema, keyspace=target_ks)
             return None
         if head.startswith("SELECT"):
-            snapshots = self._catalog_overrides()
-            snapshots.update(
-                (key, (t.snapshot(), self._meta(t.schema, key)))
-                for key, t in self.tables.items()
-            )
-            snapshots.update(self._mv_snapshots())
+            snapshots = {}
             # system.* / system_schema.* virtual tables: built only when
             # the statement actually names a system keyspace — assembling
             # the 8 reflection DataFrames costs ~0.4 s of createDataFrame
@@ -3516,22 +3594,25 @@ class CqlSession:
                         ("table_name", "range_start", "range_end"),
                     ),
                 )
-            # bare aliases for CURRENT-keyspace tables/views, so
-            # SELECT ... FROM t resolves under USE scoping (registry
-            # keys are qualified since round 11)
+            # bare aliases for CURRENT-keyspace system views, so
+            # SELECT ... FROM t resolves under USE scoping
             for key in list(snapshots):
                 if (
                     "." in key
                     and self._key_ks(key) == self.current_ks
                 ):
                     snapshots[self._key_bare(key)] = snapshots[key]
+            # only the FROM target is built: a write to table A must not
+            # make a read of table B rebuild A's snapshot plan
             fm_ = re.search(r"\bFROM\s+([\w.]+)", stmt, re.IGNORECASE)
             if fm_:
-                key = self._resolve(fm_.group(1))
+                name = fm_.group(1).lower()
+                key = self._resolve(name)
                 if (
-                    "." in fm_.group(1)
+                    "." in name
                     and self._key_ks(key) in self.keyspaces
-                    and key not in snapshots
+                    and key not in self.tables
+                    and key not in self.mat_views
                 ):
                     # an explicitly-qualified name must exist under that
                     # keyspace (catalog tables are keyspace-less and
@@ -3539,41 +3620,21 @@ class CqlSession:
                     raise CQLError(f"unknown table {fm_.group(1)!r}")
                 self._check_in_guardrail(stmt, key)
                 self._check_select_guardrails(stmt, key)
+                entry = None
                 if key in self.tables:
                     self._check_perm("SELECT", key)
-                    # 2i-accelerated read: index probe → candidate
-                    # partitions → reconcile only those (the reference's
-                    # CassandraIndexSearcher shape); the statement's full
-                    # WHERE still re-applies in cql_select (phase-2
-                    # recheck). Equality/CONTAINS probes value Blooms;
-                    # numeric ranges on SAI columns probe per-segment
-                    # [min, max] value stats instead (SAI serves ranges
-                    # from its index). A probe past the table's
-                    # index_probe_collect_cap returns None: full scan
-                    t = self.tables[key]
-                    pks = None
-                    hit = self._indexed_eq_prune(key, stmt)
-                    if hit is not None:
-                        pks = t.index_candidate_pks(*hit)
-                    else:
-                        rhit = self._indexed_range_prune(key, stmt)
-                        if rhit is not None:
-                            pks = t.index_candidate_pks_range(*rhit)
-                        else:
-                            lhit = self._indexed_like_prune(key, stmt)
-                            if lhit is not None:
-                                pks = t.index_candidate_pks_prefix(*lhit)
-                    if pks is not None:
-                        pruned = (
-                            t.snapshot(pk_in=pks),
-                            self._meta(t.schema, key),
-                        )
-                        snapshots[key] = pruned
-                        if self._key_ks(key) == self.current_ks:
-                            snapshots[self._key_bare(key)] = pruned
+                    entry = (
+                        self._read_frame(key, stmt),
+                        self._meta(self.tables[key].schema, key),
+                    )
                 elif key in self.mat_views:
                     # view reads are reads of the base table's data
                     self._check_perm("SELECT", self.mat_views[key][0])
+                    entry = self._mv_snapshot(key)
+                elif "." not in name:
+                    entry = self._catalog_override(name)
+                if entry is not None:
+                    snapshots[name] = snapshots[key] = entry
             try:
                 df = cql_select(
                     self.spark, self.sf_dir,

@@ -1073,16 +1073,21 @@ def cql20_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
       (CAST(2 AS BIGINT), CAST(1 AS BIGINT), 'Parsing UPDATE'),
       (CAST(2 AS BIGINT), CAST(2 AS BIGINT), 'Executing statement'),
       (CAST(3 AS BIGINT), CAST(1 AS BIGINT), 'Parsing SELECT'),
-      (CAST(3 AS BIGINT), CAST(2 AS BIGINT), 'Executing statement')
+      (CAST(3 AS BIGINT), CAST(2 AS BIGINT),
+       'Merged data from memtables and 0 sstables'),
+      (CAST(3 AS BIGINT), CAST(3 AS BIGINT),
+       'Read 1 live rows and 0 tombstone cells'),
+      (CAST(3 AS BIGINT), CAST(4 AS BIGINT), 'Executing statement')
     ) AS t(session_id, event_id, activity)
     """,
 )
 def cql21_tracing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query tracing (`[C* tracing/Tracing, TraceKeyspace, unverified]`):
     TRACING ON records a sessions row + ordered phase events per
-    statement into the ``system_traces`` virtual tables; the oracle pins
-    the deterministic columns (ids + activities — durations are real
-    wall micros and excluded by projection)."""
+    statement into the ``system_traces`` virtual tables, the point read
+    with its read-path events; the oracle pins the deterministic columns
+    (ids + activities — durations are real wall micros and excluded by
+    projection)."""
     sess = CqlSession(spark, sf_dir)
     sess.execute("CREATE TABLE kv (k text PRIMARY KEY, n int)")
     sess.execute("TRACING ON")

@@ -44,3 +44,19 @@ def duck():
             f"CREATE VIEW {name} AS SELECT * FROM '{SF_SMOKE}/{name}.parquet'"
         )
     yield con
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs()``: how many Spark jobs the application has started
+    so far, from the status tracker once the listener bus has drained
+    (so a job that just ran is counted). The id of the newest job, not a
+    count of retained ones, so the UI's job-retention cap never hides
+    new jobs. Take the difference around an action."""
+    sc = spark.sparkContext
+
+    def count() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1) + 1
+
+    return count

@@ -192,7 +192,10 @@ def test_tracing_and_tablestats(spark):
     ev = s.trace_events().collect()
     assert [(r.session_id, r.event_id, r.activity) for r in ev] == [
         (1, 1, "Parsing INSERT"), (1, 2, "Executing statement"),
-        (2, 1, "Parsing SELECT"), (2, 2, "Executing statement"),
+        (2, 1, "Parsing SELECT"),
+        (2, 2, "Merged data from memtables and 0 sstables"),
+        (2, 3, "Read 1 live rows and 0 tombstone cells"),
+        (2, 4, "Executing statement"),
     ]
     # virtual-table form (what cqlsh reads back)
     via_select = s.execute(

@@ -217,8 +217,8 @@ def test_in_guardrail_multiplies_components(sess):
 
 def test_composite_pk_with_secondary_index(sess):
     # 2i on a regular column of a composite-pk table: the index stores
-    # the log's joined-pk strings, so candidate pruning + pk_in
-    # reconcile work unchanged
+    # the log's joined-pk strings, so candidate pruning + the driver
+    # partition read work unchanged
     sess.execute("CREATE INDEX ON readings (val)")
     rows = sess.execute(
         "SELECT sensor, day, ts FROM readings WHERE val = 3.0"

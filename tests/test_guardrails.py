@@ -100,6 +100,14 @@ def test_tombstones_per_read(sess):
             "INSERT INTO churn (k, c, v) VALUES ('hot', 'c1', 0) "
             "IF NOT EXISTS"
         )
+    # a partition-pinned SELECT reads through the same reconcile
+    sess.set_guardrail("tombstones_per_read", warn=3, fail=100)
+    rows = sess.execute("SELECT c FROM churn WHERE k = 'hot'").collect()
+    assert len(rows) == 6
+    assert any("tombstones_per_read" in w for w in sess.pop_warnings())
+    sess.set_guardrail("tombstones_per_read", fail=3)
+    with pytest.raises(CQLError, match="tombstones_per_read"):
+        sess.execute("SELECT c FROM churn WHERE k = 'hot'")
 
 
 def test_failed_statement_is_atomic(sess):

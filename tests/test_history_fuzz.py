@@ -11,7 +11,7 @@ write: higher seq wins; write vs delete at equal ts: delete wins)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -313,8 +313,8 @@ def _cpk_model(history):
     return out
 
 
-def _cpk_engine(spark, history):
-    table = CqlTable(spark, _CPK_SCHEMA)
+def _cpk_engine(spark, history, table=None):
+    table = table or CqlTable(spark, _CPK_SCHEMA)
     for (op, pk1, pk2, ck, ts, v) in history:
         if op == "w":
             table.execute(
@@ -351,3 +351,196 @@ def _cpk_engine(spark, history):
 @given(history=cpk_history_st)
 def test_composite_pk_histories_match_model(spark, history):
     assert _cpk_engine(spark, history) == _cpk_model(history)
+
+
+# --- the driver-side partition read against the Spark snapshot and the
+# DuckDB oracle: after every generated history, partition_frame(pks)
+# must equal snapshot() filtered to pks (schema, rows and row order), and
+# both must equal dml_oracle_sql's reconcile of the same log. Histories
+# mix collections, statics, a non-frozen UDT, TTL, row / range /
+# partition tombstones, timestamp ties and flushes, so every reconcile
+# rule runs on segment rows and memtable rows alike.
+
+import pyarrow.parquet as pq  # noqa: E402
+
+from cassandra_spark.cql_dml import _MUT_COLS, SEP  # noqa: E402
+from cassandra_spark.cql_session import CqlSession  # noqa: E402
+from cassandra_spark.dml_oracle import dml_oracle_sql  # noqa: E402
+
+_KEYS = st.sampled_from("ab")
+_ROW = st.tuples(_KEYS, st.sampled_from("xy"), st.sampled_from((1, 10)))
+_TS = st.integers(1, 2)  # few timestamps: write/tombstone ties are common
+_N = st.integers(0, 9)
+
+rich_op_st = st.one_of(
+    st.tuples(st.just("ins"), _ROW, _TS, _N, st.sampled_from((0, 0, 1, 3))),
+    st.tuples(st.just("v"), _ROW, _TS, _N, st.sampled_from((0, 2))),
+    st.tuples(st.just("vnull"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("app"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("sadd"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("srm"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("mput"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("mdel"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("ufield"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("static"), _ROW, _TS, _N, st.sampled_from((0, 2))),
+    st.tuples(st.just("drow"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("drange"), _ROW, _TS, _N, st.booleans()),
+    st.tuples(st.just("dpart"), _ROW, _TS, _N, st.just(0)),
+    st.tuples(st.just("flush"), _ROW, _TS, _N, st.just(0)),
+)
+
+
+def _rich_stmt(op, row, ts, n, x) -> str:
+    k, c1, c2 = row
+    where = f"WHERE k = '{k}' AND c1 = '{c1}' AND c2 = {c2}"
+    using = f"USING TIMESTAMP {ts}" + (f" AND TTL {x}" if x else "")
+    upd = f"UPDATE f USING TIMESTAMP {ts}"
+    return {
+        "ins": (
+            f"INSERT INTO f (k, c1, c2, v, l, st, m, u) VALUES "
+            f"('{k}', '{c1}', {c2}, {n}, [{n}, 1], {{'s{n}'}}, "
+            f"{{'m{n % 3}': {n}}}, {{a: {n}, b: 'b{n}'}}) {using}"
+        ),
+        "v": f"UPDATE f {using} SET v = {n} {where}",
+        "vnull": f"{upd} SET v = null {where}",
+        "app": f"{upd} SET l = l + [{n}] {where}",
+        "sadd": f"{upd} SET st = st + {{'s{n % 3}'}} {where}",
+        "srm": f"{upd} SET st = st - {{'s{n % 3}'}} {where}",
+        "mput": f"{upd} SET m['m{n % 3}'] = {n} {where}",
+        "mdel": f"DELETE m['m{n % 3}'] FROM f USING TIMESTAMP {ts} {where}",
+        "ufield": f"{upd} SET u.a = {n} {where}",
+        "static": f"UPDATE f {using} SET s = {n} WHERE k = '{k}'",
+        "drow": f"DELETE FROM f USING TIMESTAMP {ts} {where}",
+        "drange": (
+            f"DELETE FROM f USING TIMESTAMP {ts} WHERE k = '{k}' AND "
+            f"c1 = '{c1}' AND c2 {'>=' if x else '<'} {c2}"
+        ),
+        "dpart": f"DELETE FROM f USING TIMESTAMP {ts} WHERE k = '{k}'",
+    }[op]
+
+
+def _full_log(table) -> list[tuple]:
+    """Every mutation of ``table``: flushed segments, then the memtable."""
+    rows = []
+    for path in table._segments:
+        d = pq.read_table(path).to_pydict()
+        rows += zip(*(d[c] for c in _MUT_COLS))
+    return rows + list(table._log)
+
+
+def _assert_partition_frames(table, pk_of, pks) -> list:
+    """partition_frame(pks) ≡ snapshot() filtered to pks: schema, rows,
+    order. ``pk_of`` maps a visible row to its log partition key.
+    Returns the rows."""
+    fast = table.partition_frame(pks)
+    snap = table.snapshot()
+    assert fast.schema == snap.schema
+    want = set(pks)
+    expect = [r for r in snap.collect() if pk_of(r) in want]
+    got = fast.collect()
+    assert got == expect
+    return got
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    history=st.lists(rich_op_st, min_size=4, max_size=24),
+    pks=st.sampled_from((["a"], ["b", "zz"], ["a", "b", "zz"])),
+)
+# pinned: a tombstone wins a writetime tie (scalar, map entry)
+@example(
+    history=[
+        ("ins", ("a", "x", 1), 1, 3, 0),
+        ("vnull", ("a", "x", 1), 1, 0, 0),
+        ("mdel", ("a", "x", 1), 1, 0, 0),
+        ("srm", ("a", "x", 1), 1, 3, 0),
+    ],
+    pks=["a", "b", "zz"],
+)
+# pinned: TTL expiry, a range tombstone over segment rows, a static
+# column, a partition tombstone tying a write
+@example(
+    history=[
+        ("ins", ("a", "x", 1), 1, 3, 1),
+        ("flush", ("a", "x", 1), 1, 0, 0),
+        ("ins", ("a", "x", 10), 2, 4, 0),
+        ("drange", ("a", "x", 10), 2, 0, False),
+        ("static", ("a", "y", 1), 2, 5, 0),
+        ("ins", ("b", "y", 1), 1, 6, 0),
+        ("dpart", ("b", "y", 1), 1, 0, 0),
+    ],
+    pks=["a", "b", "zz"],
+)
+def test_partition_frame_matches_snapshot_and_oracle(
+    spark, duck, tmp_path_factory, history, pks
+):
+    sess = CqlSession(
+        spark, spill_dir=str(tmp_path_factory.mktemp("pf")),
+        spill_threshold=None,
+    )
+    sess.execute("CREATE TYPE pt (a int, b text)")
+    sess.execute(
+        "CREATE TABLE f (k text, c1 text, c2 int, v int, l list<int>, "
+        "st set<text>, m map<text, int>, u pt, s int static, "
+        "PRIMARY KEY (k, c1, c2))"
+    )
+    table = sess.table("f")
+    for op in history:
+        if op[0] == "flush":
+            table.flush()
+        else:
+            sess.execute(_rich_stmt(*op))
+    if table._max_wt is None:
+        return
+    _assert_partition_frames(table, lambda r: r.k, pks)
+    # the oracle renders collections and the UDT as JSON
+    projected = table.partition_frame(pks).select(
+        "k", "c1", "c2", "v", F.to_json("u"), F.to_json("l"),
+        F.to_json("st"), F.to_json(F.map_entries("m")), "s",
+    ).collect()
+    oracle = [
+        tuple(r) for r in duck.execute(
+            dml_oracle_sql(table.schema, _full_log(table), table._max_wt + 1)
+        ).fetchall()
+        if r[0] in pks
+    ]
+    assert sorted(oracle, key=repr) == sorted(map(tuple, projected), key=repr)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    history=cpk_history_st,
+    pks=st.lists(
+        st.tuples(st.sampled_from("ab"), st.integers(0, 3)),
+        min_size=1, unique=True,
+    ),
+)
+def test_composite_pk_partition_frame_matches(spark, duck, history, pks):
+    """Composite partition keys: the pinned keys are the SEP-joined log
+    keys, and the frame equals the filtered snapshot and the oracle."""
+    table = CqlTable(spark, _CPK_SCHEMA)
+    _cpk_engine(spark, history, table)
+    if table._max_wt is None:
+        return
+    keys = [f"{p1}{SEP}{p2}" for p1, p2 in pks]
+    got = _assert_partition_frames(
+        table, lambda r: f"{r.pk1}{SEP}{r.pk2}", keys
+    )
+    oracle = [
+        tuple(r) for r in duck.execute(
+            dml_oracle_sql(table.schema, _full_log(table), table._max_wt + 1)
+        ).fetchall()
+        if r[0] in keys
+    ]
+    # the oracle keeps the joined log key in the first key column
+    assert sorted(oracle) == sorted(
+        (f"{r.pk1}{SEP}{r.pk2}", r.ck, r.v) for r in got
+    )

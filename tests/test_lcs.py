@@ -119,7 +119,7 @@ def test_point_lookup_range_pruning(spark, tmp_path):
     lv = _levels(t)
     assert len(lv.get(1, [])) > 1, "need a multi-segment level"
     t.lcs_stats = {"checked": 0, "range_skipped": 0}
-    # LWT read phase drives _segment_rows_for_pk through the leveled set
+    # LWT read phase drives _partition_rows through the leveled set
     applied = sess.execute(
         "INSERT INTO lt (k, v) VALUES ('k3', 9) IF NOT EXISTS"
     )

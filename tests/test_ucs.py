@@ -236,7 +236,7 @@ def test_point_read_prunes_ucs_shards(spark, tmp_path):
     t.ucs_compact()
     assert len(t._segments) >= 4
     t.lcs_stats = {"checked": 0, "range_skipped": 0}
-    # the LWT read phase drives _segment_rows_for_pk through the shards
+    # the LWT read phase drives _partition_rows through the shards
     applied = sess.execute(
         "INSERT INTO ut (k, v) VALUES ('k0007', 9) IF NOT EXISTS"
     )
