@@ -118,6 +118,51 @@ def _pk_tokens(keys: list):
     return tokens_of_texts(["" if k is None else k for k in keys])
 
 
+# rows per segment row group: the granule of the footer token summary
+# (``rg_tokens``) a partition read picks row groups by. Measured on the
+# cql_read table shape (3 flushes of 10k mutations, 4 cores): one hot
+# partition reads in 3.6 / 3.8 / 3.9 / 4.5 ms at 512 / 1,024 / 2,048 /
+# 4,096 rows (18.8 ms as one unsorted group), while per-group
+# dictionaries grow the files by 38 / 18 / 7 / 1 %.
+_SEG_ROW_GROUP = 2048
+
+
+def _token_sorted(tbl):
+    """Mutation rows ``tbl`` in segment order — by (Murmur3 token, pk),
+    the order an SSTable holds its partitions in — and each row's token
+    in that order (int64 numpy array). Rows of one partition stay in
+    arrival order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    pk = tbl.column("pk")
+    keys = pc.unique(pk)
+    key_toks = pa.array(_pk_tokens(keys.to_pylist()), type=pa.int64())
+    tok = key_toks.take(pc.index_in(pk, value_set=keys))
+    order = pc.sort_indices(
+        pa.table({"tok": tok, "pk": pk}),
+        sort_keys=[("tok", "ascending"), ("pk", "ascending")],
+    )
+    return tbl.take(order), tok.take(order).to_numpy()
+
+
+def _mut_rows(tbl) -> list[tuple]:
+    """A pyarrow mutation table as ``mut_row`` tuples, decoded a column
+    at a time through numpy. Values keep their Python types (``str``,
+    ``int``, ``bool`` or None): an int64 column with nulls goes through
+    ``to_pylist``, because numpy would turn it into floats with NaN."""
+    import pyarrow as pa
+
+    cols = []
+    for name in _MUT_COLS:
+        col = tbl.column(name)
+        if col.null_count and pa.types.is_int64(col.type):
+            cols.append(col.to_pylist())
+        else:
+            cols.append(col.to_numpy(zero_copy_only=False).tolist())
+    return list(zip(*cols))
+
+
 def mut_row(
     pk,
     ck,
@@ -1087,8 +1132,9 @@ class CqlTable:
       ``spill_threshold=None`` is the explicit opt-out: driver RSS stays
       O(threshold), ``mutation_log()`` unions the segment scan (executor
       side, scales with the cluster) with the in-memory tail, and the LWT
-      read path consults segments via a partition-key-filtered pyarrow
-      read (one partition's cells, the same bounded read a replica serves).
+      read path consults segments via a pyarrow read of the row groups
+      whose token hull holds the partition (one partition's cells, the
+      same bounded read a replica serves).
     """
 
     _ARROW_CHUNK = 250_000  # rows per createDataFrame slice (bounds the copy)
@@ -1154,6 +1200,10 @@ class CqlTable:
         # counters; filters load/rebuild lazily so restored segments work
         self._blooms: dict[str, object] = {}
         self.bloom_stats = {"checked": 0, "skipped": 0}
+        # per-segment open ParquetFile and parsed row-group token summary
+        # (None when the footer has no ``rg_tokens``): the partition
+        # read's Index.db analogue, kept and dropped with ``_blooms``
+        self._seg_files: dict[str, tuple] = {}
         # the last partition read's events in the reference's tracing
         # wording (the session copies them into system_traces.events)
         self.read_trace: list[str] = []
@@ -1179,13 +1229,14 @@ class CqlTable:
         # reference's low-cardinality-2i anti-pattern) and the probe
         # stops and reports None — the read falls back to the Spark
         # reconcile of the whole table instead of the driver-side
-        # partition read. 3,000 is the measured crossover: on a
-        # 21,000-partition table of 16-row partitions (4 cores) the
-        # partition read of 3,000 candidates takes ~3.5 s, the Spark
-        # scan 3.2-4.0 s; at 20,000 candidates 18 s against the same
-        # scan. The probe checks the cap after every segment, so it
-        # holds at most cap + one segment's matching pks.
-        self.index_probe_collect_cap = 3_000
+        # partition read. 5,000 is the measured crossover: on a
+        # 21,000-partition table of 16-row partitions (1.34M mutations
+        # in 2 segments, 4 cores) the partition read of 5,000
+        # candidates takes ~3.9 s, the Spark scan ~4.0 s; at 7,000
+        # candidates 6.5 s against the same scan. The probe checks the
+        # cap after every segment, so it holds at most cap + one
+        # segment's matching pks.
+        self.index_probe_collect_cap = 5_000
         # LCS bookkeeping: segment -> level (absent = L0, where every
         # flush/bulk-load lands), cached [min,max] pk-token ranges, and
         # read-path range-skip counters (the leveled manifest analogue)
@@ -2364,14 +2415,22 @@ class CqlTable:
         self._remove_sidecars(path)
         return path
 
-    def _write_segment(self, tbl, tag: str, level: int = 0) -> str:
+    def _write_segment(
+        self, tbl, tag: str, level: int = 0, tok=None, path: str | None = None,
+    ) -> str:
         """Write mutation rows ``tbl`` (a pyarrow table in log column
         order) as one new segment — the single home of the segment
-        format: the file name, the WITH compression codec, the footer
-        stamps, the partition-key Bloom sidecar (Filter.db analogue,
-        persisted so snapshots carry it) and the in-session bloom /
-        token-range / level entries. Footer stamps (the only key-value
-        metadata written, so an input's stale stamps never carry over):
+        format: the file name, the WITH compression codec, the row
+        layout, the footer stamps, the partition-key Bloom sidecar
+        (Filter.db analogue, persisted so snapshots carry it) and the
+        in-session bloom / token-range / level entries.
+
+        Every segment is a (token, pk)-sorted run (:func:`_token_sorted`;
+        ``tok`` passes the row tokens of an already sorted ``tbl``) in
+        row groups of ``_SEG_ROW_GROUP`` rows, as an SSTable is a
+        token-ordered run of partitions. Footer stamps (the only
+        key-value metadata written, so an input's stale stamps never
+        carry over):
 
         - ``max_deletion_us``: max(writetime + ttl), or -1 when any row
           can never expire (a no-TTL cell, any tombstone, a counter
@@ -2379,16 +2438,22 @@ class CqlTable:
           -1 marks a segment that may NEVER be whole-dropped (TWCS);
         - ``min_token`` / ``max_token``: the Murmur3 token hull of the
           partition keys (the point-read path's range prune);
+        - ``rg_tokens``: each row group's ``min max`` token, the
+          Summary.db analogue a partition read picks row groups by;
         - ``lcs_level`` when ``level`` >= 1 (the leveled manifest entry
           a keyspace restore rehydrates).
 
-        The caller registers the path in ``_segments``."""
+        ``path`` rewrites an existing segment in place (its cached file
+        handle goes); otherwise the caller registers the new path in
+        ``_segments``."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
 
+        if tok is None:
+            tbl, tok = _token_sorted(tbl)
         expiring = pc.and_(
             pc.is_in(tbl.column("kind"), value_set=pa.array([CELL, MARKER])),
             pc.fill_null(pc.not_equal(tbl.column("ttl"), 0), False),
@@ -2405,22 +2470,28 @@ class CqlTable:
             mdl = max(0, int(expiry or 0))
         else:
             mdl = -1
-        keys = pc.unique(tbl.column("pk")).to_pylist()
-        toks = _pk_tokens(keys)
         meta = {b"max_deletion_us": str(mdl).encode()}
-        path = self._new_segment_path(tag)
-        if len(toks):
-            rng = (int(toks.min()), int(toks.max()))
+        if path is None:
+            path = self._new_segment_path(tag)
+        else:
+            self._seg_files.pop(path, None)
+        if len(tok):
+            rng = (int(tok[0]), int(tok[-1]))
             meta[b"min_token"] = str(rng[0]).encode()
             meta[b"max_token"] = str(rng[1]).encode()
             self._seg_tokens[path] = rng
+            meta[b"rg_tokens"] = " ".join(
+                f"{tok[a]} {tok[min(a + _SEG_ROW_GROUP, len(tok)) - 1]}"
+                for a in range(0, len(tok), _SEG_ROW_GROUP)
+            ).encode()
         if level >= 1:
             meta[b"lcs_level"] = str(level).encode()
             self._seg_level[path] = level
         pq.write_table(
-            tbl.replace_schema_metadata(meta), path, compression=self._codec()
+            tbl.replace_schema_metadata(meta), path,
+            compression=self._codec(), row_group_size=_SEG_ROW_GROUP,
         )
-        bf = BloomFilter.for_keys(keys)
+        bf = BloomFilter.for_keys(pc.unique(tbl.column("pk")).to_pylist())
         bf.save(sidecar_path(path))
         self._blooms[path] = bf
         return path
@@ -2435,7 +2506,7 @@ class CqlTable:
         pick. History rows are a SET and pass through unchanged (LWW
         stays a read-time reconcile, so asof/PITR reads keep working);
         only their order changes: every output is a run sorted by
-        (token, pk), as an SSTable is. ``budget`` (estimated bytes)
+        (token, pk), as every segment is. ``budget`` (estimated bytes)
         re-splits the run on whole-partition boundaries only (same-token
         pks stay together, so inclusive token ranges never touch across
         outputs — the disjoint-range invariant leveled reads prune on);
@@ -2446,7 +2517,6 @@ class CqlTable:
         Past ``distributed_merge_bytes`` of input the merge runs as one
         Spark job (:meth:`_merge_spark`) instead of on the driver."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         bytes_in = sum(os.path.getsize(p) for p in inputs)
@@ -2455,33 +2525,29 @@ class CqlTable:
             and bytes_in >= self.distributed_merge_bytes
         ):
             return self._merge_spark(inputs, tag, level, budget)
-        merged = pa.concat_tables([pq.read_table(p) for p in inputs])
-        pk = merged.column("pk")
-        keys = pc.unique(pk)
-        key_toks = pa.array(_pk_tokens(keys.to_pylist()), type=pa.int64())
-        tok = key_toks.take(pc.index_in(pk, value_set=keys))
-        order = pc.sort_indices(
-            pa.table({"tok": tok, "pk": pk}),
-            sort_keys=[("tok", "ascending"), ("pk", "ascending")],
+        merged, tok = _token_sorted(
+            pa.concat_tables([pq.read_table(p) for p in inputs])
         )
-        merged = merged.take(order)
-        pieces = [merged]
+        cuts = [0, len(tok)]
         if budget is not None:
             # pack whole partitions (token runs) greedily by estimated
             # bytes; a piece ends only where the token changes
             import numpy as np
 
-            tok = tok.take(order).to_numpy()
             row_bytes = max(1, merged.nbytes // max(1, len(tok)))
             starts = [0, *(np.flatnonzero(np.diff(tok)) + 1).tolist()]
-            pieces, c_start = [], 0
+            cuts = [0]
             for g_start, g_end in zip(starts, starts[1:] + [len(tok)]):
-                if g_start > c_start and (g_end - c_start) * row_bytes > budget:
-                    pieces.append(merged.slice(c_start, g_start - c_start))
-                    c_start = g_start
+                if g_start > cuts[-1] and (g_end - cuts[-1]) * row_bytes > budget:
+                    cuts.append(g_start)
             if len(tok):
-                pieces.append(merged.slice(c_start))
-        created = [self._write_segment(p, tag, level) for p in pieces]
+                cuts.append(len(tok))
+        created = [
+            self._write_segment(
+                merged.slice(a, b - a), tag, level, tok=tok[a:b]
+            )
+            for a, b in zip(cuts, cuts[1:])
+        ]
         self._retire_into(inputs, created)
         self._record_compaction(
             tag, len(inputs), len(created), bytes_in,
@@ -2556,8 +2622,7 @@ class CqlTable:
             return self._garbage_collect_spark(gc_horizon_us, bytes_in)
         rows: list[tuple] = []
         for seg in self._segments:
-            tbl = pq.read_table(seg)
-            rows.extend(zip(*(tbl.column(c).to_pylist() for c in _MUT_COLS)))
+            rows += _mut_rows(pq.read_table(seg))
 
         part: dict = {}
         rowt: dict = {}
@@ -2828,12 +2893,13 @@ class CqlTable:
 
     def _retire_into(self, inputs: list[str], created: list[str]) -> None:
         """Swap ``inputs`` for ``created`` in the live segment list — the
-        one place a segment is forgotten: its bloom, level, token-range
-        and 2i value-bloom / value-range entries go with it, and the
-        file moves to ``_retired`` for purge_retired."""
+        one place a segment is forgotten: its bloom, open file, level,
+        token-range and 2i value-bloom / value-range entries go with it,
+        and the file moves to ``_retired`` for purge_retired."""
         drop = set(inputs)
         for m in inputs:
             self._blooms.pop(m, None)
+            self._seg_files.pop(m, None)
             self._seg_level.pop(m, None)
             self._seg_tokens.pop(m, None)
         for cache in (self._value_blooms, self._value_ranges):
@@ -3656,33 +3722,55 @@ class CqlTable:
             col, keep, lambda v: v.startswith(prefix), "range_skipped"
         )
 
+    def _seg_file(self, path: str) -> tuple:
+        """The open ``pq.ParquetFile`` of segment ``path`` and its row-
+        group token summary, an (n_row_groups, 2) int64 array of
+        [min, max] tokens — or None when the footer has no ``rg_tokens``
+        stamp that matches its row groups (executor-written merges,
+        bulk loads, segments of older snapshots): such a segment is read
+        whole. Cached per live segment like ``_blooms``."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        ent = self._seg_files.get(path)
+        if ent is None:
+            pf = pq.ParquetFile(path)
+            raw = (pf.schema_arrow.metadata or {}).get(b"rg_tokens")
+            hulls = None
+            if raw is not None:
+                hulls = np.array(raw.split(), dtype=np.int64).reshape(-1, 2)
+                if len(hulls) != pf.metadata.num_row_groups:
+                    hulls = None
+            ent = self._seg_files[path] = (pf, hulls)
+        return ent
+
     def _partition_rows(self, pks):
         """Mutation rows of the partitions ``pks``, in canonical tuple
         order: from the flushed segments, then from the memtable. A
         leveled segment whose token range holds none of the keys is
         skipped (``lcs_stats``), then one whose Bloom filter rules every
         key out (``bloom_stats``), both without touching the file, as
-        the reference's SSTable read path does. Each kept segment is
-        read once with a pk IN filter, so the cost is O(partitions),
-        never O(log). Starts ``read_trace`` with the read's events."""
-        import pyarrow.parquet as pq
+        the reference's SSTable read path does. Of a kept segment only
+        the row groups whose token hull holds a wanted key's token are
+        read (:meth:`_seg_file`, the Summary.db lookup), so the cost is
+        O(partitions), never O(segment). Starts ``read_trace`` with the
+        read's events."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        wanted = {pk for pk in pks if pk is not None}
+        wanted = sorted({pk for pk in pks if pk is not None})
         self.read_trace = []
         if not wanted:
             return []
-        tokens = None
-        if self._seg_level:  # leveled layout: range-prune before bloom
-            from cassandra_spark.operators.murmur3 import token_of_text
-
-            tokens = [token_of_text(pk) for pk in wanted]
+        token = dict(zip(wanted, _pk_tokens(wanted).tolist()))
         rows: list[tuple] = []
         merged = 0
         for path in self._segments:
-            if tokens is not None and self._seg_level.get(path, 0) > 0:
+            if self._seg_level.get(path, 0) > 0:
                 self.lcs_stats["checked"] += 1
                 lo, hi = self._seg_token_range(path)
-                if not any(lo <= t <= hi for t in tokens):
+                if not any(lo <= t <= hi for t in token.values()):
                     self.lcs_stats["range_skipped"] += 1
                     continue
             self.bloom_stats["checked"] += 1
@@ -3697,9 +3785,20 @@ class CqlTable:
                 )
                 continue
             merged += 1
-            tbl = pq.read_table(path, filters=[("pk", "in", keep)])
-            rows += zip(*(tbl.column(c).to_pylist() for c in _MUT_COLS))
-        rows += [r for r in self._log if r[0] in wanted]
+            pf, hulls = self._seg_file(path)
+            if hulls is None:
+                tbl = pf.read()
+            else:
+                # group g is read when some wanted token t has
+                # hulls[g, 0] <= t <= hulls[g, 1]
+                toks = np.sort([token[pk] for pk in keep])
+                hit = np.searchsorted(toks, hulls[:, 0]) < np.searchsorted(
+                    toks, hulls[:, 1], side="right"
+                )
+                tbl = pf.read_row_groups(np.flatnonzero(hit).tolist())
+            mask = pc.is_in(tbl.column("pk"), value_set=pa.array(keep))
+            rows += _mut_rows(tbl.filter(mask))
+        rows += [r for r in self._log if r[0] in token]
         self.read_trace.append(
             f"Merged data from memtables and {merged} sstables"
         )
@@ -3782,6 +3881,7 @@ class CqlTable:
             self._remove_sidecars(path)
         self._segments.clear()
         self._blooms.clear()
+        self._seg_files.clear()
         self._max_wt = None
 
     def bump_schema_version(self) -> None:
@@ -3816,7 +3916,9 @@ class CqlTable:
                 mask = pc.or_(
                     mask, pc.greater(tbl.column("writetime"), horizon_us)
                 )
-            pq.write_table(tbl.filter(mask), path, compression=self._codec())
+            self._write_segment(
+                tbl.filter(mask), "", self._seg_level.get(path, 0), path=path
+            )
 
     # --- snapshot reconciliation -----------------------------------------
 

@@ -2,15 +2,38 @@
 run as one Spark job): read-equivalence with the driver pyarrow path
 for every merge entry point,
 UCS shard invariants under the range-partitioned writer, STCS N->1
-contract, history recording, and the never-whole-droppable safe default
-for stamp-less executor-written segments."""
+contract, history recording, the never-whole-droppable safe default
+for stamp-less executor-written segments, the token-sorted row-group
+layout of every driver-written segment (flush, merge, GC) and the
+whole-file read of segments without a row-group token summary."""
 
 from __future__ import annotations
 
 import pytest
 
+from cassandra_spark import cql_dml
 from cassandra_spark.cql_session import CqlSession
 from cassandra_spark.operators.murmur3 import token_of_text
+
+
+def _assert_token_sorted_run(path):
+    """``path`` is a (token, pk)-sorted run whose footer stamps its token
+    hull and, per row group, the [min, max] token of that group's rows."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    meta = pf.schema_arrow.metadata
+    lo, hi = int(meta[b"min_token"]), int(meta[b"max_token"])
+    hulls = [int(x) for x in meta[b"rg_tokens"].split()]
+    assert len(hulls) == 2 * pf.metadata.num_row_groups
+    keys = []
+    for g in range(pf.metadata.num_row_groups):
+        pks = pf.read_row_group(g, columns=["pk"]).column("pk").to_pylist()
+        toks = [token_of_text(k) for k in pks]
+        assert [toks[0], toks[-1]] == hulls[2 * g:2 * g + 2]
+        keys += zip(toks, pks)
+    assert keys == sorted(keys)
+    assert keys[0][0] == lo and keys[-1][0] == hi
 
 
 def _fill(sess, tbl, n=60, flushes=3):
@@ -94,7 +117,9 @@ def test_spark_merge_equals_driver_merge(spark, tmp_path, entry):
     """One merge, two paths (driver pyarrow vs one Spark job), one
     answer: for every merge entry point the head SELECT and a
     mid-history snapshot_pitr match each other and the pre-merge
-    answer; driver outputs are token-sorted runs with a stamped hull."""
+    answer; driver outputs are token-sorted runs with a stamped hull;
+    executor outputs, which carry no row-group token summary, serve
+    pinned reads whole."""
     import pyarrow.parquet as pq
 
     ddl_with, run, tag = _ENTRY_POINTS[entry]
@@ -121,16 +146,17 @@ def test_spark_merge_equals_driver_merge(spark, tmp_path, entry):
     merged_b = [p for p in tb._segments if f"-{tag}" in p]
     assert merged_a and merged_b  # canonical segment naming preserved
     for p in merged_a:
-        meta = pq.ParquetFile(p).schema_arrow.metadata
-        lo, hi = int(meta[b"min_token"]), int(meta[b"max_token"])
-        assert lo <= hi
-        toks = [
-            token_of_text(k)
-            for k in pq.read_table(p, columns=["pk"]).column("pk").to_pylist()
-        ]
-        assert toks == sorted(toks) and toks[0] == lo and toks[-1] == hi
+        _assert_token_sorted_run(p)
     for p in merged_b:  # executor-written: no driver footer stamps
         assert b"min_token" not in (pq.ParquetFile(p).schema_arrow.metadata or {})
+        assert tb._seg_file(p)[1] is None
+
+    # pinned reads: one row-group pick on the driver output, the whole
+    # file on the executor output, the head answer on both
+    for sess in (a, b):
+        for k in ("k00", "k07", "k39", "absent"):
+            got = sess.execute(f"SELECT k, v FROM t WHERE k = '{k}'").collect()
+            assert [tuple(r) for r in got] == [r for r in before[0] if r[0] == k]
 
     # LWT read phase consults the merged segments (executor-written
     # blooms rebuild lazily, the bulk_load precedent)
@@ -188,3 +214,30 @@ def test_spark_merged_segment_is_never_whole_droppable(spark, tmp_path):
     # ...but writetime row-group statistics survive (TWCS bucketing)
     mn, mx, _ = t._seg_stats(t._segments[0])
     assert mn is not None and mx is not None and mn <= mx
+
+
+def test_flush_and_gc_segments_are_token_sorted_runs(
+    spark, tmp_path, monkeypatch
+):
+    """Every driver-written segment — flush, merge and GC output alike —
+    is a (token, pk)-sorted run with a per-row-group token summary; with
+    row groups of a few rows, partitions straddle group boundaries and
+    pinned reads still return exactly the head answer."""
+    monkeypatch.setattr(cql_dml, "_SEG_ROW_GROUP", 5)
+    sess = CqlSession(spark, spill_dir=str(tmp_path))
+    t, _ = _history(sess, "", flushes=3)
+    flushed = list(t._segments)
+    assert all("-seg" in p for p in flushed)
+    for p in flushed:
+        _assert_token_sorted_run(p)
+    head = _answers(sess, t, 1)[0]
+    t.compact_segments()
+    _assert_token_sorted_run(t._segments[0])
+    sess.execute("DELETE FROM t USING TIMESTAMP 1 WHERE k = 'k03'")
+    t.garbage_collect(gc_horizon_us=10**18)
+    (gc,) = t._segments
+    assert "-gc" in gc
+    _assert_token_sorted_run(gc)
+    for k in sorted({r[0] for r in head}):
+        got = sess.execute(f"SELECT k, v FROM t WHERE k = '{k}'").collect()
+        assert [tuple(r) for r in got] == [r for r in head if r[0] == k]

@@ -363,6 +363,7 @@ def test_composite_pk_histories_match_model(spark, history):
 
 import pyarrow.parquet as pq  # noqa: E402
 
+from cassandra_spark import cql_dml  # noqa: E402
 from cassandra_spark.cql_dml import _MUT_COLS, SEP  # noqa: E402
 from cassandra_spark.cql_session import CqlSession  # noqa: E402
 from cassandra_spark.dml_oracle import dml_oracle_sql  # noqa: E402
@@ -478,9 +479,17 @@ def _assert_partition_frames(table, pk_of, pks) -> list:
 def test_partition_frame_matches_snapshot_and_oracle(
     spark, duck, tmp_path_factory, history, pks
 ):
+    _check_rich_partition_frame(
+        spark, duck, tmp_path_factory, history, pks, spill_threshold=None
+    )
+
+
+def _check_rich_partition_frame(
+    spark, duck, tmp_path_factory, history, pks, spill_threshold
+):
     sess = CqlSession(
         spark, spill_dir=str(tmp_path_factory.mktemp("pf")),
-        spill_threshold=None,
+        spill_threshold=spill_threshold,
     )
     sess.execute("CREATE TYPE pt (a int, b text)")
     sess.execute(
@@ -526,7 +535,11 @@ def test_partition_frame_matches_snapshot_and_oracle(
 def test_composite_pk_partition_frame_matches(spark, duck, history, pks):
     """Composite partition keys: the pinned keys are the SEP-joined log
     keys, and the frame equals the filtered snapshot and the oracle."""
-    table = CqlTable(spark, _CPK_SCHEMA)
+    _check_cpk_partition_frame(spark, duck, CqlTable(spark, _CPK_SCHEMA),
+                               history, pks)
+
+
+def _check_cpk_partition_frame(spark, duck, table, history, pks):
     _cpk_engine(spark, history, table)
     if table._max_wt is None:
         return
@@ -544,3 +557,48 @@ def test_composite_pk_partition_frame_matches(spark, duck, history, pks):
     assert sorted(oracle) == sorted(
         (f"{r.pk1}{SEP}{r.pk2}", r.ck, r.v) for r in got
     )
+
+
+# Row groups of 3 rows: every flushed or merged segment holds several,
+# a partition's rows straddle group boundaries, and the partition read
+# picks groups by the footer token summary. Small spill thresholds make
+# the histories flush and (STCS) merge on their own.
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    history=st.lists(rich_op_st, min_size=4, max_size=24),
+    pks=st.sampled_from((["a"], ["b", "zz"], ["a", "b", "zz"])),
+)
+def test_partition_frame_matches_across_row_groups(
+    spark, duck, tmp_path_factory, monkeypatch, history, pks
+):
+    monkeypatch.setattr(cql_dml, "_SEG_ROW_GROUP", 3)
+    _check_rich_partition_frame(
+        spark, duck, tmp_path_factory, history, pks, spill_threshold=5
+    )
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    history=cpk_history_st,
+    pks=st.lists(
+        st.tuples(st.sampled_from("ab"), st.integers(0, 3)),
+        min_size=1, unique=True,
+    ),
+)
+def test_composite_pk_partition_frame_matches_across_row_groups(
+    spark, duck, tmp_path_factory, monkeypatch, history, pks
+):
+    monkeypatch.setattr(cql_dml, "_SEG_ROW_GROUP", 3)
+    table = CqlTable(
+        spark, _CPK_SCHEMA, spill_dir=str(tmp_path_factory.mktemp("cpk")),
+        spill_threshold=2, compact_threshold=3,
+    )
+    _check_cpk_partition_frame(spark, duck, table, history, pks)
