@@ -60,7 +60,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_spark.cql import CQLError
@@ -92,9 +92,8 @@ _MUT_SCHEMA = (
 _MUT_COLS = [f.split()[0] for f in _MUT_SCHEMA.split(", ")]
 
 
-def _mut_table(rows: list[tuple]):
-    """Mutation-log rows (mut_row tuples) as a pyarrow table in log
-    column order."""
+def _mut_schema():
+    """The mutation log's pyarrow schema, in log column order."""
     import pyarrow as pa
 
     types = [
@@ -102,10 +101,19 @@ def _mut_table(rows: list[tuple]):
         pa.string(), pa.int64(), pa.int64(), pa.int64(),
         pa.string(), pa.string(), pa.bool_(), pa.bool_(),
     ]
+    return pa.schema(list(zip(_MUT_COLS, types)))
+
+
+def _mut_table(rows: list[tuple]):
+    """Mutation-log rows (mut_row tuples) as a pyarrow table in log
+    column order."""
+    import pyarrow as pa
+
+    schema = _mut_schema()
     cols = list(zip(*rows))
     return pa.table(
-        {c: pa.array(cols[i], type=t) for i, (c, t) in
-         enumerate(zip(_MUT_COLS, types))}
+        [pa.array(cols[i], type=f.type) for i, f in enumerate(schema)],
+        schema=schema,
     )
 
 
@@ -161,6 +169,150 @@ def _mut_rows(tbl) -> list[tuple]:
         else:
             cols.append(col.to_numpy(zero_copy_only=False).tolist())
     return list(zip(*cols))
+
+
+def _write_run(tbl, path: str, codec: str, level: int = 0, tok=None):
+    """Write mutation rows ``tbl`` (a pyarrow table in log column order)
+    to ``path`` as one segment — the single home of the segment format,
+    run on the driver (flush, merges, rewrites) and in Spark tasks
+    (distributed merges, bulk loads) alike: the row layout, the footer
+    stamps and the partition-key Bloom sidecar (Filter.db analogue,
+    persisted so snapshots carry it).
+
+    Every segment is a (token, pk)-sorted run (:func:`_token_sorted`;
+    ``tok`` passes the row tokens of an already sorted ``tbl``) in row
+    groups of ``_SEG_ROW_GROUP`` rows, as an SSTable is a token-ordered
+    run of partitions. Footer stamps (the only key-value metadata
+    written, so an input's stale stamps never carry over):
+
+    - ``max_deletion_us``: max(writetime + ttl), or -1 when any row can
+      never expire (a no-TTL cell, any tombstone, a counter increment)
+      — the reference's per-SSTable maxLocalDeletionTime; -1 marks a
+      segment that may NEVER be whole-dropped (TWCS);
+    - ``min_token`` / ``max_token``: the Murmur3 token hull of the
+      partition keys (the point-read path's range prune);
+    - ``rg_tokens``: each row group's ``min max`` token, the Summary.db
+      analogue a partition read picks row groups by;
+    - ``lcs_level`` when ``level`` >= 1 (the leveled manifest entry a
+      keyspace restore rehydrates).
+
+    The stamps and the Bloom filter (sized by a first count of the
+    distinct keys) are built one chunk of ``tbl`` at a time, so a
+    memory-mapped ``tbl`` (a Spark task's spill, :func:`_write_shard`)
+    is written holding one spilled batch's rows, not the run.
+
+    Returns the token hull (None for no rows) and the Bloom filter."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
+
+    if tok is None:
+        tbl, tok = _token_sorted(tbl)
+    n = len(tbl)
+    exact = pa.decimal128(20, 0)  # writetime + ttl may pass int64
+    mdl = 0
+    for b in tbl.to_batches():
+        expiring = pc.and_(
+            pc.is_in(b.column("kind"), value_set=pa.array([CELL, MARKER])),
+            pc.fill_null(pc.not_equal(b.column("ttl"), 0), False),
+        )
+        if not pc.all(expiring, min_count=0).as_py():
+            mdl = -1
+            break
+        expiry = pc.max(
+            pc.add(b.column("writetime").cast(exact),
+                   b.column("ttl").cast(exact))
+        ).as_py()
+        mdl = max(mdl, int(expiry or 0))
+    meta = {b"max_deletion_us": str(mdl).encode()}
+    rng = None
+    if n:
+        rng = (int(tok[0]), int(tok[-1]))
+        last = np.minimum(np.arange(_SEG_ROW_GROUP, n + _SEG_ROW_GROUP,
+                                    _SEG_ROW_GROUP), n) - 1
+        hulls = np.column_stack([tok[0:n:_SEG_ROW_GROUP], tok[last]])
+        meta[b"min_token"] = str(rng[0]).encode()
+        meta[b"max_token"] = str(rng[1]).encode()
+        meta[b"rg_tokens"] = " ".join(map(str, hulls.ravel())).encode()
+    if level >= 1:
+        meta[b"lcs_level"] = str(level).encode()
+    pq.write_table(
+        tbl.replace_schema_metadata(meta), path,
+        compression=codec, row_group_size=_SEG_ROW_GROUP,
+    )
+    # sorted rows: a new key starts wherever pk changes
+    pk = tbl.column("pk")
+    changes = pc.sum(pc.not_equal(pk.slice(1), pk.slice(0, max(n - 1, 0))))
+    bf = BloomFilter.for_count(1 + (changes.as_py() or 0))
+    for chunk in pk.chunks:
+        for k in pc.unique(chunk).to_pylist():
+            bf.add(k)
+    bf.save(sidecar_path(path))
+    return rng, bf
+
+
+def _write_shard(batches, spill, codec, level, purge, schema):
+    """One Spark task of a distributed segment write: the task's rows —
+    whole partitions, as the shuffle ranges them by token, arriving
+    sorted by (token, pk) with their token in ``__tok`` — become one
+    run (:func:`_write_run`) at ``{spill}/{partition id}.parquet``,
+    after the purge rule (:func:`_purge_keep`) when ``purge`` is
+    ``(horizon, clock)``. The task holds one Arrow batch at a time
+    (with ``purge``, plus one partition): the rows stream into an Arrow
+    IPC spill and their tokens into a raw int64 one, which the writer
+    reads memory-mapped. Yields the written path, or nothing for a
+    shard left empty."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark import TaskContext
+
+    base = os.path.join(spill, str(TaskContext.get().partitionId()))
+    schema_t = _mut_schema()
+    n = 0
+    with pa.OSFile(base + ".arrow", "wb") as sink, pa.ipc.new_file(
+        sink, schema_t
+    ) as rows, open(base + ".tok", "wb") as toks:
+
+        def spill_rows(t):
+            nonlocal n
+            if purge is not None:
+                t = t.filter(_purge_keep(schema, t, *purge))
+            rows.write_table(t.select(_MUT_COLS).cast(schema_t))
+            toks.write(t.column("__tok").to_numpy().tobytes())
+            n += len(t)
+
+        carry = None
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            if purge is None:
+                spill_rows(t)
+                continue
+            if carry is not None:
+                t = pa.concat_tables([carry, t])
+            if not len(t):
+                continue
+            # hold back the partition the batch ends in: the purge rule
+            # needs all of its rows
+            pk = t.column("pk")
+            cut = len(t) - pc.sum(pc.equal(pk, pk[-1])).as_py()
+            spill_rows(t.slice(0, cut))
+            carry = t.slice(cut)
+        if carry is not None:
+            spill_rows(carry)
+    if n:
+        with pa.memory_map(base + ".arrow") as src:
+            _write_run(
+                pa.ipc.open_file(src).read_all(), base + ".parquet", codec,
+                level, np.memmap(base + ".tok", dtype=np.int64, mode="r"),
+            )
+    os.remove(base + ".arrow")
+    os.remove(base + ".tok")
+    if n:
+        yield pa.RecordBatch.from_pydict({"path": [base + ".parquet"]})
 
 
 def mut_row(
@@ -1114,6 +1266,112 @@ def _order_key(v: str | None, typ: str) -> tuple:
     return (1, v)
 
 
+def _range_covers(schema, prefix_j, lo, hi, lo_incl, hi_incl, ck) -> bool:
+    """Does a range tombstone (prefix + optional bounds on the next
+    clustering column of ``schema``) cover the clustering tuple ``ck``?"""
+    pref = [] if prefix_j == "" else prefix_j.split(SEP)
+    if list(ck[: len(pref)]) != pref:
+        return False
+    if lo is None and hi is None:
+        return True
+    idx = len(pref)
+    typ = schema.key_type(schema.clustering[idx])
+    v = _pykey(ck[idx], typ)
+    if lo is not None:
+        b = _pykey(lo, typ)
+        if not (v >= b if lo_incl else v > b):
+            return False
+    if hi is not None:
+        b = _pykey(hi, typ)
+        if not (v <= b if hi_incl else v < b):
+            return False
+    return True
+
+
+def _purge_keep(schema, tbl, horizon: int, clock: int):
+    """GC's purge rule, the ``nodetool garbagecollect`` purge evaluator
+    (`[C* db/compaction/CompactionController :: getPurgeEvaluator —
+    gc_grace_seconds, unverified]`): a numpy bool mask of the rows of
+    ``tbl`` that survive. ``tbl`` must hold every mutation of each
+    partition it holds (a merge of all live segments, or one token-range
+    shard of it). Drops exactly:
+
+    - data cells SHADOWED by a partition/row/range/collection tombstone
+      (cell_wt <= tomb_wt, the engine's strict-> rule) or out-ranked by
+      a cell tombstone on the same (col, elem) — droppable even under a
+      YOUNG tombstone, which itself survives to keep shadowing other
+      replicas' data;
+    - whole (col, elem) cell groups whose LWW winner is TTL-EXPIRED at
+      ``clock`` AND whose EXPIRY time (wt + ttl, the reference's
+      localDeletionTime) is before ``horizon`` — winner and every older
+      cell together, never separately: dropping only the expired winner
+      would resurrect the older value. Gating on expiry (not write
+      time) keeps ``snapshot_pitr(ts)`` exact for every horizon < ts <
+      wt + ttl, where the cell was still live;
+    - tombstones of every scope with writetime < ``horizon`` (past
+      gc_grace; younger markers survive).
+
+    Superseded-but-unshadowed older data cells are KEPT (they cost
+    bytes, not correctness, and asof reads between generations stay
+    exact)."""
+    import numpy as np
+
+    rows = _mut_rows(tbl)
+    part: dict = {}
+    rowt: dict = {}
+    collt: dict = {}
+    ranges: dict = {}  # pk -> range tombstone rows
+    cell_tomb_rank: dict = {}
+    for r in rows:
+        pk, ck, col, elem, _v, kind, wt, _ttl, seq = r[:9]
+        if kind == PART_TOMB:
+            part[pk] = max(part.get(pk, -1), wt)
+        elif kind == ROW_TOMB:
+            rowt[(pk, ck)] = max(rowt.get((pk, ck), -1), wt)
+        elif kind == COLL_TOMB:
+            k = (pk, ck, col)
+            collt[k] = max(collt.get(k, -1), wt)
+        elif kind == RANGE_TOMB:
+            ranges.setdefault(pk, []).append(r)
+        elif kind == CELL_TOMB:
+            k = (pk, ck, col, elem)
+            rank = (wt, 1, seq)
+            if rank > cell_tomb_rank.get(k, (-1, 0, -1)):
+                cell_tomb_rank[k] = rank
+
+    def scope_horizon(pk, ck, col):
+        hor = max(part.get(pk, -1), rowt.get((pk, ck), -1))
+        if col is not None:
+            hor = max(hor, collt.get((pk, ck, col), -1))
+        if ck:  # range tombstones cover clustering tuples only
+            ckt = tuple(ck.split(SEP))
+            for rr in ranges.get(pk, ()):
+                if _range_covers(schema, rr[1], *rr[9:13], ckt):
+                    hor = max(hor, rr[6])
+        return hor
+
+    # pass 1: tombstones by age, tombstone-shadow drops on data cells
+    keep = np.zeros(len(rows), dtype=bool)
+    groups: dict = {}  # (pk, ck, col, elem) -> surviving data row indexes
+    for i, r in enumerate(rows):
+        pk, ck, col, elem, _v, kind, wt, _ttl, seq = r[:9]
+        if kind in _TOMB_KINDS:
+            keep[i] = wt >= horizon  # young marker: keep shadowing
+            continue
+        if wt <= scope_horizon(pk, ck, col):
+            continue
+        if (wt, 0, seq) < cell_tomb_rank.get((pk, ck, col, elem), (-1, 0, -1)):
+            continue
+        groups.setdefault((pk, ck, col, elem), []).append(i)
+    # pass 2: expired-winner groups drop WHOLE (resurrection guard)
+    for idx in groups.values():
+        win = max((rows[i] for i in idx), key=lambda r: (r[6], r[8]))
+        wt, ttl = win[6], win[7]
+        if not (ttl and wt + ttl <= clock and wt + ttl < horizon):
+            keep[idx] = True
+    return keep
+
+
 class CqlTable:
     """A mutable CQL table: DML statements append to a cell-mutation log;
     ``snapshot(asof_us)`` reconciles it into the visible rows.
@@ -1163,12 +1421,11 @@ class CqlTable:
         # auto-compact once this many segments accumulate, so segment
         # count (and with it LWT read cost) stays bounded on any session
         self.compact_threshold = compact_threshold
-        # compaction merges whose input bytes reach this threshold run
-        # as ONE Spark job (executor read/decode/shuffle/write) instead
-        # of the driver-side pyarrow concat — the same
-        # distribute-past-a-threshold rule as the 2i candidate probe.
-        # Below it the driver path IS faster (no job overhead). None
-        # disables the Spark path outright.
+        # compaction merges (garbage collection included) whose input
+        # bytes reach this threshold run as ONE Spark job (executor
+        # read/decode/shuffle/write) instead of the driver-side pyarrow
+        # concat. Below it the driver path IS faster (no job overhead).
+        # None disables the Spark path outright.
         self.distributed_merge_bytes: int | None = 256 << 20
         self._segments: list[str] = []  # flushed parquet segment paths
         self._retired: list[str] = []  # compaction-superseded, not yet GC'd
@@ -1201,8 +1458,8 @@ class CqlTable:
         self._blooms: dict[str, object] = {}
         self.bloom_stats = {"checked": 0, "skipped": 0}
         # per-segment open ParquetFile and parsed row-group token summary
-        # (None when the footer has no ``rg_tokens``): the partition
-        # read's Index.db analogue, kept and dropped with ``_blooms``
+        # (the footer's ``rg_tokens``): the partition read's Index.db
+        # analogue, kept and dropped with ``_blooms``
         self._seg_files: dict[str, tuple] = {}
         # the last partition read's events in the reference's tracing
         # wording (the session copies them into system_traces.events)
@@ -1646,27 +1903,6 @@ class CqlTable:
             ">=": a >= b,
         }[op]
 
-    def _range_covers(self, prefix_j, lo, hi, lo_incl, hi_incl, ck) -> bool:
-        """Does a range tombstone (prefix + optional bounds on the next
-        clustering column) cover the clustering tuple ``ck``?"""
-        pref = [] if prefix_j == "" else prefix_j.split(SEP)
-        if list(ck[: len(pref)]) != pref:
-            return False
-        if lo is None and hi is None:
-            return True
-        idx = len(pref)
-        typ = self.schema.key_type(self.schema.clustering[idx])
-        v = _pykey(ck[idx], typ)
-        if lo is not None:
-            b = _pykey(lo, typ)
-            if not (v >= b if lo_incl else v > b):
-                return False
-        if hi is not None:
-            b = _pykey(hi, typ)
-            if not (v <= b if hi_incl else v < b):
-                return False
-        return True
-
     def _reconcile(self, pks, asof: int) -> dict:
         """Pure-Python reconcile of the partitions ``pks`` at ``asof``:
         the read of a partition-pinned SELECT, an LWT condition and a
@@ -1741,7 +1977,9 @@ class CqlTable:
                         tup = tuple(ck.split(SEP))
                         hs += [
                             w for (p, lo, hi, li, hi_i, w) in ranges
-                            if self._range_covers(p, lo, hi, li, hi_i, tup)
+                            if _range_covers(
+                                self.schema, p, lo, hi, li, hi_i, tup
+                            )
                         ]
                     horizon[ck] = max(hs) if hs else None
                 h, gt = horizon[ck], gts.get((ck, col))
@@ -2331,14 +2569,14 @@ class CqlTable:
 
     def _ensure_spill_dir(self) -> str:
         """One home for the spill-dir provisioning policy (prefix scheme,
-        temp location) — shared by the implicit threshold flush and the
-        explicit nodetool-style flush()."""
+        temp location, creation) — shared by flush() and bulk_load."""
         if self.spill_dir is None:
             import tempfile
 
             self.spill_dir = tempfile.mkdtemp(
                 prefix=f"cql-spill-{self.schema.name}-"
             )
+        os.makedirs(self.spill_dir, exist_ok=True)
         return self.spill_dir
 
     def _maybe_flush(self) -> None:
@@ -2358,7 +2596,6 @@ class CqlTable:
             # flush() clears it; it re-invokes _maybe_flush afterwards.
             return
         if len(self._log) >= self.spill_threshold:
-            self._ensure_spill_dir()
             self.flush()
             if self.schema.compaction == "SizeTieredCompactionStrategy":
                 self.stcs_compact()
@@ -2418,104 +2655,51 @@ class CqlTable:
     def _write_segment(
         self, tbl, tag: str, level: int = 0, tok=None, path: str | None = None,
     ) -> str:
-        """Write mutation rows ``tbl`` (a pyarrow table in log column
-        order) as one new segment — the single home of the segment
-        format: the file name, the WITH compression codec, the row
-        layout, the footer stamps, the partition-key Bloom sidecar
-        (Filter.db analogue, persisted so snapshots carry it) and the
-        in-session bloom / token-range / level entries.
-
-        Every segment is a (token, pk)-sorted run (:func:`_token_sorted`;
-        ``tok`` passes the row tokens of an already sorted ``tbl``) in
-        row groups of ``_SEG_ROW_GROUP`` rows, as an SSTable is a
-        token-ordered run of partitions. Footer stamps (the only
-        key-value metadata written, so an input's stale stamps never
-        carry over):
-
-        - ``max_deletion_us``: max(writetime + ttl), or -1 when any row
-          can never expire (a no-TTL cell, any tombstone, a counter
-          increment) — the reference's per-SSTable maxLocalDeletionTime;
-          -1 marks a segment that may NEVER be whole-dropped (TWCS);
-        - ``min_token`` / ``max_token``: the Murmur3 token hull of the
-          partition keys (the point-read path's range prune);
-        - ``rg_tokens``: each row group's ``min max`` token, the
-          Summary.db analogue a partition read picks row groups by;
-        - ``lcs_level`` when ``level`` >= 1 (the leveled manifest entry
-          a keyspace restore rehydrates).
-
+        """Write mutation rows ``tbl`` as one new segment (:func:`_write_run`
+        under the canonical name and the WITH compression codec) and
+        register its in-session bloom / token-range / level entries.
         ``path`` rewrites an existing segment in place (its cached file
         handle goes); otherwise the caller registers the new path in
         ``_segments``."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from cassandra_spark.operators.bloom import BloomFilter, sidecar_path
-
-        if tok is None:
-            tbl, tok = _token_sorted(tbl)
-        expiring = pc.and_(
-            pc.is_in(tbl.column("kind"), value_set=pa.array([CELL, MARKER])),
-            pc.fill_null(pc.not_equal(tbl.column("ttl"), 0), False),
-        )
-        if pc.all(expiring, min_count=0).as_py():
-            # exact sum: writetime + ttl may pass the int64 range
-            exact = pa.decimal128(20, 0)
-            expiry = pc.max(
-                pc.add(
-                    tbl.column("writetime").cast(exact),
-                    tbl.column("ttl").cast(exact),
-                )
-            ).as_py()
-            mdl = max(0, int(expiry or 0))
-        else:
-            mdl = -1
-        meta = {b"max_deletion_us": str(mdl).encode()}
         if path is None:
             path = self._new_segment_path(tag)
         else:
             self._seg_files.pop(path, None)
-        if len(tok):
-            rng = (int(tok[0]), int(tok[-1]))
-            meta[b"min_token"] = str(rng[0]).encode()
-            meta[b"max_token"] = str(rng[1]).encode()
-            self._seg_tokens[path] = rng
-            meta[b"rg_tokens"] = " ".join(
-                f"{tok[a]} {tok[min(a + _SEG_ROW_GROUP, len(tok)) - 1]}"
-                for a in range(0, len(tok), _SEG_ROW_GROUP)
-            ).encode()
-        if level >= 1:
-            meta[b"lcs_level"] = str(level).encode()
-            self._seg_level[path] = level
-        pq.write_table(
-            tbl.replace_schema_metadata(meta), path,
-            compression=self._codec(), row_group_size=_SEG_ROW_GROUP,
+            self._seg_tokens.pop(path, None)
+        rng, self._blooms[path] = _write_run(
+            tbl, path, self._codec(), level, tok
         )
-        bf = BloomFilter.for_keys(pc.unique(tbl.column("pk")).to_pylist())
-        bf.save(sidecar_path(path))
-        self._blooms[path] = bf
+        if rng is not None:
+            self._seg_tokens[path] = rng
+        if level >= 1:
+            self._seg_level[path] = level
         return path
 
     def _merge(
         self, inputs: list[str], tag: str, level: int = 0,
-        budget: int | None = None,
+        budget: int | None = None, purge: tuple | None = None,
     ) -> list[str]:
         """Merge segments ``inputs`` into new ``level`` segments — the one
         compaction merge every strategy (STCS, TWCS, LCS, UCS, major
-        compaction) runs; strategies differ only in which inputs they
-        pick. History rows are a SET and pass through unchanged (LWW
-        stays a read-time reconcile, so asof/PITR reads keep working);
-        only their order changes: every output is a run sorted by
-        (token, pk), as every segment is. ``budget`` (estimated bytes)
-        re-splits the run on whole-partition boundaries only (same-token
-        pks stay together, so inclusive token ranges never touch across
-        outputs — the disjoint-range invariant leveled reads prune on);
-        None means one output. Inputs retire (not deleted — lazy
-        DataFrames may still read them; GC is purge_retired's job) and
-        compaction history records the merge.
+        compaction) and garbage collection runs; they differ only in
+        which inputs they pick and in ``purge``. Without ``purge`` the
+        history rows are a SET and pass through unchanged (LWW stays a
+        read-time reconcile, so asof/PITR reads keep working); with
+        ``purge`` = ``(horizon, clock)`` the rows :func:`_purge_keep`
+        drops go, which needs ``inputs`` to hold whole partitions. Every
+        output is a run sorted by (token, pk), as every segment is.
+        ``budget`` (estimated bytes) re-splits the run on whole-partition
+        boundaries only (same-token pks stay together, so inclusive
+        token ranges never touch across outputs — the disjoint-range
+        invariant leveled reads prune on); None means one output. Inputs
+        retire (not deleted — lazy DataFrames may still read them;
+        purge_retired deletes the files) and compaction history records
+        the merge.
 
         Past ``distributed_merge_bytes`` of input the merge runs as one
-        Spark job (:meth:`_merge_spark`) instead of on the driver."""
+        Spark job (:meth:`_merge_spark`) instead of on the driver, one
+        task per output: ceil(input bytes / ``budget``) token-range
+        shards, or one when there is no budget."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -2524,87 +2708,67 @@ class CqlTable:
             self.distributed_merge_bytes is not None
             and bytes_in >= self.distributed_merge_bytes
         ):
-            return self._merge_spark(inputs, tag, level, budget)
-        merged, tok = _token_sorted(
-            pa.concat_tables([pq.read_table(p) for p in inputs])
-        )
-        cuts = [0, len(tok)]
-        if budget is not None:
-            # pack whole partitions (token runs) greedily by estimated
-            # bytes; a piece ends only where the token changes
-            import numpy as np
-
-            row_bytes = max(1, merged.nbytes // max(1, len(tok)))
-            starts = [0, *(np.flatnonzero(np.diff(tok)) + 1).tolist()]
+            created = self._merge_spark(
+                self.spark.read.schema(_MUT_SCHEMA).parquet(*inputs), tag,
+                1 if budget is None else max(1, -(-bytes_in // budget)),
+                level, purge,
+            )
+        else:
+            merged, tok = _token_sorted(
+                pa.concat_tables([pq.read_table(p) for p in inputs])
+            )
+            if purge is not None:
+                keep = _purge_keep(self.schema, merged, *purge)
+                merged, tok = merged.filter(keep), tok[keep]
             cuts = [0]
-            for g_start, g_end in zip(starts, starts[1:] + [len(tok)]):
-                if g_start > cuts[-1] and (g_end - cuts[-1]) * row_bytes > budget:
-                    cuts.append(g_start)
+            if budget is not None:
+                # pack whole partitions (token runs) greedily by estimated
+                # bytes; a piece ends only where the token changes
+                import numpy as np
+
+                row_bytes = max(1, merged.nbytes // max(1, len(tok)))
+                starts = [0, *(np.flatnonzero(np.diff(tok)) + 1).tolist()]
+                for g_start, g_end in zip(starts, starts[1:] + [len(tok)]):
+                    if (
+                        g_start > cuts[-1]
+                        and (g_end - cuts[-1]) * row_bytes > budget
+                    ):
+                        cuts.append(g_start)
             if len(tok):
                 cuts.append(len(tok))
-        created = [
-            self._write_segment(
-                merged.slice(a, b - a), tag, level, tok=tok[a:b]
-            )
-            for a, b in zip(cuts, cuts[1:])
-        ]
+            created = [
+                self._write_segment(
+                    merged.slice(a, b - a), tag, level, tok=tok[a:b]
+                )
+                for a, b in zip(cuts, cuts[1:])
+            ]
         self._retire_into(inputs, created)
         self._record_compaction(
             tag, len(inputs), len(created), bytes_in,
             sum(os.path.getsize(p) for p in created),
-            merged.num_rows, merged.num_rows,
+            sum(_pq_num_rows(p) for p in inputs),
+            sum(_pq_num_rows(p) for p in created),
         )
         return created
 
     def garbage_collect(self, gc_horizon_us: int | None = None) -> dict:
-        """``nodetool garbagecollect`` analogue (`[C* db/compaction/
-        CompactionController :: getPurgeEvaluator — gc_grace_seconds,
-        unverified]`): the EXPLICITLY destructive rewrite that ordinary
+        """``nodetool garbagecollect`` analogue: a major compaction with a
+        purge evaluator, the EXPLICITLY destructive rewrite that ordinary
         compaction here deliberately is not (merges keep every history
-        row so asof/PITR reads keep working). Drops, across
-        the full flushed history, exactly what the reference's purge
-        evaluator drops:
+        row so asof/PITR reads keep working). Flushes the memtable, then
+        merges every live segment (:meth:`_merge`, tag ``gc``) under
+        :func:`_purge_keep` at ``gc_horizon_us`` (default: the clock
+        minus WITH gc_grace_seconds) and the current clock.
 
-        - data cells SHADOWED by a partition/row/range/collection
-          tombstone (cell_wt <= tomb_wt, the engine's strict-> rule) or
-          out-ranked by a cell tombstone on the same (col, elem) —
-          droppable even under a YOUNG tombstone, which itself survives
-          to keep shadowing other replicas' data;
-        - whole (col, elem) cell groups whose LWW winner is TTL-EXPIRED
-          at the current clock AND whose EXPIRY time (wt + ttl, the
-          reference's localDeletionTime) is past the horizon — winner
-          and every older cell together, never separately: dropping
-          only the expired winner would resurrect the older value.
-          Gating on expiry (not write time) keeps ``snapshot_pitr(ts)``
-          exact for every horizon < ts < wt + ttl, where the cell was
-          still live;
-        - tombstones of every scope with writetime < ``gc_horizon_us``
-          (past gc_grace; younger markers survive).
-
-        Superseded-but-unshadowed older data cells are KEPT (pinned
-        conservative divergence: they cost bytes, not correctness, and
-        asof reads between generations stay exact). After GC, PITR to
-        a time before the newest covering tombstone may be lossy —
-        shadow-dropped data is purged even under a young (post-horizon)
-        tombstone, exactly as the reference's compaction drops shadowed
-        cells regardless of gc_grace, so ``snapshot_pitr(ts)`` for ts
-        between a purged write and its covering tombstone no longer
-        resurrects the write. The head snapshot and every post-
-        tombstone PITR are unaffected; both contracts are pinned by
-        tests/test_gc.py's GC-then-PITR differential fuzz.
-
-        Flushes the memtable first, writes the survivors as one ``gc``
-        segment (:meth:`_write_segment`), retires the inputs, records
-        compaction history.
-        Past ``distributed_merge_bytes`` the whole reconcile runs as
-        ONE Spark write action (:meth:`_garbage_collect_spark`) — the
-        same distribute-past-a-threshold rule as every other segment
-        rewrite in this file; below it the pyarrow driver path is
-        faster. Returns {"dropped": n, "kept": n}. Snapshot-at-head
-        equality and driver≡Spark path equality are pinned by
-        tests/test_gc.py's differential fuzzes."""
-        import pyarrow.parquet as pq
-
+        After GC, PITR to a time before the newest covering tombstone may
+        be lossy — shadow-dropped data is purged even under a young
+        (post-horizon) tombstone, exactly as the reference's compaction
+        drops shadowed cells regardless of gc_grace, so
+        ``snapshot_pitr(ts)`` for ts between a purged write and its
+        covering tombstone no longer resurrects the write. The head
+        snapshot and every post-tombstone PITR are unaffected; both
+        contracts are pinned by tests/test_gc.py's GC-then-PITR
+        differential fuzz. Returns {"dropped": n, "kept": n}."""
         if gc_horizon_us is None:
             # WITH gc_grace_seconds: tombstones younger than the grace
             # window survive (coherent for wall-µs-stamped workloads)
@@ -2614,228 +2778,10 @@ class CqlTable:
         self.flush()
         if not self._segments:
             return {"dropped": 0, "kept": 0}
-        bytes_in = sum(os.path.getsize(s) for s in self._segments)
-        if (
-            self.distributed_merge_bytes is not None
-            and bytes_in >= self.distributed_merge_bytes
-        ):
-            return self._garbage_collect_spark(gc_horizon_us, bytes_in)
-        rows: list[tuple] = []
-        for seg in self._segments:
-            rows += _mut_rows(pq.read_table(seg))
-
-        part: dict = {}
-        rowt: dict = {}
-        collt: dict = {}
-        ranges: list[tuple] = []
-        cell_tomb_rank: dict = {}
-        for r in rows:
-            pk, ck, col, elem, _v, kind, wt, _ttl, seq = r[:9]
-            if kind == PART_TOMB:
-                part[pk] = max(part.get(pk, -1), wt)
-            elif kind == ROW_TOMB:
-                rowt[(pk, ck)] = max(rowt.get((pk, ck), -1), wt)
-            elif kind == COLL_TOMB:
-                k = (pk, ck, col)
-                collt[k] = max(collt.get(k, -1), wt)
-            elif kind == RANGE_TOMB:
-                ranges.append(r)
-            elif kind == CELL_TOMB:
-                k = (pk, ck, col, elem)
-                rank = (wt, 1, seq)
-                if rank > cell_tomb_rank.get(k, (-1, 0, -1)):
-                    cell_tomb_rank[k] = rank
-
-        def scope_horizon(pk, ck, col):
-            hor = max(part.get(pk, -1), rowt.get((pk, ck), -1))
-            if col is not None:
-                hor = max(hor, collt.get((pk, ck, col), -1))
-            if ck:  # range tombstones cover clustering tuples only
-                ckt = tuple(ck.split(SEP))
-                for rr in ranges:
-                    if rr[0] != pk:
-                        continue
-                    if self._range_covers(rr[1], rr[9], rr[10], rr[11],
-                                          rr[12], ckt):
-                        hor = max(hor, rr[6])
-            return hor
-
-        # pass 1: tombstone-shadow drops on data cells
-        survivors: list[tuple] = []
-        groups: dict = {}  # (pk,ck,col,elem) -> [surviving data rows]
-        for r in rows:
-            pk, ck, col, elem, _v, kind, wt, _ttl, seq = r[:9]
-            if kind in (PART_TOMB, ROW_TOMB, COLL_TOMB, RANGE_TOMB,
-                        CELL_TOMB):
-                if wt >= gc_horizon_us:  # young marker: keep shadowing
-                    survivors.append(r)
-                continue
-            if wt <= scope_horizon(pk, ck, col):
-                continue
-            if (wt, 0, seq) < cell_tomb_rank.get(
-                (pk, ck, col, elem), (-1, 0, -1)
-            ):
-                continue
-            groups.setdefault((pk, ck, col, elem), []).append(r)
-        # pass 2: expired-winner groups drop WHOLE (resurrection guard)
-        for key, grp in groups.items():
-            win = max(grp, key=lambda r: (r[6], 0, r[8]))
-            wt, ttl = win[6], win[7]
-            # eligibility keys on EXPIRY (wt + ttl = localDeletionTime),
-            # not write time: a cell with wt < horizon < wt+ttl is still
-            # live after the horizon and must stay PITR-restorable
-            if ttl and wt + ttl <= self._clock and wt + ttl < gc_horizon_us:
-                continue  # winner expired and expiry past grace: purge group
-            survivors.extend(grp)
-
-        n_in = len(self._segments)
-        rows_in = len(rows)
-        created: list[str] = []
-        if survivors:
-            created = [self._write_segment(_mut_table(survivors), "gc")]
-        self._retire_into(list(self._segments), created)
-        self._record_compaction(
-            "gc", n_in, len(created), bytes_in,
-            sum(os.path.getsize(p) for p in created),
-            rows_in, len(survivors),
+        self._merge(
+            list(self._segments), "gc", purge=(gc_horizon_us, self._clock)
         )
-        return {"dropped": rows_in - len(survivors), "kept": len(survivors)}
-
-    def _garbage_collect_spark(
-        self, gc_horizon_us: int, bytes_in: int
-    ) -> dict:
-        """Distributed form of :meth:`garbage_collect` (input bytes >=
-        ``distributed_merge_bytes``): the SAME purge rules expressed as
-        DataFrame algebra — per-scope tombstone horizons are map-side
-        aggregates joined back on the key the data already shuffles by
-        (pk), the expired-winner group purge is one window over the
-        cell key, and survivors write executor-side via
-        :meth:`_spark_write_merge`. Range-tombstone coverage reuses
-        :meth:`_range_cover_cond` (the snapshot read path's tested join
-        condition) against the distinct row keys — the tombstone side
-        is aggregated-to-small, never row×row.
-        ONE write action; the driver never materializes table rows
-        (row counts come from parquet footers). Path equivalence with
-        the pyarrow form is pinned by tests/test_gc.py's differential
-        fuzz with the threshold forced to 1."""
-        inputs = list(self._segments)
-        df = self.spark.read.schema(_MUT_SCHEMA).parquet(*inputs)
-        tomb_kinds = [PART_TOMB, ROW_TOMB, COLL_TOMB, RANGE_TOMB, CELL_TOMB]
-        neg1 = F.lit(-1).cast("long")
-        tombs = df.filter(F.col("kind").isin(tomb_kinds))
-        data = df.filter(~F.col("kind").isin(tomb_kinds))
-
-        def _scope(kind, keys, alias):
-            return (
-                tombs.filter(F.col("kind") == kind)
-                .groupBy(*keys)
-                .agg(F.max("writetime").alias(alias))
-            )
-
-        part = _scope(PART_TOMB, ["pk"], "part_wt")
-        rowt = _scope(ROW_TOMB, ["pk", "ck"], "row_wt")
-        collt = _scope(COLL_TOMB, ["pk", "ck", "col"], "coll_wt")
-        # cell-tombstone rank (wt, TOMB=1, seq) beats a data cell's
-        # (wt, 0, seq) whenever tomb_wt >= cell_wt — the flag dominates
-        # at equal writetime, so only max(wt) matters. The join key
-        # NULL-matches col/elem via a sentinel (python-dict semantics:
-        # a scalar-column cell tombstone has elem = None, as its data).
-        sent = F.lit("\x00\x00gcnull")
-        cellt = (
-            tombs.filter(F.col("kind") == CELL_TOMB)
-            .groupBy(
-                "pk",
-                "ck",
-                F.coalesce(F.col("col"), sent).alias("col_k"),
-                F.coalesce(F.col("elem"), sent).alias("elem_k"),
-            )
-            .agg(F.max("writetime").alias("cell_wt"))
-        )
-        # range-tombstone horizon per distinct row key, via the snapshot
-        # read path's tested cover condition (typed bounds per schema)
-        range_tombs = tombs.filter(F.col("kind") == RANGE_TOMB).select(
-            F.col("pk").alias("rt_pk"),
-            F.when(F.col("ck") == "", F.array().cast("array<string>"))
-            .otherwise(F.split("ck", SEP))
-            .alias("pref_arr"),
-            "lo", "hi", "lo_incl", "hi_incl", "writetime",
-        )
-        rkeys = (
-            data.filter(F.col("ck").isNotNull() & (F.col("ck") != ""))
-            .select("pk", "ck")
-            .distinct()
-            .withColumn("ck_arr", F.split("ck", SEP))
-        )
-        rcov = (
-            rkeys.join(
-                F.broadcast(range_tombs),
-                (F.col("pk") == F.col("rt_pk")) & self._range_cover_cond(),
-            )
-            .groupBy("pk", "ck")
-            .agg(F.max("writetime").alias("rg_wt"))
-        )
-
-        d = (
-            data.join(part, ["pk"], "left")
-            .join(rowt, ["pk", "ck"], "left")
-            .join(collt, ["pk", "ck", "col"], "left")
-            .withColumn("col_k", F.coalesce(F.col("col"), sent))
-            .withColumn("elem_k", F.coalesce(F.col("elem"), sent))
-            .join(cellt, ["pk", "ck", "col_k", "elem_k"], "left")
-            .join(rcov, ["pk", "ck"], "left")
-        )
-        scope_hor = F.greatest(
-            F.coalesce(F.col("rg_wt"), neg1),
-            F.coalesce(F.col("part_wt"), neg1),
-            F.coalesce(F.col("row_wt"), neg1),
-            F.coalesce(F.col("coll_wt"), neg1),
-        )
-        # pass 1: tombstone-shadow drops on data cells
-        d = d.filter(
-            (F.col("writetime") > scope_hor)
-            & (
-                F.col("cell_wt").isNull()
-                | (F.col("writetime") > F.col("cell_wt"))
-            )
-        )
-        # pass 2: expired-winner groups drop WHOLE (resurrection guard);
-        # winner = max (wt, seq) per cell key, expiry gates on wt + ttl
-        win = F.max(
-            F.struct(F.col("writetime"), F.col("seq"), F.col("ttl"))
-        ).over(Window.partitionBy("pk", "ck", "col_k", "elem_k"))
-        d = (
-            d.withColumn("__w", win)
-            .filter(
-                ~(
-                    F.col("__w.ttl").isNotNull()
-                    & (F.col("__w.ttl") != 0)
-                    & (
-                        F.col("__w.writetime") + F.col("__w.ttl")
-                        <= F.lit(self._clock)
-                    )
-                    & (
-                        F.col("__w.writetime") + F.col("__w.ttl")
-                        < F.lit(gc_horizon_us)
-                    )
-                )
-            )
-            .select(*_MUT_COLS)
-        )
-        survivors = tombs.filter(
-            F.col("writetime") >= F.lit(gc_horizon_us)
-        ).unionByName(d)
-        # whole partitions per output segment; ~128 MiB input per part
-        n_parts = max(1, -(-bytes_in // (128 << 20)))
-        created = self._spark_write_merge(
-            survivors.repartition(n_parts, "pk"), "gc"
-        )
-        rows_in = sum(_pq_num_rows(p) for p in inputs)
-        rows_out = sum(_pq_num_rows(p) for p in created)
-        self._retire_into(inputs, created)
-        self._record_compaction(
-            "gc", len(inputs), len(created), bytes_in,
-            sum(os.path.getsize(p) for p in created), rows_in, rows_out,
-        )
+        rows_in, rows_out = self.compaction_history[-1][7:9]
         return {"dropped": rows_in - rows_out, "kept": rows_out}
 
     def _record_compaction(
@@ -2857,40 +2803,6 @@ class CqlTable:
             )
         )
 
-    def _spark_write_merge(self, df, tag: str) -> list[str]:
-        """Write a merge plan's output via Spark into canonical segment
-        file names (:meth:`_new_segment_path`): executors read/decode/
-        encode; the driver only renames. Empty part files (range
-        partitioner slack) are dropped. Outputs carry parquet column
-        statistics (so TWCS window bucketing by max writetime keeps
-        working) but none of :meth:`_write_segment`'s footer stamps or
-        Bloom sidecars — like bulk_load segments they read as never-
-        whole-droppable until a later driver-side merge restamps them
-        (the safe default), and token ranges and blooms derive lazily
-        from the pk column."""
-        import glob
-        import uuid
-
-        sub = os.path.join(
-            self.spill_dir,
-            f"{self.schema.name}-{tag}-dist-{uuid.uuid4().hex[:8]}",
-        )
-        df.write.parquet(sub, compression=self._codec())
-        out: list[str] = []
-        for f in sorted(glob.glob(os.path.join(sub, "part-*.parquet"))):
-            if _pq_num_rows(f) == 0:
-                os.remove(f)
-                continue
-            path = self._new_segment_path(tag)
-            os.replace(f, path)
-            out.append(path)
-        # Spark leaves _SUCCESS + .crc markers behind: remove the temp
-        # dir unconditionally or every merge leaks a -dist-<uuid> dir
-        import shutil
-
-        shutil.rmtree(sub, ignore_errors=True)
-        return out
-
     def _retire_into(self, inputs: list[str], created: list[str]) -> None:
         """Swap ``inputs`` for ``created`` in the live segment list — the
         one place a segment is forgotten: its bloom, open file, level,
@@ -2910,58 +2822,84 @@ class CqlTable:
         self._segments.extend(created)
 
     def _merge_spark(
-        self, inputs: list[str], tag: str, level: int = 0,
-        budget: int | None = None,
+        self, df, tag: str, n_shards: int, level: int = 0,
+        purge: tuple | None = None,
     ) -> list[str]:
-        """Distributed form of :meth:`_merge` (input bytes >=
-        ``distributed_merge_bytes``): ONE Spark job — parallel read and
-        decode of every input, one shuffle, executor-side encode —
-        instead of materializing the merge on the driver. When
-        ``budget`` yields more than one shard the shuffle range-
-        partitions by the bit-exact Murmur3 token of pk (the Arrow-
-        batched ``cassandra_token`` UDF): same token → same shard, so
-        the whole-partition rule and pairwise-disjoint token ranges hold
-        by construction. Otherwise it is a single-partition shuffle and
-        one output. History rows are a SET (reconcile orders by
-        writetime/seq, never file position), so row order within a
-        shard is immaterial. The level travels in ``_seg_level``
-        (in-session) only — a keyspace restore rehydrates these shards
-        at L0 and the next compaction re-levels them, a documented
-        degradation that never affects answers."""
-        bytes_in = sum(os.path.getsize(p) for p in inputs)
-        n_shards = 1 if budget is None else max(1, -(-bytes_in // budget))
-        plan = self.spark.read.schema(_MUT_SCHEMA).parquet(*inputs)
-        if n_shards > 1:
-            from cassandra_spark.operators.murmur3 import (
-                ensure_token_registered,
-            )
+        """Write the mutation rows of ``df`` as at most ``n_shards`` new
+        ``level`` segments in ONE Spark job — parallel read and decode,
+        one shuffle that sorts each shard by (token, pk), then one
+        ``mapInArrow`` task per shard that streams its rows into the
+        driver's own writer (:func:`_write_shard`), so executor outputs
+        are the same stamped runs as driver ones. With more than one
+        shard the shuffle range-partitions by the bit-exact Murmur3
+        token of pk (the Arrow-batched ``cassandra_token`` UDF): same
+        token → same shard, so the whole-partition rule (which
+        ``purge`` needs) and pairwise-disjoint token ranges hold by
+        construction. Tasks write into a temporary directory; the driver
+        names the written shards in token order
+        (:meth:`_new_segment_path`) and registers their levels, and a
+        failed job leaves nothing behind. The caller registers the paths
+        in ``_segments``. Returns the new paths in token order."""
+        import shutil
+        import uuid
+        from functools import partial
 
-            ensure_token_registered(self.spark)
-            plan = (
-                plan.withColumn("__tok", F.expr("cassandra_token(pk)"))
-                .repartitionByRange(n_shards, "__tok")
-                .drop("__tok")
-            )
+        from cassandra_spark.operators.bloom import sidecar_path
+        from cassandra_spark.operators.murmur3 import (
+            ensure_token_registered,
+        )
+
+        ensure_token_registered(self.spark)
+        # a NULL key hashes as the empty key, as in _pk_tokens
+        df = df.withColumn(
+            "__tok", F.expr("cassandra_token(coalesce(pk, ''))")
+        )
+        if n_shards > 1:
+            df = df.repartitionByRange(n_shards, "__tok")
         else:
-            plan = plan.repartition(1)
-        created = self._spark_write_merge(plan, tag)
-        self._retire_into(inputs, created)
+            df = df.repartition(1)
+        spill = os.path.join(
+            self.spill_dir,
+            f"{self.schema.name}-{tag}-dist-{uuid.uuid4().hex[:8]}",
+        )
+        os.makedirs(spill)
+        task = partial(
+            _write_shard, spill=spill, codec=self._codec(), level=level,
+            purge=purge, schema=self.schema,
+        )
+        created: list[str] = []
+        try:
+            written = [
+                r.path
+                for r in df.sortWithinPartitions("__tok", "pk")
+                .mapInArrow(task, "path string")
+                .collect()
+            ]
+            # task outputs are named by partition id: token order
+            for shard in sorted(
+                written, key=lambda p: int(os.path.basename(p).split(".")[0])
+            ):
+                path = self._new_segment_path(tag)
+                created.append(path)
+                os.replace(shard, path)
+                os.replace(sidecar_path(shard), sidecar_path(path))
+        except BaseException:
+            for path in created:
+                if os.path.exists(path):
+                    os.remove(path)
+                self._remove_sidecars(path)
+            raise
+        finally:
+            shutil.rmtree(spill, ignore_errors=True)
         if level >= 1:
             for p in created:
                 self._seg_level[p] = level
-        self._record_compaction(
-            tag, len(inputs), len(created), bytes_in,
-            sum(os.path.getsize(p) for p in created),
-            sum(_pq_num_rows(p) for p in inputs),
-            sum(_pq_num_rows(p) for p in created),
-        )
         return created
 
     def _seg_stats(self, path: str) -> tuple:
         """(min_writetime, max_writetime, max_deletion_us) for a segment
-        from FOOTER data only — row-group statistics plus the flush-time
-        key-value stamp. Unstamped segments (pre-TWCS generations) read
-        as -1 = never droppable, the safe default."""
+        from FOOTER data only — row-group statistics plus the writer's
+        key-value stamp (:func:`_write_run`)."""
         import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(path)
@@ -2973,9 +2911,7 @@ class CqlTable:
             if st is not None and st.has_min_max:
                 mn = st.min if mn is None else min(mn, st.min)
                 mx = st.max if mx is None else max(mx, st.max)
-        meta = pf.schema_arrow.metadata or {}
-        raw = meta.get(b"max_deletion_us")
-        return mn, mx, (int(raw) if raw is not None else -1)
+        return mn, mx, int(pf.schema_arrow.metadata[b"max_deletion_us"])
 
     def twcs_compact(self) -> list[str]:
         """TimeWindowCompactionStrategy minor compaction (`[C* db/
@@ -3050,39 +2986,38 @@ class CqlTable:
             del stats[victim]
 
     def _seg_token_range(self, path: str) -> tuple[int, int]:
-        """[min, max] Murmur3 token of a segment's partition keys —
-        footer metadata when stamped (leveled outputs), else computed
-        once from the pk column and cached. Tokens are of the pk's
-        canonical text serialization: bit-exact for text keys, a
-        consistent total order for the rest — all LCS needs is that
-        every reader and the compactor agree on ONE order."""
-        cached = self._seg_tokens.get(path)
-        if cached is not None:
-            return cached
-        import pyarrow.parquet as pq
+        """[min, max] Murmur3 token of a segment's partition keys, from
+        its footer stamp, cached. Tokens are of the pk's canonical text
+        serialization: bit-exact for text keys, a consistent total order
+        for the rest — all LCS needs is that every reader and the
+        compactor agree on ONE order."""
+        rng = self._seg_tokens.get(path)
+        if rng is None:
+            meta = self._seg_file(path)[0].schema_arrow.metadata
+            rng = self._seg_tokens[path] = (
+                int(meta[b"min_token"]), int(meta[b"max_token"])
+            )
+        return rng
 
-        from cassandra_spark.operators.murmur3 import token_of_text
+    def _adopt_segment(self, path: str) -> None:
+        """Register segment file ``path`` (a keyspace restore's copy) as
+        live. Its LCS level comes from the footer (absent stamp = L0),
+        the leveled manifest entry the writer stamps. A segment whose
+        footer lacks a row-group token summary matching its row groups
+        (written before every segment was a stamped run) is rewritten
+        in place through :meth:`_write_segment`, so every live segment
+        is read by row group."""
+        import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(path)
         meta = pf.schema_arrow.metadata or {}
-        if b"min_token" in meta and b"max_token" in meta:
-            rng = (int(meta[b"min_token"]), int(meta[b"max_token"]))
-        else:
-            pks = set(
-                pq.read_table(path, columns=["pk"]).column("pk").to_pylist()
-            )
-            toks = [token_of_text(p) for p in pks]
-            rng = (min(toks), max(toks))
-        self._seg_tokens[path] = rng
-        return rng
-
-    def _seg_footer_level(self, path: str) -> int:
-        """LCS level stamped in a segment's footer (0 = unstamped/L0) —
-        the leveled-manifest entry a snapshot restore rehydrates from."""
-        import pyarrow.parquet as pq
-
-        meta = pq.ParquetFile(path).schema_arrow.metadata or {}
-        return int(meta.get(b"lcs_level", b"0"))
+        level = int(meta.get(b"lcs_level", b"0"))
+        hulls = meta.get(b"rg_tokens", b"").split()
+        if len(hulls) != 2 * pf.metadata.num_row_groups:
+            self._write_segment(pf.read(), "", level, path=path)
+        elif level:
+            self._seg_level[path] = level
+        self._segments.append(path)
 
     def _lcs_target(self) -> int:
         return self.lcs_target_bytes or (
@@ -3279,9 +3214,10 @@ class CqlTable:
         nothing is registered. Returns the number of rows loaded,
         counted from the written marker cells.
 
-        Segments written here carry no max-deletion stamp, so TWCS
-        whole-drop treats them as never-droppable until a merge restamps
-        them — the safe default."""
+        The segments are the same stamped (token, pk)-sorted runs a flush
+        writes (:meth:`_merge_spark`), ``n_segments`` token ranges of
+        them (default ``DEFAULT_BUCKETS``); their max-deletion stamp lets
+        TWCS whole-drop an expired all-TTL load."""
         from pyspark.sql import functions as F
 
         s = self.schema
@@ -3367,25 +3303,17 @@ class CqlTable:
         out = parts[0]
         for p_ in parts[1:]:
             out = out.unionByName(p_)
-        # bound the file count: the narrow per-column union multiplies the
-        # input partitioning, and nothing downstream compacts bulk
-        # segments — cluster by pk so point-read blooms stay selective
+        # one stamped token-range run per shard (the merge writer), so
+        # bulk segments read by row group like every other segment
         from cassandra_spark.operators.compaction import DEFAULT_BUCKETS
 
-        out = out.repartition(n_segments or DEFAULT_BUCKETS, "pk")
-
-        import glob
-        import shutil
-        import uuid
-
         self._ensure_spill_dir()
-        sub = os.path.join(
-            self.spill_dir, f"{s.name}-bulk-{uuid.uuid4().hex[:8]}"
-        )
-        out.write.parquet(sub, compression=self._codec())
-        files = sorted(glob.glob(os.path.join(sub, "part-*.parquet")))
-        # the input plan ran exactly once (the write above); validate and
-        # count against the WRITTEN segments, executor-side
+        files = self._merge_spark(out, "bulk", n_segments or DEFAULT_BUCKETS)
+        if not files:
+            return 0
+        # validate and count the WRITTEN segments, executor-side: a
+        # nondeterministic input plan cannot pass validation yet have
+        # written something else
         written = self.spark.read.schema(_MUT_SCHEMA).parquet(*files)
         markers = written.filter(F.col("kind") == MARKER)
         if validate:
@@ -3417,7 +3345,9 @@ class CqlTable:
                 ).alias("bad"),
             ).collect()[0]
             if stats["bad"]:
-                shutil.rmtree(sub, ignore_errors=True)
+                for f in files:
+                    os.remove(f)
+                    self._remove_sidecars(f)
                 raise CQLError(
                     "bulk_load input has duplicate or NULL primary keys, "
                     "or a composite key component containing the reserved "
@@ -3427,7 +3357,6 @@ class CqlTable:
             n = int(stats["total"] or 0)
         else:
             n = markers.count()
-        # blooms rebuild lazily per segment on first point read
         self._segments.extend(files)
         return n
 
@@ -3467,7 +3396,6 @@ class CqlTable:
         # auto-provision the spill dir: an explicit nodetool-style flush
         # must never fail for lack of configuration
         self._ensure_spill_dir()
-        os.makedirs(self.spill_dir, exist_ok=True)
         path = self._write_segment(_mut_table(self._log), "seg")
         self._segments.append(path)
         self._log.clear()
@@ -3725,22 +3653,16 @@ class CqlTable:
     def _seg_file(self, path: str) -> tuple:
         """The open ``pq.ParquetFile`` of segment ``path`` and its row-
         group token summary, an (n_row_groups, 2) int64 array of
-        [min, max] tokens — or None when the footer has no ``rg_tokens``
-        stamp that matches its row groups (executor-written merges,
-        bulk loads, segments of older snapshots): such a segment is read
-        whole. Cached per live segment like ``_blooms``."""
+        [min, max] tokens from the footer's ``rg_tokens`` stamp. Cached
+        per live segment like ``_blooms``."""
         import numpy as np
         import pyarrow.parquet as pq
 
         ent = self._seg_files.get(path)
         if ent is None:
             pf = pq.ParquetFile(path)
-            raw = (pf.schema_arrow.metadata or {}).get(b"rg_tokens")
-            hulls = None
-            if raw is not None:
-                hulls = np.array(raw.split(), dtype=np.int64).reshape(-1, 2)
-                if len(hulls) != pf.metadata.num_row_groups:
-                    hulls = None
+            raw = pf.schema_arrow.metadata.get(b"rg_tokens", b"")
+            hulls = np.array(raw.split(), dtype=np.int64).reshape(-1, 2)
             ent = self._seg_files[path] = (pf, hulls)
         return ent
 
@@ -3786,16 +3708,13 @@ class CqlTable:
                 continue
             merged += 1
             pf, hulls = self._seg_file(path)
-            if hulls is None:
-                tbl = pf.read()
-            else:
-                # group g is read when some wanted token t has
-                # hulls[g, 0] <= t <= hulls[g, 1]
-                toks = np.sort([token[pk] for pk in keep])
-                hit = np.searchsorted(toks, hulls[:, 0]) < np.searchsorted(
-                    toks, hulls[:, 1], side="right"
-                )
-                tbl = pf.read_row_groups(np.flatnonzero(hit).tolist())
+            # group g is read when some wanted token t has
+            # hulls[g, 0] <= t <= hulls[g, 1]
+            toks = np.sort([token[pk] for pk in keep])
+            hit = np.searchsorted(toks, hulls[:, 0]) < np.searchsorted(
+                toks, hulls[:, 1], side="right"
+            )
+            tbl = pf.read_row_groups(np.flatnonzero(hit).tolist())
             mask = pc.is_in(tbl.column("pk"), value_set=pa.array(keep))
             rows += _mut_rows(tbl.filter(mask))
         rows += [r for r in self._log if r[0] in token]
@@ -3872,16 +3791,8 @@ class CqlTable:
         segment (retired generations included — truncate is a purge
         point). Clocks keep ticking (post-truncate writes stay newer)."""
         self._log.clear()
+        self._retire_into(list(self._segments), [])
         self.purge_retired()
-        for path in self._segments:
-            try:
-                os.remove(path)
-            except OSError:
-                pass
-            self._remove_sidecars(path)
-        self._segments.clear()
-        self._blooms.clear()
-        self._seg_files.clear()
         self._max_wt = None
 
     def bump_schema_version(self) -> None:
@@ -3908,6 +3819,7 @@ class CqlTable:
             r for r in self._log
             if r[2] != col or (horizon_us is not None and r[6] > horizon_us)
         ]
+        emptied = []
         for path in self._segments:
             tbl = pq.read_table(path)
             mask = pc.not_equal(tbl.column("col"), col)
@@ -3916,9 +3828,15 @@ class CqlTable:
                 mask = pc.or_(
                     mask, pc.greater(tbl.column("writetime"), horizon_us)
                 )
-            self._write_segment(
-                tbl.filter(mask), "", self._seg_level.get(path, 0), path=path
-            )
+            kept = tbl.filter(mask)
+            if kept.num_rows:
+                self._write_segment(
+                    kept, "", self._seg_level.get(path, 0), path=path
+                )
+            else:
+                emptied.append(path)
+        # a segment left with no rows has no token hull: it retires
+        self._retire_into(emptied, [])
 
     # --- snapshot reconciliation -----------------------------------------
 

@@ -4069,13 +4069,10 @@ class CqlSession:
                 shutil.copy2(src, dst)
                 if os.path.exists(sidecar_path(src)):
                     shutil.copy2(sidecar_path(src), sidecar_path(dst))
-                t._segments.append(dst)
-                # LCS manifest travels in the segment footer: rehydrate
-                # the level so a restored leveled layout keeps its
-                # bounded read amplification (absent stamp = L0)
-                lvl = t._seg_footer_level(dst)
-                if lvl:
-                    t._seg_level[dst] = lvl
+                # LCS manifest travels in the segment footer: the level
+                # rehydrates so a restored leveled layout keeps its
+                # bounded read amplification
+                t._adopt_segment(dst)
             st = entry["state"]
             t._clock, t._seq = st["clock"], st["seq"]
             t._max_wt, t._seg_counter = st["max_wt"], st["seg_counter"]

@@ -61,13 +61,19 @@ class BloomFilter:
         """Size for the distinct keys at target false-positive rate ``fp``
         (the reference's bloom_filter_fp_chance) and add them all."""
         ks = {_key_bytes(p) for p in keys}
-        n = max(1, len(ks))
-        m = max(8, math.ceil(-n * math.log(fp) / (math.log(2) ** 2)))
-        k = max(1, round((m / n) * math.log(2)))
-        f = cls(m, k)
+        f = cls.for_count(len(ks), fp)
         for kb in ks:
             f._add_bytes(kb)
         return f
+
+    @classmethod
+    def for_count(cls, n: int, fp: float = 0.01) -> "BloomFilter":
+        """An empty filter sized for ``n`` distinct keys at ``fp`` — for
+        a writer that counts its keys before it adds them."""
+        n = max(1, n)
+        m = max(8, math.ceil(-n * math.log(fp) / (math.log(2) ** 2)))
+        k = max(1, round((m / n) * math.log(2)))
+        return cls(m, k)
 
     def _positions(self, key: bytes):
         h1, h2 = murmur3_x64_128(key)

@@ -3,10 +3,13 @@ visibility rules driven from real statement text."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cassandra_spark.cql import CQLError
 from cassandra_spark.cql_dml import CqlTable, TableSchema
+from tests.test_distributed_merge import _assert_token_sorted_run
 
 
 @pytest.fixture()
@@ -269,6 +272,8 @@ def test_bulk_load_matches_statement_path(spark, tmp_path):
     t1 = s1.table("t")
     assert t1.bulk_load(df, timestamp=1000, n_segments=2) == 3
     assert t1._segments and not t1._log  # data lives in segments only
+    for p in t1._segments:  # the same stamped runs a flush writes
+        _assert_token_sorted_run(p)
 
     s2 = CqlSession(spark, spill_dir=str(tmp_path / "stmt"))
     s2.execute(
@@ -302,6 +307,28 @@ def test_bulk_load_matches_statement_path(spark, tmp_path):
         for r in s1.execute("SELECT okey, v FROM t WHERE custkey = 1").collect()
     }
     assert got == {(10, "new"), (11, "b")}
+
+
+def test_bulk_load_then_truncate_leaves_nothing_behind(spark, tmp_path):
+    """bulk_load writes canonically named segments and nothing else, so
+    TRUNCATE removes every file the load left in the spill dir."""
+    from cassandra_spark.cql_session import CqlSession
+
+    spill = tmp_path / "spill"
+    s = CqlSession(spark, spill_dir=str(spill))
+    s.execute("CREATE TABLE b (k bigint PRIMARY KEY, v text)")
+    t = s.table("b")
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)],
+                               "k long, v string")
+    assert t.bulk_load(df, n_segments=3) == 20
+    assert s.execute("SELECT v FROM b WHERE k = 7").collect()[0].v == "v7"
+    s.execute("TRUNCATE b")
+    left = [
+        os.path.relpath(os.path.join(d, f), t.spill_dir)
+        for d, dirs, files in os.walk(t.spill_dir)
+        for f in dirs + files
+    ]
+    assert left == [], f"files left after TRUNCATE: {left}"
 
 
 def test_bulk_load_rejections(spark, tmp_path):

@@ -147,26 +147,31 @@ def test_auto_trigger_on_spill(spark, tmp_path):
 
 
 def test_snapshot_restore_keeps_levels(spark, tmp_path):
-    sess, t, n = _mk(spark, tmp_path, n_flushes=5, rows_per_flush=10,
-                     lcs_target_bytes=2048)
-    t.lcs_compact()
-    before_levels = {
-        lvl: len(segs) for lvl, segs in _levels(t).items() if lvl
-    }
-    assert before_levels
-    snap = str(tmp_path / "snap")
-    sess.snapshot_keyspace(snap)
-    sess2 = CqlSession(spark)
-    sess2.restore_keyspace(snap)
-    t2 = sess2.table("lt")
-    after_levels = {
-        lvl: len(segs) for lvl, segs in _levels(t2).items() if lvl
-    }
-    assert after_levels == before_levels
-    _assert_invariants(t2)
-    a = {r.k: r.v for r in sess.execute("SELECT k, v FROM lt").collect()}
-    b = {r.k: r.v for r in sess2.execute("SELECT k, v FROM lt").collect()}
-    assert a == b
+    # driver-merged and Spark-merged (distributed_merge_bytes = 1) shards
+    # alike carry their level in the footer
+    for mode, kw in (
+        ("driver", {}), ("spark", {"distributed_merge_bytes": 1})
+    ):
+        sess, t, n = _mk(spark, tmp_path / mode, n_flushes=5,
+                         rows_per_flush=10, lcs_target_bytes=2048, **kw)
+        t.lcs_compact()
+        before_levels = {
+            lvl: len(segs) for lvl, segs in _levels(t).items() if lvl
+        }
+        assert before_levels
+        snap = str(tmp_path / mode / "snap")
+        sess.snapshot_keyspace(snap)
+        sess2 = CqlSession(spark)
+        sess2.restore_keyspace(snap)
+        t2 = sess2.table("lt")
+        after_levels = {
+            lvl: len(segs) for lvl, segs in _levels(t2).items() if lvl
+        }
+        assert after_levels == before_levels, mode
+        _assert_invariants(t2)
+        a = {r.k: r.v for r in sess.execute("SELECT k, v FROM lt").collect()}
+        b = {r.k: r.v for r in sess2.execute("SELECT k, v FROM lt").collect()}
+        assert a == b
 
 
 def test_describe_and_options(spark):

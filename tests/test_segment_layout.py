@@ -1,8 +1,8 @@
 """The driver partition read's segment side: ``_mut_rows`` decodes a
 pyarrow mutation table into exactly the tuples ``to_pylist`` gives (same
 values, same Python types), and the per-segment open file and token
-summary (``CqlTable._seg_files``) live exactly as long as the segment
-does."""
+summary (``CqlTable._seg_files``) and every other per-segment cache live
+exactly as long as the segment does."""
 
 from __future__ import annotations
 
@@ -57,7 +57,7 @@ def test_mut_rows_matches_to_pylist_exactly(tmp_path):
 def test_segment_handles_go_with_their_segments(spark, tmp_path):
     """A compaction retires its inputs' handles, purge_retired deletes
     the files, and a pinned read and an LWT afterwards see the merged
-    segment only; TRUNCATE drops every handle."""
+    segment only; TRUNCATE drops every handle and cache entry."""
     sess = CqlSession(spark, spill_dir=str(tmp_path))
     sess.execute("CREATE TABLE t (k text, c int, v int, PRIMARY KEY (k, c))")
     t = sess.table("t")
@@ -86,5 +86,8 @@ def test_segment_handles_go_with_their_segments(spark, tmp_path):
     ]
     assert set(t._seg_files) <= set(t._segments)
     sess.execute("TRUNCATE t")
-    assert t._seg_files == {}
+    for cache in (t._seg_files, t._blooms, t._seg_tokens, t._seg_level,
+                  t._value_blooms, t._value_ranges):
+        assert cache == {}
+    assert t._segments == [] and t._retired == []
     assert sess.execute(point).collect() == []
