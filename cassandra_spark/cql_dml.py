@@ -92,29 +92,51 @@ _MUT_SCHEMA = (
 _MUT_COLS = [f.split()[0] for f in _MUT_SCHEMA.split(", ")]
 
 
-def _mut_schema():
-    """The mutation log's pyarrow schema, in log column order."""
+def _arrow_schema(ddl: str):
+    """The pyarrow schema of a Spark DDL string (``"name type, ..."``)
+    over the types driver-built frames use: ``string``, ``long`` /
+    ``bigint``, ``int``, ``boolean`` and ``array<string>``. A pure-Python
+    map with no JVM call, so executor tasks derive the mutation log's
+    schema from ``_MUT_SCHEMA`` through it too."""
     import pyarrow as pa
 
-    types = [
-        pa.string(), pa.string(), pa.string(), pa.string(), pa.string(),
-        pa.string(), pa.int64(), pa.int64(), pa.int64(),
-        pa.string(), pa.string(), pa.bool_(), pa.bool_(),
-    ]
-    return pa.schema(list(zip(_MUT_COLS, types)))
+    types = {
+        "string": pa.string(), "long": pa.int64(), "bigint": pa.int64(),
+        "int": pa.int32(), "boolean": pa.bool_(),
+        "array<string>": pa.list_(pa.string()),
+    }
+    return pa.schema(
+        (name, types[typ]) for name, typ in (f.split() for f in ddl.split(","))
+    )
+
+
+def _arrow_table(rows, ddl: str):
+    """``rows`` (tuples in ``ddl`` column order) as one pyarrow table
+    typed by :func:`_arrow_schema`; no rows give the empty table of the
+    same schema."""
+    import pyarrow as pa
+
+    schema = _arrow_schema(ddl)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+
+
+def _local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """The one builder of driver-side frames (system views, admin and
+    log frames, the memtable tail): ``rows`` typed by ``ddl``, from one
+    Arrow table. Spark keeps it as a LocalRelation, so collecting it runs
+    no job (a frame built from a Python list is an RDD and runs one per
+    action)."""
+    return spark.createDataFrame(_arrow_table(rows, ddl))
 
 
 def _mut_table(rows: list[tuple]):
     """Mutation-log rows (mut_row tuples) as a pyarrow table in log
     column order."""
-    import pyarrow as pa
-
-    schema = _mut_schema()
-    cols = list(zip(*rows))
-    return pa.table(
-        [pa.array(cols[i], type=f.type) for i, f in enumerate(schema)],
-        schema=schema,
-    )
+    return _arrow_table(rows, _MUT_SCHEMA)
 
 
 def _pk_tokens(keys: list):
@@ -271,7 +293,7 @@ def _write_shard(batches, spill, codec, level, purge, schema):
     from pyspark import TaskContext
 
     base = os.path.join(spill, str(TaskContext.get().partitionId()))
-    schema_t = _mut_schema()
+    schema_t = _arrow_schema(_MUT_SCHEMA)
     n = 0
     with pa.OSFile(base + ".arrow", "wb") as sink, pa.ipc.new_file(
         sink, schema_t
@@ -1381,9 +1403,10 @@ class CqlTable:
     conversion is O(N) driver CPU, so an unbounded session front-end binds
     at a few million mutations. Two escape hatches keep it bounded:
 
-    - the log→DataFrame conversion is Arrow-batched (pandas, ~2.5× faster
-      than the plain-list path at 1M mutations) and chunked so the
-      conversion copy never exceeds ``_ARROW_CHUNK`` rows;
+    - the log→DataFrame conversion builds each ``_ARROW_CHUNK``-row
+      slice of the tail as one Arrow table (:func:`_mut_table`'s builder,
+      through :func:`_local_frame`), so the conversion copy never exceeds
+      ``_ARROW_CHUNK`` rows and collecting the tail runs no Spark job;
     - the memtable flushes to parquet segments past ``spill_threshold``
       (the memtable→SSTable move) BY DEFAULT — a temp spill dir is
       auto-provisioned when ``spill_dir`` wasn't given, and
@@ -1395,7 +1418,7 @@ class CqlTable:
       same bounded read a replica serves).
     """
 
-    _ARROW_CHUNK = 250_000  # rows per createDataFrame slice (bounds the copy)
+    _ARROW_CHUNK = 250_000  # rows per Arrow tail slice (bounds the copy)
 
     def __init__(
         self,
@@ -3378,8 +3401,8 @@ class CqlTable:
                 (os.path.basename(seg), md.num_rows,
                  os.path.getsize(seg), mn, mx, codec, mdl)
             )
-        return self.spark.createDataFrame(
-            rows,
+        return _local_frame(
+            self.spark, rows,
             "generation string, rows long, bytes long, "
             "min_writetime long, max_writetime long, compression string, "
             "max_deletion long",
@@ -3842,8 +3865,10 @@ class CqlTable:
 
     def mutation_log(self) -> DataFrame:
         """The full mutation log as a DataFrame: flushed parquet segments
-        (executor-side scan) unioned with the in-memory tail (Arrow-batched
-        conversion, chunked so the conversion copy stays bounded)."""
+        (executor-side scan) unioned with the in-memory tail, built a
+        ``_ARROW_CHUNK``-row slice at a time through the Arrow builder
+        :func:`_mut_table` uses (:func:`_local_frame`), so the conversion
+        copy stays bounded."""
         parts: list[DataFrame] = []
         if self._segments:
             parts.append(
@@ -3857,17 +3882,11 @@ class CqlTable:
         return out
 
     def _tail_chunks(self) -> list[DataFrame]:
-        if not self._log:
-            return [self.spark.createDataFrame([], _MUT_SCHEMA)]
-        import pandas as pd
-
-        out = []
-        for i in range(0, len(self._log), self._ARROW_CHUNK):
-            pdf = pd.DataFrame(
-                self._log[i : i + self._ARROW_CHUNK], columns=_MUT_COLS
-            )
-            out.append(self.spark.createDataFrame(pdf, schema=_MUT_SCHEMA))
-        return out
+        log, n = self._log, self._ARROW_CHUNK
+        return [
+            _local_frame(self.spark, log[i : i + n], _MUT_SCHEMA)
+            for i in range(0, max(len(log), 1), n)
+        ]
 
     def _range_cover_cond(self, rt_prefix="pref_arr", row_arr="ck_arr"):
         """Spark boolean Column: range tombstone (prefix array + typed
