@@ -22,7 +22,7 @@ Cassandra-shaped part:
 
 Everything else — comparison/IN/AND expression parsing, constant folding,
 predicate pushdown — is delegated to Catalyst by feeding the (rewritten)
-WHERE text through ``F.expr``: Spark SQL syntax coincides with CQL on this
+WHERE text to ``DataFrame.filter``: Spark SQL syntax coincides with CQL on this
 subset, and re-implementing an expression parser would be the porting
 mistake this repo exists to avoid.
 
@@ -475,20 +475,19 @@ def _rewrite_tuple_relations(where: str, meta) -> str:
     return "".join(out)
 
 
-def _composite_token_rewrite(text: str, meta, df, spark) -> str:
+def _composite_token_rewrite(text: str, meta, dtypes, spark) -> str:
     """token() over a COMPOSITE partition key: rewrite the 1-arg-UDF
     spelling ``cassandra_token(a, b, ...)`` into the CompositeType-framed
     blob hash (murmur3.composite_token_sql + cassandra_token_blob), since
     a SQL UDF registration is fixed-arity. The argument list must be the
     full partition key in declared order — the reference's TokenFct
     validation `[C* cql3/functions/TokenFct, unverified]`. Single-column
-    keys keep the registered 1-arg UDF untouched."""
+    keys keep the registered 1-arg UDF untouched. ``dtypes`` maps the
+    frame's column names to their type strings."""
     pk = [c.lower() for c in meta.partition_key]
     if len(pk) <= 1 or "cassandra_token" not in text.lower():
         return text
-    types = {
-        f.name.lower(): f.dataType.simpleString() for f in df.schema.fields
-    }
+    types = {c.lower(): t for c, t in dtypes.items()}
 
     def _sub(m: re.Match) -> str:
         args = [a.strip().lower() for a in m.group(1).split(",") if a.strip()]
@@ -620,8 +619,8 @@ _INT_SPARK_TYPES = frozenset(("tinyint", "smallint", "int", "bigint"))
 _DIV_RE = re.compile(r"(?<![\w.])(\w+|\d+)\s*/\s*(\w+|\d+)(?![\w.])")
 
 
-def _rewrite_int_division(item: str, df: DataFrame | None = None) -> str:
-    dtypes = {c.lower(): t for c, t in (df.dtypes if df is not None else [])}
+def _rewrite_int_division(item: str, dtypes: dict) -> str:
+    dtypes = {c.lower(): t for c, t in dtypes.items()}
 
     def integral(tok: str) -> bool:
         if tok.isdigit():
@@ -652,9 +651,7 @@ _COLLFN_RE = re.compile(
 )
 
 
-def _rewrite_collection_fns(item: str, df: DataFrame | None = None) -> str:
-    dtypes = dict(df.dtypes) if df is not None else {}
-
+def _rewrite_collection_fns(item: str, dtypes: dict) -> str:
     def repl(m: re.Match) -> str:
         fn, col = m.group(1).lower(), m.group(2)
         t = dtypes.get(col, dtypes.get(col.lower(), ""))
@@ -687,13 +684,11 @@ def _rewrite_collection_fns(item: str, df: DataFrame | None = None) -> str:
     return _COLLFN_RE.sub(repl, item)
 
 
-def _rewrite_masks(item: str, df: DataFrame | None = None) -> str:
+def _rewrite_masks(item: str, dtypes: dict) -> str:
     from cassandra_spark.operators.masking import (
         mask_inner_sql,
         mask_outer_sql,
     )
-
-    dtypes = dict(df.dtypes) if df is not None else {}
 
     def repl(m: re.Match) -> str:
         kind = m.group(1).lower()
@@ -733,7 +728,16 @@ def _rewrite_masks(item: str, df: DataFrame | None = None) -> str:
     return _MASK_RE.sub(repl, item)
 
 
-def _rewrite_selectors(items, df, meta, table):
+def _rewrite_item(item: str, dtypes: dict) -> str:
+    """One projection item in Spark SQL: similarity functions, CQL casts,
+    integer division, collection functions and masks, rewritten against
+    the frame's column types ``dtypes`` (name -> type string)."""
+    item = _rewrite_cql_casts(_rewrite_similarity(item))
+    item = _rewrite_int_division(item, dtypes)
+    return _rewrite_masks(_rewrite_collection_fns(item, dtypes), dtypes)
+
+
+def _rewrite_selectors(items, df, meta, table, columns):
     """WRITETIME(col) / MAXWRITETIME(col) / TTL(col) selectors (`[C*
     cql3/selection/WritetimeOrTTLSelector; CASSANDRA-17425 — 4.1,
     unverified]`) → projections of the §1.2 ``__writetime_<col>`` /
@@ -743,12 +747,13 @@ def _rewrite_selectors(items, df, meta, table):
     (ts → writetime, constant TTL). MAXWRITETIME on a multi-cell
     (collection) column reads the max live element-cell writetime; on a
     single-cell column it equals WRITETIME, so it falls back to that
-    shadow. Default output names: ``<fn>_<col>``."""
+    shadow. Default output names: ``<fn>_<col>``. ``columns`` names the
+    columns of ``df``."""
     needed = [_SELECTOR_RE.match(i) for i in items]
     if not any(needed):
         return items, df
     key_cols = set(meta.partition_key) | set(meta.clustering_cols)
-    have = {c.lower() for c in df.columns}
+    have = {c.lower() for c in columns}
     if not any(c.startswith("__writetime_") for c in have) and table == "events":
         from cassandra_spark.operators.functions import with_cell_metadata
 
@@ -1005,7 +1010,7 @@ def _compile_ann(
                 # statement's rewritten predicate applies verbatim — and
                 # stays a pushed-down filter inside the bucket-pruned
                 # scan, cheaper than semi-joining back to the base scan
-                df = df.filter(F.expr(where_expr))
+                df = df.filter(where_expr)
         else:
             # no artifact (in-session table): compute the hash per row
             df = df.withColumn(
@@ -1044,6 +1049,13 @@ def _compile_ann(
     )
 
 
+def _schema_of(df: DataFrame):
+    """The schema of ``df``. A frame that ``createDataFrame`` built from
+    Arrow carries the schema it was built with (``_schema``), so reading
+    it costs no JVM round trip; any other frame asks the JVM once."""
+    return getattr(df, "_schema", None) or df.schema
+
+
 def cql_select(
     spark: SparkSession, sf_dir: str, stmt: str, tables=None
 ) -> DataFrame:
@@ -1063,7 +1075,10 @@ def cql_select(
         except KeyError:
             raise CQLError(f"unconfigured table {s.table}") from None
         df = cat.table(s.table)
-    columns = {c.lower() for c in df.columns}
+    # the frame's columns and types, read once: no clause below changes
+    # them before the projection, and an Arrow-built frame holds them
+    dtypes = {f.name: f.dataType.simpleString() for f in _schema_of(df).fields}
+    columns = {c.lower() for c in dtypes}
     key_cols = set(meta.partition_key) | set(meta.clustering_cols)
 
     if s.where:
@@ -1238,16 +1253,16 @@ def cql_select(
                 "FILTERING to run it anyway"
             )
         map_cols = frozenset(
-            f.name.lower()
-            for f in df.schema.fields
-            if f.dataType.typeName() == "map"
+            c.lower() for c, t in dtypes.items() if t.startswith("map<")
         )
         if uses_token:
             murmur3.ensure_token_registered(spark)
         where_expr = _rewrite_where(where_text, map_cols)
         if uses_token:
-            where_expr = _composite_token_rewrite(where_expr, meta, df, spark)
-        df = df.filter(F.expr(where_expr))
+            where_expr = _composite_token_rewrite(
+                where_expr, meta, dtypes, spark
+            )
+        df = df.filter(where_expr)
 
     if s.distinct:
         if s.group_by or s.order_by or s.ann or s.per_partition_limit is not None:
@@ -1284,18 +1299,7 @@ def cql_select(
         if proj != "*":
             df = df.selectExpr(
                 *[
-                    _rewrite_masks(
-                        _rewrite_collection_fns(
-                            _rewrite_int_division(
-                                _rewrite_cql_casts(
-                                    _rewrite_similarity(p.strip())
-                                ),
-                                df,
-                            ),
-                            df,
-                        ),
-                        df,
-                    )
+                    _rewrite_item(p.strip(), dtypes)
                     for p in _split_projection(proj)
                 ]
             )
@@ -1342,7 +1346,7 @@ def cql_select(
     proj = s.projection.strip()
     if proj != "*":
         items = [p.strip() for p in _split_projection(proj)]
-        items, df = _rewrite_selectors(items, df, meta, s.table)
+        items, df = _rewrite_selectors(items, df, meta, s.table, dtypes)
         if any(re.search(r"\btoken\s*\(", i, re.IGNORECASE) for i in items):
             # token() as a selector (SELECT token(pk) ...): same Murmur3
             # convention as the WHERE-clause rewrite
@@ -1353,23 +1357,12 @@ def cql_select(
                         r"\btoken\s*\(", "cassandra_token(", i,
                         flags=re.IGNORECASE,
                     ),
-                    meta, df, spark,
+                    meta, dtypes, spark,
                 )
                 for i in items
             ]
         df = df.selectExpr(
-            *[
-                _rewrite_masks(
-                    _rewrite_collection_fns(
-                        _rewrite_int_division(
-                            _rewrite_cql_casts(_rewrite_similarity(i)), df
-                        ),
-                        df,
-                    ),
-                    df,
-                )
-                for i in items
-            ]
+            *[_rewrite_item(i, dtypes) for i in items]
         )
     if s.json:
         df = _to_json_row(df)

@@ -58,6 +58,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -4059,7 +4060,7 @@ class CqlTable:
         # the wide row per (pk, ck), untyped: the winning cell string of
         # each scalar column, the live cells of each collection and
         # non-frozen UDT column, and the writetime maxima.
-        # _visible_exprs types it, exactly as partition_frame does
+        # _visible_exprs types it, by the rule partition_frame applies
         aggs = []
         for c in s.regular:
             if c in s.coll_regular or c in s.nonfrozen:
@@ -4135,39 +4136,95 @@ class CqlTable:
             self._snap_cache = (key, out)
         return out
 
-    def _key_exprs(self) -> list[str]:
-        """SQL for the typed user-facing key columns: the log's single
-        ``pk`` string cast for a single-column key and SEP-split for a
-        composite (the clustering convention), then each clustering
-        column split out of ``ck``."""
+    def _key_columns(self, split: bool = True) -> list[tuple[str, str, str]]:
+        """(name, type, SQL) of the typed user-facing key columns. With
+        ``split`` the SQL reads the log's single ``pk`` string (cast for a
+        single-column key, SEP-split for a composite one: the clustering
+        convention) and splits each clustering column out of ``ck``;
+        without it, each component is already its own string column of
+        that name (the frame :meth:`partition_frame` builds)."""
         s = self.schema
-        if s.pk_composite:
-            out = [
-                f"CAST(split(pk, '{SEP}')[{i}] AS {s.key_type(c)}) AS `{c}`"
-                for i, c in enumerate(s.partition_cols)
-            ]
-        else:
-            c = s.partition_cols[0]
-            out = [f"CAST(pk AS {s.key_type(c)}) AS `{c}`"]
-        return out + [
-            f"CAST(split(ck, '{SEP}')[{i}] AS {s.key_type(c)}) AS `{c}`"
-            for i, c in enumerate(s.clustering)
-        ]
+        srcs = [
+            f"split(pk, '{SEP}')[{i}]" if s.pk_composite else "pk"
+            for i in range(len(s.partition_cols))
+        ] + [f"split(ck, '{SEP}')[{i}]" for i in range(len(s.clustering))]
+        out = []
+        for c, src in zip((*s.partition_cols, *s.clustering), srcs):
+            src = src if split else f"`{c}`"
+            out.append((c, s.key_type(c), f"CAST({src} AS {s.key_type(c)})"))
+        return out
 
-    def _visible_exprs(self) -> list[str]:
-        """The select list that types a reconciled wide row into the
-        table's visible columns — the one definition :meth:`snapshot`
-        and :meth:`partition_frame` both apply. Its input
-        (:meth:`_raw_schema`) holds ``pk``, ``ck`` (NULL on a
-        static-only row), each scalar and static column's winning cell
+    def _key_exprs(self) -> list[str]:
+        """SQL for the typed key columns of a wide row that holds the
+        log's ``pk`` and ``ck`` (:meth:`_key_columns`)."""
+        return [f"{sql} AS `{c}`" for c, _, sql in self._key_columns()]
+
+    # The Arrow typer's per-type rule (partition_frame, _empty): a visible
+    # scalar type -> (the spelling of the stored strings it converts, its
+    # Arrow type). Within that spelling pyarrow's cast reads a string
+    # exactly as Spark's CAST does (tests/test_history_fuzz.py checks it
+    # against the snapshot); writetime shadows are int64 already. Every
+    # other column keeps its _visible_exprs SQL, in one residual
+    # selectExpr: the types not listed here (timestamp, date,
+    # decimal/varint, float/double, UDTs, tuples, duration,
+    # collections), because only Spark's cast reads every form their
+    # stored literal can take ('2024-01-02 03:04:05.678+0000' and
+    # '2024-01-02T03:04:05Z' alike), and a listed column that holds any
+    # other spelling ('+5', ' 5', 'yes', an out-of-range number,
+    # malformed text), so that Spark's cast accepts or fails it exactly
+    # as the snapshot does.
+    _ARROW_CASTS = {
+        "string": (None, "string"),
+        "boolean": ("(?i:true|false)", "bool"),
+        "tinyint": ("-?[0-9]+", "int8"),
+        "smallint": ("-?[0-9]+", "int16"),
+        "int": ("-?[0-9]+", "int32"),
+        "bigint": ("-?[0-9]+", "int64"),
+    }
+
+    @classmethod
+    def _arrow_typed(cls, values: list, typ: str):
+        """Stored strings ``values`` of one column as an Arrow array of
+        visible type ``typ`` by :attr:`_ARROW_CASTS`, or None when the
+        type has no Arrow conversion or a value is spelled outside it."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        rule = cls._ARROW_CASTS.get(typ)
+        if rule is None:
+            return None
+        spelling, arrow_type = rule
+        arr = pa.array(values, pa.string())
+        if spelling is None:
+            return arr
+        ok = pc.match_substring_regex(arr, f"^(?:{spelling})$")
+        if not pc.all(ok, min_count=0).as_py():
+            return None
+        try:
+            return pc.cast(arr, pa.type_for_alias(arrow_type))
+        except pa.ArrowInvalid:  # outside the type's range
+            return None
+
+    def _visible_columns(self, split: bool = True) -> list[tuple]:
+        """(name, type, SQL) of each visible column, in output order:
+        keys, regular columns, statics, the ``__writetime_<col>``
+        shadows (f2 convention), then the ``__maxwritetime_<col>``
+        shadows of multi-cell columns. The SQL types the column from the
+        untyped wide row: each scalar and static column's winning cell
         string, each collection and non-frozen UDT column's live cells
-        as ``array<struct<elem, val>>`` and the writetime maxima.
-        Casts and ``from_json`` re-type the canonical strings;
-        collections sort and dedup here, so the order of the input
-        cells never matters. Output: keys, regular columns, statics,
-        the ``__writetime_<col>`` shadows (f2 convention), then the
-        ``__maxwritetime_<col>`` shadows of multi-cell columns."""
+        as ``array<struct<elem, val>>``, the writetime maxima, and the
+        keys as :meth:`_key_columns` reads them (``split``). Casts and
+        ``from_json`` re-type the canonical strings; collections sort
+        and dedup here, so the order of the input cells never matters.
+        The type is the one a plain cast of the stored string yields
+        (None for multi-cell columns and shadows). A counter table's
+        columns are the keys and one bigint per counter."""
         s = self.schema
+        out = self._key_columns(split)
+        if s.counter:
+            return out + [
+                (c, t, f"CAST(`{c}` AS {t})") for c, t in s.regular.items()
+            ]
 
         def cell(src: str, typ: str) -> str:
             # struct-typed (round 11) and frozen-nested-collection
@@ -4177,7 +4234,6 @@ class CqlTable:
                 return f"from_json({src}, '{spark_type_text(typ)}')"
             return f"CAST({src} AS {typ})"
 
-        out = self._key_exprs()
         for c, typ in s.regular.items():
             coll = s.coll_regular.get(c)
             if c in s.nonfrozen:
@@ -4191,13 +4247,13 @@ class CqlTable:
                 fields = []
                 for fn, ft in parse_struct_type(typ):
                     fields.append(f"'{fn}', " + cell(f"{m_sql}['{fn}']", ft))
-                out.append(
+                out.append((c, None, (
                     f"CASE WHEN size({m_sql}) > 0 THEN "
-                    f"named_struct({', '.join(fields)}) END AS `{c}`"
-                )
+                    f"named_struct({', '.join(fields)}) END"
+                )))
                 continue
             if coll is None:
-                out.append(f"{cell(f'`{c}`', typ)} AS `{c}`")
+                out.append((c, typ, cell(f"`{c}`", typ)))
                 continue
             ckind, t1, t2 = coll
             if ckind == "list":  # position order
@@ -4224,73 +4280,110 @@ class CqlTable:
                     f"{cell('x.val', t2)} AS value))))"
                 )
             # an empty non-frozen collection IS null (reference semantics)
-            out.append(f"CASE WHEN size({agg}) > 0 THEN {agg} END AS `{c}`")
-        out += [f"{cell(f'`{c}`', t)} AS `{c}`" for c, t in s.static.items()]
+            out.append((c, None, f"CASE WHEN size({agg}) > 0 THEN {agg} END"))
+        out += [(c, t, cell(f"`{c}`", t)) for c, t in s.static.items()]
         # writetime() of a multi-cell UDT is not a single value (the
         # reference errors pre-4.1): its shadow is NULL. MAXWRITETIME
         # (`[C* CASSANDRA-17425 — 4.1, unverified]`) of a multi-cell
         # column reads the max LIVE element-cell writetime
         out += [
-            f"CAST(NULL AS BIGINT) AS `__writetime_{c}`" if c in s.nonfrozen
-            else f"`__writetime_{c}`"
+            (f"__writetime_{c}", None,
+             "CAST(NULL AS BIGINT)" if c in s.nonfrozen
+             else f"`__writetime_{c}`")
             for c in (*s.scalar_regular, *s.static)
         ]
         out += [
-            f"`__maxwritetime_{c}`"
+            (f"__maxwritetime_{c}", None, f"`__maxwritetime_{c}`")
             for c in (*s.coll_regular, *sorted(s.nonfrozen))
         ]
         return out
 
-    def _raw_schema(self):
-        """pyarrow schema of the untyped wide row :meth:`_visible_exprs`
-        reads (counter tables: the keys and one string per column)."""
+    def _visible_exprs(self) -> list[str]:
+        """The select list that types a reconciled wide row holding the
+        log's ``pk`` and ``ck`` into the table's visible columns
+        (:meth:`_visible_columns`) — what :meth:`snapshot` applies.
+        :meth:`partition_frame` types the same columns by the same rule,
+        most of them in Arrow (:attr:`_ARROW_CASTS`)."""
+        return [
+            sql if sql == f"`{c}`" else f"{sql} AS `{c}`"
+            for c, _, sql in self._visible_columns()
+        ]
+
+    def _typed_frame(self, vals: dict[str, list]) -> DataFrame:
+        """The visible frame of the untyped columns ``vals`` (name ->
+        values; each key component its own string column, missing
+        columns empty or NULL): one Arrow table that already holds every
+        column :attr:`_ARROW_CASTS` converts in its visible type, and the
+        rest raw, typed by their :meth:`_visible_columns` SQL in one
+        residual selectExpr. A table of text, int-family and boolean
+        columns makes no selectExpr at all, so PySpark keeps the schema
+        it built the frame with and reading it costs no JVM call. Spark
+        keeps the frame as a LocalRelation: collecting it runs no job."""
         import pyarrow as pa
 
         s = self.schema
         cells = pa.list_(
             pa.struct([("elem", pa.string()), ("val", pa.string())])
         )
-        fields = [("pk", pa.string()), ("ck", pa.string())]
-        for c in (*s.regular, *s.static):
-            multi = c in s.coll_regular or c in s.nonfrozen
-            fields.append((c, cells if multi else pa.string()))
-            if not s.counter:
-                wt = "__maxwritetime_" if multi else "__writetime_"
-                fields.append((wt + c, pa.int64()))
-        return pa.schema(fields)
+        n = len(vals.get(s.partition_cols[0], ()))
+        arrays, names, select, residual = [], [], [], False
+        for name, typ, sql in self._visible_columns(split=False):
+            values = vals.get(name) or [None] * n
+            names.append(name)
+            if name.startswith("__"):  # writetime shadows: int64 already
+                arrays.append(pa.array(values, pa.int64()))
+                select.append(f"`{name}`")
+                continue
+            arr = self._arrow_typed(values, typ)
+            if arr is None:
+                multi = name in s.coll_regular or name in s.nonfrozen
+                arr = pa.array(values, cells if multi else pa.string())
+                select.append(f"{sql} AS `{name}`")
+                residual = True
+            else:
+                select.append(f"`{name}`")
+            arrays.append(arr)
+        df = self.spark.createDataFrame(pa.table(arrays, names=names))
+        return df.selectExpr(*select) if residual else df
 
     def partition_frame(self, pks) -> DataFrame:
         """The visible rows of partitions ``pks`` as a DataFrame with no
         Spark job behind it — the single-partition read (the reference's
         ``SinglePartitionReadCommand``) that serves a SELECT whose
         partitions are known. :meth:`_reconcile` merges the partitions
-        at the snapshot's ``asof`` on the driver; the wide rows go to
-        Spark as one Arrow table (a LocalRelation) and
-        :meth:`_visible_exprs` types them. Columns, types, shadows and
-        row order equal ``snapshot()`` filtered to ``pks``; the rows are
+        at the snapshot's ``asof`` on the driver, and
+        :meth:`_typed_frame` hands the rows to Spark as one Arrow table
+        typed on the driver: text, int-family and boolean columns and
+        the writetime shadows convert in Arrow (:attr:`_ARROW_CASTS`),
+        the rest keep their SQL cast. Columns, types, shadows and row
+        order equal ``snapshot()`` filtered to ``pks``; the rows are
         pre-sorted here because a Sort on a LocalRelation costs Spark
         jobs. Not for counter tables (their reconcile is a sum,
         :meth:`_counter_snapshot`)."""
-        import pyarrow as pa
-
         s = self.schema
         state = self._reconcile(pks, (self._max_wt or 0) + 1)
-        schema = self._raw_schema()
-        cols: dict[str, list] = {f.name: [] for f in schema}
         keys = [(c, s.key_type(c)) for c in s.partition_cols]
         cks = [(c, s.key_type(c)) for c in s.clustering]
+        vals: dict[str, list] = defaultdict(list)
+
+        def parts(joined, kts):
+            if joined is None:
+                return [None] * len(kts)
+            return joined.split(SEP) if len(kts) > 1 else [joined]
 
         def order(joined, kts):
-            if joined is None:
-                return [(0,)] * len(kts)
-            parts = joined.split(SEP) if len(kts) > 1 else [joined]
-            return [_order_key(v, t) for v, (_, t) in zip(parts, kts)]
+            return [
+                _order_key(v, t) for v, (_, t) in zip(parts(joined, kts), kts)
+            ]
 
         for pk in sorted(state, key=lambda p: order(p, keys)):
             rows, statics = state[pk]
+            pk_parts = parts(pk, keys)
             for ck in sorted(rows, key=lambda k: order(k, cks)) or [None]:
-                cols["pk"].append(pk)
-                cols["ck"].append(ck)
+                for (c, _), v in zip(keys, pk_parts):
+                    vals[c].append(v)
+                for (c, _), v in zip(cks, parts(ck, cks)):
+                    vals[c].append(v)
                 cells: dict = {}  # col -> [(elem, writetime, val)]
                 for (col, elem), (wt, v) in rows.get(ck, {}).items():
                     cells.setdefault(col, []).append((elem, wt, v))
@@ -4298,21 +4391,19 @@ class CqlTable:
                     cs = cells.get(c, [])
                     wt = max((w for _, w, _ in cs), default=None)
                     if c in s.coll_regular or c in s.nonfrozen:
-                        cols[c].append(
+                        vals[c].append(
                             [{"elem": e, "val": v} for e, _, v in cs]
                         )
-                        cols[f"__maxwritetime_{c}"].append(wt)
+                        vals[f"__maxwritetime_{c}"].append(wt)
                     else:
-                        vals = [v for *_, v in cs if v is not None]
-                        cols[c].append(max(vals, default=None))
-                        cols[f"__writetime_{c}"].append(wt)
+                        live = [v for *_, v in cs if v is not None]
+                        vals[c].append(max(live, default=None))
+                        vals[f"__writetime_{c}"].append(wt)
                 for c in s.static:
                     wt, v = statics.get(c, (None, None))
-                    cols[c].append(v)
-                    cols[f"__writetime_{c}"].append(wt)
-        return self.spark.createDataFrame(
-            pa.table(cols, schema=schema)
-        ).selectExpr(*self._visible_exprs())
+                    vals[c].append(v)
+                    vals[f"__writetime_{c}"].append(wt)
+        return self._typed_frame(vals)
 
     def _counter_snapshot(self, max_wt_us: int | None = None) -> DataFrame:
         """Counter reconcile (W6 driven from statement text): a counter cell
@@ -4377,15 +4468,9 @@ class CqlTable:
         ).orderBy(*s.partition_cols, *s.clustering)
 
     def _empty(self) -> DataFrame:
-        """No rows, with the visible schema: a zero-row Arrow table typed
-        by the same select list as :meth:`snapshot`. Spark keeps it as a
-        LocalRelation, so collecting it runs no job (an empty frame from
-        a Python list costs two)."""
-        s = self.schema
-        df = self.spark.createDataFrame(self._raw_schema().empty_table())
-        if not s.counter:
-            return df.selectExpr(*self._visible_exprs())
-        return df.selectExpr(
-            *self._key_exprs(),
-            *(f"CAST(`{c}` AS {t}) AS `{c}`" for c, t in s.regular.items()),
-        )
+        """No rows, with the visible schema: :meth:`_typed_frame` of no
+        values, typed by the same rule as :meth:`partition_frame` (a
+        counter table's keys and bigint counters convert in Arrow
+        alone). Spark keeps it as a LocalRelation, so collecting it runs
+        no job (an empty frame from a Python list costs two)."""
+        return self._typed_frame({})

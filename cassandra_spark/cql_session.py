@@ -576,6 +576,25 @@ _DROP_KS_RE = re.compile(
 )
 _USE_RE = re.compile(r"^\s*USE\s+(?P<name>\w+)\s*;?\s*$", re.IGNORECASE)
 
+# The virtual keyspaces the system views live in (``_SYSTEM_VIEWS``):
+# qualified names and USE reach them without their being created, and
+# like the reference's system keyspaces they are not user-modifiable:
+# CREATE KEYSPACE refuses their names and no table is created in them.
+_VIRTUAL_KEYSPACES = frozenset(
+    ("system", "system_schema", "system_auth", "system_traces",
+     "system_views")
+)
+
+
+def _check_user_keyspace(ks: str) -> None:
+    """Refuse to create keyspace ``ks`` or a table in it when it is
+    virtual."""
+    if ks in _VIRTUAL_KEYSPACES:
+        raise CQLError(
+            f"keyspace {ks!r} is a system keyspace and is not "
+            "user-modifiable"
+        )
+
 _CREATE_MV_RE = re.compile(
     r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(?P<name>[\w.]+)\s+AS\s+SELECT\s+(?P<cols>[\w\s,*]+?)\s+FROM\s+"
@@ -1433,6 +1452,7 @@ class CqlSession:
         ks = keyspace or self.current_ks
         if ks is None:
             raise CQLError("no keyspace selected (USE <keyspace> first)")
+        _check_user_keyspace(ks)
         key = f"{ks}.{schema.name}"
         if key in self.mat_views:
             raise CQLError(
@@ -1473,9 +1493,8 @@ class CqlSession:
         n = name.lower()
         if "." in n:
             ks, _, t = n.partition(".")
-            if ks in ("system", "system_schema", "system_auth",
-                      "system_traces", "system_views"):
-                return n  # virtual keyspaces pass through
+            if ks in _VIRTUAL_KEYSPACES:
+                return n
             if ks not in self.keyspaces:
                 raise CQLError(f"unknown keyspace {ks!r}")
             return n
@@ -2024,8 +2043,12 @@ class CqlSession:
         statement's partitions are known — pinned by the WHERE
         (:meth:`_pinned_pks`) or the candidates of a 2i probe — they
         come from ``CqlTable.partition_frame``: a driver-side reconcile
-        of those partitions only, no Spark job (the reference's
-        single-partition read). Otherwise the Spark snapshot. The
+        of those partitions only, handed to Spark as one Arrow table
+        already in the visible types (text, int-family and boolean
+        columns convert in Arrow; the rest keep the snapshot's SQL cast),
+        so no Spark job runs and ``cql_select`` reads the frame's schema
+        without a JVM call (the reference's single-partition read).
+        Otherwise the Spark snapshot. The
         statement's full WHERE still re-applies in cql_select (for a 2i
         read, the phase-2 recheck of the reference's
         CassandraIndexSearcher). Equality/CONTAINS probes value Blooms;
@@ -3467,7 +3490,7 @@ class CqlSession:
         um_ = _USE_RE.match(stmt)
         if um_ and head.startswith("USE"):
             name = um_.group("name").lower()
-            if name not in self.keyspaces:
+            if name not in self.keyspaces and name not in _VIRTUAL_KEYSPACES:
                 raise CQLError(f"unknown keyspace {name!r}")
             self.current_ks = name
             return None
@@ -3477,6 +3500,7 @@ class CqlSession:
                 raise CQLError(f"unsupported CREATE KEYSPACE: {stmt!r}")
             self._check_perm("CREATE")
             name = km.group("name").lower()
+            _check_user_keyspace(name)
             if name in self.keyspaces:
                 if km.group("ine"):
                     return None
@@ -4327,14 +4351,20 @@ class CqlSession:
         masks = self.masks.get(t)
         if not masks or t in self.unmasked:
             return df
-        from cassandra_spark.cql import _rewrite_masks
+        from cassandra_spark.cql import _rewrite_masks, _schema_of
 
         from pyspark.sql import functions as F
 
-        for col, call in masks.items():
-            if col in df.columns:
-                df = df.withColumn(col, F.expr(_rewrite_masks(call, df)))
-        return df
+        # the result's columns and types, read once for every mask
+        dtypes = {
+            f.name: f.dataType.simpleString() for f in _schema_of(df).fields
+        }
+        masked = {
+            col: F.expr(_rewrite_masks(call, dtypes))
+            for col, call in masks.items()
+            if col in dtypes
+        }
+        return df.withColumns(masked) if masked else df
 
     # Spark-cast type text → canonical CQL type text (DESCRIBE output).
     # Lossy CQL→Spark mappings (ascii/uuid/blob/... all land on string)

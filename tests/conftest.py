@@ -60,3 +60,36 @@ def spark_jobs(spark):
         return max(sc.statusTracker().getJobIdsForGroup(), default=-1) + 1
 
     return count
+
+
+@pytest.fixture()
+def py4j_calls(spark):
+    """``py4j_calls()``: how many Py4J commands this process has sent to
+    the JVM since the fixture started, counted at ``send_command`` of
+    both connection classes (the client-server one PySpark pins by
+    default, and the classic gateway one). Take the difference around a
+    call. Python's cyclic garbage collector is paused while the fixture
+    is live: a collection that happened to run inside the window would
+    add the JVM-side deletes of whatever objects it freed."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    gc.collect()
+    gc.disable()
+    sent = [0]
+    patched = []
+    for cls in (ClientServerConnection, GatewayConnection):
+        real = cls.send_command
+
+        def send(self, command, *a, _real=real, **kw):
+            sent[0] += 1
+            return _real(self, command, *a, **kw)
+
+        patched.append((cls, real))
+        cls.send_command = send
+    yield lambda: sent[0]
+    for cls, real in patched:
+        cls.send_command = real
+    gc.enable()

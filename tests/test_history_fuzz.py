@@ -602,3 +602,220 @@ def test_composite_pk_partition_frame_matches_across_row_groups(
         spill_threshold=2, compact_threshold=3,
     )
     _check_cpk_partition_frame(spark, duck, table, history, pks)
+
+
+# --- the Arrow typer: partition_frame types text, int-family and
+# boolean columns in Arrow (CqlTable._ARROW_CASTS) and leaves every other
+# type, and any value spelled outside the rule, to the snapshot's SQL
+# cast. Each check is the partition_frame ≡ filtered snapshot() check
+# above, over histories that write every Arrow-typed type in every
+# spelling the write path stores, and over a table that mixes both
+# halves of the rule.
+
+import pytest  # noqa: E402
+
+_TYPED_DDL = (
+    "CREATE TABLE ty (k int, t text, c tinyint, b bigint, sm smallint, "
+    "ti tinyint, bo boolean, a ascii, vc varchar, bl blob, ip inet, "
+    "u uuid, PRIMARY KEY ((k, t), c))"
+)
+_TYPED_COLS = ("b", "sm", "ti", "bo", "a", "vc", "bl", "ip", "u")
+
+
+def _int_lit(n: int, how: str) -> str:
+    """``n`` as a CQL literal in one of the spellings the write path
+    stores as written; 'plus' and 'space' are outside the Arrow rule
+    (Spark's cast reads them, so the column falls back to it)."""
+    sign, digits = ("-" if n < 0 else ""), str(abs(n))
+    return {
+        "plain": str(n),
+        "quoted": f"'{n}'",
+        "zeros": f"'{sign}00{digits}'",
+        "plus": f"'+{digits}'" if n >= 0 else f"'{n}'",
+        "space": f"' {n} '",
+    }[how]
+
+
+def _int_lit_st(lo: int, hi: int):
+    return st.builds(
+        _int_lit, st.integers(lo, hi) | st.sampled_from((lo, hi, 0)),
+        st.sampled_from(("plain", "quoted", "zeros", "plus", "space")),
+    )
+
+
+_TEXT_LIT = st.text(alphabet="ab'é ", max_size=4).map(
+    lambda s: "'" + s.replace("'", "''") + "'"
+)
+_TYPED_LITS = {
+    "b": _int_lit_st(-(2**63), 2**63 - 1),
+    "sm": _int_lit_st(-(2**15), 2**15 - 1),
+    "ti": _int_lit_st(-128, 127),
+    "bo": st.sampled_from(
+        ("true", "false", "'TRUE'", "'False'", "'yes'", "'f'", "null")
+    ),
+    "a": _TEXT_LIT,
+    "vc": _TEXT_LIT,
+    "bl": st.sampled_from(("'0xcafe'", "'00'", "''")),
+    "ip": st.sampled_from(("'10.0.0.1'", "'::1'")),
+    "u": st.sampled_from((
+        "'123e4567-e89b-12d3-a456-426614174000'",
+        "'00000000-0000-0000-0000-000000000000'",
+    )),
+}
+_TYPED_ROW = st.tuples(
+    st.sampled_from(("1", "2", "'002'")), st.sampled_from("ab"),
+    st.sampled_from((0, 1, -3)),
+)
+typed_op_st = st.one_of(
+    st.tuples(st.just("ins"), _TYPED_ROW, st.fixed_dictionaries(_TYPED_LITS)),
+    st.tuples(
+        st.just("set"), _TYPED_ROW,
+        st.sampled_from(_TYPED_COLS).flatmap(
+            lambda c: st.tuples(st.just(c), _TYPED_LITS[c])
+        ),
+    ),
+    st.tuples(st.just("drow"), _TYPED_ROW, st.none()),
+    st.tuples(st.just("dpart"), _TYPED_ROW, st.none()),
+    st.tuples(st.just("flush"), _TYPED_ROW, st.none()),
+)
+
+
+def _typed_stmt(op, row, arg) -> str:
+    k, t, c = row
+    part = f"k = {k} AND t = '{t}'"
+    if op == "ins":
+        cols = ", ".join(arg)
+        return (
+            f"INSERT INTO ty (k, t, c, {cols}) VALUES "
+            f"({k}, '{t}', {c}, {', '.join(arg.values())})"
+        )
+    if op == "set":
+        return f"UPDATE ty SET {arg[0]} = {arg[1]} WHERE {part} AND c = {c}"
+    if op == "drow":
+        return f"DELETE FROM ty WHERE {part} AND c = {c}"
+    return f"DELETE FROM ty WHERE {part}"
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    history=st.lists(typed_op_st, min_size=1, max_size=16),
+    pks=st.sampled_from((
+        [f"1{SEP}a"], [f"1{SEP}a", f"2{SEP}b"], [f"2{SEP}a", f"9{SEP}z"],
+    )),
+)
+def test_arrow_typed_partition_frame_matches_snapshot(
+    spark, tmp_path_factory, history, pks
+):
+    """Every type the Arrow typer converts — bigint, smallint, tinyint,
+    boolean and the text family (text, ascii, varchar, blob, inet,
+    uuid) — under an int + text composite partition key, in every
+    stored spelling: the frame equals the filtered snapshot."""
+    sess = CqlSession(spark, spill_dir=str(tmp_path_factory.mktemp("ty")))
+    sess.execute(_TYPED_DDL)
+    table = sess.table("ty")
+    for op, row, arg in history:
+        if op == "flush":
+            table.flush()
+        else:
+            sess.execute(_typed_stmt(op, row, arg))
+    if table._max_wt is None:
+        return
+    _assert_partition_frames(table, lambda r: f"{r.k}{SEP}{r.t}", pks)
+
+
+def _plan_head(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString().split("\n")[0]
+
+
+@pytest.fixture()
+def typed_tables(spark, tmp_path):
+    """(an all-Arrow table, a mixed table), each with segment and
+    memtable rows. The all-Arrow table's partition 2:b holds spellings
+    outside the Arrow rule ('+7', 'yes'). The mixed one has residual-SQL columns beside the
+    Arrow-typed ones: timestamps written in two literal spellings (one a
+    clustering key), decimal, a tuple, a date, a double and a list."""
+    sess = CqlSession(spark, spill_dir=str(tmp_path))
+    sess.execute(_TYPED_DDL)
+    sess.execute(
+        "CREATE TABLE mx (k text, ts timestamp, n int, d decimal, "
+        "tp tuple<int, text>, dt date, at timestamp, f double, "
+        "l list<int>, v text, PRIMARY KEY (k, ts))"
+    )
+    ty, mx = sess.table("ty"), sess.table("mx")
+    for stmt in (
+        "INSERT INTO ty (k, t, c, b, sm, ti, bo, a, vc, bl, ip, u) VALUES "
+        "(1, 'a', 0, 9223372036854775807, -32768, '007', true, 'x', 'y', "
+        "'0xcafe', '10.0.0.1', '123e4567-e89b-12d3-a456-426614174000')",
+        "INSERT INTO ty (k, t, c, b, ti, bo) VALUES "
+        "(2, 'b', -3, '-05', '+7', 'yes')",
+        "INSERT INTO mx (k, ts, n, d, tp, dt, at, f, l, v) VALUES ('a', "
+        "'2024-01-02 03:04:05.678+0000', 1, 1.50, (1, 'x'), '2024-01-02', "
+        "'2024-01-02T03:04:05Z', 0.5, [3, 1], 'p')",
+        "INSERT INTO mx (k, ts, n, d, tp, dt, at, v) VALUES ('a', "
+        "'2024-01-02T03:04:06Z', '+7', 2.5, (2, 'y'), '2024-02-29', "
+        "'2024-01-02 03:04:05.678+0000', 'q')",
+    ):
+        sess.execute(stmt)
+    ty.flush()
+    mx.flush()
+    sess.execute("UPDATE ty SET sm = 12 WHERE k = 1 AND t = 'a' AND c = 0")
+    sess.execute(
+        "INSERT INTO mx (k, ts, n, d, dt, v) VALUES ('b', "
+        "'2023-12-31 23:59:59+0000', 05, -0.001, '1999-12-31', 'r')"
+    )
+    return ty, mx
+
+
+def test_typed_frames_cover_both_halves_of_the_rule(typed_tables):
+    """The all-Arrow table's frame is the Arrow LocalRelation itself (no
+    typing projection) until a value is spelled outside the rule; the
+    mixed table's frame types its residual columns in one projection
+    over the Arrow-typed ones. All equal the filtered snapshot."""
+    ty, mx = typed_tables
+    for pks in ([f"1{SEP}a"], [f"1{SEP}a", f"2{SEP}b"], [f"3{SEP}c"]):
+        _assert_partition_frames(ty, lambda r: f"{r.k}{SEP}{r.t}", pks)
+    assert _plan_head(ty.partition_frame([f"1{SEP}a"])).startswith(
+        "LocalRelation"
+    )
+    assert _plan_head(ty.partition_frame([f"2{SEP}b"])).startswith("Project")
+    for pks in (["a"], ["a", "b"], ["zz"]):
+        got = _assert_partition_frames(mx, lambda r: r.k, pks)
+    assert len(got) == 0
+    assert _plan_head(mx.partition_frame(["a"])).startswith("Project")
+
+
+def test_empty_frames_match_the_snapshot_schema(spark, typed_tables):
+    """_empty() has the snapshot's schema and no rows, on an all-Arrow
+    table, a mixed table and a counter table."""
+    ty, mx = typed_tables
+    for t in (ty, mx):
+        empty = t._empty()
+        assert empty.schema == t.snapshot().schema
+        assert empty.collect() == []
+    assert _plan_head(ty._empty()).startswith("LocalRelation")
+    s = CqlSession(spark)
+    s.execute("CREATE TABLE hits (k int, c text, n counter, PRIMARY KEY (k, c))")
+    s.execute("UPDATE hits SET n = n + 2 WHERE k = 1 AND c = 'x'")
+    hits = s.table("hits")
+    assert hits._empty().schema == hits.snapshot().schema
+    assert hits._empty().collect() == []
+
+
+def test_malformed_values_fail_as_the_snapshot_does(spark):
+    """A value stored outside every spelling of its type (malformed
+    text, an out-of-range number) is left to Spark's cast, so the pinned
+    read fails exactly as the snapshot does."""
+    s = CqlSession(spark)
+    s.execute("CREATE TABLE bad (k text PRIMARY KEY, n int, sm smallint)")
+    s.execute("INSERT INTO bad (k, n) VALUES ('a', 'abc')")
+    s.execute("INSERT INTO bad (k, sm) VALUES ('b', 40000)")
+    t = s.table("bad")
+    for pk in ("a", "b"):
+        with pytest.raises(Exception) as snap:
+            t.snapshot().filter(F.col("k") == pk).collect()
+        with pytest.raises(type(snap.value)):
+            t.partition_frame([pk]).collect()

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from cassandra_spark import cql_session
+from cassandra_spark.cql import CQLError
 from cassandra_spark.cql_session import CqlSession
 
 # df.schema.simpleString() of each surface — the same with and without rows
@@ -192,15 +193,31 @@ def test_select_builds_only_its_view(spark, monkeypatch):
 
 
 def test_bare_system_view_name_under_use(spark):
-    """A bare name resolves to a system view when the current keyspace
-    carries that view's keyspace name."""
+    """USE of a virtual keyspace selects it without its being created,
+    and a bare name then resolves to that keyspace's system view."""
     sess = CqlSession(spark)
-    sess.execute(
-        "CREATE KEYSPACE system_views WITH replication = "
-        "{'class': 'SimpleStrategy', 'replication_factor': 1}"
-    )
     sess.execute("USE system_views")
     names = {
         r.name for r in sess.execute("SELECT name FROM settings").collect()
     }
     assert "cluster_name" in names
+
+
+@pytest.mark.parametrize(
+    "ks", ["system", "system_schema", "system_auth", "system_traces",
+           "system_views"],
+)
+def test_system_keyspace_names_are_reserved(spark, ks):
+    """CREATE KEYSPACE refuses a system keyspace's name (with or without
+    IF NOT EXISTS), no table is created in one, and the system views
+    keep answering."""
+    sess = CqlSession(spark)
+    rep = "{'class': 'SimpleStrategy', 'replication_factor': 1}"
+    for ine in ("", "IF NOT EXISTS "):
+        with pytest.raises(CQLError, match="not user-modifiable"):
+            sess.execute(f"CREATE KEYSPACE {ine}{ks} WITH replication = {rep}")
+    sess.execute(f"USE {ks}")
+    with pytest.raises(CQLError, match="not user-modifiable"):
+        sess.execute("CREATE TABLE t (k text PRIMARY KEY)")
+    local = sess.execute("SELECT * FROM system.local").collect()
+    assert len(local) == 1

@@ -67,6 +67,28 @@ def test_pinned_reads_collect_without_a_job(sess, spark_jobs, shape):
     assert t.bloom_stats["checked"] > 0
 
 
+
+# Upper bounds on the Py4J commands a pinned read sends. The floor is
+# building the partition's Arrow frame (``createDataFrame``: 21 commands
+# on PySpark 4.1); the WHERE and the projection add one ``filter`` and
+# one ``selectExpr`` over an already-typed frame, and the compile reads
+# no schema from the JVM. ``collect()`` of a LocalRelation takes 7.
+EXECUTE_CALLS = {"point": 32, "slice": 32, "absent": 24, "2i": 32}
+COLLECT_CALLS = 7
+
+
+@pytest.mark.parametrize("shape", sorted(EXECUTE_CALLS))
+def test_pinned_read_py4j_calls(sess, py4j_calls, shape):
+    stmt = READS[shape]
+    sess.execute(stmt).collect()  # first read: compiles, warms caches
+    n0 = py4j_calls()
+    df = sess.execute(stmt)
+    n1 = py4j_calls()
+    df.collect()
+    n2 = py4j_calls()
+    assert n1 - n0 <= EXECUTE_CALLS[shape]
+    assert n2 - n1 <= COLLECT_CALLS
+
 def test_bloom_filters_skip_segments(sess):
     t = sess.table("ev")
     before = dict(t.bloom_stats)
