@@ -536,6 +536,26 @@ _SELECTOR_RE = re.compile(
     r"^(writetime|maxwritetime|ttl)\s*\(\s*(\w+)\s*\)(?:\s+AS\s+(\w+))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# the cell-metadata shadow columns those selectors read
+_SHADOW_PREFIXES = ("__writetime_", "__maxwritetime_", "__ttl_")
+_SELECTOR_CALL_RE = re.compile(
+    r"\b(?:writetime|maxwritetime|ttl)\s*\(", re.IGNORECASE
+)
+
+
+def reads_cell_metadata(stmt: str) -> bool:
+    """Whether a SELECT calls a WRITETIME() / MAXWRITETIME() / TTL()
+    selector, the only readers of the shadow columns."""
+    return _SELECTOR_CALL_RE.search(stmt) is not None
+
+
+def _declared_columns(df: DataFrame, columns) -> DataFrame:
+    """``SELECT *``: the declared columns only — a cell-metadata shadow
+    is reachable through its selector, as in the reference. ``columns``
+    names the columns of ``df``."""
+    shadows = [c for c in columns if c.lower().startswith(_SHADOW_PREFIXES)]
+    return df.drop(*shadows) if shadows else df
+
 
 # Cassandra 5 vector similarity selectors (`[C* cql3/functions/VectorFcts,
 # unverified]`): score in (0, 1], 1 = identical — cosine and dot_product
@@ -1303,6 +1323,8 @@ def cql_select(
                     for p in _split_projection(proj)
                 ]
             )
+        else:
+            df = _declared_columns(df, dtypes)
         return _to_json_row(df) if s.json else df
 
     if s.group_by is not None:
@@ -1364,6 +1386,8 @@ def cql_select(
         df = df.selectExpr(
             *[_rewrite_item(i, dtypes) for i in items]
         )
+    else:
+        df = _declared_columns(df, dtypes)
     if s.json:
         df = _to_json_row(df)
 

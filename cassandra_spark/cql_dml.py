@@ -56,6 +56,7 @@ of the same reconcile — and snapshots are the compaction.compact output.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 from collections import defaultdict
@@ -503,157 +504,128 @@ def parse_struct_type(typ: str) -> list[tuple[str, str]] | None:
 _INT_FIELD_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "long"})
 
 
-def _json_field_value(val: str | None, ftype: str):
+def _json_text(v) -> str:
+    """The canonical JSON rendering of a cell: compact separators, raw
+    UTF-8 — byte-identical to Spark's ``to_json``."""
+    return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+
+
+def _field_value(ftype: str):
     """Canonical-string field value → the Python value json.dumps renders
-    exactly as Spark's to_json() would for the field's Spark type."""
-    if val is None:
-        return None
+    exactly as Spark's to_json() would for the field's Spark type: the
+    converter for one declared type, chosen once."""
+    canon = _int_canon(ftype)
+    if canon is not None:  # validated like a top-level int-family value
+        return lambda v: int(canon(v))
     ft = ftype.strip().lower()
-    if parse_struct_type(ftype) is not None:
-        raise CQLError("nested struct fields must arrive pre-parsed")
     if ft in _INT_FIELD_TYPES or ft.startswith("decimal"):
-        return int(val)
+        return int
     if ft in ("float", "double"):
-        return float(val)
+        return float
     if ft == "boolean":
-        return val == "true"
-    return val  # string family (text/inet/uuid/...)
+        return lambda v: v == "true"
+    return str  # string family (text/inet/uuid/...)
 
 
-def struct_json(tok: str, typ: str) -> str | None:
-    """Struct-typed CQL literal → canonical JSON string for the log.
+def _struct_pyval(typ: str):
+    """The codec of one struct type: a CQL literal → its Python value
+    (declared field order, null fields omitted), None for NULL.
 
     Accepts the UDT form ``{field: lit, ...}``, the tuple form
-    ``(lit, ...)`` (fields bind positionally to the declared c0..cN), a
-    bare duration literal when ``typ`` is the duration struct, or NULL.
-    Canonical form: declared field order, null fields omitted, compact
-    separators, raw UTF-8 — byte-identical to Spark's ``to_json``.
-    """
-    import json as _json
-
+    ``(lit, ...)`` (fields bind positionally to the declared c0..cN), or
+    a bare duration literal when ``typ`` is the duration struct. Nested
+    struct fields compile to their own codecs here, so a value is parsed
+    without re-reading the type text."""
     fields = parse_struct_type(typ)
     assert fields is not None
-    tok = tok.strip()
-    if re.fullmatch(r"NULL", tok, re.IGNORECASE):
-        return None
-    out: dict[str, object] = {}
-    if tok.startswith("{") and tok.endswith("}"):
-        declared = dict(fields)
-        seen = {}
-        body = tok[1:-1].strip()
-        for item in _split_csv(body) if body else []:
-            k, v = _split_colon(item)
-            name = k.strip().lower()
-            if name not in declared:
-                raise CQLError(f"unknown struct field {name!r} in {tok!r}")
-            ftype = declared[name]
-            v = v.strip()
-            if parse_struct_type(ftype) is not None:
-                seen[name] = ("__nested__", struct_json(v, ftype))
-            else:
-                seen[name] = (ftype, _parse_literal(v))
-        for name, ftype in fields:
-            if name not in seen:
-                continue
-            ft, v = seen[name]
-            if v is None:
-                continue
-            out[name] = (
-                _json.loads(v) if ft == "__nested__" else _json_field_value(v, ft)
-            )
-    elif tok.startswith("(") and tok.endswith(")"):
-        vals = _split_csv(tok[1:-1])
-        if len(vals) > len(fields):
-            raise CQLError(f"too many tuple fields in {tok!r}")
-        for (name, ftype), v in zip(fields, vals):
-            v = v.strip()
-            if parse_struct_type(ftype) is not None:
-                nested = struct_json(v, ftype)
-                if nested is not None:
-                    out[name] = _json.loads(nested)
-                continue
-            pv = _parse_literal(v)
-            if pv is not None:
-                out[name] = _json_field_value(pv, ftype)
-    elif typ.replace(" ", "") == DURATION_STRUCT.replace(" ", ""):
-        months, days, nanos = parse_duration(tok)
-        out = {"months": months, "days": days, "nanos": nanos}
-    else:
+    nested = {
+        n: _struct_pyval(ft)
+        for n, ft in fields
+        if parse_struct_type(ft) is not None
+    }
+    conv = {n: _field_value(ft) for n, ft in fields if n not in nested}
+    duration = typ.replace(" ", "") == DURATION_STRUCT.replace(" ", "")
+
+    def field(name: str, v: str):
+        if name in nested:
+            return nested[name](v)
+        pv = _parse_literal(v)
+        return None if pv is None else conv[name](pv)
+
+    def parse(tok: str):
+        tok = tok.strip()
+        if _NULL_RE.fullmatch(tok):
+            return None
+        if tok.startswith("{") and tok.endswith("}"):
+            seen = {}
+            body = tok[1:-1].strip()
+            for item in _split_csv(body) if body else []:
+                k, v = _split_colon(item)
+                name = k.strip().lower()
+                if name not in nested and name not in conv:
+                    raise CQLError(f"unknown struct field {name!r} in {tok!r}")
+                seen[name] = field(name, v.strip())
+            return {n: seen[n] for n, _ in fields if seen.get(n) is not None}
+        if tok.startswith("(") and tok.endswith(")"):
+            vals = _split_csv(tok[1:-1])
+            if len(vals) > len(fields):
+                raise CQLError(f"too many tuple fields in {tok!r}")
+            out = {}
+            for (name, _), v in zip(fields, vals):
+                x = field(name, v.strip())
+                if x is not None:
+                    out[name] = x
+            return out
+        if duration:
+            months, days, nanos = parse_duration(tok)
+            return {"months": months, "days": days, "nanos": nanos}
         raise CQLError(f"bad struct literal for {typ!r}: {tok!r}")
-    return _json.dumps(out, separators=(",", ":"), ensure_ascii=False)
+
+    return parse
 
 
-def udt_field_cells(
-    tok: str, typ: str
-) -> list[tuple[str, str | None]] | None:
-    """Non-frozen-UDT literal → per-FIELD canonical cell values, in
-    declared field order: [(field, value-or-None), ...] with None for
-    fields absent from (or null in) the literal. A NULL literal returns
-    None (whole-column tombstone). Scalar fields store their canonical
-    literal text (the cell convention); nested frozen struct fields
-    store canonical JSON."""
-    fields = parse_struct_type(typ)
-    assert fields is not None
-    tok = tok.strip()
-    if re.fullmatch(r"NULL", tok, re.IGNORECASE):
-        return None
-    if not (tok.startswith("{") and tok.endswith("}")):
-        raise CQLError(f"bad UDT literal for {typ!r}: {tok!r}")
-    declared = dict(fields)
-    seen: dict[str, str | None] = {}
-    body = tok[1:-1].strip()
-    for item in _split_csv(body) if body else []:
-        k, v = _split_colon(item)
-        name = k.strip().lower()
-        if name not in declared:
-            raise CQLError(f"unknown struct field {name!r} in {tok!r}")
-        ftype = declared[name]
-        v = v.strip()
-        if parse_struct_type(ftype) is not None:
-            seen[name] = struct_json(v, ftype)
-        elif is_coll_type(ftype):
-            seen[name] = coll_json(v, ftype)
-        else:
-            seen[name] = _parse_literal(v)
-    return [(name, seen.get(name)) for name, _ in fields]
-
-
-def _coll_pyval(tok: str, typ: str):
-    """CQL literal text → the Python value ``json.dumps`` renders exactly
-    as Spark's ``to_json`` would for the Spark type ``typ``. Recursive
-    over frozen nested collections and struct elements. Canonical forms:
-    set elements sorted by their typed value, map keys sorted (and
-    rendered as JSON-object string keys, Spark's convention) — the same
+def _pyval_codec(typ: str):
+    """The codec of one (possibly nested) type: CQL literal text → the
+    Python value ``json.dumps`` renders exactly as Spark's ``to_json``
+    would for the Spark type ``typ``. Recursive over frozen nested
+    collections and struct elements. Canonical forms: set elements
+    sorted by their typed value, map keys sorted (and rendered as
+    JSON-object string keys, Spark's convention) — the same
     deterministic order the top-level snapshot pivot produces with
     ``array_sort`` / sorted ``map_from_entries``."""
-    import json as _json
-
-    tok = tok.strip()
-    if re.fullmatch(r"NULL", tok, re.IGNORECASE):
-        return None
     if parse_struct_type(typ) is not None:
-        j = struct_json(tok, typ)
-        return None if j is None else _json.loads(j)
-    if is_coll_type(typ):
-        coll = parse_coll_type(typ)
-        kind, t1, t2 = coll
-        if kind in ("list", "set", "array"):
+        return _struct_pyval(typ)
+    coll = parse_coll_type(typ) if is_coll_type(typ) else None
+    if coll is None:
+        conv = _field_value(typ)
+
+        def scalar(tok: str):
+            v = _parse_literal(tok)
+            return None if v is None else conv(v)
+
+        return scalar
+    kind, t1, t2 = coll
+    sub = _pyval_codec(t2 if kind == "map" else t1)
+
+    def parse(tok: str):
+        tok = tok.strip()
+        if _NULL_RE.fullmatch(tok):
+            return None
+        if kind != "map":
             if not (
                 (tok.startswith("[") and tok.endswith("]"))
                 or (tok.startswith("{") and tok.endswith("}"))
             ):
                 raise CQLError(f"bad {kind} literal for {typ!r}: {tok!r}")
             body = tok[1:-1].strip()
-            items = [
-                _coll_pyval(i, t1) for i in (_split_csv(body) if body else [])
-            ]
+            items = [sub(i) for i in (_split_csv(body) if body else [])]
             if any(i is None for i in items):
                 raise CQLError("null is not a valid collection element")
             if kind == "set":
                 # canonical set order = the element's natural order (the
                 # reference renders sets sorted); dedup on the rendered
                 # form, order by typed value where comparable
-                dedup = {_json.dumps(i): i for i in items}
+                dedup = {json.dumps(i): i for i in items}
                 try:
                     items = sorted(dedup.values())
                 except TypeError:
@@ -667,13 +639,13 @@ def _coll_pyval(tok: str, typ: str):
         for item in _split_csv(body) if body else []:
             k, v = _split_colon(item)
             kv = _parse_literal(k.strip())
-            vv = _coll_pyval(v.strip(), t2)
+            vv = sub(v.strip())
             if kv is None or vv is None:
                 raise CQLError("null is not a valid map key/value")
             out[str(kv)] = vv
         return {k: out[k] for k in sorted(out)}
-    v = _parse_literal(tok)
-    return None if v is None else _json_field_value(v, typ)
+
+    return parse
 
 
 def spark_type_text(typ: str) -> str:
@@ -720,18 +692,31 @@ def _canon_py(x, typ: str):
     return x
 
 
-def coll_json(tok: str, typ: str) -> str | None:
-    """Frozen nested-collection CQL literal → ONE canonical JSON string
-    for the element cell (round 12; the reference's frozen<list/set/map>
-    nesting `[C* cql3/CQL3Type.Raw, unverified]`) — the same convention
-    struct-typed elements use, so snapshot re-typing is a uniform
-    ``from_json`` and the DuckDB oracle compares identical bytes."""
-    import json as _json
+def _json_codec(typ: str):
+    """A struct-typed or frozen nested-collection literal → ONE canonical
+    JSON string for its cell (None for NULL): struct fields in declared
+    order with nulls omitted, compact separators, raw UTF-8 — byte-
+    identical to Spark's ``to_json``, so snapshot re-typing is a uniform
+    ``from_json`` and the DuckDB oracle compares identical bytes (the
+    reference's frozen<...> nesting `[C* cql3/CQL3Type.Raw,
+    unverified]`)."""
+    pyval = _pyval_codec(typ)
 
-    v = _coll_pyval(tok, typ)
-    return None if v is None else _json.dumps(
-        v, separators=(",", ":"), ensure_ascii=False
-    )
+    def codec(tok: str) -> str | None:
+        v = pyval(tok)
+        return None if v is None else _json_text(v)
+
+    return codec
+
+
+def struct_json(tok: str, typ: str) -> str | None:
+    """One struct-typed or frozen nested-collection literal → its
+    canonical JSON cell (the write path keeps the compiled
+    :func:`_json_codec`)."""
+    return _json_codec(typ)(tok)
+
+
+coll_json = struct_json
 
 
 @dataclass
@@ -910,20 +895,136 @@ class TableSchema:
             return v
         return _index_norm(v, typ)
 
-    @property
-    def scalar_regular(self) -> dict[str, str]:
-        return {
-            c: t for c, t in self.regular.items() if parse_coll_type(t) is None
+
+_KEY_ROLES = frozenset({"partition", "clustering"})
+
+
+class Column:
+    """One column of a :class:`ColumnTable`: its role (``partition``,
+    ``clustering``, ``static`` or ``regular``), its kind and its value
+    codecs, resolved from the type text once.
+
+    Kinds: ``scalar``; ``list`` / ``set`` / ``map`` (``coll`` holds the
+    parsed type, ``elem`` the element codec — a map's key codec, for its
+    key-set literals — ``key`` / ``val`` a map's key and value codecs,
+    ``dims`` a vector's arity); ``struct`` (frozen UDT, tuple or
+    duration: ``lit`` renders the canonical JSON cell); ``udt`` (a
+    non-frozen UDT: ``lit`` gives the field cells, ``fields`` maps each
+    declared field to its codec); ``counter``. ``norm`` is the int
+    family's canonicalizer of a cell text, None for other types."""
+
+    __slots__ = (
+        "name", "role", "typ", "kind", "coll", "dims", "norm",
+        "lit", "elem", "key", "val", "fields",
+    )
+
+    def __init__(
+        self, name: str, role: str, typ: str,
+        nonfrozen: bool = False, dims: int | None = None,
+        counter: bool = False,
+    ) -> None:
+        self.name, self.role, self.typ, self.dims = name, role, typ, dims
+        self.coll = self.fields = None
+        self.norm = _int_canon(typ)
+        self.lit = _scalar_codec(typ)
+        self.elem = self.key = self.val = _parse_literal
+        if role in _KEY_ROLES:
+            self.kind = "scalar"
+        elif nonfrozen:
+            self.kind = "udt"
+            self.fields = {
+                n: _elem_codec(ft) for n, ft in parse_struct_type(typ)
+            }
+            self.lit = self._udt_cells
+        elif parse_struct_type(typ) is not None:
+            self.kind = "struct"
+            self.lit = _json_codec(typ)
+        elif (coll := parse_coll_type(typ)) is not None:
+            self.kind, t1, t2 = self.coll = coll
+            # a collection column's whole-value scalar is only NULL
+            self.lit = _parse_literal
+            if self.kind == "map":
+                self.elem = self.key = _scalar_codec(t1)
+                self.val = _elem_codec(t2)
+            else:
+                self.elem = _elem_codec(t1)
+        else:
+            self.kind = "counter" if counter else "scalar"
+
+    def parse(self, tok: str):
+        """A whole-value right-hand side → ``("scalar", v)``,
+        ``("list" | "set" | "map", items)`` or ``("udt", cells)``."""
+        if self.kind == "udt":
+            return "udt", self.lit(tok)
+        if self.kind == "struct":
+            return "scalar", self.lit(tok)
+        return _parse_value(tok, self.lit, self.elem, self.key, self.val)
+
+    def _udt_cells(self, tok: str):
+        """Non-frozen-UDT literal → per-FIELD cell values in declared
+        field order: [(field, value-or-None), ...] with None for fields
+        absent from (or null in) the literal. A NULL literal returns
+        None (whole-column tombstone)."""
+        tok = tok.strip()
+        if _NULL_RE.fullmatch(tok):
+            return None
+        if not (tok.startswith("{") and tok.endswith("}")):
+            raise CQLError(f"bad UDT literal for {self.typ!r}: {tok!r}")
+        seen: dict[str, str | None] = {}
+        body = tok[1:-1].strip()
+        for item in _split_csv(body) if body else []:
+            k, v = _split_colon(item)
+            name = k.strip().lower()
+            codec = self.fields.get(name)
+            if codec is None:
+                raise CQLError(f"unknown struct field {name!r} in {tok!r}")
+            seen[name] = codec(v.strip())
+        return [(name, seen.get(name)) for name in self.fields]
+
+
+class ColumnTable:
+    """A table's schema compiled for the write path: every column's
+    :class:`Column` and the key columns. A DML statement looks its
+    columns up here and only lexes, validates, canonicalizes and emits;
+    the type text is parsed once per schema version, when
+    :meth:`CqlTable.bump_schema_version` builds the table. The read
+    paths take their column views (``coll_regular``,
+    ``scalar_regular``) from the same table."""
+
+    def __init__(self, s: TableSchema) -> None:
+        self.partition = tuple(s.partition_cols)
+        self.clustering = tuple(s.clustering)
+        self.key_cols = self.partition + self.clustering
+        self.key_set = frozenset(self.key_cols)
+        cols = {c: Column(c, "partition", s.key_type(c)) for c in self.partition}
+        cols.update(
+            (c, Column(c, "clustering", s.key_type(c))) for c in self.clustering
+        )
+        cols.update((c, Column(c, "static", t)) for c, t in s.static.items())
+        cols.update(
+            (c, Column(
+                c, "regular", t, nonfrozen=c in s.nonfrozen,
+                dims=s.vector_dims.get(c), counter=s.counter,
+            ))
+            for c, t in s.regular.items()
+        )
+        self.cols = cols
+        regular = [col for col in cols.values() if col.role == "regular"]
+        self.coll_regular = {
+            col.name: col.coll for col in regular if col.coll is not None
+        }
+        self.scalar_regular = {
+            col.name: col.typ for col in regular if col.coll is None
         }
 
-    @property
-    def coll_regular(self) -> dict[str, tuple[str, str, str | None]]:
-        out = {}
-        for c, t in self.regular.items():
-            p = parse_coll_type(t)
-            if p is not None:
-                out[c] = p
-        return out
+    def all_static(self, names) -> bool:
+        """True when ``names`` is non-empty and every name is a static
+        column (the reference allows pk-only statements on statics)."""
+        names = list(names)
+        return bool(names) and all(
+            (col := self.cols.get(c)) is not None and col.role == "static"
+            for c in names
+        )
 
 
 def check_guardrail(
@@ -1015,6 +1116,14 @@ _BATCH_RE = re.compile(
 )
 
 
+_STMT_SEP_RE = re.compile(r";\s*")
+
+
+def batch_subs(m: re.Match) -> list[str]:
+    """The sub-statements of a :data:`_BATCH_RE` match."""
+    return [sub for sub in _STMT_SEP_RE.split(m.group("body")) if sub.strip()]
+
+
 def batch_kind(m: re.Match) -> str:
     """'logged' (the default) / 'unlogged' / 'counter'."""
     return (m.group("kind") or "logged").strip().lower()
@@ -1036,6 +1145,18 @@ def check_batch_kind(kind: str, any_counter: bool, any_plain: bool) -> None:
             "(use BEGIN COUNTER BATCH)"
         )
 _REL_RE = re.compile(r"^(\w+)\s*(<=|>=|<|>|=)\s*(.+)$", re.DOTALL)
+_LEAD_NAME_RE = re.compile(r"\s*(\w+)")
+
+
+def _lead_name(item: str) -> str | None:
+    """The column a SET item or DELETE selector starts with (None when
+    it starts with no name; the item's own parse then rejects it)."""
+    m = _LEAD_NAME_RE.match(item)
+    return m.group(1).lower() if m else None
+
+
+_AND_RE = re.compile(r"\s+AND\s+", re.IGNORECASE)
+_USING_RE = re.compile(r"(TIMESTAMP|TTL)\s+(\d+)", re.IGNORECASE)
 
 
 def _parse_using(using: str | None) -> tuple[int | None, int | None]:
@@ -1043,33 +1164,95 @@ def _parse_using(using: str | None) -> tuple[int | None, int | None]:
     ts = ttl = None
     if not using:
         return ts, ttl
-    for part in re.split(r"\s+AND\s+", using.strip(), flags=re.IGNORECASE):
-        m = re.fullmatch(r"TIMESTAMP\s+(\d+)", part.strip(), re.IGNORECASE)
-        if m:
-            ts = int(m.group(1))
-            continue
-        m = re.fullmatch(r"TTL\s+(\d+)", part.strip(), re.IGNORECASE)
-        if m:
-            ttl = int(m.group(1))
-            continue
-        raise CQLError(f"bad USING clause: {part.strip()!r}")
+    for part in _AND_RE.split(using.strip()):
+        m = _USING_RE.fullmatch(part.strip())
+        if m is None:
+            raise CQLError(f"bad USING clause: {part.strip()!r}")
+        if m.group(1).upper() == "TIMESTAMP":
+            ts = int(m.group(2))
+        else:
+            ttl = int(m.group(2))
     return ts, ttl
 
 
+_NULL_RE = re.compile(r"NULL", re.IGNORECASE)
+_LITERAL_RE = re.compile(
+    r"(NULL)|'(.*)'|(?:-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|true|false)",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
 def _parse_literal(tok: str) -> str | None:
-    """Scalar CQL literal → canonical string form (cast to the column type
-    at snapshot time). Strings unquote with '' escaping; NULL → None."""
+    """Scalar CQL literal → its cell text: a quoted string unquoted with
+    '' unescaped, an unquoted number or boolean lower-cased, NULL → None.
+    The text is the literal as written, not a canonical form; the
+    column codecs (:class:`Column`) canonicalize the int family, and
+    every other type is cast at read time."""
     tok = tok.strip()
-    if re.fullmatch(r"NULL", tok, re.IGNORECASE):
+    m = _LITERAL_RE.fullmatch(tok)
+    if m is None:
+        raise CQLError(f"unsupported CQL literal: {tok!r}")
+    if m.group(1) is not None:
         return None
-    m = re.fullmatch(r"'(.*)'", tok, re.DOTALL)
-    if m:
-        return m.group(1).replace("''", "'")
-    if re.fullmatch(r"-?\d+(\.\d+)?([eE][+-]?\d+)?", tok) or re.fullmatch(
-        r"(?i)true|false", tok
-    ):
-        return tok.lower()
-    raise CQLError(f"unsupported CQL literal: {tok!r}")
+    quoted = m.group(2)
+    if quoted is not None:
+        return quoted.replace("''", "'")
+    return tok.lower()
+
+
+# the int family's value ranges, by Spark type name
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+# the spellings Spark's (ANSI) string-to-integer cast reads: ASCII digits
+# with an optional sign, padded by whitespace and control characters
+_INT_SPELLING_RE = re.compile(r"[\x00-\x20]*([+-]?)([0-9]+)[\x00-\x20]*")
+
+
+def _int_canon(typ: str):
+    """The canonicalizer of an int-family type (None for other types):
+    a cell text → its one spelling ('05', '+5' and ' 5 ' are all '5'),
+    or CQLError when the text is not an integer in the type's range —
+    the reference validates a value against its column type at write
+    time, so no stored cell can fail the read-time cast."""
+    bits = _INT_BITS.get(typ.strip().lower())
+    if bits is None:
+        return None
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+
+    def canon(v: str) -> str:
+        m = _INT_SPELLING_RE.fullmatch(v)
+        # past 19 significant digits no type's range holds the value
+        digits = m.group(2).lstrip("0") if m is not None else None
+        if digits is not None and len(digits) <= 19:
+            n = int(digits or "0")
+            n = -n if m.group(1) == "-" else n
+            if lo <= n <= hi:
+                return str(n)
+        raise CQLError(f"invalid {typ} value: {v!r}")
+
+    return canon
+
+
+def _scalar_codec(typ: str):
+    """A scalar column's (or element's) literal codec: the literal lexer,
+    then the type's canonicalizer when it has one."""
+    canon = _int_canon(typ)
+    if canon is None:
+        return _parse_literal
+
+    def codec(tok: str) -> str | None:
+        v = _parse_literal(tok)
+        return None if v is None else canon(v)
+
+    return codec
+
+
+def _elem_codec(typ: str):
+    """The codec of a collection element, a map value or a non-frozen UDT
+    field: struct types and frozen nested collections store one
+    canonical-JSON string per cell, scalars their literal text."""
+    if parse_struct_type(typ) is not None or is_coll_type(typ):
+        return _json_codec(typ)
+    return _scalar_codec(typ)
 
 
 # column types whose canonical-string values normalize losslessly for
@@ -1139,56 +1322,74 @@ def _index_norm(val: str, typ: str) -> str:
     return val
 
 
-def _split_csv(text: str) -> list[str]:
-    """Split on commas not inside single quotes or [ ] / { } / ( )
-    brackets (parens nest tuple literals)."""
-    out: list[str] = []
+# one token of a literal list: a quoted string (to its closing quote, or
+# to the end when unterminated), a bracket, or a separator
+_LEX_RE = re.compile(r"'[^']*'?|[\[\]{}(),:]")
+_OPEN, _CLOSE = "[{(", "]})"
+
+
+def _top_level(text: str, sep: str):
+    """Offsets of ``sep`` (``,`` or ``:``) outside single quotes and
+    outside [ ] / { } / ( ) brackets (parens nest tuple literals) — a
+    struct literal's field colons ({a: 1} as a set element) sit at depth
+    > 0 and must not read as a map separator."""
     depth = 0
-    quoted = False
-    cur: list[str] = []
-    for ch in text:
-        if ch == "'":
-            quoted = not quoted
-        elif not quoted:
-            if ch in "[{(":
-                depth += 1
-            elif ch in "]})":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append("".join(cur))
-                cur = []
-                continue
-        cur.append(ch)
-    out.append("".join(cur))
-    return [t.strip() for t in out]
+    for m in _LEX_RE.finditer(text):
+        ch = m.group()
+        if ch == sep:
+            if not depth:
+                yield m.start()
+        elif ch in _OPEN:
+            depth += 1
+        elif ch in _CLOSE:
+            depth -= 1
 
 
-def _parse_value(tok: str, elem_type: str | None = None,
-                 val_type: str | None = None):
-    """Scalar or collection literal.
+def _split_csv(text: str) -> list[str]:
+    """Split on top-level commas."""
+    out: list[str] = []
+    start = 0
+    for i in _top_level(text, ","):
+        out.append(text[start:i].strip())
+        start = i + 1
+    out.append(text[start:].strip())
+    return out
 
-    Returns ``("scalar", v)``, ``("list", [v, ...])``, ``("set", [v, ...])``
-    or ``("map", [(k, v), ...])`` with scalar parts in canonical string
-    form. ``{}`` is a set/map ambiguity resolved as empty map (both mean
-    "no elements" here). ``elem_type`` / ``val_type``: when the declared
-    list/set element (or map value) type is a STRUCT, items canonicalize
-    through :func:`struct_json` instead of the scalar literal parser —
-    one JSON string per element cell, the same convention struct-typed
-    scalar columns use. Map KEYS stay scalar (pinned envelope)."""
-    def lit(item: str, typ: str | None):
-        if typ is not None and parse_struct_type(typ) is not None:
-            return struct_json(item, typ)
-        if typ is not None and is_coll_type(typ):
-            # frozen nested collection element (round 12): one
-            # canonical-JSON string per element cell, like structs
-            return coll_json(item, typ)
-        return _parse_literal(item)
 
+def _colon_at(item: str) -> int | None:
+    """Offset of the first top-level colon, or None."""
+    return next(_top_level(item, ":"), None)
+
+
+def _top_level_colon(item: str) -> bool:
+    return _colon_at(item) is not None
+
+
+def _split_colon(item: str) -> tuple[str, str]:
+    i = _colon_at(item)
+    if i is None:
+        raise CQLError(f"bad map entry: {item!r}")
+    return item[:i], item[i + 1 :]
+
+
+def _parse_value(
+    tok: str,
+    lit=_parse_literal,
+    elem=_parse_literal,
+    key=_parse_literal,
+    val=_parse_literal,
+):
+    """Scalar or collection literal, parsed by the given codecs.
+
+    Returns ``("scalar", lit(tok))``, ``("list", [elem(v), ...])``,
+    ``("set", [elem(v), ...])`` or ``("map", [(key(k), val(v)), ...])``.
+    ``{}`` is a set/map ambiguity resolved as empty map (both mean "no
+    elements" here). A column passes its own codecs (:class:`Column`);
+    the defaults parse type-blind."""
     tok = tok.strip()
     if tok.startswith("[") and tok.endswith("]"):
         body = tok[1:-1].strip()
-        items = _split_csv(body) if body else []
-        return "list", [lit(i, elem_type) for i in items]
+        return "list", [elem(i) for i in (_split_csv(body) if body else [])]
     if tok.startswith("{") and tok.endswith("}"):
         body = tok[1:-1].strip()
         items = _split_csv(body) if body else []
@@ -1196,47 +1397,12 @@ def _parse_value(tok: str, elem_type: str | None = None,
             pairs = []
             for i in items:
                 k, v = _split_colon(i)
-                pairs.append((_parse_literal(k), lit(v.strip(), val_type)))
+                pairs.append((key(k), val(v.strip())))
             return "map", pairs
         return ("map", []) if not items else (
-            "set", [lit(i, elem_type) for i in items]
+            "set", [elem(i) for i in items]
         )
-    return "scalar", _parse_literal(tok)
-
-
-def _top_level_colon(item: str) -> bool:
-    """A colon outside quotes AND outside any bracket nesting — a struct
-    literal's field colons ({a: 1} as a set element) sit at depth > 0 and
-    must not read as a map separator."""
-    quoted, depth = False, 0
-    for ch in item:
-        if ch == "'":
-            quoted = not quoted
-        elif quoted:
-            continue
-        elif ch in "[{(":
-            depth += 1
-        elif ch in "]})":
-            depth -= 1
-        elif ch == ":" and depth == 0:
-            return True
-    return False
-
-
-def _split_colon(item: str) -> tuple[str, str]:
-    quoted, depth = False, 0
-    for i, ch in enumerate(item):
-        if ch == "'":
-            quoted = not quoted
-        elif quoted:
-            continue
-        elif ch in "[{(":
-            depth += 1
-        elif ch in "]})":
-            depth -= 1
-        elif ch == ":" and depth == 0:
-            return item[:i], item[i + 1 :]
-    raise CQLError(f"bad map entry: {item!r}")
+    return "scalar", lit(tok)
 
 
 def ck_join(ck: tuple[str, ...] | None) -> str | None:
@@ -1476,6 +1642,9 @@ class CqlTable:
         # see (schema evolution, dropped-column segment rewrites).
         self._snap_cache: tuple | None = None
         self._mutver = 0
+        # the schema compiled for the write path (bump_schema_version
+        # rebuilds it whenever the schema changes in place)
+        self._ct = ColumnTable(schema)
         # per-segment partition-key Bloom filters (the SSTable Filter.db
         # analogue, operators/bloom.py) + nodetool-tablestats-style
         # counters; filters load/rebuild lazily so restored segments work
@@ -1536,56 +1705,7 @@ class CqlTable:
         condition fails — a rejected proposal still consumed a round."""
         batch = _BATCH_RE.match(stmt)
         if batch:
-            check_batch_kind(
-                batch_kind(batch),
-                any_counter=self.schema.counter,
-                any_plain=not self.schema.counter,
-            )
-            # all statements in a batch share one default timestamp — the
-            # reference applies the batch atomically at one write time.
-            # Atomicity includes failure: any error mid-application rolls
-            # the whole batch back (mark/restore), so a logged batch never
-            # leaves a partial write. A condition evaluating false is NOT
-            # an error — the clock stays ticked (rejected proposal still
-            # consumed a round).
-            mark = self._mark()
-            self._clock += 1
-            # BATCH USING TIMESTAMP pins the shared write time; the clock
-            # still ticks (a batch consumed a round either way)
-            default_ts = (
-                int(batch.group("bts")) if batch.group("bts") else self._clock
-            )
-            try:
-                matched = [
-                    self._match(sub)
-                    for sub in re.split(r";\s*", batch.group("body"))
-                    if sub.strip()
-                ]
-                conds = [self._cond_text(m) for _, m in matched]
-                if any(c is not None for c in conds):
-                    # conditional batch: single-partition, all-or-nothing,
-                    # every condition reads the pre-batch state (the
-                    # reference runs the whole batch through one paxos round)
-                    if len({self._stmt_pk(h, m) for h, m in matched}) > 1:
-                        raise CQLError(
-                            "conditional batch must target a single partition"
-                        )
-                    for (h, m), c in zip(matched, conds):
-                        if c is not None:
-                            self._lwt_guard(m)
-                            if not self._eval_cond(c, *self._cond_key(h, m)):
-                                return False
-                    for h, m in matched:
-                        h(m, default_ts)
-                    self._maybe_flush()
-                    return True
-                for h, m in matched:
-                    h(m, default_ts)
-                self._maybe_flush()
-                return None
-            except Exception:
-                self._restore(mark)
-                raise
+            return self.execute_batch(batch, batch_subs(batch))
         # single statements are atomic like batches: an error ANYWHERE in
         # application (bad collection literal after the row marker, a
         # guardrail failure mid-emission) rolls every cell back — the
@@ -1611,6 +1731,56 @@ class CqlTable:
             self._restore(mark)
             raise
 
+    def execute_batch(self, batch: re.Match, subs: list[str]) -> bool | None:
+        """A batch (``batch``, the :data:`_BATCH_RE` match) whose
+        sub-statements ``subs`` all target this table."""
+        check_batch_kind(
+            batch_kind(batch),
+            any_counter=self.schema.counter,
+            any_plain=not self.schema.counter,
+        )
+        # all statements in a batch share one default timestamp — the
+        # reference applies the batch atomically at one write time.
+        # Atomicity includes failure: any error mid-application rolls
+        # the whole batch back (mark/restore), so a logged batch never
+        # leaves a partial write. A condition evaluating false is NOT
+        # an error — the clock stays ticked (rejected proposal still
+        # consumed a round).
+        mark = self._mark()
+        self._clock += 1
+        # BATCH USING TIMESTAMP pins the shared write time; the clock
+        # still ticks (a batch consumed a round either way)
+        default_ts = (
+            int(batch.group("bts")) if batch.group("bts") else self._clock
+        )
+        try:
+            matched = [self._match(sub) for sub in subs]
+            conds = [self._cond_text(m) for _, m in matched]
+            if any(c is not None for c in conds):
+                # conditional batch: single-partition, all-or-nothing,
+                # every condition reads the pre-batch state (the
+                # reference runs the whole batch through one paxos round)
+                if len({self._stmt_pk(h, m) for h, m in matched}) > 1:
+                    raise CQLError(
+                        "conditional batch must target a single partition"
+                    )
+                for (h, m), c in zip(matched, conds):
+                    if c is not None:
+                        self._lwt_guard(m)
+                        if not self._eval_cond(c, *self._cond_key(h, m)):
+                            return False
+                for h, m in matched:
+                    h(m, default_ts)
+                self._maybe_flush()
+                return True
+            for h, m in matched:
+                h(m, default_ts)
+            self._maybe_flush()
+            return None
+        except Exception:
+            self._restore(mark)
+            raise
+
     # --- atomicity support (logged-batch all-or-nothing) -------------------
 
     def _mark(self) -> tuple:
@@ -1628,27 +1798,30 @@ class CqlTable:
         self._clock, self._seq, self._pos, self._neg = clock, seq, pos, neg
         self._max_wt = max_wt
 
+    # statement forms and their handlers; both INSERT forms share one
+    # handler: only the column/value extraction differs (_insert_pairs)
+    _FORMS = (
+        (_INSERT_RE, "_insert"),
+        (_INSERT_JSON_RE, "_insert"),
+        (_UPDATE_RE, "_update"),
+        (_DELETE_RE, "_delete"),
+    )
+
     def _match(self, stmt: str):
-        for regex, handler in (
-            (_INSERT_RE, self._insert),
-            (_INSERT_JSON_RE, self._insert),  # same handler: only the
-            # column/value extraction differs (see _insert_pairs)
-            (_UPDATE_RE, self._update),
-            (_DELETE_RE, self._delete),
-        ):
+        for regex, handler in self._FORMS:
             m = regex.match(stmt)
             if m:
-                return handler, m
+                return getattr(self, handler), m
         raise CQLError(f"unsupported or malformed CQL DML: {stmt!r}")
 
     # --- lightweight transactions (compare-and-set) -----------------------
 
     @staticmethod
     def _cond_text(m: re.Match) -> str | None:
-        g = m.groupdict()
-        if g.get("ine"):
+        groups = m.re.groupindex
+        if "ine" in groups and m.group("ine"):
             return "NOT EXISTS"
-        return g.get("cond")
+        return m.group("cond") if "cond" in groups else None
 
     def _lwt_guard(self, m: re.Match) -> None:
         """The reference rejects counter LWT and custom timestamps on
@@ -1674,62 +1847,25 @@ class CqlTable:
         toks = _split_csv(m.group("vals"))
         if len(cols) != len(toks):
             raise CQLError("INSERT column/value count mismatch")
-        return {c: self._parse_rhs(c, t) for c, t in zip(cols, toks)}
+        table = self._ct.cols
+        return {
+            c: table[c].parse(t) if c in table else _parse_value(t)
+            for c, t in zip(cols, toks)
+        }
 
-    def _struct_type_of(self, col: str) -> str | None:
-        """Declared struct type of a regular/static column, else None."""
-        s = self.schema
-        typ = s.regular.get(col) or s.static.get(col)
-        if typ is not None and parse_struct_type(typ) is not None:
-            return typ
-        return None
-
-    def _nonfrozen_type_of(self, col: str) -> str | None:
-        """Declared struct type of a NON-FROZEN UDT regular column."""
-        s = self.schema
-        if col in s.nonfrozen:
-            return s.regular.get(col)
-        return None
-
-    def _check_vector_arity(self, col: str, parsed) -> None:
+    @staticmethod
+    def _check_vector_arity(col: Column, parsed) -> None:
         """vector<T, n> fixed-dimension rule (`[C* db/marshal/VectorType,
         unverified]`): a full-value write must carry exactly n elements,
         and the literal must be the list form."""
-        dims = self.schema.vector_dims.get(col)
-        if dims is None:
+        if col.dims is None:
             return
         kind, items = parsed
-        if kind != "list" or len(items) != dims:
+        if kind != "list" or len(items) != col.dims:
             raise CQLError(
-                f"invalid vector literal for {col!r}: expected "
-                f"{dims} elements"
+                f"invalid vector literal for {col.name!r}: expected "
+                f"{col.dims} elements"
             )
-
-    def _coll_elem_types(self, col: str) -> tuple[str | None, str | None]:
-        """(elem_type, val_type) for _parse_value: the declared element
-        type of a list/set column, or the VALUE type of a map column
-        (map keys stay scalar — the pinned envelope)."""
-        coll = self.schema.coll_regular.get(col)
-        if coll is None:
-            return None, None
-        kind, t1, t2 = coll
-        if kind == "map":
-            return None, t2
-        return t1, None
-
-    def _parse_rhs(self, col: str, tok: str):
-        """Type-aware right-hand-side parse: struct-typed columns take UDT /
-        tuple / duration literals (→ one canonical-JSON scalar cell);
-        collections with struct element/value types canonicalize each
-        item through struct_json; everything else parses type-blind."""
-        nf = self._nonfrozen_type_of(col)
-        if nf is not None:
-            return "udt", udt_field_cells(tok, nf)
-        styp = self._struct_type_of(col)
-        if styp is not None:
-            return "scalar", struct_json(tok, styp)
-        e, v = self._coll_elem_types(col)
-        return _parse_value(tok, elem_type=e, val_type=v)
 
     def _json_pairs(self, m: re.Match):
         """INSERT JSON document → the same parsed-pairs shape the VALUES
@@ -1760,7 +1896,7 @@ class CqlTable:
     def _json_value(self, col: str, v):
         """One JSON value → the ('scalar'|'list'|'set'|'map', payload)
         shape, canonicalized to the log's string forms."""
-        s = self.schema
+        column = self._ct.cols.get(col)
 
         def canon(x):
             if x is None:
@@ -1773,28 +1909,24 @@ class CqlTable:
                 return x
             raise CQLError(f"unsupported JSON value for {col!r}: {x!r}")
 
-        styp = self._struct_type_of(col)
-        if styp is not None:
+        if column is not None and column.kind in ("struct", "udt"):
             if v is None:
                 return "scalar", None
             if not isinstance(v, dict):
                 raise CQLError(f"struct column {col!r} needs a JSON object")
-            import json as _json
-
-            fields = parse_struct_type(styp)
             out = {}
-            for name, ftype in fields:
+            for name, _ in parse_struct_type(column.typ):
                 fv = v.get(name)
                 if fv is None:
                     continue
                 out[name] = fv
-            return "scalar", _json.dumps(
-                out, separators=(",", ":"), ensure_ascii=False
-            )
-        coll = s.coll_regular.get(col)
-        if coll is None:
-            return "scalar", canon(v)
-        ckind, t1, t2 = coll
+            return "scalar", _json_text(out)
+        if column is None or column.coll is None:
+            x = canon(v)
+            if x is not None and column is not None and column.norm:
+                x = column.norm(x)
+            return "scalar", x
+        ckind, t1, t2 = column.coll
         if v is None:
             return "scalar", None
 
@@ -1806,13 +1938,7 @@ class CqlTable:
             ):
                 if x is None:
                     return None
-                import json as _json
-
-                return _json.dumps(
-                    _canon_py(x, typ),
-                    separators=(",", ":"),
-                    ensure_ascii=False,
-                )
+                return _json_text(_canon_py(x, typ))
             return canon(x)
 
         if ckind in ("list", "set"):
@@ -1828,7 +1954,7 @@ class CqlTable:
         if "vals" in m.re.groupindex or "json" in m.re.groupindex:
             pairs = self._insert_pairs(m)
             out = {}
-            for c in self.schema.key_cols:
+            for c in self._ct.key_cols:
                 if c in pairs:
                     k, v = pairs[c]
                     if k != "scalar":
@@ -1853,22 +1979,16 @@ class CqlTable:
     def _static_only_stmt(self, m: re.Match) -> bool:
         """True when every written/deleted column is static (the reference
         allows pk-only conditional statements on statics)."""
-        s = self.schema
+        ct = self._ct
         if "vals" in m.re.groupindex or "json" in m.re.groupindex:
-            pairs = self._insert_pairs(m)
-            cols = [c for c in pairs if c not in s.key_cols]
-        elif "set" in m.re.groupindex and m.group("set"):
-            cols = [
-                re.match(r"\s*(\w+)", a).group(1).lower()
-                for a in _split_csv(m.group("set"))
-            ]
+            return ct.all_static(
+                c for c in self._insert_pairs(m) if c not in ct.key_set
+            )
+        if "set" in m.re.groupindex and m.group("set"):
+            items = _split_csv(m.group("set"))
         else:
-            cols = [
-                re.match(r"\s*(\w+)", c).group(1).lower()
-                for c in m.group("cols").split(",")
-                if c.strip()
-            ]
-        return bool(cols) and all(c in s.static for c in cols)
+            items = [c for c in m.group("cols").split(",") if c.strip()]
+        return ct.all_static(_lead_name(a) for a in items)
 
     def _eval_cond(self, cond: str, pk: str | None, ck) -> bool:
         for c in self.schema.nonfrozen:
@@ -1883,25 +2003,25 @@ class CqlTable:
         if re.fullmatch(r"EXISTS", cond, re.IGNORECASE):
             return self._row_state(pk, ck) is not None
         state = self._row_state(pk, ck)
-        for part in re.split(r"\s+AND\s+", cond, flags=re.IGNORECASE):
+        for part in _AND_RE.split(cond):
             m = _COND_RE.match(part.strip())
             if not m:
                 raise CQLError(f"unsupported IF condition: {part!r}")
             col = m.group(1).lower()
-            typ = self.schema.scalar_regular.get(col) or self.schema.static.get(col)
-            if typ is None:
-                if col in self.schema.regular:
-                    raise CQLError(
-                        f"IF conditions on collection column {col!r} are not supported"
-                    )
+            column = self._ct.cols.get(col)
+            if column is None or column.role in _KEY_ROLES:
                 raise CQLError(f"IF on unknown column {col!r}")
-            if parse_struct_type(typ) is not None:
+            if column.coll is not None:
+                raise CQLError(
+                    f"IF conditions on collection column {col!r} are not supported"
+                )
+            if column.kind in ("struct", "udt"):
                 raise CQLError(
                     f"IF conditions on struct column {col!r} are not supported"
                 )
             cur = None if state is None else state.get(col)
             lit = _parse_literal(m.group(3))
-            if not self._cmp(cur, m.group(2), lit, typ):
+            if not self._cmp(cur, m.group(2), lit, column.typ):
                 return False
         return True
 
@@ -2083,7 +2203,8 @@ class CqlTable:
                 # read path
                 return
         self._seq += 1
-        self._max_wt = ts if self._max_wt is None else max(self._max_wt, ts)
+        if self._max_wt is None or ts > self._max_wt:
+            self._max_wt = ts
         if ttl is None and kind in (CELL, MARKER):
             # table-level default TTL; tombstones and counter increments
             # never carry one (the reference's TableParams semantics)
@@ -2092,7 +2213,7 @@ class CqlTable:
             mut_row(
                 pk, ck, col, val, kind, ts,
                 ttl if ttl is not None else 0, self._seq,
-                elem=elem, lo=lo, hi=hi, lo_incl=lo_incl, hi_incl=hi_incl,
+                elem, lo, hi, lo_incl, hi_incl,
             )
         )
 
@@ -2101,17 +2222,17 @@ class CqlTable:
     ) -> tuple[str, tuple[str, ...] | None]:
         """(pk, full clustering tuple). ``require_full=False`` returns
         ck=None when no clustering value is present (static scope)."""
-        s = self.schema
-        pk = s.pk_from_pairs(pairs)
-        if not s.clustering:
+        pk = self.schema.pk_from_pairs(pairs)
+        clustering = self._ct.clustering
+        if not clustering:
             return pk, ()  # no clustering cols: the row key is always (pk,)
-        have = [c for c in s.clustering if c in pairs]
+        have = [c for c in clustering if c in pairs]
         if not have and not require_full:
             return pk, None
-        if len(have) != len(s.clustering):
-            missing = [c for c in s.clustering if c not in pairs]
+        if len(have) != len(clustering):
+            missing = [c for c in clustering if c not in pairs]
             raise CQLError(f"missing clustering key(s) {missing}")
-        return pk, tuple(pairs[c] for c in s.clustering)
+        return pk, tuple(pairs[c] for c in clustering)
 
     # --- collection element emission --------------------------------------
 
@@ -2164,30 +2285,21 @@ class CqlTable:
         self._check_table(m.group("table"))
         if self.schema.counter:
             raise CQLError("INSERT is not allowed on counter tables")
-        s = self.schema
+        ct = self._ct
         ts, ttl = _parse_using(m.group("using"))
         ts = default_ts if ts is None else ts
         pairs = self._insert_pairs(m)
         for c in pairs:
-            if (
-                c not in s.key_cols
-                and c not in s.regular
-                and c not in s.static
-            ):
+            if c not in ct.cols:
                 raise CQLError(f"unknown column {c!r}")
         eq = {}
-        for c in s.key_cols:
+        for c in ct.key_cols:
             if c in pairs:
                 k, v = pairs[c]
                 if k != "scalar":
                     raise CQLError(f"key column {c!r} must be scalar")
                 eq[c] = v
-        non_static = [
-            c for c in pairs if c not in s.key_cols and c not in s.static
-        ]
-        static_only = not non_static and all(
-            c in s.key_cols or c in s.static for c in pairs
-        )
+        static_only = all(ct.cols[c].role != "regular" for c in pairs)
         pk, ck = self._key_from_pairs(eq, require_full=not static_only)
         if ck is not None:
             ckj = ck_join(ck)
@@ -2196,9 +2308,10 @@ class CqlTable:
         else:
             ckj = None
         for c, parsed in pairs.items():
-            if c in s.key_cols:
+            col = ct.cols[c]
+            if col.role in _KEY_ROLES:
                 continue
-            if c in s.static:
+            if col.role == "static":
                 kind, v = parsed
                 if kind != "scalar":
                     raise CQLError(f"static column {c!r} must be scalar")
@@ -2208,25 +2321,17 @@ class CqlTable:
                     self._emit(pk, None, c, None, CELL_TOMB, ts, None)
                 continue
             if parsed[0] == "udt":  # non-frozen UDT: replace semantics
-                cells = parsed[1]
-                if cells is None:
-                    self._emit(pk, ckj, c, None, COLL_TOMB, ts, None)
-                    continue
-                self._emit(pk, ckj, c, None, COLL_TOMB, ts - 1, None)
-                for fname, v in cells:
-                    if v is not None:
-                        self._emit(pk, ckj, c, v, CELL, ts, ttl, elem=fname)
+                self._emit_udt(pk, ckj, c, parsed[1], ts, ttl)
                 continue
-            coll = s.coll_regular.get(c)
-            if coll is not None:
+            if col.coll is not None:
                 pkind, items = parsed
                 if pkind == "scalar" and items is None:
                     self._emit(pk, ckj, c, None, COLL_TOMB, ts, None)
                     continue
-                self._check_vector_arity(c, parsed)
+                self._check_vector_arity(col, parsed)
                 # overwrite: tombstone at ts-1 so same-ts elements survive
                 self._emit(pk, ckj, c, None, COLL_TOMB, ts - 1, None)
-                self._emit_elements(pk, ckj, c, coll[0], parsed, ts, ttl)
+                self._emit_elements(pk, ckj, c, col.kind, parsed, ts, ttl)
                 continue
             kind, v = parsed
             if kind != "scalar":
@@ -2236,136 +2341,140 @@ class CqlTable:
             else:
                 self._emit(pk, ckj, c, None, CELL_TOMB, ts, None)
 
+    def _emit_udt(self, pk, ckj, c, cells, ts, ttl) -> None:
+        """A whole-value write of a non-frozen UDT: NULL tombstones the
+        column, a literal replaces it (tombstone at ts-1, then one cell
+        per non-null field)."""
+        if cells is None:
+            self._emit(pk, ckj, c, None, COLL_TOMB, ts, None)
+            return
+        self._emit(pk, ckj, c, None, COLL_TOMB, ts - 1, None)
+        for fname, v in cells:
+            if v is not None:
+                self._emit(pk, ckj, c, v, CELL, ts, ttl, elem=fname)
+
     def _where_parse(self, where: str):
         """WHERE → (equality pairs on key cols, range relations). Ranges
-        (<, <=, >, >=) are collected for DELETE's range-tombstone path."""
+        (<, <=, >, >=) are collected for DELETE's range-tombstone path.
+        Values go through the key column's codec, so an int-family key
+        names one stored spelling."""
         eq: dict[str, str | None] = {}
         ranges: list[tuple[str, str, str | None]] = []
-        for part in re.split(r"\s+AND\s+", where.strip(), flags=re.IGNORECASE):
+        cols = self._ct.cols
+        for part in _AND_RE.split(where.strip()):
             m = _REL_RE.fullmatch(part.strip())
             if not m:
                 raise CQLError(f"DML WHERE must be key relations: {part!r}")
-            col = m.group(1).lower()
-            if col not in self.schema.key_cols:
-                raise CQLError(f"DML WHERE on non-key column {col!r}")
+            name = m.group(1).lower()
+            col = cols.get(name)
+            if col is None or col.role not in _KEY_ROLES:
+                raise CQLError(f"DML WHERE on non-key column {name!r}")
             if m.group(2) == "=":
-                eq[col] = _parse_literal(m.group(3))
+                eq[name] = col.lit(m.group(3))
             else:
-                if col in self.schema.partition_cols:
+                if col.role == "partition":
                     raise CQLError("range WHERE on the partition key")
-                ranges.append((col, m.group(2), _parse_literal(m.group(3))))
+                ranges.append((name, m.group(2), col.lit(m.group(3))))
         return eq, ranges
 
     _COUNTER_SET_RE = re.compile(
         r"(\w+)\s*=\s*(\w+)\s*([+-])\s*(\d+)\s*$", re.DOTALL
     )
-    _IDX_SET_RE = re.compile(r"^(\w+)\s*\[\s*(.+?)\s*\]\s*=\s*(.+)$", re.DOTALL)
-    _PREPEND_RE = re.compile(r"^(\w+)\s*=\s*(\[.*\])\s*\+\s*(\w+)\s*$", re.DOTALL)
-    _PM_RE = re.compile(r"^(\w+)\s*=\s*(\w+)\s*([+-])\s*(.+)$", re.DOTALL)
+    # one SET item: ``c = v``, ``u.field = v`` or ``c[k] = v``; the
+    # right-hand side then tells prepend (``[..] + c``) and append /
+    # remove (``c + ..`` / ``c - ..``) from a plain value
+    _ASSIGN_RE = re.compile(
+        r"(\w+)(?:\.(\w+)|\s*\[\s*(.+?)\s*\])?\s*=\s*(.+)", re.DOTALL
+    )
+    _PREPEND_RE = re.compile(r"(\[.*\])\s*\+\s*(\w+)\s*", re.DOTALL)
+    _PM_RE = re.compile(r"(\w+)\s*([+-])\s*(.+)", re.DOTALL)
 
     def _update(self, m: re.Match, default_ts: int) -> None:
         self._check_table(m.group("table"))
-        s = self.schema
+        ct = self._ct
         ts, ttl = _parse_using(m.group("using"))
         ts = default_ts if ts is None else ts
         eq, ranges = self._where_parse(m.group("where"))
         if ranges:
             raise CQLError("UPDATE WHERE must be key equalities")
-        static_only = self._static_only_stmt(m)
+        assigns = _split_csv(m.group("set"))
+        static_only = ct.all_static(_lead_name(a) for a in assigns)
         pk, ck = self._key_from_pairs(eq, require_full=not static_only)
         ckj = ck_join(ck) if ck is not None else None
-        if s.counter:
+        if self.schema.counter:
             if m.group("using"):
                 raise CQLError("USING is not allowed on counter updates")
-            for assign in _split_csv(m.group("set")):
+            for assign in assigns:
                 am = self._COUNTER_SET_RE.match(assign.strip())
                 if not am or am.group(1).lower() != am.group(2).lower():
                     raise CQLError(
                         f"counter update must be 'c = c +/- n': {assign!r}"
                     )
                 c = am.group(1).lower()
-                if c not in s.regular:
+                col = ct.cols.get(c)
+                if col is None or col.role != "regular":
                     raise CQLError(f"unknown column {c!r}")
                 delta = int(am.group(3) + am.group(4))
                 self._emit(pk, ckj, c, str(delta), INCR, ts, None)
             return
-        for assign in _split_csv(m.group("set")):
+        for assign in assigns:
             self._apply_assignment(assign, pk, ckj, ts, ttl)
 
-    def _apply_assignment(self, assign: str, pk, ckj, ts, ttl) -> None:
-        s = self.schema
-        assign = assign.strip()
+    def _emit_value(self, pk, ckj, c, v, ts, ttl, elem=None) -> None:
+        """One single-cell write: the value, or its tombstone for NULL."""
+        if v is not None:
+            self._emit(pk, ckj, c, v, CELL, ts, ttl, elem=elem)
+        else:
+            self._emit(pk, ckj, c, None, CELL_TOMB, ts, None, elem=elem)
 
-        fm = re.fullmatch(r"(\w+)\.(\w+)\s*=\s*(.+)", assign, re.DOTALL)
-        if fm:  # u.field = v : one field cell of a non-frozen UDT
-            c = fm.group(1).lower()
-            nf = self._nonfrozen_type_of(c)
-            if nf is None:
+    def _apply_assignment(self, assign: str, pk, ckj, ts, ttl) -> None:
+        assign = assign.strip()
+        am = self._ASSIGN_RE.fullmatch(assign)
+        if not am:
+            raise CQLError(f"bad SET assignment: {assign!r}")
+        c, field_, idx, rhs = am.groups()
+        c = c.lower()
+        col = self._ct.cols.get(c)
+
+        if field_ is not None:  # u.field = v : one field cell of a non-frozen UDT
+            if col is None or col.kind != "udt":
                 raise CQLError(
                     f"per-field assignment needs a non-frozen UDT "
                     f"column: {assign!r} (frozen UDTs are set whole)"
                 )
-            fields = dict(parse_struct_type(nf))
-            fname = fm.group(2).lower()
-            if fname not in fields:
+            fname = field_.lower()
+            codec = col.fields.get(fname)
+            if codec is None:
                 raise CQLError(f"unknown field {fname!r} of {c!r}")
-            ftype = fields[fname]
-            tok = fm.group(3).strip()
-            if parse_struct_type(ftype) is not None:
-                v = struct_json(tok, ftype)
-            elif is_coll_type(ftype):
-                v = coll_json(tok, ftype)
-            else:
-                v = _parse_literal(tok)
-            if v is not None:
-                self._emit(pk, ckj, c, v, CELL, ts, ttl, elem=fname)
-            else:
-                self._emit(pk, ckj, c, None, CELL_TOMB, ts, None, elem=fname)
+            self._emit_value(pk, ckj, c, codec(rhs.strip()), ts, ttl, fname)
             return
 
-        im = self._IDX_SET_RE.match(assign)
-        if im:  # m[k] = v (map put) / l[i] = v (list index write) / NULL delete
-            c = im.group(1).lower()
-            if c in s.vector_dims:
+        if idx is not None:  # m[k] = v (map put) / l[i] = v (list index write) / NULL delete
+            if col is not None and col.dims is not None:
                 raise CQLError(
                     f"vectors are fixed-length: write {c!r} whole"
                 )
-            coll = s.coll_regular.get(c)
-            if coll is None or coll[0] == "set":
+            if col is None or col.kind not in ("list", "map"):
                 raise CQLError(
                     f"indexed assignment needs a map or list column: {assign!r}"
                 )
-            if coll[0] == "list":
+            if col.kind == "list":
                 # read-before-write: resolve index -> position elem (the
                 # reference reads the row for the same reason)
-                k = self._list_elem_at(pk, ckj, c, im.group(2).strip())
+                k = self._list_elem_at(pk, ckj, c, idx.strip())
+                # the written element takes the list's element type
+                v = col.elem(rhs)
             else:
-                k = _parse_literal(im.group(2))
-            # the written element takes the list's element type or the
-            # map's VALUE type — struct-typed and frozen-nested-collection
-            # ones canonicalize to JSON
-            vtyp = coll[1] if coll[0] == "list" else coll[2]
-            if parse_struct_type(vtyp) is not None:
-                v = struct_json(im.group(3), vtyp)
-            elif is_coll_type(vtyp):
-                v = coll_json(im.group(3), vtyp)
-            else:
-                v = _parse_literal(im.group(3))
-            if v is not None:
-                self._emit(pk, ckj, c, v, CELL, ts, ttl, elem=k)
-            else:
-                self._emit(pk, ckj, c, None, CELL_TOMB, ts, None, elem=k)
+                k = col.key(idx)
+                v = col.val(rhs)
+            self._emit_value(pk, ckj, c, v, ts, ttl, k)
             return
 
-        pm = self._PREPEND_RE.match(assign)
-        if pm and pm.group(1).lower() == pm.group(3).lower():
-            c = pm.group(1).lower()
-            coll = s.coll_regular.get(c)
-            if coll is None or coll[0] != "list":
+        pm = self._PREPEND_RE.fullmatch(rhs) if rhs.startswith("[") else None
+        if pm and pm.group(2).lower() == c:
+            if col is None or col.kind != "list":
                 raise CQLError(f"prepend needs a list column: {assign!r}")
-            _, items = _parse_value(
-                pm.group(2), *self._coll_elem_types(c)
-            )
+            _, items = col.parse(pm.group(1))
             # [x, y] + l: x sorts before y, both before everything existing
             n = len(items)
             for i, v in enumerate(items):
@@ -2376,27 +2485,23 @@ class CqlTable:
             self._neg -= n
             return
 
-        pm = self._PM_RE.match(assign)
-        if pm and pm.group(1).lower() == pm.group(2).lower():
-            c = pm.group(1).lower()
-            if c in s.vector_dims:
+        pm = self._PM_RE.fullmatch(rhs)
+        if pm and pm.group(1).lower() == c:
+            if col is not None and col.dims is not None:
                 raise CQLError(
                     f"vectors are fixed-length: write {c!r} whole"
                 )
-            coll = s.coll_regular.get(c)
-            if coll is None:
+            if col is None or col.coll is None:
                 # counter form on a non-counter column
                 raise CQLError(
                     f"'{c} = {c} ± ..' needs a counter table or collection column"
                 )
-            ckind = coll[0]
-            op = pm.group(3)
-            parsed = _parse_value(pm.group(4), *self._coll_elem_types(c))
-            if op == "+":
-                self._emit_elements(pk, ckj, c, ckind, parsed, ts, ttl)
+            parsed = col.parse(pm.group(3))
+            if pm.group(2) == "+":
+                self._emit_elements(pk, ckj, c, col.kind, parsed, ts, ttl)
                 return
             # removal: set members / map keys; list removal needs a read
-            if ckind == "list":
+            if col.kind == "list":
                 raise CQLError("list element removal by value is not supported")
             pkind, items = parsed
             members = (
@@ -2410,61 +2515,28 @@ class CqlTable:
                 self._emit(pk, ckj, c, None, CELL_TOMB, ts, None, elem=k)
             return
 
-        am = re.fullmatch(r"(\w+)\s*=\s*(.+)", assign, re.DOTALL)
-        if not am:
-            raise CQLError(f"bad SET assignment: {assign!r}")
-        c = am.group(1).lower()
-        if c in s.static:
-            styp = self._struct_type_of(c)
-            v = (
-                struct_json(am.group(2), styp)
-                if styp is not None
-                else _parse_literal(am.group(2))
-            )
-            if v is not None:
-                self._emit(pk, None, c, v, CELL, ts, ttl)
-            else:
-                self._emit(pk, None, c, None, CELL_TOMB, ts, None)
+        if col is not None and col.role == "static":
+            self._emit_value(pk, None, c, col.lit(rhs), ts, ttl)
             return
-        if c not in s.regular:
+        if col is None or col.role != "regular":
             raise CQLError(f"unknown column {c!r}")
-        coll = s.coll_regular.get(c)
-        if coll is not None:
-            parsed = _parse_value(am.group(2), *self._coll_elem_types(c))
+        if col.coll is not None:
+            parsed = col.parse(rhs)
             if parsed[0] == "scalar":
                 if parsed[1] is not None:
                     raise CQLError(f"collection column {c!r} needs a collection literal")
                 self._emit(pk, ckj, c, None, COLL_TOMB, ts, None)
                 return
-            self._check_vector_arity(c, parsed)
+            self._check_vector_arity(col, parsed)
             self._emit(pk, ckj, c, None, COLL_TOMB, ts - 1, None)
-            self._emit_elements(pk, ckj, c, coll[0], parsed, ts, ttl)
+            self._emit_elements(pk, ckj, c, col.kind, parsed, ts, ttl)
             return
-        nf = self._nonfrozen_type_of(c)
-        if nf is not None:  # non-frozen UDT: replace semantics
-            cells = udt_field_cells(am.group(2), nf)
-            if cells is None:
-                self._emit(pk, ckj, c, None, COLL_TOMB, ts, None)
-                return
-            self._emit(pk, ckj, c, None, COLL_TOMB, ts - 1, None)
-            for fname, v in cells:
-                if v is not None:
-                    self._emit(pk, ckj, c, v, CELL, ts, ttl, elem=fname)
+        if col.kind == "udt":  # non-frozen UDT: replace semantics
+            self._emit_udt(pk, ckj, c, col.lit(rhs), ts, ttl)
             return
-        styp = self._struct_type_of(c)
-        if styp is not None:
-            v = struct_json(am.group(2), styp)
-            if v is not None:
-                self._emit(pk, ckj, c, v, CELL, ts, ttl)
-            else:
-                self._emit(pk, ckj, c, None, CELL_TOMB, ts, None)
-            return
-        v = _parse_literal(am.group(2))
-        # no row marker: the UPDATE-only row lives and dies with its cells
-        if v is not None:
-            self._emit(pk, ckj, c, v, CELL, ts, ttl)
-        else:
-            self._emit(pk, ckj, c, None, CELL_TOMB, ts, None)
+        # a struct column's codec renders its JSON cell; no row marker:
+        # the UPDATE-only row lives and dies with its cells
+        self._emit_value(pk, ckj, c, col.lit(rhs), ts, ttl)
 
     _DEL_COL_RE = re.compile(
         r"^(\w+)(?:\s*\[\s*(.+?)\s*\]|\.(\w+))?$", re.DOTALL
@@ -2472,44 +2544,42 @@ class CqlTable:
 
     def _delete(self, m: re.Match, default_ts: int) -> None:
         self._check_table(m.group("table"))
-        s = self.schema
+        ct = self._ct
+        clustering = ct.clustering
         ts = int(m.group("ts")) if m.group("ts") else default_ts
         eq, ranges = self._where_parse(m.group("where"))
         cols = [c.strip() for c in _split_csv(m.group("cols")) if c.strip()]
-        pk = s.pk_from_pairs(eq)
+        pk = self.schema.pk_from_pairs(eq)
 
         # clustering equalities must form a prefix
-        have = [c for c in s.clustering if c in eq]
+        have = [c for c in clustering if c in eq]
         k = len(have)
-        if have != list(s.clustering[:k]):
+        if have != list(clustering[:k]):
             raise CQLError("clustering WHERE must fix a prefix")
 
         if cols:
             if ranges:
                 raise CQLError("column DELETE cannot have range WHERE")
-            static_cols = all(
-                self._DEL_COL_RE.match(c).group(1).lower() in s.static
-                for c in cols
-            )
-            if k < len(s.clustering) and not static_cols:
+            static_cols = ct.all_static(_lead_name(c) for c in cols)
+            if k < len(clustering) and not static_cols:
                 raise CQLError("cell DELETE requires the full primary key")
-            ckj = ck_join(tuple(eq[c] for c in s.clustering)) if not static_cols else None
+            ckj = ck_join(tuple(eq[c] for c in clustering)) if not static_cols else None
             for item in cols:
                 cm = self._DEL_COL_RE.match(item)
                 if not cm:
                     raise CQLError(f"bad DELETE column: {item!r}")
                 c = cm.group(1).lower()
+                col = ct.cols.get(c)
                 elem_tok = cm.group(2)
                 fname = cm.group(3)
                 if fname is not None:  # DELETE u.field: one field cell
-                    nf = self._nonfrozen_type_of(c)
-                    if nf is None:
+                    if col is None or col.kind != "udt":
                         raise CQLError(
                             f"field DELETE needs a non-frozen UDT "
                             f"column: {item!r}"
                         )
                     fname = fname.lower()
-                    if fname not in dict(parse_struct_type(nf)):
+                    if fname not in col.fields:
                         raise CQLError(
                             f"unknown field {fname!r} of {c!r}"
                         )
@@ -2517,20 +2587,19 @@ class CqlTable:
                         pk, ckj, c, None, CELL_TOMB, ts, None, elem=fname
                     )
                     continue
-                if c in s.static:
+                if col is not None and col.role == "static":
                     if elem_tok:
                         raise CQLError("static columns are scalar")
                     self._emit(pk, None, c, None, CELL_TOMB, ts, None)
                     continue
-                if c not in s.regular:
+                if col is None or col.role != "regular":
                     raise CQLError(f"unknown column {c!r}")
-                coll = s.coll_regular.get(c)
                 if elem_tok is not None:
-                    if coll is None or coll[0] == "set":
+                    if col.kind not in ("list", "map"):
                         raise CQLError(
                             f"element DELETE needs a map or list column: {item!r}"
                         )
-                    if coll[0] == "list":
+                    if col.kind == "list":
                         self._emit(
                             pk, ckj, c, None, CELL_TOMB, ts, None,
                             elem=self._list_elem_at(pk, ckj, c, elem_tok),
@@ -2538,9 +2607,9 @@ class CqlTable:
                         continue
                     self._emit(
                         pk, ckj, c, None, CELL_TOMB, ts, None,
-                        elem=_parse_literal(elem_tok),
+                        elem=col.key(elem_tok),
                     )
-                elif coll is not None:
+                elif col.coll is not None:
                     self._emit(pk, ckj, c, None, COLL_TOMB, ts, None)
                 else:
                     self._emit(pk, ckj, c, None, CELL_TOMB, ts, None)
@@ -2552,10 +2621,10 @@ class CqlTable:
             if len(bound_col) != 1:
                 raise CQLError("range DELETE must bound exactly one column")
             (bc,) = bound_col
-            if k >= len(s.clustering) or bc != s.clustering[k]:
+            if k >= len(clustering) or bc != clustering[k]:
                 raise CQLError(
                     f"range DELETE must bound the next clustering column "
-                    f"({s.clustering[k] if k < len(s.clustering) else '?'})"
+                    f"({clustering[k] if k < len(clustering) else '?'})"
                 )
             lo = hi = None
             lo_incl = hi_incl = False
@@ -2571,20 +2640,20 @@ class CqlTable:
                         raise CQLError("duplicate upper bound")
                     hi, hi_incl = lit, op == "<="
             self._emit(
-                pk, SEP.join(eq[c] for c in s.clustering[:k]), None, None,
+                pk, SEP.join(eq[c] for c in clustering[:k]), None, None,
                 RANGE_TOMB, ts, None,
                 lo=lo, hi=hi, lo_incl=lo_incl, hi_incl=hi_incl,
             )
             return
-        if k == len(s.clustering) and s.clustering:
-            self._emit(pk, ck_join(tuple(eq[c] for c in s.clustering)), None,
+        if k == len(clustering) and clustering:
+            self._emit(pk, ck_join(tuple(eq[c] for c in clustering)), None,
                        None, ROW_TOMB, ts, None)
         elif k == 0:
             self._emit(pk, None, None, None, PART_TOMB, ts, None)
         else:
             # clustering-prefix DELETE = unbounded range tombstone
             self._emit(
-                pk, SEP.join(eq[c] for c in s.clustering[:k]), None, None,
+                pk, SEP.join(eq[c] for c in clustering[:k]), None, None,
                 RANGE_TOMB, ts, None,
                 lo=None, hi=None, lo_incl=False, hi_incl=False,
             )
@@ -3262,7 +3331,7 @@ class CqlTable:
         if missing:
             raise CQLError(f"bulk_load input missing key column(s) {missing}")
         payload = [c for c in df.columns if c not in key_cols]
-        bad = [c for c in payload if c not in s.scalar_regular]
+        bad = [c for c in payload if c not in self._ct.scalar_regular]
         if bad:
             raise CQLError(
                 f"bulk_load supports scalar regular columns only; bad: {bad}"
@@ -3820,11 +3889,15 @@ class CqlTable:
         self._max_wt = None
 
     def bump_schema_version(self) -> None:
-        """Invalidate the memoized snapshot plan after an in-place
-        change the cache key cannot observe: schema evolution (ALTER
-        mutates the TableSchema object in place) or a same-path segment
-        rewrite (drop_column_cells)."""
+        """The one way a change the snapshot memo's key cannot observe
+        takes effect: schema evolution (ALTER TABLE and ALTER TYPE
+        mutate the TableSchema object in place; call this AFTER the
+        mutation) or a same-path segment rewrite (drop_column_cells).
+        It invalidates the memoized snapshot plan and recompiles the
+        write path's :class:`ColumnTable` from the schema as it now
+        stands."""
         self._mutver += 1
+        self._ct = ColumnTable(self.schema)
 
     def drop_column_cells(self, col: str, horizon_us: int | None = None) -> None:
         """ALTER TABLE DROP support: discard the column's cells from the
@@ -4063,7 +4136,7 @@ class CqlTable:
         # _visible_exprs types it, by the rule partition_frame applies
         aggs = []
         for c in s.regular:
-            if c in s.coll_regular or c in s.nonfrozen:
+            if c in self._ct.coll_regular or c in s.nonfrozen:
                 aggs.append(
                     F.expr(
                         f"collect_list(CASE WHEN col = '{c}' "
@@ -4235,7 +4308,7 @@ class CqlTable:
             return f"CAST({src} AS {typ})"
 
         for c, typ in s.regular.items():
-            coll = s.coll_regular.get(c)
+            coll = self._ct.coll_regular.get(c)
             if c in s.nonfrozen:
                 # NON-FROZEN UDT (round 13): field cells (elem = the
                 # field name) merged per-field LWW upstream exactly like
@@ -4290,11 +4363,11 @@ class CqlTable:
             (f"__writetime_{c}", None,
              "CAST(NULL AS BIGINT)" if c in s.nonfrozen
              else f"`__writetime_{c}`")
-            for c in (*s.scalar_regular, *s.static)
+            for c in (*self._ct.scalar_regular, *s.static)
         ]
         out += [
             (f"__maxwritetime_{c}", None, f"`__maxwritetime_{c}`")
-            for c in (*s.coll_regular, *sorted(s.nonfrozen))
+            for c in (*self._ct.coll_regular, *sorted(s.nonfrozen))
         ]
         return out
 
@@ -4309,7 +4382,9 @@ class CqlTable:
             for c, _, sql in self._visible_columns()
         ]
 
-    def _typed_frame(self, vals: dict[str, list]) -> DataFrame:
+    def _typed_frame(
+        self, vals: dict[str, list], shadows: bool = True
+    ) -> DataFrame:
         """The visible frame of the untyped columns ``vals`` (name ->
         values; each key component its own string column, missing
         columns empty or NULL): one Arrow table that already holds every
@@ -4318,7 +4393,8 @@ class CqlTable:
         residual selectExpr. A table of text, int-family and boolean
         columns makes no selectExpr at all, so PySpark keeps the schema
         it built the frame with and reading it costs no JVM call. Spark
-        keeps the frame as a LocalRelation: collecting it runs no job."""
+        keeps the frame as a LocalRelation: collecting it runs no job.
+        ``shadows=False`` leaves the writetime shadows out."""
         import pyarrow as pa
 
         s = self.schema
@@ -4328,6 +4404,8 @@ class CqlTable:
         n = len(vals.get(s.partition_cols[0], ()))
         arrays, names, select, residual = [], [], [], False
         for name, typ, sql in self._visible_columns(split=False):
+            if name.startswith("__") and not shadows:
+                continue
             values = vals.get(name) or [None] * n
             names.append(name)
             if name.startswith("__"):  # writetime shadows: int64 already
@@ -4336,7 +4414,7 @@ class CqlTable:
                 continue
             arr = self._arrow_typed(values, typ)
             if arr is None:
-                multi = name in s.coll_regular or name in s.nonfrozen
+                multi = name in self._ct.coll_regular or name in s.nonfrozen
                 arr = pa.array(values, cells if multi else pa.string())
                 select.append(f"{sql} AS `{name}`")
                 residual = True
@@ -4346,7 +4424,7 @@ class CqlTable:
         df = self.spark.createDataFrame(pa.table(arrays, names=names))
         return df.selectExpr(*select) if residual else df
 
-    def partition_frame(self, pks) -> DataFrame:
+    def partition_frame(self, pks, shadows: bool = True) -> DataFrame:
         """The visible rows of partitions ``pks`` as a DataFrame with no
         Spark job behind it — the single-partition read (the reference's
         ``SinglePartitionReadCommand``) that serves a SELECT whose
@@ -4358,7 +4436,9 @@ class CqlTable:
         the rest keep their SQL cast. Columns, types, shadows and row
         order equal ``snapshot()`` filtered to ``pks``; the rows are
         pre-sorted here because a Sort on a LocalRelation costs Spark
-        jobs. Not for counter tables (their reconcile is a sum,
+        jobs. ``shadows=False`` leaves the writetime shadows out (a
+        statement that selects no WRITETIME() / MAXWRITETIME() reads
+        none). Not for counter tables (their reconcile is a sum,
         :meth:`_counter_snapshot`)."""
         s = self.schema
         state = self._reconcile(pks, (self._max_wt or 0) + 1)
@@ -4390,7 +4470,7 @@ class CqlTable:
                 for c in s.regular:
                     cs = cells.get(c, [])
                     wt = max((w for _, w, _ in cs), default=None)
-                    if c in s.coll_regular or c in s.nonfrozen:
+                    if c in self._ct.coll_regular or c in s.nonfrozen:
                         vals[c].append(
                             [{"elem": e, "val": v} for e, _, v in cs]
                         )
@@ -4403,7 +4483,7 @@ class CqlTable:
                     wt, v = statics.get(c, (None, None))
                     vals[c].append(v)
                     vals[f"__writetime_{c}"].append(wt)
-        return self._typed_frame(vals)
+        return self._typed_frame(vals, shadows)
 
     def _counter_snapshot(self, max_wt_us: int | None = None) -> DataFrame:
         """Counter reconcile (W6 driven from statement text): a counter cell

@@ -35,13 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_spark.catalog import TableMeta
-from cassandra_spark.cql import CQLError, cql_select
+from cassandra_spark.cql import CQLError, cql_select, reads_cell_metadata
 from cassandra_spark.cql_dml import (
     _BATCH_RE,
     DURATION_STRUCT,
     CqlTable,
     TableSchema,
     _local_frame,
+    batch_subs,
     is_coll_type,
     parse_coll_type,
     parse_struct_type,
@@ -416,6 +417,12 @@ _DML_TABLE_RE = re.compile(
     r"\b(?:INSERT\s+INTO|UPDATE|DELETE(?:\s+[^;]*?)?\s+FROM)\s+([\w.]+)",
     re.IGNORECASE,
 )
+# a statement's first keyword (the _execute_stmt route) and a DML
+# statement's IF (an LWT also needs SELECT) outside string literals
+_HEAD_RE = re.compile(r"\s*([A-Za-z]+)")
+_IF_RE = re.compile(r"\bIF\b", re.IGNORECASE)
+_QUOTED_RE = re.compile(r"'[^']*'")
+_TRACING_RE = re.compile(r"^\s*TRACING\s+(ON|OFF)\s*;?\s*$", re.IGNORECASE)
 
 
 _CREATE_INDEX_RE = re.compile(
@@ -2078,7 +2085,7 @@ class CqlSession:
                     break
         if pks is None:
             return t.snapshot()
-        df = t.partition_frame(pks)
+        df = t.partition_frame(pks, shadows=reads_cell_metadata(stmt))
         if self._trace_acts is not None:
             self._trace_acts.extend(t.read_trace)
         return df
@@ -2327,12 +2334,19 @@ class CqlSession:
         dropped-column timestamp machinery, which exists to make a
         re-added name not resurrect old cells; eager purge gives the same
         visible behavior."""
-        key = self._resolve(m.group("table"))
         table = self.table(m.group("table"))
+        try:
+            self._alter_schema(m, table)
+        finally:
+            # ALTER mutates the TableSchema object in place: the memoized
+            # snapshot plan cannot see that through its state key, and
+            # the write path's column table must be rebuilt from it
+            table.bump_schema_version()
+
+    def _alter_schema(self, m: re.Match, table: CqlTable) -> None:
+        """The in-place schema change of one ALTER TABLE statement."""
+        key = self._resolve(m.group("table"))
         s = table.schema
-        # ALTER mutates the TableSchema object in place — the memoized
-        # snapshot plan cannot see that through its state key
-        table.bump_schema_version()
         if s.counter:
             raise CQLError("ALTER is not supported on counter tables")
         if m.group("withopts"):
@@ -2619,7 +2633,7 @@ class CqlSession:
         arrive here with values already bound, so the log is replayable
         verbatim — the `fqltool replay` contract
         (`[C* fql/FullQueryLogger, tools/fqltool, unverified]`)."""
-        tm = re.match(r"^\s*TRACING\s+(ON|OFF)\s*;?\s*$", stmt, re.IGNORECASE)
+        tm = _TRACING_RE.match(stmt)
         if tm:
             self._tracing_on = tm.group(1).upper() == "ON"
             return None
@@ -3329,7 +3343,7 @@ class CqlSession:
             # never emit an artifact FROM cannot load — bulk_load takes
             # scalar regular columns only, no statics
             complex_cols = sorted(
-                set(sch.regular) - set(sch.scalar_regular)
+                set(sch.regular) - set(t._ct.scalar_regular)
             ) + sorted(sch.static)
             if complex_cols:
                 raise CQLError(
@@ -3478,22 +3492,31 @@ class CqlSession:
         return len(inserts)
 
     def _execute_stmt(self, stmt: str) -> DataFrame | bool | None:
-        head = stmt.lstrip()[:12].upper()
-        if head.startswith("DESC"):
-            return self._describe(stmt)
-        if (
-            head.startswith("CREATE ROLE")
-            or head.startswith("DROP ROLE")
-            or head.startswith("LIST ")
-        ):
-            return self._auth_stmt(stmt)
+        """Run one statement: one lookup of its first keyword in
+        ``_ROUTES`` picks the handler, whatever the statement kind."""
+        hm = _HEAD_RE.match(stmt)
+        route = self._ROUTES.get(hm.group(1).upper()) if hm else None
+        if route is None:
+            raise CQLError(f"unsupported statement: {stmt!r}")
+        return route(self, stmt)
+
+    def _run_use(self, stmt: str) -> DataFrame | bool | None:
+        """USE <keyspace>: a user keyspace or a virtual system one."""
         um_ = _USE_RE.match(stmt)
-        if um_ and head.startswith("USE"):
-            name = um_.group("name").lower()
-            if name not in self.keyspaces and name not in _VIRTUAL_KEYSPACES:
-                raise CQLError(f"unknown keyspace {name!r}")
-            self.current_ks = name
-            return None
+        if not um_:
+            raise CQLError(f"unsupported statement: {stmt!r}")
+        name = um_.group("name").lower()
+        if name not in self.keyspaces and name not in _VIRTUAL_KEYSPACES:
+            raise CQLError(f"unknown keyspace {name!r}")
+        self.current_ks = name
+        return None
+
+    def _run_create(self, stmt: str) -> DataFrame | bool | None:
+        """CREATE ROLE / KEYSPACE / MATERIALIZED VIEW / TYPE / INDEX /
+        TRIGGER / FUNCTION / AGGREGATE / TABLE."""
+        head = stmt.lstrip()[:12].upper()
+        if head.startswith("CREATE ROLE"):
+            return self._auth_stmt(stmt)
         if head.startswith("CREATE KEYSP"):
             km = _CREATE_KS_RE.match(stmt)
             if not km:
@@ -3507,22 +3530,66 @@ class CqlSession:
                 raise CQLError(f"keyspace {name!r} already exists")
             self.keyspaces[name] = _parse_replication(km.group("rep"))
             return None
-        if head.startswith("ALTER KEYSPA"):
-            am_ = re.match(
-                r"^\s*ALTER\s+KEYSPACE\s+(?P<name>\w+)\s+WITH\s+"
-                r"replication\s*=\s*\{(?P<rep>[^}]*)\}"
-                r"(?:\s+AND\s+durable_writes\s*=\s*(?:true|false))?"
-                r"\s*;?\s*$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if not am_:
-                raise CQLError(f"unsupported ALTER KEYSPACE: {stmt!r}")
-            self._check_perm("ALTER")
-            name = am_.group("name").lower()
-            if name not in self.keyspaces:
-                raise CQLError(f"unknown keyspace {name!r}")
-            self.keyspaces[name] = _parse_replication(am_.group("rep"))
+        if head.startswith("CREATE MATER"):
+            return self._create_mat_view(stmt)
+        if head.startswith("CREATE TYPE"):
+            tm = _CREATE_TYPE_RE.match(stmt)
+            if not tm:
+                raise CQLError(f"unsupported CREATE TYPE: {stmt!r}")
+            self._check_perm("CREATE")
+            self._create_type(tm)
             return None
+        if head.startswith("CREATE INDEX") or head.startswith("CREATE CUSTO"):
+            im = _CREATE_INDEX_RE.match(stmt)
+            if not im:
+                raise CQLError(f"unsupported CREATE INDEX: {stmt!r}")
+            self._create_index(im)
+            return None
+        if head.startswith("CREATE TRIGG"):
+            tg = _CREATE_TRIGGER_RE.match(stmt)
+            if not tg:
+                raise CQLError(f"unsupported CREATE TRIGGER: {stmt!r}")
+            return self._create_trigger(tg)
+        fm = _CREATE_FUNCTION_RE.match(stmt)
+        if fm:
+            # the reference gates function DDL on the functions
+            # resource; the pinned single-keyspace reduction maps it
+            # to the CREATE permission (same gate as CREATE TABLE)
+            self._check_perm("CREATE")
+            self._create_function(fm)
+            return None
+        am_ = _CREATE_AGGREGATE_RE.match(stmt)
+        if am_:
+            self._check_perm("CREATE")
+            self._create_aggregate(am_)
+            return None
+        if re.match(
+            r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:FUNCTION|AGGREGATE)",
+            stmt, re.IGNORECASE,
+        ):
+            raise CQLError(f"unsupported CREATE FUNCTION/AGGREGATE: {stmt!r}")
+        qm_ = re.match(
+            r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+            r"(\w+)\s*\.", stmt, re.IGNORECASE,
+        )
+        target_ks = qm_.group(1).lower() if qm_ else None
+        if target_ks is not None and target_ks not in self.keyspaces:
+            raise CQLError(f"unknown keyspace {target_ks!r}")
+        schema = parse_create_table(stmt, self.types)
+        if re.match(
+            r"^\s*CREATE\s+TABLE\s+IF\s+NOT\s+EXISTS", stmt, re.IGNORECASE
+        ) and f"{target_ks or self.current_ks}.{schema.name}" in self.tables:
+            return None
+        self._check_perm("CREATE")
+        self.create_table(schema, keyspace=target_ks)
+        return None
+
+    def _run_drop(self, stmt: str) -> DataFrame | bool | None:
+        """DROP ROLE / KEYSPACE / MATERIALIZED VIEW / TYPE / TRIGGER /
+        TABLE / INDEX / FUNCTION / AGGREGATE."""
+        head = stmt.lstrip()[:12].upper()
+        if head.startswith("DROP ROLE"):
+            return self._auth_stmt(stmt)
         if head.startswith("DROP KEYSPAC"):
             km = _DROP_KS_RE.match(stmt)
             if not km:
@@ -3550,8 +3617,6 @@ class CqlSession:
             if self.current_ks == name:
                 self.current_ks = None
             return None
-        if head.startswith("CREATE MATER"):
-            return self._create_mat_view(stmt)
         if head.startswith("DROP MATERIA"):
             dm = _DROP_MV_RE.match(stmt)
             if not dm:
@@ -3563,13 +3628,6 @@ class CqlSession:
                 raise CQLError(f"unknown materialized view {name!r}")
             self._check_perm("ALTER", self.mat_views[name][0])
             del self.mat_views[name]
-            return None
-        if head.startswith("CREATE TYPE"):
-            tm = _CREATE_TYPE_RE.match(stmt)
-            if not tm:
-                raise CQLError(f"unsupported CREATE TYPE: {stmt!r}")
-            self._check_perm("CREATE")
-            self._create_type(tm)
             return None
         if head.startswith("DROP TYPE"):
             tm = _DROP_TYPE_RE.match(stmt)
@@ -3598,17 +3656,6 @@ class CqlSession:
                 raise CQLError(f"type {name!r} is in use")
             del self.types[name]
             return None
-        if head.startswith("CREATE INDEX") or head.startswith("CREATE CUSTO"):
-            im = _CREATE_INDEX_RE.match(stmt)
-            if not im:
-                raise CQLError(f"unsupported CREATE INDEX: {stmt!r}")
-            self._create_index(im)
-            return None
-        if head.startswith("CREATE TRIGG"):
-            tg = _CREATE_TRIGGER_RE.match(stmt)
-            if not tg:
-                raise CQLError(f"unsupported CREATE TRIGGER: {stmt!r}")
-            return self._create_trigger(tg)
         if head.startswith("DROP TRIGGER"):
             tg = _DROP_TRIGGER_RE.match(stmt)
             if not tg:
@@ -3677,21 +3724,50 @@ class CqlSession:
             if kind == "sasi":
                 self.sasi_modes.get(t, {}).pop(c, None)
             return None
-        if head.startswith("TRUNCATE"):
-            tm = _TRUNCATE_RE.match(stmt)
-            if not tm:
-                raise CQLError(f"unsupported TRUNCATE: {stmt!r}")
-            # discard all data; clocks stay monotonic so post-truncate
-            # writes are strictly newer than anything discarded.
-            # Resolve FIRST: qualified names must truncate (and be
-            # permission-checked against) the same registry key the
-            # bare name does.
-            tkey = self._resolve(tm.group("table"))
-            t_ = self.tables.get(tkey)
-            if t_ is None:
-                raise CQLError(f"unknown table {tm.group('table')!r}")
-            self._check_perm("MODIFY", tkey)
-            t_.clear_data()
+        if head.startswith("DROP FUNCTIO"):
+            dm = _DROP_FUNCTION_RE.match(stmt)
+            if not dm:
+                raise CQLError(f"unsupported DROP FUNCTION: {stmt!r}")
+            name = dm.group("name").lower()
+            if name not in self.functions:
+                if dm.group("ine"):
+                    return None
+                raise CQLError(f"unknown function {name!r}")
+            self._check_perm("DROP")
+            del self.functions[name]
+            return None
+        if head.startswith("DROP AGGREGA"):
+            dm = _DROP_AGGREGATE_RE.match(stmt)
+            if not dm:
+                raise CQLError(f"unsupported DROP AGGREGATE: {stmt!r}")
+            name = dm.group("name").lower()
+            if name not in self.aggregates:
+                if dm.group("ine"):
+                    return None
+                raise CQLError(f"unknown aggregate {name!r}")
+            self._check_perm("DROP")
+            del self.aggregates[name]
+            return None
+        raise CQLError(f"unsupported statement: {stmt!r}")
+
+    def _run_alter(self, stmt: str) -> DataFrame | bool | None:
+        """ALTER KEYSPACE / TYPE / ROLE / TABLE."""
+        head = stmt.lstrip()[:12].upper()
+        if head.startswith("ALTER KEYSPA"):
+            am_ = re.match(
+                r"^\s*ALTER\s+KEYSPACE\s+(?P<name>\w+)\s+WITH\s+"
+                r"replication\s*=\s*\{(?P<rep>[^}]*)\}"
+                r"(?:\s+AND\s+durable_writes\s*=\s*(?:true|false))?"
+                r"\s*;?\s*$",
+                stmt, re.IGNORECASE | re.DOTALL,
+            )
+            if not am_:
+                raise CQLError(f"unsupported ALTER KEYSPACE: {stmt!r}")
+            self._check_perm("ALTER")
+            name = am_.group("name").lower()
+            if name not in self.keyspaces:
+                raise CQLError(f"unknown keyspace {name!r}")
+            self.keyspaces[name] = _parse_replication(am_.group("rep"))
             return None
         if head.startswith("ALTER TYPE"):
             tm = _ALTER_TYPE_RE.match(stmt)
@@ -3751,143 +3827,110 @@ class CqlSession:
                     c: typ.replace(old_struct, new_struct)
                     for c, typ in sch.static.items()
                 }
+                # the snapshot plan and the write path's codecs were
+                # built from the old struct
+                t.bump_schema_version()
             return None
-        if head.startswith("ALTER"):
-            if re.match(r"\s*ALTER\s+ROLE\b", stmt, re.IGNORECASE):
-                return self._auth_stmt(stmt)
-            am = _ALTER_RE.match(stmt)
-            if not am:
-                raise CQLError(f"unsupported ALTER TABLE: {stmt!r}")
-            # resolve before the permission check: a qualified name must
-            # authorize against its OWNING keyspace's resource, not a
-            # never-matching 'ks.t' literal (the r6 tablestats shape)
-            self._check_perm("ALTER", self._resolve(am.group("table")))
-            self._alter_table(am)
-            return None
-        if head.startswith("DROP FUNCTIO"):
-            dm = _DROP_FUNCTION_RE.match(stmt)
-            if not dm:
-                raise CQLError(f"unsupported DROP FUNCTION: {stmt!r}")
-            name = dm.group("name").lower()
-            if name not in self.functions:
-                if dm.group("ine"):
-                    return None
-                raise CQLError(f"unknown function {name!r}")
-            self._check_perm("DROP")
-            del self.functions[name]
-            return None
-        if head.startswith("DROP AGGREGA"):
-            dm = _DROP_AGGREGATE_RE.match(stmt)
-            if not dm:
-                raise CQLError(f"unsupported DROP AGGREGATE: {stmt!r}")
-            name = dm.group("name").lower()
-            if name not in self.aggregates:
-                if dm.group("ine"):
-                    return None
-                raise CQLError(f"unknown aggregate {name!r}")
-            self._check_perm("DROP")
-            del self.aggregates[name]
-            return None
-        if head.startswith("CREATE"):
-            fm = _CREATE_FUNCTION_RE.match(stmt)
-            if fm:
-                # the reference gates function DDL on the functions
-                # resource; the pinned single-keyspace reduction maps it
-                # to the CREATE permission (same gate as CREATE TABLE)
-                self._check_perm("CREATE")
-                self._create_function(fm)
-                return None
-            am_ = _CREATE_AGGREGATE_RE.match(stmt)
-            if am_:
-                self._check_perm("CREATE")
-                self._create_aggregate(am_)
-                return None
-            if re.match(
-                r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:FUNCTION|AGGREGATE)",
-                stmt, re.IGNORECASE,
-            ):
-                raise CQLError(f"unsupported CREATE FUNCTION/AGGREGATE: {stmt!r}")
-            qm_ = re.match(
-                r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-                r"(\w+)\s*\.", stmt, re.IGNORECASE,
-            )
-            target_ks = qm_.group(1).lower() if qm_ else None
-            if target_ks is not None and target_ks not in self.keyspaces:
-                raise CQLError(f"unknown keyspace {target_ks!r}")
-            schema = parse_create_table(stmt, self.types)
-            if re.match(
-                r"^\s*CREATE\s+TABLE\s+IF\s+NOT\s+EXISTS", stmt, re.IGNORECASE
-            ) and f"{target_ks or self.current_ks}.{schema.name}" in self.tables:
-                return None
-            self._check_perm("CREATE")
-            self.create_table(schema, keyspace=target_ks)
-            return None
-        if head.startswith("SELECT"):
-            snapshots = {}
-            # only the FROM target is built: a write to table A must not
-            # make a read of table B rebuild A's snapshot plan
-            fm_ = re.search(r"\bFROM\s+([\w.]+)", stmt, re.IGNORECASE)
-            if fm_:
-                name = fm_.group(1).lower()
-                key = self._resolve(name)
-                if (
-                    "." in name
-                    and self._key_ks(key) in self.keyspaces
-                    and key not in self.tables
-                    and key not in self.mat_views
-                ):
-                    # an explicitly-qualified name must exist under that
-                    # keyspace (catalog tables are keyspace-less and
-                    # always addressed bare)
-                    raise CQLError(f"unknown table {fm_.group(1)!r}")
-                self._check_in_guardrail(stmt, key)
-                self._check_select_guardrails(stmt, key)
-                entry = None
-                if key in self.tables:
-                    self._check_perm("SELECT", key)
-                    entry = (
-                        self._read_frame(key, stmt),
-                        self._meta(self.tables[key].schema, key),
-                    )
-                elif key in self.mat_views:
-                    # view reads are reads of the base table's data
-                    self._check_perm("SELECT", self.mat_views[key][0])
-                    entry = self._mv_snapshot(key)
-                elif "." not in name:
-                    entry = self._catalog_override(name)
-                if entry is None:
-                    # a system view, qualified or (under USE of its
-                    # keyspace) bare
-                    entry = self._system_view(key)
-                if entry is not None:
-                    snapshots[name] = snapshots[key] = entry
-            try:
-                df = cql_select(
-                    self.spark, self.sf_dir,
-                    self._expand_udfs(self._expand_udas(stmt)),
-                    tables=snapshots,
-                )
-                return self._apply_masks(stmt, df)
-            except CQLError:
-                raise
-            except Exception as exc:
-                # expression parsing is delegated to Catalyst (SURVEY
-                # §2.13); its ParseException/AnalysisException for a bad
-                # selector/predicate is this engine's InvalidRequest —
-                # the driver contract is "execute() raises CQLError on
-                # any invalid statement", never an internal exception
-                # (fuzz-pinned in tests/test_cql_fuzz.py). Engine errors
-                # stay diagnosable through the chained cause.
-                from pyspark.errors import (
-                    AnalysisException,
-                    ParseException,
-                )
+        if re.match(r"\s*ALTER\s+ROLE\b", stmt, re.IGNORECASE):
+            return self._auth_stmt(stmt)
+        am = _ALTER_RE.match(stmt)
+        if not am:
+            raise CQLError(f"unsupported ALTER TABLE: {stmt!r}")
+        # resolve before the permission check: a qualified name must
+        # authorize against its OWNING keyspace's resource, not a
+        # never-matching 'ks.t' literal (the r6 tablestats shape)
+        self._check_perm("ALTER", self._resolve(am.group("table")))
+        self._alter_table(am)
+        return None
 
-                if isinstance(exc, (AnalysisException, ParseException)):
-                    raise CQLError(
-                        f"invalid statement: {str(exc).splitlines()[0]}"
-                    ) from exc
-                raise
+    def _run_truncate(self, stmt: str) -> DataFrame | bool | None:
+        """TRUNCATE [TABLE] <table>."""
+        tm = _TRUNCATE_RE.match(stmt)
+        if not tm:
+            raise CQLError(f"unsupported TRUNCATE: {stmt!r}")
+        # discard all data; clocks stay monotonic so post-truncate
+        # writes are strictly newer than anything discarded.
+        # Resolve FIRST: qualified names must truncate (and be
+        # permission-checked against) the same registry key the
+        # bare name does.
+        tkey = self._resolve(tm.group("table"))
+        t_ = self.tables.get(tkey)
+        if t_ is None:
+            raise CQLError(f"unknown table {tm.group('table')!r}")
+        self._check_perm("MODIFY", tkey)
+        t_.clear_data()
+        return None
+
+    def _run_select(self, stmt: str) -> DataFrame | bool | None:
+        """SELECT: frame only the FROM target, then compile."""
+        snapshots = {}
+        # only the FROM target is built: a write to table A must not
+        # make a read of table B rebuild A's snapshot plan
+        fm_ = re.search(r"\bFROM\s+([\w.]+)", stmt, re.IGNORECASE)
+        if fm_:
+            name = fm_.group(1).lower()
+            key = self._resolve(name)
+            if (
+                "." in name
+                and self._key_ks(key) in self.keyspaces
+                and key not in self.tables
+                and key not in self.mat_views
+            ):
+                # an explicitly-qualified name must exist under that
+                # keyspace (catalog tables are keyspace-less and
+                # always addressed bare)
+                raise CQLError(f"unknown table {fm_.group(1)!r}")
+            self._check_in_guardrail(stmt, key)
+            self._check_select_guardrails(stmt, key)
+            entry = None
+            if key in self.tables:
+                self._check_perm("SELECT", key)
+                entry = (
+                    self._read_frame(key, stmt),
+                    self._meta(self.tables[key].schema, key),
+                )
+            elif key in self.mat_views:
+                # view reads are reads of the base table's data
+                self._check_perm("SELECT", self.mat_views[key][0])
+                entry = self._mv_snapshot(key)
+            elif "." not in name:
+                entry = self._catalog_override(name)
+            if entry is None:
+                # a system view, qualified or (under USE of its
+                # keyspace) bare
+                entry = self._system_view(key)
+            if entry is not None:
+                snapshots[name] = snapshots[key] = entry
+        try:
+            df = cql_select(
+                self.spark, self.sf_dir,
+                self._expand_udfs(self._expand_udas(stmt)),
+                tables=snapshots,
+            )
+            return self._apply_masks(stmt, df)
+        except CQLError:
+            raise
+        except Exception as exc:
+            # expression parsing is delegated to Catalyst (SURVEY
+            # §2.13); its ParseException/AnalysisException for a bad
+            # selector/predicate is this engine's InvalidRequest —
+            # the driver contract is "execute() raises CQLError on
+            # any invalid statement", never an internal exception
+            # (fuzz-pinned in tests/test_cql_fuzz.py). Engine errors
+            # stay diagnosable through the chained cause.
+            from pyspark.errors import (
+                AnalysisException,
+                ParseException,
+            )
+
+            if isinstance(exc, (AnalysisException, ParseException)):
+                raise CQLError(
+                    f"invalid statement: {str(exc).splitlines()[0]}"
+                ) from exc
+            raise
+
+    def _run_grant(self, stmt: str) -> DataFrame | bool | None:
+        """GRANT / REVOKE: UNMASK grants, then the role statements."""
         um = _UNMASK_RE.match(stmt)
         if um:
             # no role system offline: UNMASK is a per-session, per-table
@@ -3907,16 +3950,17 @@ class CqlSession:
             else:
                 self.unmasked.discard(t)
             return None
-        if head.startswith("GRANT") or head.startswith("REVOKE"):
-            return self._auth_stmt(stmt)
-        if head.startswith("COPY"):
-            cm_ = _COPY_RE.match(stmt)
-            if not cm_:
-                raise CQLError(f"unsupported COPY: {stmt!r}")
-            return self._copy(cm_)
-        bm = _BATCH_RE.match(stmt)
-        if bm:
-            return self._execute_batch(stmt, bm)
+        return self._auth_stmt(stmt)
+
+    def _run_copy(self, stmt: str) -> DataFrame | bool | None:
+        """COPY <table> TO | FROM '<path>'."""
+        cm_ = _COPY_RE.match(stmt)
+        if not cm_:
+            raise CQLError(f"unsupported COPY: {stmt!r}")
+        return self._copy(cm_)
+
+    def _run_dml(self, stmt: str) -> DataFrame | bool | None:
+        """INSERT / UPDATE / DELETE on one table (triggers included)."""
         tm = _DML_TABLE_RE.search(stmt)
         if not tm:
             raise CQLError(f"unsupported statement: {stmt!r}")
@@ -3929,9 +3973,7 @@ class CqlSession:
         # conditional (LWT) statements read row state back to the client
         # ([applied] + current values), so the reference also demands
         # SELECT; probe with string literals stripped to avoid ' IF ' text
-        if re.search(
-            r"\bIF\b", re.sub(r"'[^']*'", "''", stmt), re.IGNORECASE
-        ):
+        if "IF" in stmt.upper() and _IF_RE.search(_QUOTED_RE.sub("''", stmt)):
             self._check_perm("SELECT", tkey)
         if tm.group(1).lower() != self._key_bare(tkey):
             # strip the keyspace qualifier for the table's own DML parser
@@ -4863,8 +4905,9 @@ class CqlSession:
                 return text
         raise CQLError("UDF expansion exceeded max depth (cycle?)")
 
-    def _execute_batch(self, stmt: str, bm: re.Match) -> bool | None:
-        """Logged BATCH, possibly spanning tables (Snk2: the reference's
+    def _run_batch(self, stmt: str) -> bool | None:
+        """BEGIN [UNLOGGED | LOGGED | COUNTER] BATCH ... APPLY BATCH: a
+        logged BATCH, possibly spanning tables (Snk2: the reference's
         atomic multi-mutation — its canonical use is the denormalized
         double-write). Semantics pinned here:
 
@@ -4878,12 +4921,13 @@ class CqlSession:
         - counter and non-counter mutations cannot mix (reference rule:
           counter batches are a distinct batch kind).
         """
+        bm = _BATCH_RE.match(stmt)
+        if not bm:
+            raise CQLError(f"unsupported or malformed BATCH: {stmt!r}")
         # resolve every touched name ONCE (validating keyspace tags),
         # then strip the qualifiers so the tables' own DML parsers (bare
         # names) accept the sub-statements the single-DML path accepts
-        subs = [
-            sub for sub in re.split(r";\s*", bm.group("body")) if sub.strip()
-        ]
+        subs = batch_subs(bm)
         names: list[str] = []
         for i, sub in enumerate(subs):
             tm = _DML_TABLE_RE.search(sub)
@@ -4894,12 +4938,6 @@ class CqlSession:
             bare = self._key_bare(key)
             if tm.group(1).lower() != bare:
                 subs[i] = sub[: tm.start(1)] + bare + sub[tm.end(1):]
-        stmt = (
-            stmt[: bm.start("body")]
-            + "; ".join(subs) + "; "
-            + stmt[bm.end("body"):]
-        )
-        bm = _BATCH_RE.match(stmt) or bm
         # authorization covers every touched table BEFORE any mutation is
         # applied (a denied batch must be a no-op, like any failed batch)
         for n in sorted(set(names)):
@@ -4915,7 +4953,9 @@ class CqlSession:
             # (names are already RESOLVED keys — index the registry
             # directly, a bare re-resolve would re-apply current-keyspace
             # scoping to a table the qualifier already selected)
-            return self.tables[names[0]].execute(stmt) if names else None
+            return (
+                self.tables[names[0]].execute_batch(bm, subs) if names else None
+            )
         tables = [self.tables[n] for n in names]
         involved: dict[str, CqlTable] = dict(zip(names, tables))
         if len({t.schema.counter for t in involved.values()}) > 1:
@@ -4966,3 +5006,23 @@ class CqlSession:
         for t in involved.values():
             t._maybe_flush()
         return None
+
+    # first keyword -> handler: the whole of _execute_stmt's routing
+    _ROUTES = {
+        "SELECT": _run_select,
+        "INSERT": _run_dml,
+        "UPDATE": _run_dml,
+        "DELETE": _run_dml,
+        "BEGIN": _run_batch,
+        "CREATE": _run_create,
+        "ALTER": _run_alter,
+        "DROP": _run_drop,
+        "TRUNCATE": _run_truncate,
+        "USE": _run_use,
+        "GRANT": _run_grant,
+        "REVOKE": _run_grant,
+        "LIST": _auth_stmt,
+        "DESC": _describe,
+        "DESCRIBE": _describe,
+        "COPY": _run_copy,
+    }

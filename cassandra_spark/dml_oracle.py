@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import re
 
-from cassandra_spark.cql_dml import TableSchema, parse_struct_type
+from cassandra_spark.cql_dml import ColumnTable, TableSchema, parse_struct_type
 
 _DUCK_TYPES = {
     "tinyint": "TINYINT",
@@ -91,8 +91,9 @@ def dml_oracle_sql(schema: TableSchema, log, asof: int) -> str:
     scalar regulars (typed), collection regulars as JSON strings, static
     columns (typed) — matching ``snapshot()`` projected the same way."""
     s = schema
-    scalars = s.scalar_regular
-    colls = s.coll_regular
+    ct = ColumnTable(s)
+    scalars = ct.scalar_regular
+    colls = ct.coll_regular
 
     scalar_pivots = []
     for c, typ in scalars.items():

@@ -64,14 +64,18 @@ def spark_jobs(spark):
 
 @pytest.fixture()
 def py4j_calls(spark):
-    """``py4j_calls()``: how many Py4J commands this process has sent to
-    the JVM since the fixture started, counted at ``send_command`` of
-    both connection classes (the client-server one PySpark pins by
-    default, and the classic gateway one). Take the difference around a
-    call. Python's cyclic garbage collector is paused while the fixture
-    is live: a collection that happened to run inside the window would
-    add the JVM-side deletes of whatever objects it freed."""
+    """``py4j_calls()``: how many Py4J commands the calling thread has
+    sent to the JVM since the fixture started, counted at
+    ``send_command`` of both connection classes (the client-server one
+    PySpark pins by default, and the classic gateway one). Take the
+    difference around a call. Python's cyclic garbage collector is
+    paused while the fixture is live: a collection that happened to run
+    inside the window would add the JVM-side deletes of whatever objects
+    it freed. Other threads are not counted: the client-server
+    connection's finalizer thread sends the deletes of objects freed
+    earlier whenever it wakes, inside the window or not."""
     import gc
+    import threading
 
     from py4j.clientserver import ClientServerConnection
     from py4j.java_gateway import GatewayConnection
@@ -80,11 +84,13 @@ def py4j_calls(spark):
     gc.disable()
     sent = [0]
     patched = []
+    caller = threading.current_thread()
     for cls in (ClientServerConnection, GatewayConnection):
         real = cls.send_command
 
         def send(self, command, *a, _real=real, **kw):
-            sent[0] += 1
+            if threading.current_thread() is caller:
+                sent[0] += 1
             return _real(self, command, *a, **kw)
 
         patched.append((cls, real))

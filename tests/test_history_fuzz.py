@@ -806,14 +806,26 @@ def test_empty_frames_match_the_snapshot_schema(spark, typed_tables):
 
 
 def test_malformed_values_fail_as_the_snapshot_does(spark):
-    """A value stored outside every spelling of its type (malformed
-    text, an out-of-range number) is left to Spark's cast, so the pinned
-    read fails exactly as the snapshot does."""
+    """A statement refuses a value outside every spelling of its type
+    (malformed text, an out-of-range number) at write time. A value that
+    arrives that way all the same — a bulk load of text columns — is
+    left to Spark's cast, so the pinned read fails exactly as the
+    snapshot does."""
+    from cassandra_spark.cql import CQLError
+
     s = CqlSession(spark)
     s.execute("CREATE TABLE bad (k text PRIMARY KEY, n int, sm smallint)")
-    s.execute("INSERT INTO bad (k, n) VALUES ('a', 'abc')")
-    s.execute("INSERT INTO bad (k, sm) VALUES ('b', 40000)")
+    for stmt in (
+        "INSERT INTO bad (k, n) VALUES ('a', 'abc')",
+        "INSERT INTO bad (k, sm) VALUES ('b', 40000)",
+    ):
+        with pytest.raises(CQLError, match="invalid"):
+            s.execute(stmt)
     t = s.table("bad")
+    t.bulk_load(spark.createDataFrame(
+        [("a", "abc", None), ("b", None, "40000")],
+        "k string, n string, sm string",
+    ))
     for pk in ("a", "b"):
         with pytest.raises(Exception) as snap:
             t.snapshot().filter(F.col("k") == pk).collect()

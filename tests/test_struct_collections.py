@@ -9,6 +9,7 @@ import pytest
 
 from cassandra_spark.cql import CQLError
 from cassandra_spark.cql_dml import (
+    _elem_codec,
     _parse_value,
     _split_colon,
     _top_level_colon,
@@ -43,13 +44,13 @@ def test_colon_depth_awareness():
 def test_parse_value_struct_set_vs_map():
     # set of structs: items canonicalize through struct_json
     kind, items = _parse_value(
-        "{(1, 2), (3, 4)}", elem_type="struct<c0:int,c1:int>"
+        "{(1, 2), (3, 4)}", elem=_elem_codec("struct<c0:int,c1:int>")
     )
     assert kind == "set"
     assert items == ['{"c0":1,"c1":2}', '{"c0":3,"c1":4}']
     # map with struct values
     kind, pairs = _parse_value(
-        "{'k': {a: 5}}", val_type="struct<a:int>"
+        "{'k': {a: 5}}", val=_elem_codec("struct<a:int>")
     )
     assert kind == "map" and pairs == [("k", '{"a":5}')]
 
