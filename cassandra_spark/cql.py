@@ -63,6 +63,7 @@ class _Stmt:
     group_by: list[str] | None = None
     ann: tuple[str, str] | None = None  # (column, "[v1, v2, ...]")
     json: bool = False  # SELECT JSON: one '[json]' column per row
+    restrictions: "_Restrictions | None" = None  # the analysed WHERE
 
 
 _SELECT_RE = re.compile(
@@ -90,17 +91,25 @@ _FLOOR_ITEM_RE = re.compile(r"floor\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)")
 
 
 def _parse(stmt: str) -> _Stmt:
-    m = _SELECT_RE.match(stmt)
+    """One SELECT's clauses, split over its literal-masked copy (a
+    keyword inside a string literal never ends a clause), with the WHERE
+    clause analysed once (:func:`_analyse_where`)."""
+    masked = _mask_quoted(stmt)
+    m = _SELECT_RE.match(masked)
     if not m:
         raise CQLError(f"unsupported or malformed CQL SELECT: {stmt!r}")
+
+    def group(name: str) -> str | None:
+        return stmt[m.start(name) : m.end(name)] if m.group(name) else None
+
     order: list[tuple[str, bool]] = []
     ann: tuple[str, str] | None = None
-    if m.group("order"):
-        ann_m = _ANN_RE.match(m.group("order"))
+    if group("order"):
+        ann_m = _ANN_RE.match(group("order"))
         if ann_m:
             ann = (ann_m.group(1).lower(), ann_m.group(2))
         else:
-            for part in m.group("order").split(","):
+            for part in group("order").split(","):
                 toks = part.split()
                 if len(toks) not in (1, 2) or (
                     len(toks) == 2 and toks[1].upper() not in ("ASC", "DESC")
@@ -110,23 +119,27 @@ def _parse(stmt: str) -> _Stmt:
                     (toks[0], len(toks) == 2 and toks[1].upper() == "DESC")
                 )
     group_by = None
-    if m.group("group"):
+    if group("group"):
         # depth-aware split: floor(ck, 5m) carries a comma of its own
         group_by = [
-            c.strip().lower() for c in _split_projection(m.group("group"))
+            c.strip().lower() for c in _split_projection(group("group"))
         ]
         for c in group_by:
             if not (
                 re.fullmatch(r"\w+", c)
                 or re.fullmatch(_FLOOR_ITEM_RE, c)
             ):
-                raise CQLError(f"bad GROUP BY clause: {m.group('group')!r}")
-    proj = m.group("proj").strip()
+                raise CQLError(f"bad GROUP BY clause: {group('group')!r}")
+    proj = group("proj").strip()
     jm = re.match(r"^JSON\s+(.+)$", proj, re.IGNORECASE | re.DOTALL)
+    where = (
+        _Masked(group("where"), m.group("where"))
+        if m.group("where") else None
+    )
     return _Stmt(
         projection=jm.group(1).strip() if jm else proj,
-        table=m.group("table").lower(),
-        where=m.group("where"),
+        table=group("table").lower(),
+        where=where,
         order_by=order,
         per_partition_limit=(
             int(m.group("pplimit")) if m.group("pplimit") else None
@@ -137,185 +150,26 @@ def _parse(stmt: str) -> _Stmt:
         group_by=group_by,
         ann=ann,
         json=bool(jm),
+        restrictions=_analyse_where(where) if where else None,
     )
 
 
-_IDENT_RE = re.compile(r"\b([a-z_][a-z0-9_]*)\b", re.IGNORECASE)
+_IDENT_RE = re.compile(r"(?<!')\b[a-z_]\w*", re.IGNORECASE)
 _CQL_KEYWORDS = frozenset(
     "and or not in contains key true false null like token between".split()
 )
 
 
-def _like_patterns(where: str, col: str) -> list[str]:
-    """The string literals compared to ``col`` via LIKE, extracted
-    quote-safely: matches scan the masked text, pattern bytes slice from
-    the original ('' unescaped)."""
-    masked = _mask_quoted(where)
-    out = []
-    for m in re.finditer(
-        rf"\b{re.escape(col)}(?!\w)\s+LIKE\s+('[^']*')",
-        masked,
-        re.IGNORECASE,
-    ):
-        lit = where[m.start(1) + 1 : m.end(1) - 1]
-        out.append(lit.replace("''", "'"))
-    return out
-
-
-def _where_columns(where: str, columns: set[str]) -> set[str]:
-    return {
-        t.lower()
-        for t in _IDENT_RE.findall(where)
-        if t.lower() in columns and t.lower() not in _CQL_KEYWORDS
-    }
-
-
-def _rewrite_list_literals(where: str) -> str:
-    """``[a, b]`` → ``array(a, b)`` outside single-quoted string literals,
-    skipping subscripts (bracket groups attached to an identifier/']'/')'
-    — with or without intervening whitespace, both legal CQL)."""
-    out: list[str] = []
-    i, n = 0, len(where)
-    while i < n:
-        ch = where[i]
-        if ch == "'":  # string literal: copy verbatim ('' = escaped quote)
-            j = i + 1
-            while j < n:
-                if where[j] == "'":
-                    if j + 1 < n and where[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(where[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "[":
-            k = len(out) - 1
-            prev = ""
-            while k >= 0:
-                seg = out[k].rstrip()
-                if seg:
-                    prev = seg[-1]
-                    break
-                k -= 1
-            if prev and (prev.isalnum() or prev in "_])'"):
-                out.append(ch)  # subscript (or follows a literal): keep
-                i += 1
-                continue
-            # find the MATCHING ']' — depth-counted so nested list
-            # literals ([[1,2],[3,4]]) close at the right bracket —
-            # with quoted spans opaque
-            j = i + 1
-            depth = 1
-            while j < n:
-                cj = where[j]
-                if cj == "'":
-                    j += 1
-                    while j < n:
-                        if where[j] == "'":
-                            if j + 1 < n and where[j + 1] == "'":
-                                j += 2
-                                continue
-                            break
-                        j += 1
-                elif cj == "[":
-                    depth += 1
-                elif cj == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if j >= n or depth != 0:
-                out.append(ch)  # unterminated: leave untouched
-                i += 1
-                continue
-            # recurse so inner list literals rewrite too
-            out.append(
-                "array(" + _rewrite_list_literals(where[i + 1 : j]) + ")"
-            )
-            i = j + 1
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _rewrite_where(where: str, map_cols: frozenset[str] = frozenset()) -> str:
-    """CQL-only surface forms → Spark SQL equivalents. ``map_cols`` names
-    the MAP-typed columns: CQL ``CONTAINS`` on a map is VALUE-side
-    containment (the reference's rule), which Spark spells
-    ``array_contains(map_values(col), v)``."""
-    # col CONTAINS KEY v  →  map_contains_key(col, v)
-    where = re.sub(
-        r"(\w+)\s+CONTAINS\s+KEY\s+('[^']*'|\S+)",
-        r"map_contains_key(\1, \2)",
-        where,
-        flags=re.IGNORECASE,
-    )
-
-    # col CONTAINS v  →  array_contains(col, v); map columns check values
-    def _contains(m: re.Match) -> str:
-        col, v = m.group(1), m.group(2)
-        if col.lower() in map_cols:
-            return f"array_contains(map_values({col}), {v})"
-        return f"array_contains({col}, {v})"
-
-    where = re.sub(
-        r"(\w+)\s+CONTAINS\s+('[^']*'|\S+)",
-        _contains,
-        where,
-        flags=re.IGNORECASE,
-    )
-    # [..] literal → array(..): CQL frozen-list equality for FULL-indexed
-    # columns. Applied OUTSIDE string literals only, and never to a
-    # subscript — a bracket group whose nearest preceding non-space char
-    # is an identifier char / ']' / ')' (``attrs['k']``, ``attrs ['k']``).
-    where = _rewrite_list_literals(where)
-    # token(pk) → cassandra_token(pk): bit-exact Murmur3Partitioner
-    # tokens (operators/murmur3.py), registered per session by
-    # cql_select, so a driver-supplied token bound matches production
-    where = re.sub(
-        r"\btoken\s*\(", "cassandra_token(", where, flags=re.IGNORECASE
-    )
-    return where
-
-
-_TUPLE_REL_RE = re.compile(
-    r"(?<!\w)\(\s*(?P<cols>\w+(?:\s*,\s*\w+)+)\s*\)\s*"
-    r"(?P<op><=|>=|<|>|=)\s*\((?P<vals>[^()]*)\)"
-)
-_TUPLE_IN_HEAD_RE = re.compile(
-    r"(?<!\w)\(\s*(?P<cols>\w+(?:\s*,\s*\w+)+)\s*\)\s+IN\s*\(",
-    re.IGNORECASE,
-)
-
-
-def _scan_to_close(text: str, start: int) -> int:
-    """Index just past the parenthesis group opening at ``start`` (which
-    must point at '('), quote-aware."""
-    depth, quoted = 0, False
-    for i in range(start, len(text)):
-        ch = text[i]
-        if ch == "'":
-            quoted = not quoted
-        elif quoted:
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    raise CQLError(f"unbalanced parentheses in {text!r}")
-
-
 def _mask_quoted(text: str) -> str:
-    """Same-length copy with the CONTENT of single-quoted literals (and
-    any '' escape pairs) replaced by 'x', outer quotes kept — regex scans
-    over the masked text can never match inside a string literal, and
-    every match position maps 1:1 back onto the original (the
-    _check_in_guardrail convention)."""
+    """Same-length copy of ``text`` with the content of every single-quoted
+    string literal (``''`` escapes included) replaced by 'x', the quotes
+    kept. This is the compiler's one quote rule: the SELECT clauses
+    (:func:`_parse`), the WHERE analysis (:func:`_analyse_where`) and
+    every WHERE rewrite scan this copy, so a keyword, column name,
+    operator, bracket or comma inside a literal is never read as
+    structure ('no LIMIT here', 'x OR y', 'token(q)', 'a,b' are values),
+    and every match position maps 1:1 back onto the original text, where
+    literal values are sliced from."""
     out = list(text)
     i, n = 0, len(text)
     while i < n:
@@ -336,143 +190,425 @@ def _mask_quoted(text: str) -> str:
     return "".join(out)
 
 
-def _split_quoted_csv(text: str) -> list[str]:
-    """Split on commas outside single-quoted literals."""
-    out, cur, quoted = [], [], False
-    for ch in text:
-        if ch == "'":
-            quoted = not quoted
-        if ch == "," and not quoted:
-            out.append("".join(cur).strip())
-            cur = []
+class _Masked(str):
+    """A clause text that carries its :func:`_mask_quoted` copy
+    (``masked``), so a chain of rewrites keeps the two aligned and masks
+    once. Slicing with :meth:`part` keeps the pair."""
+
+    masked: str
+
+    def __new__(cls, text: str, masked: str | None = None):
+        self = super().__new__(cls, text)
+        self.masked = _mask_quoted(text) if masked is None else masked
+        return self
+
+    def part(self, start: int, end: int) -> "_Masked":
+        return _Masked(self[start:end], self.masked[start:end])
+
+    def trim(self) -> "_Masked":
+        lo = len(self.masked) - len(self.masked.lstrip())
+        return self.part(lo, max(lo, len(self.masked.rstrip())))
+
+
+def _masked(text: str) -> _Masked:
+    return text if isinstance(text, _Masked) else _Masked(text)
+
+
+def _join(parts) -> _Masked:
+    """Concatenate ``_Masked`` pieces and quote-free SQL text."""
+    return _Masked(
+        "".join(parts), "".join(getattr(p, "masked", p) for p in parts)
+    )
+
+
+def _grp(src: str, m: re.Match, g) -> str:
+    return src[m.start(g) : m.end(g)]
+
+
+def _sub_quoted(pattern: str, build, text: str) -> _Masked:
+    """``re.sub`` outside string literals (case-insensitive): ``pattern``
+    matches over the masked copy, and ``build(src, m)`` renders the
+    replacement from ``src`` — called once with the original and once
+    with the masked text, so the result stays aligned."""
+    w = _masked(text)
+    parts, pos = [], 0
+    for m in re.finditer(pattern, w.masked, re.IGNORECASE):
+        rep = _Masked(build(str(w), m), build(w.masked, m))
+        parts += [w.part(pos, m.start()), rep]
+        pos = m.end()
+    return _join([*parts, w.part(pos, len(w))])
+
+
+def _scan_to_close(masked: str, start: int) -> int | None:
+    """Index just past the bracket group opening at ``start`` of a masked
+    text (no literal holds a bracket there); None when it never closes."""
+    depth = 0
+    for i in range(start, len(masked)):
+        if masked[i] in "([":
+            depth += 1
+        elif masked[i] in ")]":
+            depth -= 1
+            if depth == 0:
+                return i + 1
+    return None
+
+
+def _is_group(w: _Masked) -> bool:
+    """Whether ``w`` is one parenthesized group."""
+    return w.masked[:1] == "(" and _scan_to_close(w.masked, 0) == len(w)
+
+
+def _split_commas(w: _Masked) -> list[_Masked]:
+    """The non-empty, trimmed items of a comma list, split at commas
+    outside brackets and string literals."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(w.masked + ","):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            item = w.part(start, i).trim()
+            if item:
+                items.append(item)
+            start = i + 1
+    return items
+
+
+# a complete literal term, by class: the prunes and the pinned read
+# accept the classes whose one spelling names one stored value
+_LIT_RE = re.compile(
+    r"(?P<str>'(?:[^']|'')*')|(?P<int>-?\d+)"
+    r"|(?P<dec>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)|(?P<bool>(?i:true|false))"
+)
+# one relation's head: a column (maybe subscripted) or a column tuple,
+# then its operator
+_REL_HEAD_RE = re.compile(
+    r"(?<![\w'])(?:\(\s*(?P<tuple>\w+(?:\s*,\s*\w+)+)\s*\)"
+    r"|(?P<col>[a-z_]\w*)(?P<sub>\s*\[[^\]]+\])?)\s*"
+    r"(?P<op><=|>=|<|>|=(?!=)"
+    r"|\b(?:IN|LIKE|BETWEEN|CONTAINS\s+KEY|CONTAINS)\b)",
+    re.IGNORECASE,
+)
+_BOUNDARY_RE = re.compile(r"[()\[\]]|\b(?:AND|OR)\b", re.IGNORECASE)
+_OP_KINDS = {
+    "=": "eq", "IN": "in", "<": "range", "<=": "range", ">": "range",
+    ">=": "range", "BETWEEN": "between", "CONTAINS": "contains",
+    "CONTAINS KEY": "contains_key", "LIKE": "like",
+}
+
+
+@dataclass(frozen=True)
+class _Rel:
+    """One relation of a WHERE clause. ``cols`` is its column, or a tuple
+    relation's columns; ``kind`` one of eq, in, range, between,
+    contains, contains_key, entries (``col[k] = v``), like or other;
+    ``terms`` its right-hand side as written, trimmed: the whole RHS up
+    to the next AND / OR / closing parenthesis, BETWEEN's two bounds, or
+    each IN item; ``top`` whether it is a conjunct of the clause itself
+    (not nested in parentheses or under OR); ``start`` / ``end`` its
+    span in the clause."""
+
+    cols: tuple[str, ...]
+    kind: str
+    op: str
+    terms: tuple[_Masked, ...]
+    top: bool
+    start: int
+    end: int
+
+    def lits(self, classes) -> tuple[str, ...] | None:
+        """The terms when every one is a complete literal of one of
+        ``classes`` (``str``, ``int``, ``dec``, ``bool``), else None: an
+        expression (``5 + 1``) or a literal of another class (``5e2``
+        where integers are asked for) never passes."""
+        for t in self.terms:
+            m = _LIT_RE.fullmatch(t)
+            if m is None or m.lastgroup not in classes:
+                return None
+        return self.terms or None
+
+
+@dataclass(frozen=True)
+class _Restrictions:
+    """A WHERE clause analysed once (the reference's
+    StatementRestrictions): every reader of the clause — the ALLOW
+    FILTERING and partition-key gates, the pinned read, the index prunes
+    and the IN guardrails — reads these relations instead of scanning
+    the text again."""
+
+    text: _Masked
+    rels: tuple[_Rel, ...]
+    conjunctive: bool  # no OR / NOT outside string literals
+    uses_token: bool  # token( outside string literals
+    words: frozenset[str]  # identifiers and keywords outside literals
+
+    def columns(self, columns) -> set[str]:
+        """The ``columns`` the clause names outside string literals."""
+        return (self.words - _CQL_KEYWORDS) & set(columns)
+
+    def top(self, col: str, kinds, classes) -> list[_Rel]:
+        """The top-level conjuncts on ``col`` of one of ``kinds`` whose
+        terms are all complete literals of ``classes``, when the clause
+        is a pure conjunction (a conjunct under OR / NOT prunes
+        nothing)."""
+        if not self.conjunctive:
+            return []
+        return [
+            r for r in self.rels
+            if r.top and r.cols == (col,) and r.kind in kinds
+            and r.lits(classes)
+        ]
+
+    def kinds(self, col: str) -> set[str]:
+        """The kinds of the relations on ``col``: a tuple relation counts
+        as its per-column expansion (``=`` and IN pin every component,
+        a range pins the leading ones and bounds each), BETWEEN as a
+        range; ``other`` shapes restrict nothing the gate can admit."""
+        out = set()
+        for r in self.rels:
+            if col not in r.cols:
+                continue
+            if len(r.cols) > 1:
+                if r.kind in ("eq", "in"):
+                    out.add("eq")
+                elif r.kind == "range":
+                    out.add("range")
+                    if col != r.cols[-1]:
+                        out.add("eq")
+            elif r.kind == "between":
+                out.add("range")
+            elif r.kind != "other":
+                out.add(r.kind)
+        return out
+
+
+def _rhs_end(masked: str, start: int, between: bool):
+    """(end, stop, mid) of the right-hand side starting at ``start``: it
+    runs to the next AND / OR outside brackets ('AND' / 'OR' in
+    ``stop``), an unmatched ')' (``stop`` ')') or the end (''); BETWEEN's
+    own AND is skipped and returned as ``mid``."""
+    depth, mid = 0, None
+    for b in _BOUNDARY_RE.finditer(masked, start):
+        tok = b.group().upper()
+        if tok in ("(", "["):
+            depth += 1
+        elif tok in (")", "]"):
+            if depth == 0:
+                return b.start(), ")", mid
+            depth -= 1
+        elif depth == 0:
+            if between and mid is None and tok == "AND":
+                mid = b.start()
+                continue
+            return b.start(), tok, mid
+    return len(masked), "", mid
+
+
+def _analyse_where(where: str) -> _Restrictions:
+    """Analyse a WHERE clause once, over its literal-masked copy: the
+    relations (column, kind, literal terms sliced from the original,
+    top-level or not), whether the clause is a pure conjunction, whether
+    it calls token(), and the words it names outside literals. Nothing
+    inside a string literal — a column name, an operator, OR, LIMIT,
+    token(, CONTAINS — is read as structure."""
+    w = _masked(where)
+    masked = w.masked
+    rels = []
+    for m in _REL_HEAD_RE.finditer(masked):
+        col = m.group("col")
+        if col is not None and col.lower() in _CQL_KEYWORDS:
+            continue
+        op = " ".join(m.group("op").upper().split())
+        end, stop, mid = _rhs_end(masked, m.end(), op == "BETWEEN")
+        end = len(masked[:end].rstrip())
+        rhs = w.part(m.end(), end).trim()
+        if mid is not None:
+            terms = (w.part(m.end(), mid).trim(), w.part(mid + 3, end).trim())
+        elif op == "IN" and _is_group(rhs):
+            terms = tuple(_split_commas(rhs.part(1, len(rhs) - 1)))
         else:
-            cur.append(ch)
-    out.append("".join(cur).strip())
-    return [t for t in out if t]
+            terms = (rhs,)
+        kind = _OP_KINDS[op]
+        if m.group("tuple"):
+            cols = tuple(
+                c.strip().lower() for c in m.group("tuple").split(",")
+            )
+            kind = kind if kind in ("eq", "in", "range") else "other"
+        else:
+            cols = (col.lower(),)
+            if m.group("sub"):
+                kind = "entries" if op == "=" else "other"
+        before = masked[: m.start()]
+        top = (
+            stop in ("AND", "")
+            and before.count("(") == before.count(")")
+            and re.fullmatch(r"(?:.*\bAND)?\s*", before, re.I | re.S)
+            is not None
+        )
+        rels.append(_Rel(cols, kind, op, terms, top, m.start(), end))
+    words = frozenset(t.lower() for t in _IDENT_RE.findall(masked))
+    return _Restrictions(
+        text=w,
+        rels=tuple(rels),
+        conjunctive=not words & {"or", "not"},
+        uses_token=re.search(r"\btoken\s*\(", masked, re.I) is not None,
+        words=words,
+    )
 
 
-def _rewrite_tuple_relations(where: str, meta) -> str:
+def _rewrite_list_literals(where: str) -> _Masked:
+    """``[a, b]`` → ``array(a, b)`` outside string literals, nested
+    literals included, skipping subscripts (bracket groups attached to
+    an identifier/']'/')'/a literal — with or without intervening
+    whitespace, both legal CQL). An unterminated group stays as it is."""
+    w = _masked(where)
+    masked = w.masked
+    parts, pos, i = [], 0, 0
+    while i < len(masked):
+        if masked[i] != "[":
+            i += 1
+            continue
+        prev = masked[:i].rstrip()[-1:]
+        if prev and (prev.isalnum() or prev in "_])'"):
+            i += 1  # a subscript
+            continue
+        j = _scan_to_close(masked, i)
+        if j is None or masked[j - 1] != "]":
+            i += 1
+            continue
+        parts += [
+            w.part(pos, i), "array(",
+            _rewrite_list_literals(w.part(i + 1, j - 1)), ")",
+        ]
+        pos = i = j
+    return _join([*parts, w.part(pos, len(w))])
+
+
+def _rewrite_where(
+    where: str, map_cols: frozenset[str] = frozenset()
+) -> _Masked:
+    """CQL-only surface forms → Spark SQL equivalents, rewritten outside
+    string literals only. ``map_cols`` names the MAP-typed columns: CQL
+    ``CONTAINS`` on a map is VALUE-side containment (the reference's
+    rule), which Spark spells ``array_contains(map_values(col), v)``."""
+    # col CONTAINS KEY v  →  map_contains_key(col, v)
+    where = _sub_quoted(
+        r"(\w+)\s+CONTAINS\s+KEY\s+('[^']*'|\S+)",
+        lambda s, m: f"map_contains_key({_grp(s, m, 1)}, {_grp(s, m, 2)})",
+        where,
+    )
+
+    # col CONTAINS v  →  array_contains(col, v); map columns check values
+    def _contains(s: str, m: re.Match) -> str:
+        col, v = _grp(s, m, 1), _grp(s, m, 2)
+        if col.lower() in map_cols:
+            return f"array_contains(map_values({col}), {v})"
+        return f"array_contains({col}, {v})"
+
+    where = _sub_quoted(r"(\w+)\s+CONTAINS\s+('[^']*'|\S+)", _contains, where)
+    # [..] literal → array(..): CQL frozen-list equality for FULL-indexed
+    # columns
+    where = _rewrite_list_literals(where)
+    # token(pk) → cassandra_token(pk): bit-exact Murmur3Partitioner
+    # tokens (operators/murmur3.py), registered per session by
+    # cql_select, so a driver-supplied token bound matches production
+    return _sub_quoted(r"\btoken\s*\(", lambda s, m: "cassandra_token(", where)
+
+
+def _rewrite_tuple_relations(r: _Restrictions, meta) -> _Masked:
     """Multi-column clustering relations ``(c1, c2) >= (x, y)`` (`[C*
-    cql3/restrictions/MultiColumnRestriction, unverified]`) expanded to
-    the equivalent boolean form — the same fully-pushdown-able
-    disjunction of per-column range filters the batch tier uses
-    (p3_tuple_range) and the keyset pager emits for its resume cursor.
-    The named columns must be a contiguous run of clustering columns in
-    declared order, like the reference's validation. The comparison
-    respects the CLUSTERING ORDER: a DESC column's component flips its
-    value comparison (rows "greater" in clustering order have SMALLER
-    values), matching the reference's slice semantics."""
+    cql3/restrictions/MultiColumnRestriction, unverified]`) of the
+    analysed clause ``r`` expanded to the equivalent boolean form — the
+    same fully-pushdown-able disjunction of per-column range filters the
+    batch tier uses (p3_tuple_range) and the keyset pager emits for its
+    resume cursor; ``(c1, c2) IN ((1, 2), (3, 4))`` (`[C* cql3/
+    restrictions/MultiColumnRestriction.InRestriction, unverified]`)
+    becomes a disjunction of per-tuple equality conjunctions. The named
+    columns must be a contiguous run of clustering columns in declared
+    order, like the reference's validation. The comparison respects the
+    CLUSTERING ORDER: a DESC column's component flips its value
+    comparison (rows "greater" in clustering order have SMALLER values),
+    matching the reference's slice semantics."""
     ck = list(meta.clustering_cols)
     desc = {
         c.lstrip("-") for c in meta.clustering if str(c).startswith("-")
     }
 
-    def _validate(cols: list[str]) -> None:
+    def _values(cols: list[str], group: _Masked, what: str):
+        vals = _split_commas(group.part(1, len(group) - 1))
+        if len(vals) != len(cols):
+            raise CQLError(
+                f"{what} arity mismatch: {len(cols)} "
+                f"columns vs {len(vals)} values"
+            )
+        return vals
+
+    def _any(terms) -> list:
+        """``((a AND b ...) OR ...)`` of per-column conjuncts, as pieces."""
+        out = ["("]
+        for i, parts in enumerate(terms):
+            out += [" OR ("] if i else ["("]
+            for j, p in enumerate(parts):
+                out += [" AND ", *p] if j else p
+            out.append(")")
+        return out + [")"]
+
+    w, parts, pos = r.text, [], 0
+    for rel in r.rels:
+        cols = list(rel.cols)
+        if len(cols) < 2 or rel.kind not in ("eq", "in", "range"):
+            continue
+        if rel.kind != "in" and not _is_group(rel.terms[0]):
+            continue
         if not set(cols) <= set(ck):
             raise CQLError(
                 "multi-column relations are only supported on clustering "
                 f"columns (got {cols}, clustering {ck})"
             )
-        start = ck.index(cols[0])
-        if ck[start : start + len(cols)] != cols:
+        first = ck.index(cols[0])
+        if ck[first : first + len(cols)] != cols:
             raise CQLError(
                 "multi-column relation columns must be a contiguous run "
                 f"of the clustering key in declared order ({ck})"
             )
-
-    # the IN variant first: `(c1, c2) IN ((1, 2), (3, 4))` → a
-    # disjunction of per-tuple equality conjunctions (`[C* cql3/
-    # restrictions/MultiColumnRestriction.InRestriction, unverified]`).
-    # Scanned, not regexed — the value list nests parentheses. Both
-    # searches run over the QUOTE-MASKED text so a string literal that
-    # happens to contain tuple-relation-looking text is never rewritten
-    # (positions map 1:1 back onto the original).
-    while True:
-        m_in = _TUPLE_IN_HEAD_RE.search(_mask_quoted(where))
-        if not m_in:
-            break
-        cols = [c.strip().lower() for c in m_in.group("cols").split(",")]
-        _validate(cols)
-        end = _scan_to_close(where, m_in.end() - 1)
-        body = where[m_in.end() : end - 1].strip()
-        terms = []
-        i = 0
-        while i < len(body):
-            if body[i] == "(":
-                j = _scan_to_close(body, i)
-                vals = _split_quoted_csv(body[i + 1 : j - 1])
-                if len(vals) != len(cols):
-                    raise CQLError(
-                        f"multi-column IN arity mismatch: {len(cols)} "
-                        f"columns vs {len(vals)} values"
-                    )
-                terms.append(
-                    "(" + " AND ".join(
-                        f"{c} = {v}" for c, v in zip(cols, vals)
-                    ) + ")"
-                )
-                i = j
-            elif body[i] in ", \t\n":
-                i += 1
-            else:
+        if rel.kind == "in":
+            if not all(_is_group(t) for t in rel.terms):
                 raise CQLError(
-                    f"multi-column IN takes a list of tuples: {body!r}"
+                    "multi-column IN takes a list of tuples: "
+                    f"{', '.join(rel.terms)!r}"
                 )
-        if not terms:
-            raise CQLError("multi-column IN needs at least one tuple")
-        where = (
-            where[: m_in.start()]
-            + "(" + " OR ".join(terms) + ")"
-            + where[end:]
-        )
-
-    def _expand(cols_txt: str, op: str, vals_txt: str) -> str:
-        cols = [c.strip().lower() for c in cols_txt.split(",")]
-        vals = _split_quoted_csv(vals_txt)
-        _validate(cols)
-        if len(vals) != len(cols):
-            raise CQLError(
-                f"multi-column relation arity mismatch: {len(cols)} "
-                f"columns vs {len(vals)} values"
-            )
-        if op == "=":
-            return "(" + " AND ".join(
-                f"{c} = {v}" for c, v in zip(cols, vals)
-            ) + ")"
-        base, final_strict = op[0], len(op) == 1
-
-        def comp(col: str, val: str, strict: bool) -> str:
-            o = base
-            if col in desc:
-                o = "<" if o == ">" else ">"
-            return f"{col} {o}{'' if strict else '='} {val}"
-
-        terms = []
-        for k in range(len(cols)):
-            parts = [f"{cols[j]} = {vals[j]}" for j in range(k)]
-            parts.append(
-                comp(cols[k], vals[k], k < len(cols) - 1 or final_strict)
-            )
-            terms.append("(" + " AND ".join(parts) + ")")
-        return "(" + " OR ".join(terms) + ")"
-
-    # comparison form: finditer over the masked text, splice the ORIGINAL
-    # by the match spans (group contents are read from the original, so
-    # literal values — including ones containing parens — survive intact)
-    masked = _mask_quoted(where)
-    out, pos = [], 0
-    for m in _TUPLE_REL_RE.finditer(masked):
-        out.append(where[pos : m.start()])
-        out.append(
-            _expand(
-                where[m.start("cols") : m.end("cols")],
-                where[m.start("op") : m.end("op")],
-                where[m.start("vals") : m.end("vals")],
-            )
-        )
-        pos = m.end()
-    out.append(where[pos:])
-    return "".join(out)
+            if not rel.terms:
+                raise CQLError("multi-column IN needs at least one tuple")
+            terms = [
+                [[f"{c} = ", v] for c, v in zip(cols, _values(
+                    cols, t, "multi-column IN"
+                ))]
+                for t in rel.terms
+            ]
+            expansion = _any(terms)
+        else:
+            vals = _values(cols, rel.terms[0], "multi-column relation")
+            if rel.op == "=":
+                expansion = _any(
+                    [[[f"{c} = ", v] for c, v in zip(cols, vals)]]
+                )[1:-1]
+            else:
+                base, final_strict = rel.op[0], len(rel.op) == 1
+                terms = []
+                for k, col in enumerate(cols):
+                    o = base
+                    if col in desc:
+                        o = "<" if o == ">" else ">"
+                    eq = "" if k < len(cols) - 1 or final_strict else "="
+                    terms.append(
+                        [[f"{cols[j]} = ", vals[j]] for j in range(k)]
+                        + [[f"{col} {o}{eq} ", vals[k]]]
+                    )
+                expansion = _any(terms)
+        parts += [w.part(pos, rel.start), *expansion]
+        pos = rel.end
+    return _join([*parts, w.part(pos, len(w))])
 
 
 def _composite_token_rewrite(text: str, meta, dtypes, spark) -> str:
@@ -489,7 +625,9 @@ def _composite_token_rewrite(text: str, meta, dtypes, spark) -> str:
         return text
     types = {c.lower(): t for c, t in dtypes.items()}
 
-    def _sub(m: re.Match) -> str:
+    def _sub(_src: str, m: re.Match) -> str:
+        # the arguments are read from the masked copy: a literal
+        # argument can never equal the key's column list
         args = [a.strip().lower() for a in m.group(1).split(",") if a.strip()]
         if args != pk:
             raise CQLError(
@@ -504,9 +642,7 @@ def _composite_token_rewrite(text: str, meta, dtypes, spark) -> str:
         except ValueError as e:
             raise CQLError(str(e)) from None
 
-    return re.sub(
-        r"\bcassandra_token\s*\(([^()]*)\)", _sub, text, flags=re.IGNORECASE
-    )
+    return str(_sub_quoted(r"\bcassandra_token\s*\(([^()]*)\)", _sub, text))
 
 
 def _split_projection(proj: str) -> list[str]:
@@ -1102,10 +1238,12 @@ def cql_select(
     key_cols = set(meta.partition_key) | set(meta.clustering_cols)
 
     if s.where:
-        # multi-column clustering relations expand FIRST, so the gate and
-        # every later rewrite see plain per-column range relations
-        where_text = _rewrite_tuple_relations(s.where, meta)
-        restricted = _where_columns(where_text, columns)
+        r = s.restrictions
+        # multi-column clustering relations expand first; the gate reads
+        # their components from the analysis as the expansion's per-column
+        # eq / range relations
+        where_sql = _rewrite_tuple_relations(r, meta)
+        restricted = r.columns(columns)
         non_key = restricted - key_cols
         # clustering restrictions are free only under a restricted
         # partition key (the reference's slice rule: without the
@@ -1116,7 +1254,7 @@ def cql_select(
         # clustering-prefix CONTIGUITY is not enforced.
         if not set(meta.partition_key) <= restricted:
             non_key = non_key | (restricted & set(meta.clustering_cols))
-        uses_token = re.search(r"\btoken\s*\(", where_text, re.IGNORECASE)
+        uses_token = r.uses_token
         # a PARTIAL composite-partition-key restriction is a filtered
         # ring scan, exactly like a restricted clustering column without
         # its partition — the reference demands ALLOW FILTERING for it
@@ -1128,21 +1266,12 @@ def cql_select(
         # admits a lone equality restriction without ALLOW FILTERING
         # (the reference's 2i-on-partition-component rule — indexable
         # since the key is composite; a range still filters)
-        _idx2i = set(getattr(meta, "indexed", ()))
         pk_index_served = (
             len(pk_set) > 1
             and bool(pk_restricted)
-            and pk_restricted <= _idx2i
+            and pk_restricted <= set(getattr(meta, "indexed", ()))
             and all(
-                re.search(
-                    rf"\b{re.escape(c)}(?!\w)\s*=[^=]", where_text,
-                    re.IGNORECASE,
-                )
-                and not re.search(
-                    rf"\b{re.escape(c)}(?!\w)\s*"
-                    rf"(<|>|LIKE\b|BETWEEN\b|CONTAINS\b|IN\b)",
-                    where_text, re.IGNORECASE,
-                )
+                "eq" in r.kinds(c) and r.kinds(c) <= {"eq", "entries"}
                 for c in pk_restricted
             )
         )
@@ -1159,6 +1288,22 @@ def cql_select(
                 f"{sorted(pk_set - restricted)}); restrict every "
                 "component or use ALLOW FILTERING"
             )
+        # non-equality restrictions on PARTITION KEY components are a
+        # filtered ring scan — the reference admits only EQ / IN on the
+        # partition key unless token() reframes it or ALLOW FILTERING
+        # makes the scan explicit (`[C* cql3/restrictions/
+        # PartitionKeyRestrictions, unverified]`)
+        if (
+            pk_restricted and not uses_token and not s.allow_filtering
+            and not pk_index_served
+            and any(r.kinds(c) - {"eq", "in"} for c in pk_restricted)
+        ):
+            raise CQLError(
+                "Only EQ and IN relation are supported on the "
+                "partition key (unless you use the token() function "
+                "or ALLOW FILTERING)"
+            )
+
         # a secondary index admits restrictions on its column without
         # ALLOW FILTERING (the reference's 2i rule), but the index KIND
         # must match the predicate: a values index admits equality /
@@ -1170,49 +1315,6 @@ def cql_select(
         # range / CONTAINS (+ CONTAINS KEY and entries on maps) but NOT
         # LIKE; SASI admits equality / range / LIKE. Plain 2i range
         # predicates always still need ALLOW FILTERING.
-        def _restrictions(col: str) -> set[str]:
-            kinds = set()
-            for m_ in re.finditer(
-                rf"\b{re.escape(col)}(?!\w)\s*"
-                rf"(\[[^\]]+\]\s*=|=[^=]|<=|>=|<|>|LIKE\b|BETWEEN\b"
-                rf"|CONTAINS(?:\s+KEY)?\b)",
-                where_text,
-                re.IGNORECASE,
-            ):
-                tok = m_.group(1).upper()
-                if tok.startswith("["):
-                    kinds.add("entries")
-                elif tok.startswith("CONTAINS"):
-                    kinds.add("keys" if "KEY" in tok else "contains")
-                elif tok == "LIKE":
-                    kinds.add("like")
-                elif tok == "BETWEEN" or tok[0] in "<>":
-                    # CQL 5.0 BETWEEN (CASSANDRA-18584) is an inclusive
-                    # range restriction — same gate class as </>
-                    kinds.add("range")
-                else:
-                    kinds.add("eq")
-            return kinds
-
-        # non-equality restrictions on PARTITION KEY components are a
-        # filtered ring scan — the reference admits only EQ / IN on the
-        # partition key unless token() reframes it or ALLOW FILTERING
-        # makes the scan explicit (`[C* cql3/restrictions/
-        # PartitionKeyRestrictions, unverified]`)
-        if (
-            pk_restricted and not uses_token and not s.allow_filtering
-            and not pk_index_served
-        ):
-            pk_kinds = set()
-            for c in pk_restricted:
-                pk_kinds |= _restrictions(c)
-            if pk_kinds - {"eq"}:
-                raise CQLError(
-                    "Only EQ and IN relation are supported on the "
-                    "partition key (unless you use the token() function "
-                    "or ALLOW FILTERING)"
-                )
-
         val_idx = set(getattr(meta, "indexed", ()))
         key_idx = set(getattr(meta, "indexed_keys", ()))
         sai_idx = set(getattr(meta, "indexed_sai", ()))
@@ -1221,7 +1323,7 @@ def cql_select(
         sasi_idx = set(getattr(meta, "indexed_sasi", ()))
         indexed_ok = set()
         for c in non_key:
-            kinds = _restrictions(c)
+            kinds = r.kinds(c) - {"in"}
             if not kinds:
                 # the column appears in WHERE outside every recognized
                 # predicate shape (IN list, IS NOT NULL, function args):
@@ -1232,7 +1334,8 @@ def cql_select(
                 continue
             admitted = set()
             if c in sai_idx:
-                admitted |= {"eq", "range", "contains", "keys", "entries"}
+                admitted |= {"eq", "range", "contains", "contains_key",
+                             "entries"}
             if c in sasi_idx:
                 admitted |= {"eq", "range", "like"}
                 if "like" in kinds:
@@ -1241,12 +1344,17 @@ def cql_select(
                     # unverified]`): PREFIX (default) = 'pre%' only,
                     # CONTAINS = any, SPARSE (dense numerics) = none
                     mode = dict(getattr(meta, "sasi_mode", ())).get(c)
-                    pats = _like_patterns(where_text, c)
                     if mode == "SPARSE":
                         raise CQLError(
                             f"LIKE is not supported on the SPARSE-mode "
                             f"SASI index of {c!r}"
                         )
+                    pats = [
+                        lit[1:-1].replace("''", "'")
+                        for rel in r.rels
+                        if rel.cols == (c,) and rel.kind == "like"
+                        for lit in rel.lits(("str",)) or ()
+                    ]
                     if mode != "CONTAINS" and any(
                         not re.fullmatch(r"[^%]+%", p) for p in pats
                     ):
@@ -1259,7 +1367,7 @@ def cql_select(
             if c in val_idx:
                 admitted |= {"eq", "contains"}
             if c in key_idx:
-                admitted |= {"keys"}
+                admitted |= {"contains_key"}
             if c in ent_idx:
                 admitted |= {"entries"}
             if c in full_idx:
@@ -1277,11 +1385,12 @@ def cql_select(
         )
         if uses_token:
             murmur3.ensure_token_registered(spark)
-        where_expr = _rewrite_where(where_text, map_cols)
+        where_expr = _rewrite_where(where_sql, map_cols)
         if uses_token:
             where_expr = _composite_token_rewrite(
                 where_expr, meta, dtypes, spark
             )
+        where_expr = str(where_expr)
         df = df.filter(where_expr)
 
     if s.distinct:

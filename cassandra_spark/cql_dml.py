@@ -510,6 +510,38 @@ def _json_text(v) -> str:
     return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
 
 
+def _cql_literal(x, typ: str) -> str:
+    """A JSON value as the CQL literal of type ``typ`` the VALUES form
+    carries: strings quoted, numbers and booleans bare, a struct's object
+    with bare field names, a map's keys as literals, lists and sets
+    bracketed."""
+    if x is None:
+        return "null"
+    if isinstance(x, bool):
+        return "true" if x else "false"
+    if isinstance(x, (int, float)):
+        return repr(x)
+    if isinstance(x, str):
+        return "'" + x.replace("'", "''") + "'"
+    fields = parse_struct_type(typ)
+    coll = parse_coll_type(typ) if is_coll_type(typ) else None
+    if isinstance(x, dict) and fields is not None:
+        types = dict(fields)
+        return "{" + ", ".join(
+            f"{k}: {_cql_literal(v, types.get(k.lower(), ''))}"
+            for k, v in x.items()
+        ) + "}"
+    if isinstance(x, dict) and coll is not None and coll[0] == "map":
+        return "{" + ", ".join(
+            f"{_cql_literal(k, coll[1])}: {_cql_literal(v, coll[2])}"
+            for k, v in x.items()
+        ) + "}"
+    if isinstance(x, list) and coll is not None:
+        o, c = ("{", "}") if coll[0] == "set" else ("[", "]")
+        return o + ", ".join(_cql_literal(v, coll[1]) for v in x) + c
+    raise CQLError(f"unsupported JSON value for {typ!r}: {x!r}")
+
+
 def _field_value(ftype: str):
     """Canonical-string field value → the Python value json.dumps renders
     exactly as Spark's to_json() would for the field's Spark type: the
@@ -1890,7 +1922,8 @@ class CqlTable:
             # statics are partition-scoped and not implicitly deleted by a
             # row insert
             for c in s.regular:
-                pairs.setdefault(c, ("scalar", None))
+                kind = "udt" if self._ct.cols[c].kind == "udt" else "scalar"
+                pairs.setdefault(c, (kind, None))
         return pairs
 
     def _json_value(self, col: str, v):
@@ -1909,7 +1942,12 @@ class CqlTable:
                 return x
             raise CQLError(f"unsupported JSON value for {col!r}: {x!r}")
 
-        if column is not None and column.kind in ("struct", "udt"):
+        if column is not None and column.kind == "udt":
+            # field cells through the VALUES form's codec
+            if v is not None and not isinstance(v, dict):
+                raise CQLError(f"struct column {col!r} needs a JSON object")
+            return "udt", column.lit(_cql_literal(v, column.typ))
+        if column is not None and column.kind == "struct":
             if v is None:
                 return "scalar", None
             if not isinstance(v, dict):
@@ -3291,7 +3329,10 @@ class CqlTable:
         bandwidth and never materializes a row on the driver). The input
         must carry the primary-key columns plus any subset of SCALAR
         regular columns; collections/UDTs/static/counter columns are
-        rejected (load those through the statement path). Key columns
+        rejected (load those through the statement path). Int-family
+        values are validated and canonicalized as a statement's are: a
+        malformed or out-of-range one raises CQLError and the load writes
+        nothing. Key columns
         must be of exact-text key types (integer widths / text): a
         double/boolean key's literal text could differ from Spark's
         cast-to-string form and the same logical key would never merge
@@ -3388,10 +3429,23 @@ class CqlTable:
                 F.lit(None).cast("boolean").alias("hi_incl"),
             )
 
+        # the statement path's write-time rule: an int-family value must
+        # read back through the column's cast, so its canonicalizer runs
+        # over every value a narrower-or-equal integer type cannot vouch
+        # for, inside the load's own Spark job
+        src_types = dict(df.dtypes)
         parts = [mut(None, F.lit(None), MARKER)]
         for c in payload:
+            col, val = self._ct.cols[c], F.col(c)
+            if col.norm is not None and _INT_BITS.get(
+                src_types[c], 99
+            ) > _INT_BITS[col.typ.strip().lower()]:
+                val = F.udf(
+                    lambda v, canon=col.norm: None if v is None else canon(v),
+                    "string",
+                )(val.cast("string"))
             parts.append(
-                mut(c, F.col(c), CELL).filter(F.col("val").isNotNull())
+                mut(c, val, CELL).filter(F.col("val").isNotNull())
             )
         out = parts[0]
         for p_ in parts[1:]:
@@ -3401,7 +3455,17 @@ class CqlTable:
         from cassandra_spark.operators.compaction import DEFAULT_BUCKETS
 
         self._ensure_spill_dir()
-        files = self._merge_spark(out, "bulk", n_segments or DEFAULT_BUCKETS)
+        try:
+            files = self._merge_spark(
+                out, "bulk", n_segments or DEFAULT_BUCKETS
+            )
+        except Exception as exc:
+            # a value the canonicalizer refused fails the job, which
+            # leaves no segment behind
+            bad = re.search(r"CQLError: (invalid [^\n]*)", str(exc))
+            if bad is None:
+                raise
+            raise CQLError(bad.group(1)) from None
         if not files:
             return 0
         # validate and count the WRITTEN segments, executor-side: a

@@ -30,12 +30,18 @@ from __future__ import annotations
 
 import os
 import re
+from math import prod
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_spark.catalog import TableMeta
-from cassandra_spark.cql import CQLError, cql_select, reads_cell_metadata
+from cassandra_spark.cql import (
+    CQLError,
+    _parse,
+    cql_select,
+    reads_cell_metadata,
+)
 from cassandra_spark.cql_dml import (
     _BATCH_RE,
     DURATION_STRUCT,
@@ -1846,52 +1852,6 @@ class CqlSession:
                 build_lsh_bucket_index(self.spark, self.sf_dir, tname, col)
             )
 
-    def _check_in_guardrail(self, stmt: str, key: str) -> None:
-        """partition_keys_in_select guardrail (`[C* db/guardrails ::
-        partitionKeysInSelect, unverified]`): the size of a partition-key
-        IN list bounds the multi-partition fan-out one SELECT may ask a
-        coordinator for. Quote-masked so commas inside string literals
-        never miscount."""
-        if "partition_keys_in_select" not in self.guardrails:
-            return
-        if key in self.tables:
-            pk_cols = self.tables[key].schema.partition_cols
-        else:
-            from cassandra_spark.catalog import SCHEMA
-
-            # catalog tables are keyspace-less: fall back to the bare name
-            meta = SCHEMA.get(self._key_bare(key) if "." in key else key)
-            if meta is None:
-                return
-            pk_cols = meta.partition_key
-        masked = re.sub(
-            r"'(?:[^']|'')*'",
-            lambda m: "'" + "_" * (len(m.group(0)) - 2) + "'",
-            stmt,
-        )
-        # the guardrail bounds SELECTED PARTITIONS: with a composite key,
-        # per-component IN lists multiply (the reference's fan-out is the
-        # cartesian product of the component restrictions)
-        fanout = 1
-        hit = False
-        for pk_col in pk_cols:
-            im = re.search(
-                rf"\b{re.escape(pk_col)}\s+IN\s*\(([^)]*)\)", masked,
-                re.IGNORECASE,
-            )
-            if im:
-                hit = True
-                fanout *= im.group(1).count(",") + 1
-        if not hit:
-            return
-        from cassandra_spark.cql_dml import check_guardrail
-
-        check_guardrail(
-            self.guardrails, self.client_warnings,
-            "partition_keys_in_select", fanout,
-            f"partition keys in IN on {key!r}",
-        )
-
     def _select_key_cols(self, key: str) -> set[str]:
         if key in self.tables:
             s = self.tables[key].schema
@@ -1905,88 +1865,72 @@ class CqlSession:
             c.lower() for c in (*meta.partition_key, *meta.clustering)
         }
 
-    def _check_select_guardrails(self, stmt: str, key: str) -> None:
-        """The round-10 SELECT-side guardrails, enforced at the same
-        choke point as partition_keys_in_select:
+    def _check_select_guardrails(self, sel, key: str) -> None:
+        """The SELECT-side guardrails over the parsed statement ``sel``:
 
+        - ``partition_keys_in_select`` (`[C* db/guardrails ::
+          partitionKeysInSelect, unverified]`): the size of the
+          partition-key IN lists bounds the multi-partition fan-out one
+          SELECT may ask a coordinator for; with a composite key the
+          per-component lists multiply (the reference's fan-out is the
+          cartesian product of the component restrictions);
         - ``allow_filtering`` (`[C* db/guardrails :: allowFiltering,
           unverified]` — a boolean enable in the reference, mapped here
           to warn/fail thresholds over actual=1 per use);
         - ``in_select_cartesian_product`` (`[C* db/guardrails ::
           inSelectCartesianProduct, unverified]`): the product of the
           statement's key-column IN-list sizes — the number of
-          (partition, clustering) combinations one SELECT fans out to.
-          String literals are masked so commas inside them never
-          miscount."""
+          (partition, clustering) combinations one SELECT fans out to."""
         from cassandra_spark.cql_dml import check_guardrail
 
-        if "allow_filtering" in self.guardrails and re.search(
-            r"\bALLOW\s+FILTERING\b", stmt, re.IGNORECASE
-        ):
+        if sel is None:
+            return
+        r = sel.restrictions
+        ins = {
+            x.cols[0]: len(x.terms) for x in reversed(r.rels if r else ())
+            if x.kind == "in" and len(x.cols) == 1
+        }
+        if "partition_keys_in_select" in self.guardrails and ins:
+            if key in self.tables:
+                pk_cols = self.tables[key].schema.partition_cols
+            else:
+                from cassandra_spark.catalog import SCHEMA
+
+                # catalog tables are keyspace-less: the bare name
+                meta = SCHEMA.get(self._key_bare(key) if "." in key else key)
+                pk_cols = meta.partition_key if meta is not None else ()
+            sizes = [ins[c.lower()] for c in pk_cols if c.lower() in ins]
+            if sizes:
+                check_guardrail(
+                    self.guardrails, self.client_warnings,
+                    "partition_keys_in_select", prod(sizes),
+                    f"partition keys in IN on {key!r}",
+                )
+        if "allow_filtering" in self.guardrails and sel.allow_filtering:
             check_guardrail(
                 self.guardrails, self.client_warnings,
                 "allow_filtering", 1, "ALLOW FILTERING use",
             )
-        if "in_select_cartesian_product" not in self.guardrails:
+        if "in_select_cartesian_product" not in self.guardrails or r is None:
             return
         key_cols = self._select_key_cols(key)
-        if not key_cols:
-            return
-        masked = re.sub(
-            r"'(?:[^']|'')*'",
-            lambda m: "'" + "_" * (len(m.group(0)) - 2) + "'",
-            stmt,
-        )
-        product, found = 1, False
-        for im in re.finditer(
-            r"\b(\w+)\s+IN\s*\(([^)]*)\)", masked, re.IGNORECASE
-        ):
-            if im.group(1).lower() in key_cols:
-                found = True
-                product *= im.group(2).count(",") + 1
-        if found:
+        sizes = [
+            len(x.terms) for x in r.rels
+            if x.kind == "in" and len(x.cols) == 1 and x.cols[0] in key_cols
+        ]
+        if sizes:
             check_guardrail(
                 self.guardrails, self.client_warnings,
-                "in_select_cartesian_product", product,
+                "in_select_cartesian_product", prod(sizes),
                 f"IN cartesian product on {key!r}",
             )
 
-    def _masked_conjunctive_where(self, stmt: str, allow_in: bool = False):
-        """(where_text, offset_into_stmt) for a statement whose WHERE is
-        a pure conjunction, with string-literal CONTENT masked out
-        (length-preserving '_' runs, quotes kept) so structural regexes
-        are quote-aware — keywords INSIDE a quoted string can neither
-        truncate the WHERE extent nor hide an OR. None when there is no
-        WHERE or the clause carries OR/NOT, or IN unless ``allow_in``
-        (an indexed conjunct is not a safe partition pruner under
-        those). Literal text must be recovered from the ORIGINAL stmt by
-        offset (lengths match)."""
-        masked = re.sub(
-            r"'(?:[^']|'')*'",
-            lambda m: "'" + "_" * (len(m.group(0)) - 2) + "'",
-            stmt,
-        )
-        wm = re.search(
-            r"\bWHERE\b(.*?)(?:\bGROUP\s+BY\b|\bORDER\s+BY\b|"
-            r"\bPER\s+PARTITION\s+LIMIT\b|\bLIMIT\b|"
-            r"\bALLOW\s+FILTERING\b|$)",
-            masked,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not wm:
-            return None
-        where = wm.group(1)
-        banned = r"\b(OR|NOT)\b" if allow_in else r"\b(OR|NOT|IN)\b"
-        if re.search(banned, where, re.IGNORECASE):
-            return None
-        return where, wm.start(1)
-
-    def _pinned_pks(self, tname: str, stmt: str) -> list[str] | None:
+    def _pinned_pks(self, tname: str, r) -> list[str] | None:
         """The log partition keys a SELECT on session table ``tname``
-        can match, when its WHERE is a pure conjunction that pins every
-        partition-key component with ``=`` or ``IN`` literals (a
-        composite key pins the product of its components); None
-        otherwise. Only key types stored in one spelling per value
+        can match, when its analysed WHERE ``r`` is a pure conjunction
+        that pins every partition-key component with ``=`` or ``IN``
+        literals (a composite key pins the product of its components);
+        None otherwise. Only key types stored in one spelling per value
         qualify (INDEX_EQ_TYPES, see ``TableSchema.pk_norm``), text keys
         only with quoted literals and integer keys only with integer
         ones, so a pinned key is exactly the partition the typed WHERE
@@ -1994,46 +1938,23 @@ class CqlSession:
         cql_select re-applies the whole WHERE."""
         from itertools import product
 
-        from cassandra_spark.cql_dml import (
-            INDEX_EQ_TYPES,
-            SEP,
-            _parse_literal,
-            _split_csv,
-        )
+        from cassandra_spark.cql_dml import INDEX_EQ_TYPES, SEP, _parse_literal
 
         schema = self.tables[tname].schema
-        if any(
+        if r is None or any(
             schema.key_type(c) not in INDEX_EQ_TYPES
             for c in schema.partition_cols
         ):
             return None
-        mw = self._masked_conjunctive_where(stmt, allow_in=True)
-        if mw is None:
-            return None
-        where, w_off = mw
-        lit_re = r"'(?:[^']|'')*'|-?\d+|true|false"
         per_col = []
         for c in schema.partition_cols:
-            m = re.search(
-                rf"(?:^\s*|\bAND\s+){re.escape(c)}\s*"
-                rf"(?:=\s*(?P<eq>{lit_re})|\s+IN\s*\((?P<in>[^)]*)\))"
-                rf"(?=\s*(?:AND\b|;|$))",
-                where,
-                re.IGNORECASE,
-            )
-            if not m:
-                return None
-            g = "eq" if m.group("eq") is not None else "in"
-            toks = _split_csv(
-                stmt[w_off + m.start(g) : w_off + m.end(g)]
-            )
             typ = schema.key_type(c)
+            rels = r.top(c, ("eq", "in"), ("str",) if typ == "string"
+                         else ("str", "int", "bool"))
+            if not rels:
+                return None
             vals = []
-            for tok in toks:
-                if not re.fullmatch(lit_re, tok, re.IGNORECASE) or (
-                    typ == "string" and not tok.startswith("'")
-                ):
-                    return None
+            for tok in rels[0].terms:
                 v = schema.pk_norm(c, {c: _parse_literal(tok)})
                 if v is None:
                     continue  # a NULL key names no partition
@@ -2045,8 +1966,9 @@ class CqlSession:
             per_col.append(vals)
         return [SEP.join(p) for p in product(*per_col)]
 
-    def _read_frame(self, tname: str, stmt: str) -> DataFrame:
-        """The rows a SELECT on session table ``tname`` reads. When the
+    def _read_frame(self, tname: str, stmt: str, r=None) -> DataFrame:
+        """The rows a SELECT on session table ``tname`` reads (``r`` is
+        its analysed WHERE). When the
         statement's partitions are known — pinned by the WHERE
         (:meth:`_pinned_pks`) or the candidates of a 2i probe — they
         come from ``CqlTable.partition_frame``: a driver-side reconcile
@@ -2065,7 +1987,7 @@ class CqlSession:
         snapshot (their reconcile is a sum); a traced pinned counter
         read says so."""
         t = self.tables[tname]
-        pks = self._pinned_pks(tname, stmt)
+        pks = self._pinned_pks(tname, r)
         if t.schema.counter:
             if pks is not None and self._trace_acts is not None:
                 self._trace_acts.append(
@@ -2073,13 +1995,15 @@ class CqlSession:
                     "Spark reconcile"
                 )
             return t.snapshot()
-        if pks is None:
+        if pks is None and r is not None and "in" not in r.words:
+            # an indexed conjunct prunes only a pure conjunction without
+            # IN (the prunes read r.top, which checks the conjunction)
             for prune, probe in (
                 (self._indexed_eq_prune, t.index_candidate_pks),
                 (self._indexed_range_prune, t.index_candidate_pks_range),
                 (self._indexed_like_prune, t.index_candidate_pks_prefix),
             ):
-                hit = prune(tname, stmt)
+                hit = prune(tname, r)
                 if hit is not None:
                     pks = probe(*hit)
                     break
@@ -2090,26 +2014,17 @@ class CqlSession:
             self._trace_acts.extend(t.read_trace)
         return df
 
-    def _indexed_eq_prune(self, tname: str, stmt: str):
-        """(col, canonical literal) when the statement's WHERE carries a
-        conjunct an index can serve as a partition pruner: ``col = lit``
+    def _indexed_eq_prune(self, tname: str, r):
+        """(col, canonical literal) when the analysed WHERE ``r`` carries
+        a conjunct an index can serve as a partition pruner: ``col = lit``
         on a values- or SAI-indexed scalar, or ``col CONTAINS lit`` on a
         values-indexed collection (elements and map values log as
         individual cells, so the same value Bloom covers them). Only
         types that normalize losslessly qualify (INDEX_EQ_TYPES via
-        index_probe_type); None otherwise — full-scan filter, still
-        correct. Only pure conjunctions qualify: under OR/NOT/IN an
-        indexed conjunct is not a safe partition pruner.
-
-        The statement text is examined with string-literal contents
-        masked out (same-length placeholders), so keywords INSIDE a
-        quoted string ('no LIMIT here') can neither truncate the WHERE
-        extent nor hide an OR; and the literal must be a COMPLETE
-        conjunct RHS — followed by AND / end of clause — so expression
-        RHS like ``v = 5 + 1`` or ``v = 5e2`` never prunes on the
-        leading '5' while Catalyst evaluates the real expression.
-        Pruning is an optimization: whenever in doubt, return None and
-        the full-scan filter stays correct."""
+        index_probe_type), and only a complete string, integer or
+        boolean literal RHS: ``v = 5 + 1``, ``5e2`` or ``5.5`` never
+        prunes on a leading '5' while Catalyst evaluates the real
+        expression. None otherwise — full-scan filter, still correct."""
         from cassandra_spark.cql_dml import (
             _parse_literal,
             index_probe_type,
@@ -2121,103 +2036,51 @@ class CqlSession:
             | set(self.sai_indexes.get(tname, ()))
             | set(self.sasi_indexes.get(tname, ()))
         )
-        if not eq_cols:
-            return None
-        mw = self._masked_conjunctive_where(stmt)
-        if mw is None:
-            return None
-        where, w_off = mw
         schema = self.tables[tname].schema
-        lit_re = (
-            r"('(?:[^']|'')*'|-?\d+|[Tt][Rr][Uu][Ee]|[Ff][Aa][Ll][Ss][Ee])"
-        )
-        # a prunable conjunct starts at the WHERE clause or after AND,
-        # and its literal RHS runs to AND / ';' / end of the clause —
-        # anything else (arithmetic, float tail, function call) means the
-        # '=' RHS is an expression, which only Catalyst may evaluate
-        head_re = r"(?:^\s*|\b[Aa][Nn][Dd]\s+)"
-        tail_re = r"(?=\s*(?:[Aa][Nn][Dd]\b|;|$))"
         for col in sorted(eq_cols):
             if index_probe_type(schema, col) is None:
                 continue
             typ = schema.regular.get(col) or schema.static.get(col) or ""
-            is_coll = parse_coll_type(typ) is not None
-            if is_coll:
-                # values index on a collection admits CONTAINS (value-side
-                # for maps) — element cells make it the same probe
-                m = re.search(
-                    rf"{head_re}{re.escape(col)}\s+CONTAINS\s+(?!KEY\b)"
-                    rf"{lit_re}{tail_re}",
-                    where,
-                    re.IGNORECASE,
-                )
-            else:
-                m = re.search(
-                    rf"{head_re}{re.escape(col)}\s*(?<![!<>=\]])=(?!=)\s*"
-                    rf"{lit_re}{tail_re}",
-                    where,
-                )
-            if not m:
-                continue
-            try:
-                # group offsets are positions in the MASKED text; lengths
-                # are preserved, so the same span in stmt is the literal
-                lit = _parse_literal(
-                    stmt[w_off + m.start(1) : w_off + m.end(1)]
-                )
-            except CQLError:
-                continue
-            if lit is not None:
-                return col, lit
+            # values index on a collection admits CONTAINS (value-side
+            # for maps) — element cells make it the same probe
+            kind = "contains" if parse_coll_type(typ) is not None else "eq"
+            for rel in r.top(col, (kind,), ("str", "int", "bool"))[:1]:
+                try:
+                    lit = _parse_literal(rel.terms[0])
+                except CQLError:
+                    continue
+                if lit is not None:
+                    return col, lit
         return None
 
-    def _indexed_like_prune(self, tname: str, stmt: str):
-        """(col, prefix) when the statement's WHERE carries a
+    def _indexed_like_prune(self, tname: str, r):
+        """(col, prefix) when the analysed WHERE ``r`` carries a
         prefix-shaped ``col LIKE 'prefix%'`` conjunct on a SASI-indexed
         string column — SASI serves prefix searches from its index
         (`[C* index/sasi, unverified]`); contains/suffix shapes and
         patterns with '_' wildcards fall back to the full-scan filter
-        (correct, just unaccelerated). Same soundness rules as the
-        equality prune: quote-aware masking, pure conjunctions only."""
-        sasi_cols = set(self.sasi_indexes.get(tname, ()))
-        if not sasi_cols:
-            return None
-        mw = self._masked_conjunctive_where(stmt)
-        if mw is None:
-            return None
-        where, w_off = mw
+        (correct, just unaccelerated)."""
         schema = self.tables[tname].schema
-        head_re = r"(?:^\s*|\b[Aa][Nn][Dd]\s+)"
-        tail_re = r"(?=\s*(?:[Aa][Nn][Dd]\b|;|$))"
-        for col in sorted(sasi_cols):
+        for col in sorted(self.sasi_indexes.get(tname, ())):
             typ = schema.regular.get(col) or schema.static.get(col) or ""
             if typ != "string":
                 continue
-            m = re.search(
-                rf"{head_re}{re.escape(col)}\s+[Ll][Ii][Kk][Ee]\s+"
-                rf"('(?:[^']|'')*'){tail_re}",
-                where,
-            )
-            if not m:
-                continue
-            pat = stmt[w_off + m.start(1) + 1 : w_off + m.end(1) - 1]
-            pat = pat.replace("''", "'")
-            # prefix-shaped, no LIKE wildcards inside the prefix itself
-            if not re.fullmatch(r"[^%_]+%", pat):
-                continue
-            return col, pat[:-1]
+            for rel in r.top(col, ("like",), ("str",))[:1]:
+                pat = rel.terms[0][1:-1].replace("''", "'")
+                # prefix-shaped, no LIKE wildcards inside the prefix itself
+                if re.fullmatch(r"[^%_]+%", pat):
+                    return col, pat[:-1]
         return None
 
-    def _indexed_range_prune(self, tname: str, stmt: str):
-        """(col, lo, hi, lo_incl, hi_incl) when the statement's WHERE
+    def _indexed_range_prune(self, tname: str, r):
+        """(col, lo, hi, lo_incl, hi_incl) when the analysed WHERE ``r``
         carries numeric RANGE conjuncts (``col > lit``, ``>=``, ``<``,
-        ``<=``) on an SAI-indexed column of a range-orderable type —
-        SAI serves ranges from its index (`[C* index/sai, unverified]`),
-        a plain values index does not. Multiple conjuncts on the column
-        intersect into one [lo, hi] interval (literals compared as exact
-        Decimal). Same soundness rules as the equality prune: quote-
-        aware masking, pure conjunctions only, literal must be a
-        complete conjunct RHS. None → full-scan filter, still correct."""
+        ``<=``, ``BETWEEN a AND b``) on an SAI-indexed column of a
+        range-orderable type — SAI serves ranges from its index (`[C*
+        index/sai, unverified]`), a plain values index does not. Multiple
+        conjuncts on the column intersect into one [lo, hi] interval
+        (literals compared as exact Decimal). None → full-scan filter,
+        still correct."""
         from decimal import Decimal
 
         from cassandra_spark.cql_dml import index_range_type
@@ -2225,40 +2088,20 @@ class CqlSession:
         sai_cols = set(self.sai_indexes.get(tname, ())) | set(
             self.sasi_indexes.get(tname, ())
         )
-        if not sai_cols:
-            return None
-        mw = self._masked_conjunctive_where(stmt)
-        if mw is None:
-            return None
-        where, _w_off = mw
         schema = self.tables[tname].schema
-        num_re = r"(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
-        head_re = r"(?:^\s*|\b[Aa][Nn][Dd]\s+)"
-        tail_re = r"(?=\s*(?:[Aa][Nn][Dd]\b|;|$))"
         for col in sorted(sai_cols):
             if index_range_type(schema, col) is None:
                 continue
             lo = hi = None  # (Decimal, literal str, inclusive)
-            found = False
-            # `col BETWEEN a AND b` (CQL 5.0) normalizes to the same
-            # inclusive bound pair the <=/>= conjuncts feed below
-            rels = [
-                (m.group(1), m.group(2))
-                for m in re.finditer(
-                    rf"{head_re}{re.escape(col)}\s*(<=|>=|<|>)\s*"
-                    rf"{num_re}{tail_re}",
-                    where,
+            rels = []
+            for rel in r.top(col, ("range", "between"), ("int", "dec")):
+                # BETWEEN (CQL 5.0) is the inclusive bound pair
+                rels += (
+                    list(zip((">=", "<="), rel.terms))
+                    if rel.kind == "between" else [(rel.op, rel.terms[0])]
                 )
-            ]
-            for m in re.finditer(
-                rf"{head_re}{re.escape(col)}\s+[Bb][Ee][Tt][Ww][Ee][Ee][Nn]"
-                rf"\s+{num_re}\s+[Aa][Nn][Dd]\s+{num_re}{tail_re}",
-                where,
-            ):
-                rels += [(">=", m.group(1)), ("<=", m.group(2))]
             for op, lit in rels:
-                d = Decimal(lit)
-                found = True
+                lit, d = str(lit), Decimal(lit)
                 if op in (">", ">="):
                     incl = op == ">="
                     if (
@@ -2275,7 +2118,7 @@ class CqlSession:
                         or (d == hi[0] and hi[2] and not incl)
                     ):
                         hi = (d, lit, incl)
-            if found:
+            if rels:
                 return (
                     col,
                     lo[1] if lo else None,
@@ -2536,8 +2379,6 @@ class CqlSession:
         GROUP BY / DISTINCT / ORDER BY / ANN / PER PARTITION LIMIT don't
         page; the projection must retain the primary-key columns (use *
         or name them) since they carry the cursor."""
-        from cassandra_spark.cql import _parse
-
         if page_size < 1:
             raise CQLError("page_size must be positive")
         s = _parse(stmt)
@@ -3880,13 +3721,21 @@ class CqlSession:
                 # keyspace (catalog tables are keyspace-less and
                 # always addressed bare)
                 raise CQLError(f"unknown table {fm_.group(1)!r}")
-            self._check_in_guardrail(stmt, key)
-            self._check_select_guardrails(stmt, key)
+            # the statement's WHERE is analysed once here for the
+            # guardrails, the pinned read and the index prunes; a
+            # statement the parser rejects fails in cql_select below
+            try:
+                sel = _parse(stmt)
+            except CQLError:
+                sel = None
+            self._check_select_guardrails(sel, key)
             entry = None
             if key in self.tables:
                 self._check_perm("SELECT", key)
                 entry = (
-                    self._read_frame(key, stmt),
+                    self._read_frame(
+                        key, stmt, sel.restrictions if sel else None
+                    ),
                     self._meta(self.tables[key].schema, key),
                 )
             elif key in self.mat_views:

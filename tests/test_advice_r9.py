@@ -6,7 +6,14 @@ from __future__ import annotations
 
 import pytest
 
+from cassandra_spark.cql import _parse
 from cassandra_spark.cql_session import CqlSession
+
+
+def _prune(s, stmt):
+    """The equality prune of ``stmt``'s analysed WHERE, as the read
+    router runs it."""
+    return s._indexed_eq_prune("session.px", _parse(stmt).restrictions)
 
 
 def _session(spark, tmp_path):
@@ -29,22 +36,22 @@ def _session(spark, tmp_path):
 
 def test_prune_rejects_arithmetic_rhs(spark, tmp_path):
     s = _session(spark, tmp_path)
-    assert s._indexed_eq_prune("session.px", "SELECT k FROM px WHERE v = 5") == (
+    assert _prune(s, "SELECT k FROM px WHERE v = 5") == (
         "v",
         "5",
     )
     # 'v = 5 + 1' means v = 6; pruning to partitions whose cell is '5'
     # would drop every matching row
     assert (
-        s._indexed_eq_prune("session.px", "SELECT k FROM px WHERE v = 5 + 1")
+        _prune(s, "SELECT k FROM px WHERE v = 5 + 1")
         is None
     )
     assert (
-        s._indexed_eq_prune("session.px", "SELECT k FROM px WHERE v = 5e2")
+        _prune(s, "SELECT k FROM px WHERE v = 5e2")
         is None
     )
     assert (
-        s._indexed_eq_prune("session.px", "SELECT k FROM px WHERE v = 5.5")
+        _prune(s, "SELECT k FROM px WHERE v = 5.5")
         is None
     )
 
@@ -69,29 +76,29 @@ def test_prune_guard_is_quote_aware(spark, tmp_path):
         "SELECT k FROM px WHERE v = 5 AND name = 'no LIMIT here' "
         "OR b = 1"
     )
-    assert s._indexed_eq_prune("session.px", stmt) is None
+    assert _prune(s, stmt) is None
     # an OR inside a string literal must NOT block pruning
-    ok = s._indexed_eq_prune(
-        "session.px", "SELECT k FROM px WHERE name = 'x OR y'"
+    ok = _prune(
+        s, "SELECT k FROM px WHERE name = 'x OR y'"
     )
     assert ok == ("name", "x OR y")
 
 
 def test_prune_string_literal_with_keywords_extracts_fully(spark, tmp_path):
     s = _session(spark, tmp_path)
-    got = s._indexed_eq_prune(
-        "session.px", "SELECT k FROM px WHERE name = 'a AND LIMIT 3'"
+    got = _prune(
+        s, "SELECT k FROM px WHERE name = 'a AND LIMIT 3'"
     )
     assert got == ("name", "a AND LIMIT 3")
 
 
 def test_prune_still_fires_on_plain_conjunctions(spark, tmp_path):
     s = _session(spark, tmp_path)
-    assert s._indexed_eq_prune(
-        "session.px", "SELECT k FROM px WHERE v = 7 AND b = 1 ALLOW FILTERING"
+    assert _prune(
+        s, "SELECT k FROM px WHERE v = 7 AND b = 1 ALLOW FILTERING"
     ) == ("v", "7")
-    assert s._indexed_eq_prune(
-        "session.px", "SELECT k FROM px WHERE b = 1 AND v = 7 LIMIT 5"
+    assert _prune(
+        s, "SELECT k FROM px WHERE b = 1 AND v = 7 LIMIT 5"
     ) == ("v", "7")
     rows = s.execute("SELECT k FROM px WHERE v = 7").collect()
     assert {r.k for r in rows} == {"k07"}

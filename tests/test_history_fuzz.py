@@ -807,9 +807,10 @@ def test_empty_frames_match_the_snapshot_schema(spark, typed_tables):
 
 def test_malformed_values_fail_as_the_snapshot_does(spark):
     """A statement refuses a value outside every spelling of its type
-    (malformed text, an out-of-range number) at write time. A value that
-    arrives that way all the same — a bulk load of text columns — is
-    left to Spark's cast, so the pinned read fails exactly as the
+    (malformed text, an out-of-range number) at write time, and so does
+    a bulk load. A value that reaches the log all the same — planted here
+    by appending the cells to the mutation log directly, then flushed —
+    is left to Spark's cast, so the pinned read fails exactly as the
     snapshot does."""
     from cassandra_spark.cql import CQLError
 
@@ -822,12 +823,77 @@ def test_malformed_values_fail_as_the_snapshot_does(spark):
         with pytest.raises(CQLError, match="invalid"):
             s.execute(stmt)
     t = s.table("bad")
-    t.bulk_load(spark.createDataFrame(
-        [("a", "abc", None), ("b", None, "40000")],
-        "k string, n string, sm string",
-    ))
+    for pk, col, val in (("a", "n", "abc"), ("b", "sm", "40000")):
+        t._emit(pk, "", None, None, cql_dml.MARKER, 1, None)
+        t._emit(pk, "", col, val, cql_dml.CELL, 1, None)
+    t.flush()
     for pk in ("a", "b"):
         with pytest.raises(Exception) as snap:
             t.snapshot().filter(F.col("k") == pk).collect()
         with pytest.raises(type(snap.value)):
             t.partition_frame([pk]).collect()
+
+
+# --- literal text never reads as structure: keys and indexed values drawn
+# from an alphabet of column names, keywords, operators, '' escapes,
+# commas and brackets are read three ways — pinned (k = lit), through the
+# 2i (tag = lit) and by a filtered scan (w = lit ALLOW FILTERING) — and
+# each answer must equal the oracle's reconcile filtered in Python.
+
+_LIT_ALPHABET = (
+    "k", "tag", "w", " AND ", " OR ", "NOT ", " IN ", " LIKE ",
+    " CONTAINS ", "token(", " LIMIT 1", "'", "''", ",", "[", "]", "(",
+    ")", " = ", " > 1", "x",
+)
+_lit_st = st.lists(st.sampled_from(_LIT_ALPHABET), max_size=5).map("".join)
+
+
+def _quote(text: str) -> str:
+    return "'" + text.replace("'", "''") + "'"
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(_lit_st.filter(bool), _lit_st),
+        min_size=1, max_size=3, unique_by=lambda r: r[0],
+    ),
+    probe=_lit_st,
+)
+@example(rows=[("v", "w > 1"), ("token(q)", "x CONTAINS y")], probe="k")
+@example(rows=[("k = 'a' OR tag", "token(k) > 1 AND w IN ('a,b')")],
+         probe="[1, 2]")
+def test_literal_reads_match_the_oracle(
+    spark, duck, tmp_path_factory, rows, probe
+):
+    sess = CqlSession(spark, spill_dir=str(tmp_path_factory.mktemp("lit")))
+    sess.execute(
+        "CREATE TABLE lt (k text PRIMARY KEY, tag text, w text, v int)"
+    )
+    sess.execute("CREATE INDEX ON lt (tag)")
+    table = sess.table("lt")
+    for i, (k, tag) in enumerate(rows):
+        sess.execute(
+            f"INSERT INTO lt (k, tag, w, v) VALUES "
+            f"({_quote(k)}, {_quote(tag)}, {_quote(tag)}, {i})"
+        )
+        if i == 0:
+            table.flush()
+    oracle = [
+        tuple(r) for r in duck.execute(
+            dml_oracle_sql(table.schema, _full_log(table), table._max_wt + 1)
+        ).fetchall()
+    ]
+    for lit in (rows[0][0], rows[-1][1], probe):
+        for i, where in enumerate((
+            f"k = {_quote(lit)}",
+            f"tag = {_quote(lit)}",
+            f"w = {_quote(lit)} ALLOW FILTERING",
+        )):
+            stmt = f"SELECT k, tag, w, v FROM lt WHERE {where}"
+            got = sorted(tuple(r) for r in sess.execute(stmt).collect())
+            assert got == sorted(r for r in oracle if r[i] == lit), stmt

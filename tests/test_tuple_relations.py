@@ -7,9 +7,19 @@ from __future__ import annotations
 
 import pytest
 
-from cassandra_spark.cql import CQLError, _rewrite_tuple_relations, cql_select
+from cassandra_spark.cql import (
+    CQLError,
+    _analyse_where,
+    _rewrite_tuple_relations,
+    cql_select,
+)
 from cassandra_spark.cql_session import CqlSession
 from tests.conftest import SF_SMOKE
+
+
+def _rewrite(where, meta):
+    """The tuple-relation expansion of one analysed WHERE clause."""
+    return _rewrite_tuple_relations(_analyse_where(where), meta)
 
 
 class _Meta:
@@ -22,7 +32,7 @@ class _Meta:
 
 
 def test_expansion_asc():
-    out = _rewrite_tuple_relations(
+    out = _rewrite(
         "pk = 1 AND (c1, c2) > (10, 20)", _Meta(("c1", "c2"))
     )
     assert out == "pk = 1 AND ((c1 > 10) OR (c1 = 10 AND c2 > 20))"
@@ -31,25 +41,25 @@ def test_expansion_asc():
 def test_expansion_inclusive_and_eq():
     m = _Meta(("c1", "c2"))
     assert (
-        _rewrite_tuple_relations("(c1, c2) <= (1, 2)", m)
+        _rewrite("(c1, c2) <= (1, 2)", m)
         == "((c1 < 1) OR (c1 = 1 AND c2 <= 2))"
     )
     assert (
-        _rewrite_tuple_relations("(c1, c2) = (1, 2)", m)
+        _rewrite("(c1, c2) = (1, 2)", m)
         == "(c1 = 1 AND c2 = 2)"
     )
 
 
 def test_expansion_desc_flip():
     # DESC component: "greater in clustering order" = smaller value
-    out = _rewrite_tuple_relations(
+    out = _rewrite(
         "(c1, c2) > ('d', 5)", _Meta(("-c1", "c2"))
     )
     assert out == "((c1 < 'd') OR (c1 = 'd' AND c2 > 5))"
 
 
 def test_expansion_three_columns():
-    out = _rewrite_tuple_relations(
+    out = _rewrite(
         "(a, b, c) >= (1, 2, 3)", _Meta(("a", "b", "c"))
     )
     assert out == (
@@ -60,24 +70,24 @@ def test_expansion_three_columns():
 def test_validation_errors():
     m = _Meta(("c1", "c2", "c3"))
     with pytest.raises(CQLError, match="contiguous"):
-        _rewrite_tuple_relations("(c2, c1) > (1, 2)", m)
+        _rewrite("(c2, c1) > (1, 2)", m)
     with pytest.raises(CQLError, match="contiguous"):
-        _rewrite_tuple_relations("(c1, c3) > (1, 2)", m)
+        _rewrite("(c1, c3) > (1, 2)", m)
     with pytest.raises(CQLError, match="arity"):
-        _rewrite_tuple_relations("(c1, c2) > (1, 2, 3)", m)
+        _rewrite("(c1, c2) > (1, 2, 3)", m)
     with pytest.raises(CQLError, match="clustering"):
-        _rewrite_tuple_relations("(x, y) > (1, 2)", m)
+        _rewrite("(x, y) > (1, 2)", m)
 
 
 def test_function_calls_untouched():
     m = _Meta(("c1", "c2"))
     # token(a, b) > 5 must not be mistaken for a tuple relation
     s = "token(a, b) > 5 AND c1 = 1"
-    assert _rewrite_tuple_relations(s, m) == s
+    assert _rewrite(s, m) == s
 
 
 def test_quoted_comma_values():
-    out = _rewrite_tuple_relations(
+    out = _rewrite(
         "(c1, c2) > ('a,b', 2)", _Meta(("c1", "c2"))
     )
     assert out == "((c1 > 'a,b') OR (c1 = 'a,b' AND c2 > 2))"
@@ -127,18 +137,18 @@ def test_session_fe_tuple_relation(spark):
 
 def test_tuple_in_expansion():
     m = _Meta(("c1", "c2"))
-    out = _rewrite_tuple_relations(
+    out = _rewrite(
         "pk = 1 AND (c1, c2) IN ((1, 2), (3, 4))", m
     )
     assert out == (
         "pk = 1 AND ((c1 = 1 AND c2 = 2) OR (c1 = 3 AND c2 = 4))"
     )
     with pytest.raises(CQLError, match="list of tuples"):
-        _rewrite_tuple_relations("(c1, c2) IN (1, 2)", m)
+        _rewrite("(c1, c2) IN (1, 2)", m)
     with pytest.raises(CQLError, match="arity"):
-        _rewrite_tuple_relations("(c1, c2) IN ((1, 2, 3))", m)
+        _rewrite("(c1, c2) IN ((1, 2, 3))", m)
     with pytest.raises(CQLError, match="at least one"):
-        _rewrite_tuple_relations("(c1, c2) IN ()", m)
+        _rewrite("(c1, c2) IN ()", m)
 
 
 def test_session_fe_tuple_in(spark):
@@ -170,12 +180,12 @@ def test_quoted_literals_never_rewritten():
     trip _validate."""
     m = _Meta(("c1", "c2"))
     s = "v = '(c1, c2) IN ((1,2))' AND (c1, c2) = (1, 2)"
-    assert _rewrite_tuple_relations(s, m) == (
+    assert _rewrite(s, m) == (
         "v = '(c1, c2) IN ((1,2))' AND (c1 = 1 AND c2 = 2)"
     )
     # a literal alone: untouched, no CQLError about non-clustering cols
     s2 = "v = '(pk, other) >= (9, 9)'"
-    assert _rewrite_tuple_relations(s2, m) == s2
+    assert _rewrite(s2, m) == s2
     # literal VALUES containing parens survive the comparison rewrite
     s3 = "(c1, c2) = ('(a)', 2)"
-    assert _rewrite_tuple_relations(s3, m) == "(c1 = '(a)' AND c2 = 2)"
+    assert _rewrite(s3, m) == "(c1 = '(a)' AND c2 = 2)"
