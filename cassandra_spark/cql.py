@@ -52,7 +52,7 @@ class CQLError(ValueError):
 
 @dataclass
 class _Stmt:
-    projection: str
+    projection: "_Masked"  # with its literal-masked copy
     table: str
     where: str | None
     order_by: list[tuple[str, bool]]  # (col, desc)
@@ -130,14 +130,14 @@ def _parse(stmt: str) -> _Stmt:
                 or re.fullmatch(_FLOOR_ITEM_RE, c)
             ):
                 raise CQLError(f"bad GROUP BY clause: {group('group')!r}")
-    proj = group("proj").strip()
-    jm = re.match(r"^JSON\s+(.+)$", proj, re.IGNORECASE | re.DOTALL)
+    proj = _Masked(group("proj"), m.group("proj")).trim()
+    jm = re.match(r"^JSON\s+(.+)$", proj.masked, re.IGNORECASE | re.DOTALL)
     where = (
         _Masked(group("where"), m.group("where"))
         if m.group("where") else None
     )
     return _Stmt(
-        projection=jm.group(1).strip() if jm else proj,
+        projection=proj.part(*jm.span(1)).trim() if jm else proj,
         table=group("table").lower(),
         where=where,
         order_by=order,
@@ -155,6 +155,8 @@ def _parse(stmt: str) -> _Stmt:
 
 
 _IDENT_RE = re.compile(r"(?<!')\b[a-z_]\w*", re.IGNORECASE)
+# a token() call, matched over masked text
+_TOKEN_CALL = r"\btoken\s*\("
 _CQL_KEYWORDS = frozenset(
     "and or not in contains key true false null like token between".split()
 )
@@ -236,7 +238,29 @@ def _sub_quoted(pattern: str, build, text: str) -> _Masked:
         rep = _Masked(build(str(w), m), build(w.masked, m))
         parts += [w.part(pos, m.start()), rep]
         pos = m.end()
-    return _join([*parts, w.part(pos, len(w))])
+    return _join([*parts, w.part(pos, len(w))]) if parts else w
+
+
+class _SrcMatch:
+    """A match over masked text whose groups read back from the aligned
+    text ``src``, each with its masked copy — the ``group`` interface
+    the projection rewrites' ``repl`` use."""
+
+    def __init__(self, src: str, masked: str, m: re.Match) -> None:
+        self.src, self.masked, self.m = src, masked, m
+
+    def group(self, g=0):
+        if self.m.start(g) < 0:
+            return None
+        return _Masked(_grp(self.src, self.m, g), _grp(self.masked, self.m, g))
+
+
+def _sub_item(regex: re.Pattern, repl, item: str) -> _Masked:
+    """``regex.sub(repl, item)`` outside string literals."""
+    w = _masked(item)
+    return _sub_quoted(
+        regex.pattern, lambda src, m: repl(_SrcMatch(src, w.masked, m)), w
+    )
 
 
 def _scan_to_close(masked: str, start: int) -> int | None:
@@ -452,7 +476,7 @@ def _analyse_where(where: str) -> _Restrictions:
         text=w,
         rels=tuple(rels),
         conjunctive=not words & {"or", "not"},
-        uses_token=re.search(r"\btoken\s*\(", masked, re.I) is not None,
+        uses_token=re.search(_TOKEN_CALL, masked, re.I) is not None,
         words=words,
     )
 
@@ -513,7 +537,7 @@ def _rewrite_where(
     # token(pk) → cassandra_token(pk): bit-exact Murmur3Partitioner
     # tokens (operators/murmur3.py), registered per session by
     # cql_select, so a driver-supplied token bound matches production
-    return _sub_quoted(r"\btoken\s*\(", lambda s, m: "cassandra_token(", where)
+    return _sub_quoted(_TOKEN_CALL, lambda s, m: "cassandra_token(", where)
 
 
 def _rewrite_tuple_relations(r: _Restrictions, meta) -> _Masked:
@@ -724,7 +748,7 @@ def _rewrite_similarity(item: str) -> str:
         )
         return f"(1.0D / (1.0D + {sq}))"
 
-    return _SIM_RE.sub(repl, item)
+    return _sub_item(_SIM_RE, repl, item)
 
 
 # Cassandra 5 dynamic-data-masking selectors (`[C* cql3/functions/masking/*,
@@ -762,7 +786,7 @@ def _rewrite_cql_casts(item: str) -> str:
             raise CQLError(f"unsupported CAST target type {m.group(2)!r}")
         return f"CAST({m.group(1)}{_CQL_CAST_MAP[t]})"
 
-    return _CAST_RE.sub(repl, item)
+    return _sub_item(_CAST_RE, repl, item)
 
 
 # CQL arithmetic (`[C* cql3/functions/OperationFcts — 4.0, unverified]`):
@@ -789,7 +813,7 @@ def _rewrite_int_division(item: str, dtypes: dict) -> str:
             return f"({a} div {b})"
         return m.group(0)
 
-    return _DIV_RE.sub(repl, item)
+    return _sub_item(_DIV_RE, repl, item)
 
 
 # Cassandra 5 collection functions (`[C* CASSANDRA-18060 —
@@ -837,7 +861,7 @@ def _rewrite_collection_fns(item: str, dtypes: dict) -> str:
             return total
         return f"({total} / size({src}))"
 
-    return _COLLFN_RE.sub(repl, item)
+    return _sub_item(_COLLFN_RE, repl, item)
 
 
 def _rewrite_masks(item: str, dtypes: dict) -> str:
@@ -848,7 +872,7 @@ def _rewrite_masks(item: str, dtypes: dict) -> str:
 
     def repl(m: re.Match) -> str:
         kind = m.group(1).lower()
-        args = [a.strip() for a in _split_projection(m.group(2))]
+        args = _split_commas(m.group(2))
         col = args[0]
         if kind == "null":
             return f"(CASE WHEN FALSE THEN {col} END)"
@@ -881,16 +905,17 @@ def _rewrite_masks(item: str, dtypes: dict) -> str:
         build = mask_inner_sql if kind == "inner" else mask_outer_sql
         return build(col, int(args[1]), int(args[2]), pad)
 
-    return _MASK_RE.sub(repl, item)
+    return _sub_item(_MASK_RE, repl, item)
 
 
 def _rewrite_item(item: str, dtypes: dict) -> str:
     """One projection item in Spark SQL: similarity functions, CQL casts,
-    integer division, collection functions and masks, rewritten against
-    the frame's column types ``dtypes`` (name -> type string)."""
+    integer division, collection functions and masks, rewritten outside
+    string literals against the frame's column types ``dtypes`` (name ->
+    type string)."""
     item = _rewrite_cql_casts(_rewrite_similarity(item))
     item = _rewrite_int_division(item, dtypes)
-    return _rewrite_masks(_rewrite_collection_fns(item, dtypes), dtypes)
+    return str(_rewrite_masks(_rewrite_collection_fns(item, dtypes), dtypes))
 
 
 def _rewrite_selectors(items, df, meta, table, columns):
@@ -936,7 +961,8 @@ def _rewrite_selectors(items, df, meta, table, columns):
                 f"{fn}() is not available for column {col!r}: the source "
                 f"carries no cell metadata for it"
             )
-        out.append(f"{shadow} AS {alias or f'{fn}_{col}'}")
+        item = f"{shadow} AS {alias or f'{fn}_{col}'}"
+        out.append(_Masked(item, item))  # no literal to mask
     return out, df
 
 
@@ -1028,7 +1054,7 @@ def _compile_group_by(df: DataFrame, meta, s: "_Stmt") -> DataFrame:
                 f"column after the grouped prefix ({pkck})"
             )
         bucket_sql = _floor_bucket_sql(df, meta, fcol, dur)
-    items = _split_projection(s.projection)
+    items = _split_commas(s.projection)
     if s.projection.strip() == "*":
         raise CQLError("SELECT * with GROUP BY is not supported; name columns")
 
@@ -1424,13 +1450,9 @@ def cql_select(
         df = _compile_ann(
             df, meta, s, where_expr=(where_expr if s.where else None)
         )
-        proj = s.projection.strip()
-        if proj != "*":
+        if s.projection != "*":
             df = df.selectExpr(
-                *[
-                    _rewrite_item(p.strip(), dtypes)
-                    for p in _split_projection(proj)
-                ]
+                *[_rewrite_item(p, dtypes) for p in _split_commas(s.projection)]
             )
         else:
             df = _declared_columns(df, dtypes)
@@ -1474,19 +1496,19 @@ def cql_select(
             .drop("__ppl_rn")
         )
 
-    proj = s.projection.strip()
-    if proj != "*":
-        items = [p.strip() for p in _split_projection(proj)]
+    if s.projection != "*":
+        # split and rewritten over the statement's masked copy: a comma
+        # or ``token(`` inside a string literal is part of the value
+        items = _split_commas(s.projection)
         items, df = _rewrite_selectors(items, df, meta, s.table, dtypes)
-        if any(re.search(r"\btoken\s*\(", i, re.IGNORECASE) for i in items):
+        if any(re.search(_TOKEN_CALL, i.masked, re.I) for i in items):
             # token() as a selector (SELECT token(pk) ...): same Murmur3
             # convention as the WHERE-clause rewrite
             murmur3.ensure_token_registered(spark)
             items = [
                 _composite_token_rewrite(
-                    re.sub(
-                        r"\btoken\s*\(", "cassandra_token(", i,
-                        flags=re.IGNORECASE,
+                    _sub_quoted(
+                        _TOKEN_CALL, lambda _src, _m: "cassandra_token(", i
                     ),
                     meta, dtypes, spark,
                 )

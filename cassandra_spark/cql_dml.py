@@ -11,12 +11,15 @@ exactly that shape:
 - a statement parses into **cell mutations** (value cells, collection
   element cells, a row marker for INSERT, cell / collection / row / range /
   partition tombstones for DELETE);
-- the table's visible state (``snapshot``) is a pure DataFrame reduction:
-  per-cell LWW (compaction.lww_merge order: writetime desc, tombstone
-  beats write on ties, then arrival seq), shadowed by the newest
-  applicable row/range/partition tombstone, TTL-expired cells dropped at
-  the caller's ``asof`` — the same W2/W3/W4/W5 semantics the batch
-  operators implement, driven from real CQL text.
+- the table's visible state is one per-partition reconcile
+  (``_reconcile_partition``): per-cell LWW (compaction.lww_merge order:
+  writetime desc, tombstone beats write on ties, then arrival seq),
+  shadowed by the newest applicable row/range/partition tombstone,
+  TTL-expired cells dropped at the caller's ``asof``, counters summed —
+  the same W2/W3/W4/W5/W6 semantics the batch operators implement,
+  driven from real CQL text. A pinned read runs it on the driver
+  (``partition_frame``), a scan in token-range Spark tasks
+  (``snapshot``).
 
 Surface (each point tested):
 - **Composite clustering keys**: ``clustering`` is a tuple; the log keys
@@ -48,8 +51,9 @@ Fidelity points (each tested):
   breaks write/write ties.
 
 Scale posture: statements accumulate in a driver-side log because DML
-*arrives* row-at-a-time; the log becomes a DataFrame and every snapshot
-reduction is distributed (one shuffle on the partition key). At 100 TB the
+*arrives* row-at-a-time; flushed segments are token-sorted runs, and a
+scan reconciles each token range in its own task, reading only that
+range's row groups (no shuffle before the reconcile). At 100 TB the
 log is a stream — streaming/jobs.streaming_upsert is the continuous form
 of the same reconcile — and snapshots are the compaction.compact output.
 """
@@ -1593,6 +1597,233 @@ def _purge_keep(schema, tbl, horizon: int, clock: int):
     return keep
 
 
+def _reconcile_partition(schema, muts, asof: int):
+    """The read-time reconcile of one partition — the engine's one rule,
+    run on the driver for a pinned read, an LWT condition or a list-index
+    write (:meth:`CqlTable._reconcile`) and in each token-range task of a
+    scan (:func:`_scan_splits`), as the reference's single-partition and
+    range reads share one merge (`[C* db/rows/UnfilteredRowIterators
+    #merge, unverified]`). ``muts`` are the partition's ``mut_row``
+    tuples in any order.
+
+    Per (ck, col, elem) the newest writetime wins, a tombstone wins a
+    tie, then arrival seq; a cell at or below its partition, row,
+    covering range or collection tombstone is dead; TTL expires at
+    ``asof``. Static cells (ck NULL) reconcile per column and only a
+    partition tombstone shadows them. A counter table sums instead: a
+    counter cell is the sum of its increments strictly newer than every
+    cell, row, range or partition tombstone covering it (a tombstone
+    wins a tie; the reference leaves re-increment after a delete
+    undefined, and this pins the deterministic reading).
+
+    Returns ``(rows, statics, n_tombs)``: ``rows`` maps each live
+    joined clustering key to its live cells ``{(col, elem): (writetime,
+    val, ttl)}`` (the row marker is ``(None, None)``; a counter's val is
+    its sum as text), ``statics`` maps each live static column to
+    ``(writetime, val, ttl)``, and ``n_tombs`` counts the deletion
+    markers read."""
+    pt = None
+    rts: dict = {}  # ck -> max row-tomb writetime
+    gts: dict = {}  # (ck, col) -> max coll-tomb writetime
+    ranges = []
+    best: dict = {}  # (ck, col, elem) -> (rank, kind, val, ttl)
+    sbest: dict = {}  # static col -> (rank, kind, val, ttl)
+    incrs: dict = {}  # (ck, col) -> [(writetime, delta)]
+    n = 0
+    for (_, ck, col, elem, val, kind, wt, ttl, seq,
+         lo, hi, li, hi_i) in muts:
+        if kind in _TOMB_KINDS:
+            n += 1
+        if kind == PART_TOMB:
+            pt = wt if pt is None else max(pt, wt)
+        elif kind == ROW_TOMB:
+            rts[ck] = max(rts.get(ck, wt), wt)
+        elif kind == RANGE_TOMB:
+            ranges.append((ck, lo, hi, li, hi_i, wt))
+        elif kind == COLL_TOMB:
+            gts[ck, col] = max(gts.get((ck, col), wt), wt)
+        elif kind == INCR:
+            incrs.setdefault((ck, col), []).append((wt, int(val)))
+        elif kind in (CELL, MARKER, CELL_TOMB):
+            if ck is None:
+                if kind == MARKER:
+                    continue
+                store, key = sbest, col
+            else:
+                store, key = best, (ck, col, elem)
+            rank = (wt, kind == CELL_TOMB, seq)
+            prev = store.get(key)
+            if prev is None or rank > prev[0]:
+                store[key] = (rank, kind, val, ttl)
+    horizons: dict = {}  # ck -> newest partition/row/range tombstone
+
+    def horizon(ck):
+        if ck not in horizons:
+            hs = [h for h in (pt, rts.get(ck)) if h is not None]
+            if ranges:
+                tup = tuple(ck.split(SEP))
+                hs += [
+                    w for (p, lo, hi, li, hi_i, w) in ranges
+                    if _range_covers(schema, p, lo, hi, li, hi_i, tup)
+                ]
+            horizons[ck] = max(hs) if hs else None
+        return horizons[ck]
+
+    def shadowed(wt, *tombs) -> bool:
+        return any(t is not None and wt <= t for t in tombs)
+
+    rows: dict = {}
+    for (ck, col, elem), ((wt, _, _), kind, val, ttl) in best.items():
+        if kind == CELL_TOMB or (ttl and wt + ttl <= asof):
+            continue
+        if not shadowed(wt, horizon(ck), gts.get((ck, col))):
+            rows.setdefault(ck, {})[col, elem] = (wt, val, ttl)
+    for (ck, col), deltas in incrs.items():
+        tomb = best.get((ck, col, None))
+        live = [
+            (wt, d) for wt, d in deltas
+            if not shadowed(wt, horizon(ck), tomb and tomb[0][0])
+        ]
+        if live:
+            rows.setdefault(ck, {})[col, None] = (
+                max(wt for wt, _ in live), str(sum(d for _, d in live)), 0,
+            )
+    statics = {
+        col: (wt, val, ttl)
+        for col, ((wt, _, _), kind, val, ttl) in sbest.items()
+        if kind != CELL_TOMB
+        and not (ttl and wt + ttl <= asof)
+        and not shadowed(wt, pt)
+    }
+    return rows, statics, n
+
+
+def _row_values(schema, multi, state: dict, asof: int) -> dict:
+    """The one row builder: reconciled partitions ``state`` (``{pk:
+    (rows, statics)}`` of :func:`_reconcile_partition`) as untyped
+    visible columns, name -> values, one wide row per live (pk, ck) in
+    the snapshot's order (typed keys ascending, nulls first; a partition
+    with only static cells shows one NULL-clustering row). Each key
+    component is its own string column; a scalar or static column holds
+    its winning cell string, its ``__writetime_`` and its ``__ttl_``
+    (the cell's remaining TTL at ``asof``, NULL without one); a
+    multi-cell column (``multi``: collections and non-frozen UDTs) holds
+    its live cells as ``{elem, val}`` structs and its
+    ``__maxwritetime_``; a counter holds its sum. The driver's
+    :meth:`CqlTable.partition_frame` and the scan tasks type the result
+    by the same :meth:`CqlTable._visible_columns` rule."""
+    s = schema
+    keys = [(c, s.key_type(c)) for c in s.partition_cols]
+    cks = [(c, s.key_type(c)) for c in s.clustering]
+    vals: dict[str, list] = defaultdict(list)
+
+    def parts(joined, kts):
+        if joined is None:
+            return [None] * len(kts)
+        return joined.split(SEP) if len(kts) > 1 else [joined]
+
+    def order(joined, kts):
+        return [
+            _order_key(v, t) for v, (_, t) in zip(parts(joined, kts), kts)
+        ]
+
+    def scalar(c, cs):
+        # cs: [(elem, writetime, val, ttl)] of one column
+        win = max(cs, key=lambda x: x[1], default=(None, None, None, None))
+        vals[c].append(max((x[2] for x in cs if x[2] is not None),
+                           default=None))
+        if s.counter:
+            return
+        vals[f"__writetime_{c}"].append(win[1])
+        vals[f"__ttl_{c}"].append(win[1] + win[3] - asof if win[3] else None)
+
+    for pk in sorted(state, key=lambda p: order(p, keys)):
+        rows, statics = state[pk]
+        pk_parts = parts(pk, keys)
+        for ck in sorted(rows, key=lambda k: order(k, cks)) or [None]:
+            for (c, _), v in zip(keys, pk_parts):
+                vals[c].append(v)
+            for (c, _), v in zip(cks, parts(ck, cks)):
+                vals[c].append(v)
+            cells: dict = {}  # col -> [(elem, writetime, val, ttl)]
+            for (col, elem), (wt, v, ttl) in rows.get(ck, {}).items():
+                cells.setdefault(col, []).append((elem, wt, v, ttl))
+            for c in s.regular:
+                cs = cells.get(c, [])
+                if c in multi:
+                    vals[c].append([{"elem": e, "val": v} for e, _, v, _ in cs])
+                    vals[f"__maxwritetime_{c}"].append(
+                        max((w for _, w, _, _ in cs), default=None)
+                    )
+                else:
+                    scalar(c, cs)
+            for c in s.static:
+                cell = statics.get(c)
+                scalar(c, [(None, *cell)] if cell else [])
+    return vals
+
+
+def _token_splits(n: int) -> list[tuple[int, int]]:
+    """``n`` contiguous, inclusive (lo, hi) ranges that split the whole
+    Murmur3 token ring evenly."""
+    first = -(1 << 63)
+    bounds = [first + (i << 64) // n for i in range(n + 1)]
+    return [(a, b - 1) for a, b in zip(bounds, bounds[1:])]
+
+
+def _scan_splits(batches, schema, multi, segs, tail, asof, max_wt, fields):
+    """One Spark task of a scan (:meth:`CqlTable.snapshot`): for each
+    token-range split ``(lo, hi)`` in its input, read only the row
+    groups of each segment in ``segs`` ((path, row-group token hulls))
+    whose hull meets the range, and the memtable rows ``tail`` in it —
+    a partition read keyed by a range instead of by keys, so no segment
+    crosses a shuffle — drop writetimes past ``max_wt`` (PITR), then
+    reconcile one partition at a time (:func:`_reconcile_partition`)
+    and yield the wide rows (:func:`_row_values`) as Arrow batches of
+    ``fields`` ((name, Arrow type) pairs; a column no row fills is
+    NULL)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def in_range(tbl, lo, hi):
+        pk = tbl.column("pk")
+        keys = pc.unique(pk)
+        tok = _pk_tokens(keys.to_pylist())
+        tbl = tbl.filter(pc.is_in(pk, value_set=keys.filter(
+            pa.array((tok >= lo) & (tok <= hi))
+        )))
+        if max_wt is not None:
+            tbl = tbl.filter(pc.less_equal(tbl.column("writetime"), max_wt))
+        return _mut_rows(tbl)
+
+    for b in batches:
+        for lo, hi in zip(b.column("lo").to_pylist(),
+                          b.column("hi").to_pylist()):
+            by_pk: dict = {}
+            rows = in_range(tail, lo, hi)
+            for path, hulls in segs:
+                hit = (hulls[:, 0] <= hi) & (hulls[:, 1] >= lo)
+                if hit.any():
+                    rows += in_range(pq.ParquetFile(path).read_row_groups(
+                        np.flatnonzero(hit).tolist()
+                    ), lo, hi)
+            for r in rows:
+                by_pk.setdefault(r[0], []).append(r)
+            state = {}
+            for pk, muts in by_pk.items():
+                live, statics, _ = _reconcile_partition(schema, muts, asof)
+                if live or statics:
+                    state[pk] = (live, statics)
+            vals = _row_values(schema, multi, state, asof)
+            n = len(next(iter(vals.values()), ()))
+            yield from pa.table(
+                [pa.array(vals.get(c) or [None] * n, t) for c, t in fields],
+                schema=pa.schema(fields),
+            ).to_batches()
+
+
 class CqlTable:
     """A mutable CQL table: DML statements append to a cell-mutation log;
     ``snapshot(asof_us)`` reconciles it into the visible rows.
@@ -1709,9 +1940,9 @@ class CqlTable:
         # the candidate-pk set a probe may collect: past this many
         # DISTINCT candidates the index gives no useful selectivity (the
         # reference's low-cardinality-2i anti-pattern) and the probe
-        # stops and reports None — the read falls back to the Spark
-        # reconcile of the whole table instead of the driver-side
-        # partition read. 5,000 is the measured crossover: on a
+        # stops and reports None — the read falls back to the scan of
+        # the whole table instead of the driver-side partition read.
+        # 5,000 is the measured crossover: on a
         # 21,000-partition table of 16-row partitions (1.34M mutations
         # in 2 segments, 4 cores) the partition read of 5,000
         # candidates takes ~3.9 s, the Spark scan ~4.0 s; at 7,000
@@ -2086,61 +2317,25 @@ class CqlTable:
         }[op]
 
     def _reconcile(self, pks, asof: int) -> dict:
-        """Pure-Python reconcile of the partitions ``pks`` at ``asof``:
+        """The partitions ``pks`` reconciled at ``asof`` on the driver:
         the read of a partition-pinned SELECT, an LWT condition and a
         list-index write. The reference serves each from one replica's
         single-partition read, not a scan, and so does this: only the
-        partitions' own mutations are read (:meth:`_partition_rows`).
-        Same W4/W3/W2 rules as :meth:`snapshot`: per (ck, col, elem) the
-        newest writetime wins, a tombstone wins a tie, then arrival seq;
-        a cell at or below its partition, row, covering range or
-        collection tombstone is dead; TTL expires at ``asof``. Static
-        cells (ck NULL) reconcile per column and only a partition
-        tombstone shadows them. ``tests/test_history_fuzz.py`` holds the
-        two reconciles together.
+        partitions' own mutations are read (:meth:`_partition_rows`),
+        and each merges by :func:`_reconcile_partition`, the rule a
+        scan's tasks run too.
 
         Returns ``{pk: (rows, statics)}`` for the partitions with live
-        content: ``rows`` maps each live joined clustering key to its
-        live cells ``{(col, elem): (writetime, val)}`` (the row marker is
-        ``(None, None)``), ``statics`` maps each live static column to
-        ``(writetime, val)``. The ``tombstones_per_read`` guardrail is
-        checked per partition."""
+        content (:func:`_reconcile_partition`'s maps). The
+        ``tombstones_per_read`` guardrail is checked per partition, and
+        ``read_trace`` ends with the live rows and tombstones read."""
         by_pk: dict = {}
         for r in self._partition_rows(pks):
             by_pk.setdefault(r[0], []).append(r)
         out = {}
         n_tombs = 0
         for pk, muts in by_pk.items():
-            pt = None
-            rts: dict = {}  # ck -> max row-tomb writetime
-            gts: dict = {}  # (ck, col) -> max coll-tomb writetime
-            ranges = []
-            best: dict = {}  # (ck, col, elem) -> (rank, kind, val, ttl)
-            sbest: dict = {}  # static col -> (rank, kind, val, ttl)
-            n = 0
-            for (_, ck, col, elem, val, kind, wt, ttl, seq,
-                 lo, hi, li, hi_i) in muts:
-                if kind in _TOMB_KINDS:
-                    n += 1
-                if kind == PART_TOMB:
-                    pt = wt if pt is None else max(pt, wt)
-                elif kind == ROW_TOMB:
-                    rts[ck] = max(rts.get(ck, wt), wt)
-                elif kind == RANGE_TOMB:
-                    ranges.append((ck, lo, hi, li, hi_i, wt))
-                elif kind == COLL_TOMB:
-                    gts[ck, col] = max(gts.get((ck, col), wt), wt)
-                elif kind in (CELL, MARKER, CELL_TOMB):
-                    if ck is None:
-                        if kind == MARKER:
-                            continue
-                        store, key = sbest, col
-                    else:
-                        store, key = best, (ck, col, elem)
-                    rank = (wt, kind == CELL_TOMB, seq)
-                    prev = store.get(key)
-                    if prev is None or rank > prev[0]:
-                        store[key] = (rank, kind, val, ttl)
+            rows, statics, n = _reconcile_partition(self.schema, muts, asof)
             n_tombs += n
             # the TombstoneOverwhelmingException analogue: a partition
             # read that scans too many deletion markers warns, then aborts
@@ -2148,33 +2343,6 @@ class CqlTable:
                 "tombstones_per_read", n,
                 f"tombstones scanned reading partition {pk!r}",
             )
-            rows: dict = {}
-            horizon: dict = {}  # ck -> newest partition/row/range tomb
-            for (ck, col, elem), ((wt, _, _), kind, val, ttl) in best.items():
-                if kind == CELL_TOMB or (ttl and wt + ttl <= asof):
-                    continue
-                if ck not in horizon:
-                    hs = [h for h in (pt, rts.get(ck)) if h is not None]
-                    if ranges:
-                        tup = tuple(ck.split(SEP))
-                        hs += [
-                            w for (p, lo, hi, li, hi_i, w) in ranges
-                            if _range_covers(
-                                self.schema, p, lo, hi, li, hi_i, tup
-                            )
-                        ]
-                    horizon[ck] = max(hs) if hs else None
-                h, gt = horizon[ck], gts.get((ck, col))
-                if any(t is not None and wt <= t for t in (h, gt)):
-                    continue
-                rows.setdefault(ck, {})[col, elem] = (wt, val)
-            statics = {
-                col: (wt, val)
-                for col, ((wt, _, _), kind, val, ttl) in sbest.items()
-                if kind != CELL_TOMB
-                and not (ttl and wt + ttl <= asof)
-                and (pt is None or wt > pt)
-            }
             if rows or statics:
                 out[pk] = (rows, statics)
         self.read_trace.append(
@@ -2189,12 +2357,12 @@ class CqlTable:
         ``ck`` is the clustering tuple, or None to read the static row."""
         rows, statics = self._reconcile([pk], self._clock).get(pk, ({}, {}))
         if ck is None:
-            return {c: v for c, (_, v) in statics.items()} or None
+            return {c: v for c, (_, v, _) in statics.items()} or None
         cells = rows.get(ck_join(tuple(ck)))
         if cells is None:
             return None
         return {
-            col: v for (col, elem), (_, v) in cells.items()
+            col: v for (col, elem), (_, v, _) in cells.items()
             if col is not None and elem is None
         }
 
@@ -3480,7 +3648,7 @@ class CqlTable:
             null_keys = F.col("pk").isNull() | F.col("ck").isNull()
             if s.pk_composite:
                 # a string key component containing the reserved 0x1f
-                # separator would mis-split in _key_exprs and silently
+                # separator would mis-split in _row_values and silently
                 # collide two distinct composite keys — reject, mirroring
                 # pk_from_pairs on the statement path (detected as a
                 # component count mismatch in the joined key)
@@ -4013,47 +4181,15 @@ class CqlTable:
                 self.spark.read.schema(_MUT_SCHEMA).parquet(*self._segments)
             )
         if self._log or not parts:
-            parts.extend(self._tail_chunks())
+            log, n = self._log, self._ARROW_CHUNK
+            parts += [
+                _local_frame(self.spark, log[i : i + n], _MUT_SCHEMA)
+                for i in range(0, max(len(log), 1), n)
+            ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    def _tail_chunks(self) -> list[DataFrame]:
-        log, n = self._log, self._ARROW_CHUNK
-        return [
-            _local_frame(self.spark, log[i : i + n], _MUT_SCHEMA)
-            for i in range(0, max(len(log), 1), n)
-        ]
-
-    def _range_cover_cond(self, rt_prefix="pref_arr", row_arr="ck_arr"):
-        """Spark boolean Column: range tombstone (prefix array + typed
-        bounds on the next clustering col) covers the row's ck array.
-        Built as ONE SQL expression string (r13 opt round): the former
-        per-clustering-column Column-object chain cost ~12 py4j
-        round-trips per column on every snapshot build. Semantics
-        identical — ``IF(lo_incl, a, b)`` takes the b branch on NULL
-        exactly like ``when(...).otherwise(...)``."""
-        s = self.schema
-        per_k = ["false"]
-        for k, col in enumerate(s.clustering):
-            t = s.key_type(col)
-            v = f"CAST({row_arr}[{k}] AS {t})"
-            lo_ok = (
-                f"(lo IS NULL OR IF(lo_incl, {v} >= CAST(lo AS {t}), "
-                f"{v} > CAST(lo AS {t})))"
-            )
-            hi_ok = (
-                f"(hi IS NULL OR IF(hi_incl, {v} <= CAST(hi AS {t}), "
-                f"{v} < CAST(hi AS {t})))"
-            )
-            per_k.append(
-                f"(size({rt_prefix}) = {k} AND {lo_ok} AND {hi_ok})"
-            )
-        return F.expr(
-            f"slice({row_arr}, 1, size({rt_prefix})) = {rt_prefix} AND "
-            f"((lo IS NULL AND hi IS NULL) OR ({' OR '.join(per_k)}))"
-        )
 
     def snapshot_pitr(self, ts_us: int) -> DataFrame:
         """Point-in-time view: the table's visible rows AS OF writetime
@@ -4075,20 +4211,33 @@ class CqlTable:
         asof_us: int | None = None,
         max_wt_us: int | None = None,
     ) -> DataFrame:
-        """Visible rows after W2 (TTL at ``asof``) + W3 (tombstone
-        shadowing, incl. range tombstones) + W4 (per-cell LWW): one wide
-        row per live (pk, ck) with typed key columns, scalar columns with
-        ``__writetime_<col>`` shadows (f2 convention), collection columns
-        assembled from live element cells, and static columns joined per
-        partition (a static-only partition shows one row with NULL
-        clustering). A read of known partitions takes
+        """The table's visible rows (:meth:`_visible_columns`: typed
+        keys, values and cell-metadata shadows) in typed (partition,
+        clustering) key order — a scan, the reference's
+        ``PartitionRangeReadCommand``. A read of known partitions takes
         :meth:`partition_frame` instead: same rows, no Spark job.
+
+        One ``mapInArrow`` runs over even Murmur3 token-range splits
+        (:func:`_token_splits`), one per core but no more than the
+        segments' row groups, so a small table runs one task. Each task
+        (:func:`_scan_splits`) reconciles its range partition by
+        partition by the pinned read's rule, counter tables included;
+        one ``selectExpr`` types the rows, and the ``orderBy`` sorts
+        them in one reducer (visible rows are far fewer than
+        mutations). TTL expires at ``asof_us`` (default: just past the
+        newest writetime). The ``tombstones_per_read`` guardrail is a
+        partition read's; a scan does not raise it.
 
         ``max_wt_us`` (PITR, see :meth:`snapshot_pitr`): drop every
         mutation with a newer writetime BEFORE reconciling — later
         writes, deletes and range tombstones simply do not exist in the
         as-of view (they do not shadow older data the way asof-only TTL
         evaluation would leave them to)."""
+        from functools import partial
+
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         s = self.schema
         if not self._log and not self._segments:
             return self._empty()
@@ -4102,206 +4251,41 @@ class CqlTable:
             )
             if self._snap_cache is not None and self._snap_cache[0] == key:
                 return self._snap_cache[1]
-        if s.counter:
-            return self._counter_snapshot(max_wt_us=max_wt_us)
-        mut = self.mutation_log()
-        if max_wt_us is not None:
-            mut = mut.filter(F.col("writetime") <= F.lit(max_wt_us))
-        # TTL is in writetime units here (the logical clock); the batch W2
-        # operator does the real seconds→µs conversion. Default asof sees
-        # everything un-expired that has no TTL.
-        asof = asof_us if asof_us is not None else self._max_wt + 1
-
-        # filters/aggregates below are SQL strings, not Column chains —
-        # plan CONSTRUCTION is driver-side py4j work on every snapshot
-        # build (~1.3 s / ~1600 round-trips before the r13 conversion)
-        part_tombs = (
-            mut.filter(f"kind = '{PART_TOMB}'")
-            .groupBy("pk")
-            .agg(F.max("writetime").alias("pt_ts"))
+        cols = self._visible_columns()
+        fields = [(name, self._raw_type(name)) for name, _, _ in cols]
+        segs = [(p, self._seg_file(p)[1]) for p in self._segments]
+        n = min(
+            self.spark.sparkContext.defaultParallelism,
+            max(1, sum(len(h) for _, h in segs)),
         )
-        row_tombs = (
-            mut.filter(f"kind = '{ROW_TOMB}'")
-            .groupBy("pk", "ck")
-            .agg(F.max("writetime").alias("rt_ts"))
+        task = partial(
+            _scan_splits, schema=s, multi=self._multi(), segs=segs,
+            tail=_mut_table(self._log),
+            asof=asof_us if asof_us is not None else (self._max_wt or 0) + 1,
+            max_wt=max_wt_us, fields=fields,
         )
-        clustered = mut.filter(
-            f"ck IS NOT NULL AND kind IN ('{CELL}', '{MARKER}', "
-            f"'{CELL_TOMB}')"
-        )
-        coll_tombs = (
-            mut.filter(f"kind = '{COLL_TOMB}'")
-            .groupBy("pk", "ck", "col")
-            .agg(F.max("writetime").alias("gt_ts"))
-        )
-
-        # range-tombstone coverage per distinct row key (tiny broadcast
-        # join). Both frames derive from one log DataFrame: the join key
-        # is RENAMED on the tombstone side (rt_pk, the cql_dml convention)
-        # so Spark never sees an ambiguous self-join equality predicate.
-        range_tombs = mut.filter(F.col("kind") == RANGE_TOMB).select(
-            F.col("pk").alias("rt_pk"),
-            F.when(F.col("ck") == "", F.array().cast("array<string>"))
-            .otherwise(F.split("ck", SEP))
-            .alias("pref_arr"),
-            "lo", "hi", "lo_incl", "hi_incl", "writetime",
-        )
-        rkeys = (
-            clustered.select("pk", "ck")
-            .distinct()
-            .withColumn("ck_arr", F.split("ck", SEP))
-        )
-        rcov = (
-            rkeys.join(
-                F.broadcast(range_tombs),
-                (F.col("pk") == F.col("rt_pk")) & self._range_cover_cond(),
-            )
-            .select("pk", "ck", "writetime")
-            .groupBy("pk", "ck")
-            .agg(F.max("writetime").alias("rg_ts"))
-        )
-
-        # per (pk, ck, col, elem) pick the winner among cells/markers and
-        # their tombstones: writetime desc, tombstone beats write, arrival
-        _tomb_rank = (
-            f"row_number() OVER (PARTITION BY pk, ck, col, elem ORDER BY "
-            f"writetime DESC, CAST(kind = '{CELL_TOMB}' AS INT) DESC, "
-            f"seq DESC)"
-        )
-        winners = (
-            clustered.withColumn("__rn", F.expr(_tomb_rank))
-            .filter("__rn = 1")
-            .drop("__rn")
-        )
-
-        live = (
-            # W2: TTL expiry (0 = no ttl); drop tombstone winners
-            winners.filter(
-                f"kind != '{CELL_TOMB}' AND "
-                f"(ttl = 0 OR writetime + ttl > {int(asof)})"
-            )
-            # row/range/partition tombstone shadowing (W3): survive if newer
-            .join(F.broadcast(part_tombs), "pk", "left")
-            .join(F.broadcast(row_tombs), ["pk", "ck"], "left")
-            .join(F.broadcast(rcov), ["pk", "ck"], "left")
-            .filter(
-                "(pt_ts IS NULL OR writetime > pt_ts) AND "
-                "(rt_ts IS NULL OR writetime > rt_ts) AND "
-                "(rg_ts IS NULL OR writetime > rg_ts)"
-            )
-            # collection tombstone horizon per column
-            .join(F.broadcast(coll_tombs), ["pk", "ck", "col"], "left")
-            .filter("gt_ts IS NULL OR writetime > gt_ts")
-        )
-
-        # the wide row per (pk, ck), untyped: the winning cell string of
-        # each scalar column, the live cells of each collection and
-        # non-frozen UDT column, and the writetime maxima.
-        # _visible_exprs types it, by the rule partition_frame applies
-        aggs = []
-        for c in s.regular:
-            if c in self._ct.coll_regular or c in s.nonfrozen:
-                aggs.append(
-                    F.expr(
-                        f"collect_list(CASE WHEN col = '{c}' "
-                        f"THEN struct(elem, val) END)"
-                    ).alias(c)
-                )
-                wt_name = f"__maxwritetime_{c}"
-            else:
-                aggs.append(
-                    F.expr(f"max(CASE WHEN col = '{c}' THEN val END)")
-                    .alias(c)
-                )
-                wt_name = f"__writetime_{c}"
-            aggs.append(
-                F.expr(f"max(CASE WHEN col = '{c}' THEN writetime END)")
-                .alias(wt_name)
-            )
-        # a table can legally end up with ZERO aggregated columns (every
-        # column in the primary key, or ALTER ... DROP removed the last
-        # regular one — surfaced by the round-13 dropped-column work):
-        # groupBy().agg() needs at least one expression
-        wide = live.groupBy("pk", "ck").agg(
-            *(aggs or [F.count(F.lit(1)).alias("__row_marker")])
-        )
-
-        if s.static:
-            statics = mut.filter(
-                f"ck IS NULL AND kind IN ('{CELL}', '{CELL_TOMB}')"
-            )
-            s_live = (
-                statics.withColumn(
-                    "__rn",
-                    F.expr(
-                        f"row_number() OVER (PARTITION BY pk, col ORDER BY "
-                        f"writetime DESC, CAST(kind = '{CELL_TOMB}' AS INT) "
-                        f"DESC, seq DESC)"
-                    ),
-                )
-                .filter("__rn = 1")
-                .filter(
-                    f"kind != '{CELL_TOMB}' AND "
-                    f"(ttl = 0 OR writetime + ttl > {int(asof)})"
-                )
-                .join(F.broadcast(part_tombs), "pk", "left")
-                .filter("pt_ts IS NULL OR writetime > pt_ts")
-            )
-            s_aggs = []
-            for c in s.static:
-                s_aggs.append(
-                    F.expr(f"max(CASE WHEN col = '{c}' THEN val END)")
-                    .alias(c)
-                )
-                s_aggs.append(
-                    F.expr(f"max(CASE WHEN col = '{c}' THEN writetime END)")
-                    .alias(f"__writetime_{c}")
-                )
-            s_wide = s_live.groupBy("pk").agg(*s_aggs)
-            # static cells alone keep the partition visible: one NULL-ck row
-            lonely = s_wide.join(
-                wide.select("pk").distinct(), "pk", "left_anti"
-            ).withColumn("ck", F.lit(None).cast("string"))
-            wide = wide.join(F.broadcast(s_wide), "pk", "left").unionByName(
-                lonely, allowMissingColumns=True
-            )
-
-        out = wide.selectExpr(*self._visible_exprs()).orderBy(
-            *s.partition_cols, *s.clustering
+        out = (
+            _local_frame(self.spark, _token_splits(n), "lo long, hi long")
+            .mapInArrow(task, from_arrow_schema(pa.schema(fields)))
+            .selectExpr(*(
+                sql if sql == f"`{c}`" else f"{sql} AS `{c}`"
+                for c, _, sql in cols
+            ))
+            # one reducer sorts: a range exchange would sample its input
+            # first, running every task twice
+            .repartition(1)
+            .orderBy(*s.partition_cols, *s.clustering)
         )
         if plain:
             self._snap_cache = (key, out)
         return out
 
-    def _key_columns(self, split: bool = True) -> list[tuple[str, str, str]]:
-        """(name, type, SQL) of the typed user-facing key columns. With
-        ``split`` the SQL reads the log's single ``pk`` string (cast for a
-        single-column key, SEP-split for a composite one: the clustering
-        convention) and splits each clustering column out of ``ck``;
-        without it, each component is already its own string column of
-        that name (the frame :meth:`partition_frame` builds)."""
-        s = self.schema
-        srcs = [
-            f"split(pk, '{SEP}')[{i}]" if s.pk_composite else "pk"
-            for i in range(len(s.partition_cols))
-        ] + [f"split(ck, '{SEP}')[{i}]" for i in range(len(s.clustering))]
-        out = []
-        for c, src in zip((*s.partition_cols, *s.clustering), srcs):
-            src = src if split else f"`{c}`"
-            out.append((c, s.key_type(c), f"CAST({src} AS {s.key_type(c)})"))
-        return out
-
-    def _key_exprs(self) -> list[str]:
-        """SQL for the typed key columns of a wide row that holds the
-        log's ``pk`` and ``ck`` (:meth:`_key_columns`)."""
-        return [f"{sql} AS `{c}`" for c, _, sql in self._key_columns()]
-
     # The Arrow typer's per-type rule (partition_frame, _empty): a visible
     # scalar type -> (the spelling of the stored strings it converts, its
     # Arrow type). Within that spelling pyarrow's cast reads a string
     # exactly as Spark's CAST does (tests/test_history_fuzz.py checks it
-    # against the snapshot); writetime shadows are int64 already. Every
-    # other column keeps its _visible_exprs SQL, in one residual
+    # against the snapshot); cell-metadata shadows are int64 already.
+    # Every other column keeps its _visible_columns SQL, in one residual
     # selectExpr: the types not listed here (timestamp, date,
     # decimal/varint, float/double, UDTs, tuples, duration,
     # collections), because only Spark's cast reads every form their
@@ -4342,22 +4326,27 @@ class CqlTable:
         except pa.ArrowInvalid:  # outside the type's range
             return None
 
-    def _visible_columns(self, split: bool = True) -> list[tuple]:
+    def _visible_columns(self) -> list[tuple]:
         """(name, type, SQL) of each visible column, in output order:
         keys, regular columns, statics, the ``__writetime_<col>``
-        shadows (f2 convention), then the ``__maxwritetime_<col>``
-        shadows of multi-cell columns. The SQL types the column from the
-        untyped wide row: each scalar and static column's winning cell
-        string, each collection and non-frozen UDT column's live cells
-        as ``array<struct<elem, val>>``, the writetime maxima, and the
-        keys as :meth:`_key_columns` reads them (``split``). Casts and
+        shadows (f2 convention), the ``__ttl_<col>`` shadows of the same
+        columns, then the ``__maxwritetime_<col>`` shadows of multi-cell
+        columns. The SQL types the column from the untyped wide row
+        (:func:`_row_values`, in the :meth:`_raw_type` of each column):
+        each scalar and static column's winning cell string, each
+        collection and non-frozen UDT column's live cells as
+        ``array<struct<elem, val>>``, the cell metadata, and each key
+        component's own string column. Casts and
         ``from_json`` re-type the canonical strings; collections sort
         and dedup here, so the order of the input cells never matters.
         The type is the one a plain cast of the stored string yields
         (None for multi-cell columns and shadows). A counter table's
         columns are the keys and one bigint per counter."""
         s = self.schema
-        out = self._key_columns(split)
+        out = [
+            (c, s.key_type(c), f"CAST(`{c}` AS {s.key_type(c)})")
+            for c in s.key_cols
+        ]
         if s.counter:
             return out + [
                 (c, t, f"CAST(`{c}` AS {t})") for c, t in s.regular.items()
@@ -4419,69 +4408,74 @@ class CqlTable:
             # an empty non-frozen collection IS null (reference semantics)
             out.append((c, None, f"CASE WHEN size({agg}) > 0 THEN {agg} END"))
         out += [(c, t, cell(f"`{c}`", t)) for c, t in s.static.items()]
-        # writetime() of a multi-cell UDT is not a single value (the
-        # reference errors pre-4.1): its shadow is NULL. MAXWRITETIME
-        # (`[C* CASSANDRA-17425 — 4.1, unverified]`) of a multi-cell
-        # column reads the max LIVE element-cell writetime
-        out += [
-            (f"__writetime_{c}", None,
-             "CAST(NULL AS BIGINT)" if c in s.nonfrozen
-             else f"`__writetime_{c}`")
-            for c in (*self._ct.scalar_regular, *s.static)
-        ]
+        # writetime() and ttl() of a multi-cell UDT are not single
+        # values (the reference errors pre-4.1): their shadows are NULL.
+        # MAXWRITETIME (`[C* CASSANDRA-17425 — 4.1, unverified]`) of a
+        # multi-cell column reads the max LIVE element-cell writetime
+        for shadow in ("__writetime_", "__ttl_"):
+            out += [
+                (f"{shadow}{c}", None,
+                 "CAST(NULL AS BIGINT)" if c in s.nonfrozen
+                 else f"`{shadow}{c}`")
+                for c in (*self._ct.scalar_regular, *s.static)
+            ]
         out += [
             (f"__maxwritetime_{c}", None, f"`__maxwritetime_{c}`")
             for c in (*self._ct.coll_regular, *sorted(s.nonfrozen))
         ]
         return out
 
-    def _visible_exprs(self) -> list[str]:
-        """The select list that types a reconciled wide row holding the
-        log's ``pk`` and ``ck`` into the table's visible columns
-        (:meth:`_visible_columns`) — what :meth:`snapshot` applies.
-        :meth:`partition_frame` types the same columns by the same rule,
-        most of them in Arrow (:attr:`_ARROW_CASTS`)."""
-        return [
-            sql if sql == f"`{c}`" else f"{sql} AS `{c}`"
-            for c, _, sql in self._visible_columns()
-        ]
+    def _multi(self) -> frozenset:
+        """The multi-cell regular columns: collections and non-frozen
+        UDTs."""
+        return frozenset(self._ct.coll_regular) | frozenset(self.schema.nonfrozen)
+
+    def _raw_type(self, name: str):
+        """The Arrow type of visible column ``name`` in the untyped wide
+        row (:func:`_row_values`): int64 cell metadata, a multi-cell
+        column's ``{elem, val}`` cells, or the stored string."""
+        import pyarrow as pa
+
+        if name.startswith("__"):
+            return pa.int64()
+        if name in self._multi():
+            return pa.list_(
+                pa.struct([("elem", pa.string()), ("val", pa.string())])
+            )
+        return pa.string()
 
     def _typed_frame(
         self, vals: dict[str, list], shadows: bool = True
     ) -> DataFrame:
-        """The visible frame of the untyped columns ``vals`` (name ->
-        values; each key component its own string column, missing
-        columns empty or NULL): one Arrow table that already holds every
-        column :attr:`_ARROW_CASTS` converts in its visible type, and the
-        rest raw, typed by their :meth:`_visible_columns` SQL in one
-        residual selectExpr. A table of text, int-family and boolean
-        columns makes no selectExpr at all, so PySpark keeps the schema
-        it built the frame with and reading it costs no JVM call. Spark
-        keeps the frame as a LocalRelation: collecting it runs no job.
-        ``shadows=False`` leaves the writetime shadows out."""
+        """The visible frame of the untyped columns ``vals``
+        (:func:`_row_values`; missing columns empty or NULL): one Arrow
+        table that already holds every column :attr:`_ARROW_CASTS`
+        converts in its visible type, and the rest raw, typed by their
+        :meth:`_visible_columns` SQL in one residual selectExpr — the
+        select a scan types all of its columns with. A table of text,
+        int-family and boolean columns makes no selectExpr at all, so
+        PySpark keeps the schema it built the frame with and reading it
+        costs no JVM call. Spark keeps the frame as a LocalRelation:
+        collecting it runs no job. ``shadows=False`` leaves the
+        cell-metadata shadows out."""
         import pyarrow as pa
 
-        s = self.schema
-        cells = pa.list_(
-            pa.struct([("elem", pa.string()), ("val", pa.string())])
-        )
-        n = len(vals.get(s.partition_cols[0], ()))
+        n = len(vals.get(self.schema.partition_cols[0], ()))
         arrays, names, select, residual = [], [], [], False
-        for name, typ, sql in self._visible_columns(split=False):
+        for name, typ, sql in self._visible_columns():
             if name.startswith("__") and not shadows:
                 continue
             values = vals.get(name) or [None] * n
             names.append(name)
-            if name.startswith("__"):  # writetime shadows: int64 already
-                arrays.append(pa.array(values, pa.int64()))
-                select.append(f"`{name}`")
-                continue
-            arr = self._arrow_typed(values, typ)
+            arr = None if name.startswith("__") else self._arrow_typed(
+                values, typ
+            )
             if arr is None:
-                multi = name in self._ct.coll_regular or name in s.nonfrozen
-                arr = pa.array(values, cells if multi else pa.string())
-                select.append(f"{sql} AS `{name}`")
-                residual = True
+                arr = pa.array(values, self._raw_type(name))
+                residual |= sql != f"`{name}`"
+                select.append(
+                    sql if sql == f"`{name}`" else f"{sql} AS `{name}`"
+                )
             else:
                 select.append(f"`{name}`")
             arrays.append(arr)
@@ -4492,124 +4486,23 @@ class CqlTable:
         """The visible rows of partitions ``pks`` as a DataFrame with no
         Spark job behind it — the single-partition read (the reference's
         ``SinglePartitionReadCommand``) that serves a SELECT whose
-        partitions are known. :meth:`_reconcile` merges the partitions
-        at the snapshot's ``asof`` on the driver, and
-        :meth:`_typed_frame` hands the rows to Spark as one Arrow table
-        typed on the driver: text, int-family and boolean columns and
-        the writetime shadows convert in Arrow (:attr:`_ARROW_CASTS`),
-        the rest keep their SQL cast. Columns, types, shadows and row
-        order equal ``snapshot()`` filtered to ``pks``; the rows are
-        pre-sorted here because a Sort on a LocalRelation costs Spark
-        jobs. ``shadows=False`` leaves the writetime shadows out (a
-        statement that selects no WRITETIME() / MAXWRITETIME() reads
-        none). Not for counter tables (their reconcile is a sum,
-        :meth:`_counter_snapshot`)."""
-        s = self.schema
-        state = self._reconcile(pks, (self._max_wt or 0) + 1)
-        keys = [(c, s.key_type(c)) for c in s.partition_cols]
-        cks = [(c, s.key_type(c)) for c in s.clustering]
-        vals: dict[str, list] = defaultdict(list)
-
-        def parts(joined, kts):
-            if joined is None:
-                return [None] * len(kts)
-            return joined.split(SEP) if len(kts) > 1 else [joined]
-
-        def order(joined, kts):
-            return [
-                _order_key(v, t) for v, (_, t) in zip(parts(joined, kts), kts)
-            ]
-
-        for pk in sorted(state, key=lambda p: order(p, keys)):
-            rows, statics = state[pk]
-            pk_parts = parts(pk, keys)
-            for ck in sorted(rows, key=lambda k: order(k, cks)) or [None]:
-                for (c, _), v in zip(keys, pk_parts):
-                    vals[c].append(v)
-                for (c, _), v in zip(cks, parts(ck, cks)):
-                    vals[c].append(v)
-                cells: dict = {}  # col -> [(elem, writetime, val)]
-                for (col, elem), (wt, v) in rows.get(ck, {}).items():
-                    cells.setdefault(col, []).append((elem, wt, v))
-                for c in s.regular:
-                    cs = cells.get(c, [])
-                    wt = max((w for _, w, _ in cs), default=None)
-                    if c in self._ct.coll_regular or c in s.nonfrozen:
-                        vals[c].append(
-                            [{"elem": e, "val": v} for e, _, v in cs]
-                        )
-                        vals[f"__maxwritetime_{c}"].append(wt)
-                    else:
-                        live = [v for *_, v in cs if v is not None]
-                        vals[c].append(max(live, default=None))
-                        vals[f"__writetime_{c}"].append(wt)
-                for c in s.static:
-                    wt, v = statics.get(c, (None, None))
-                    vals[c].append(v)
-                    vals[f"__writetime_{c}"].append(wt)
-        return self._typed_frame(vals, shadows)
-
-    def _counter_snapshot(self, max_wt_us: int | None = None) -> DataFrame:
-        """Counter reconcile (W6 driven from statement text): a counter cell
-        is the SUM of its increments newer than the newest tombstone that
-        covers it (cell, row, or partition level — delete wins writetime
-        ties, same strict-`>` rule as the LWW path); a row is visible iff it
-        has at least one live counter cell.
-
-        The reference leaves post-delete increments formally undefined
-        ("counters cannot be reliably re-incremented after deletion"); this
-        engine pins the deterministic reading above — increments strictly
-        newer than the tombstone count, older ones are dropped.
-
-        ``max_wt_us``: PITR cutoff (see :meth:`snapshot_pitr`) — counter
-        increments are commutative, so the as-of sum is simply the sum
-        of the increments that existed by then."""
-        s = self.schema
-        mut = self.mutation_log()
-        if max_wt_us is not None:
-            mut = mut.filter(F.col("writetime") <= F.lit(max_wt_us))
-        cell_tombs = (
-            mut.filter(F.col("kind") == CELL_TOMB)
-            .groupBy("pk", "ck", "col")
-            .agg(F.max("writetime").alias("ct_ts"))
+        partitions are known, counter tables included.
+        :meth:`_reconcile` merges the partitions at the snapshot's
+        ``asof`` on the driver by the scan's rule, :func:`_row_values`
+        builds the scan's wide rows, and :meth:`_typed_frame` hands them
+        to Spark as one Arrow table typed on the driver: text,
+        int-family and boolean columns and the cell-metadata shadows
+        convert in Arrow (:attr:`_ARROW_CASTS`), the rest keep their SQL
+        cast. Columns, types, shadows and row order equal
+        ``snapshot()`` filtered to ``pks``; the rows are pre-sorted
+        because a Sort on a LocalRelation costs Spark jobs.
+        ``shadows=False`` leaves the shadows out (a statement that calls
+        no WRITETIME() / MAXWRITETIME() / TTL() selector reads none)."""
+        asof = (self._max_wt or 0) + 1
+        state = self._reconcile(pks, asof)
+        return self._typed_frame(
+            _row_values(self.schema, self._multi(), state, asof), shadows
         )
-        row_tombs = (
-            mut.filter(F.col("kind") == ROW_TOMB)
-            .groupBy("pk", "ck")
-            .agg(F.max("writetime").alias("rt_ts"))
-        )
-        part_tombs = (
-            mut.filter(F.col("kind") == PART_TOMB)
-            .groupBy("pk")
-            .agg(F.max("writetime").alias("pt_ts"))
-        )
-        live = (
-            mut.filter(F.col("kind") == INCR)
-            .join(F.broadcast(cell_tombs), ["pk", "ck", "col"], "left")
-            .join(F.broadcast(row_tombs), ["pk", "ck"], "left")
-            .join(F.broadcast(part_tombs), "pk", "left")
-            .filter(
-                (F.col("ct_ts").isNull() | (F.col("writetime") > F.col("ct_ts")))
-                & (F.col("rt_ts").isNull() | (F.col("writetime") > F.col("rt_ts")))
-                & (F.col("pt_ts").isNull() | (F.col("writetime") > F.col("pt_ts")))
-            )
-        )
-        aggs = [
-            F.sum(
-                F.when(F.col("col") == c, F.col("val").cast("long"))
-            ).alias(c)
-            for c in s.regular
-        ]
-        # a table can legally end up with ZERO aggregated columns (every
-        # column in the primary key, or ALTER ... DROP removed the last
-        # regular one — surfaced by the round-13 dropped-column work):
-        # groupBy().agg() needs at least one expression
-        wide = live.groupBy("pk", "ck").agg(
-            *(aggs or [F.count(F.lit(1)).alias("__row_marker")])
-        )
-        return wide.selectExpr(
-            *self._key_exprs(), *(f"`{c}`" for c in s.regular)
-        ).orderBy(*s.partition_cols, *s.clustering)
 
     def _empty(self) -> DataFrame:
         """No rows, with the visible schema: :meth:`_typed_frame` of no

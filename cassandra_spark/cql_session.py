@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from cassandra_spark.catalog import TableMeta
 from cassandra_spark.cql import (
     CQLError,
+    _declared_columns,
     _parse,
     cql_select,
     reads_cell_metadata,
@@ -1972,29 +1973,22 @@ class CqlSession:
         statement's partitions are known — pinned by the WHERE
         (:meth:`_pinned_pks`) or the candidates of a 2i probe — they
         come from ``CqlTable.partition_frame``: a driver-side reconcile
-        of those partitions only, handed to Spark as one Arrow table
-        already in the visible types (text, int-family and boolean
-        columns convert in Arrow; the rest keep the snapshot's SQL cast),
-        so no Spark job runs and ``cql_select`` reads the frame's schema
-        without a JVM call (the reference's single-partition read).
-        Otherwise the Spark snapshot. The
+        of those partitions only, counter tables included, handed to
+        Spark as one Arrow table already in the visible types (text,
+        int-family and boolean columns convert in Arrow; the rest keep
+        the scan's SQL cast), so no Spark job runs and ``cql_select``
+        reads the frame's schema without a JVM call (the reference's
+        single-partition read). Otherwise the scan
+        (``CqlTable.snapshot``), whose token-range tasks reconcile by
+        the same rule. The
         statement's full WHERE still re-applies in cql_select (for a 2i
         read, the phase-2 recheck of the reference's
         CassandraIndexSearcher). Equality/CONTAINS probes value Blooms;
         numeric ranges on SAI columns probe per-segment [min, max] value
         stats; a probe past the table's ``index_probe_collect_cap``
-        returns None and the read scans. Counter tables always read the
-        snapshot (their reconcile is a sum); a traced pinned counter
-        read says so."""
+        returns None and the read scans."""
         t = self.tables[tname]
         pks = self._pinned_pks(tname, r)
-        if t.schema.counter:
-            if pks is not None and self._trace_acts is not None:
-                self._trace_acts.append(
-                    "Counter table: partitions read through the "
-                    "Spark reconcile"
-                )
-            return t.snapshot()
         if pks is None and r is not None and "in" not in r.words:
             # an indexed conjunct prunes only a pure conjunction without
             # IN (the prunes read r.top, which checks the conjunction)
@@ -3195,10 +3189,11 @@ class CqlSession:
             if m.group("dir").upper() == "TO":
                 self._check_perm("SELECT", name)
                 df = t.snapshot()
-                drop = [c for c in df.columns if c.startswith("__writetime_")]
-                # overwrite like the CSV branch's open(path, 'w') — a
-                # re-export must not raise path-exists
-                df.drop(*drop).write.mode("overwrite").parquet(path)
+                # the declared columns; overwrite like the CSV branch's
+                # open(path, 'w') — a re-export must not raise path-exists
+                _declared_columns(df, df.columns).write.mode(
+                    "overwrite"
+                ).parquet(path)
                 # count from the written files, not a second reconcile
                 return self.spark.read.parquet(path).count()
             self._check_perm("MODIFY", name)

@@ -61,8 +61,9 @@ def _values(log) -> str:
 
 
 def _range_cover_sql(schema: TableSchema) -> str:
-    """Join predicate: range tombstone t covers row key k (mirrors
-    CqlTable._range_cover_cond). ck arrays are 1-based in DuckDB."""
+    """Join predicate: range tombstone t covers row key k (the rule
+    cql_dml._range_covers states in Python). ck arrays are 1-based in
+    DuckDB."""
     branches = []
     for i, col in enumerate(schema.clustering):
         t = _dt(schema.key_type(col))

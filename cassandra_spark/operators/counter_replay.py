@@ -7,16 +7,17 @@ USING are rejected, the only write is ``SET c = c ± n``, and a cell's
 value is the SUM of its increments — not LWW. Deletes interact with sums,
 not single cells: the engine pins the deterministic reading "increments
 strictly newer than the newest covering tombstone count" (the reference
-calls post-delete re-increment undefined; see CqlTable._counter_snapshot).
+calls post-delete re-increment undefined; see the sum mode of
+cql_dml._reconcile_partition, the rule every read runs).
 
 The oracle re-derives the same reconcile in DuckDB SQL over the VALUES
 literal of the pinned mutation log (log ≡ parser output asserted in
 tests/test_counter_replay.py).
 
-Scale posture: counter reconcile is a plain sum-groupBy — the cheapest
-possible shuffle (map-side partial sums); tombstone horizons are tiny
-aggregates broadcast against the increment stream. The continuous form is
-the same `groupBy(pk, ck).agg(sum)` under Structured Streaming (S6).
+Scale posture: a scan sums each token range's partitions in its own
+Spark task, with no shuffle before the sum; a pinned read sums its
+partitions on the driver. The continuous form is a
+`groupBy(pk, ck).agg(sum)` under Structured Streaming (S6).
 """
 
 from __future__ import annotations

@@ -897,3 +897,127 @@ def test_literal_reads_match_the_oracle(
             stmt = f"SELECT k, tag, w, v FROM lt WHERE {where}"
             got = sorted(tuple(r) for r in sess.execute(stmt).collect())
             assert got == sorted(r for r in oracle if r[i] == lit), stmt
+
+
+# --- counter histories: a counter is a sum mode of the one reconcile
+# rule, so the pinned read (partition_frame) and the token-range scan
+# (snapshot, snapshot_pitr) must both equal a plain-Python sum over the
+# same history: increments and decrements, cell / row / partition
+# deletes whose USING TIMESTAMP ties, precedes or follows increments, a
+# counter batch whose delete ties its own increment, flushes and STCS
+# merges over 3-row row groups, at head and at PITR cutoffs.
+
+_COUNTER_SCHEMA = TableSchema(
+    "ct", "k", ("c",), {"a": "bigint", "b": "bigint"}, counter=True,
+    key_types={"c": "int"}, compaction="SizeTieredCompactionStrategy",
+    compaction_min_threshold=2,
+)
+_CROW = st.tuples(st.sampled_from("xy"), st.integers(0, 2))
+_CCOL = st.sampled_from("ab")
+counter_op_st = st.one_of(
+    st.tuples(st.just("inc"), _CROW, _CCOL, st.integers(-3, 5)),
+    st.tuples(st.just("batch"), _CROW, _CCOL, st.integers(1, 5)),
+    # deletes: x is the USING TIMESTAMP offset from the statement's own
+    # clock tick (-1 ties the previous statement's increments)
+    st.tuples(st.just("dcell"), _CROW, _CCOL, st.integers(-2, 1)),
+    st.tuples(st.just("drow"), _CROW, st.just("a"), st.integers(-2, 1)),
+    st.tuples(st.just("dpart"), _CROW, st.just("a"), st.integers(-2, 1)),
+    st.tuples(st.just("flush"), _CROW, st.just("a"), st.just(0)),
+    st.tuples(st.just("merge"), _CROW, st.just("a"), st.just(0)),
+)
+
+
+def _counter_stmt(op, row, col, x, clock) -> str:
+    k, c = row
+    where = f"WHERE k = '{k}' AND c = {c}"
+    inc = f"UPDATE ct SET {col} = {col} {'-' if x < 0 else '+'} {abs(x)} {where}"
+    using = f"USING TIMESTAMP {max(1, clock + x)}"
+    return {
+        "inc": inc,
+        "batch": (
+            f"BEGIN COUNTER BATCH {inc}; DELETE {col} FROM ct {where}; "
+            "APPLY BATCH"
+        ),
+        "dcell": f"DELETE {col} FROM ct {using} {where}",
+        "drow": f"DELETE FROM ct {using} {where}",
+        "dpart": f"DELETE FROM ct {using} WHERE k = '{k}'",
+    }[op]
+
+
+def _counter_model(history, cut) -> set:
+    """The visible (k, c, a, b) rows at writetime ``cut``: per cell, the
+    sum of the increments written by then that no delete written by
+    then covers at the same or a later writetime."""
+    clock, incs, tombs = 0, [], []
+    for op, (k, c), col, x in history:
+        if op in ("flush", "merge"):
+            continue
+        clock += 1
+        if op in ("inc", "batch"):
+            incs.append((k, c, col, clock, x))
+        if op == "batch":
+            tombs.append((k, c, col, clock))
+        elif op.startswith("d"):
+            tombs.append((
+                k, None if op == "dpart" else c,
+                col if op == "dcell" else None, max(1, clock + x),
+            ))
+    sums: dict = {}
+    for k, c, col, wt, d in incs:
+        if wt > cut or any(
+            tk == k and tc in (None, c) and tcol in (None, col)
+            and wt <= tw <= cut
+            for tk, tc, tcol, tw in tombs
+        ):
+            continue
+        cell = sums.setdefault((k, c), {})
+        cell[col] = cell.get(col, 0) + d
+    return {(k, c, v.get("a"), v.get("b")) for (k, c), v in sums.items()}
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    history=st.lists(counter_op_st, min_size=3, max_size=20),
+    cuts=st.lists(st.integers(0, 22), max_size=2),
+)
+# pinned: a delete tying an earlier increment, a batch's delete tying
+# its own increment, a partition delete newer than a flushed segment
+@example(
+    history=[
+        ("inc", ("x", 0), "a", 2),
+        ("dcell", ("x", 0), "a", -1),
+        ("inc", ("x", 0), "a", 3),
+        ("flush", ("x", 0), "a", 0),
+        ("batch", ("y", 1), "b", 4),
+        ("inc", ("y", 2), "a", -2),
+        ("dpart", ("y", 2), "a", 1),
+        ("inc", ("y", 2), "b", 1),
+    ],
+    cuts=[2, 6],
+)
+def test_counter_histories_match_the_sum(
+    spark, tmp_path_factory, monkeypatch, history, cuts
+):
+    monkeypatch.setattr(cql_dml, "_SEG_ROW_GROUP", 3)
+    table = CqlTable(
+        spark, _COUNTER_SCHEMA,
+        spill_dir=str(tmp_path_factory.mktemp("ctr")), spill_threshold=4,
+    )
+    for op, row, col, x in history:
+        if op == "flush":
+            table.flush()
+        elif op == "merge":
+            table.stcs_compact()
+        else:
+            table.execute(_counter_stmt(op, row, col, x, table._clock + 1))
+    head = [tuple(r) for r in table.snapshot().collect()]
+    assert set(head) == _counter_model(history, float("inf"))
+    pinned = [tuple(r) for r in table.partition_frame(["x", "y", "zz"]).collect()]
+    assert pinned == head
+    for cut in cuts:
+        got = {tuple(r) for r in table.snapshot_pitr(cut).collect()}
+        assert got == _counter_model(history, cut), cut

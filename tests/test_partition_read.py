@@ -3,7 +3,8 @@
 component with = / IN, or a 2i probe's candidate partitions, reads only
 those partitions' mutations — Bloom-gated per segment, like the
 reference's single-partition read — and collects with no Spark job.
-Whole-table scans keep the Spark snapshot."""
+Counter tables read the same way. Whole-table scans run the same
+per-partition reconcile in token-range Spark tasks (``snapshot``)."""
 
 from __future__ import annotations
 
@@ -51,8 +52,8 @@ def test_pinned_reads_collect_without_a_job(sess, spark_jobs, shape):
     j0 = spark_jobs()
     rows = sess.execute(stmt).collect()
     assert spark_jobs() == j0
-    # same answer as the Spark reconcile of the whole table, which the
-    # job counter does see
+    # same answer as the scan of the whole table, which the job counter
+    # does see
     t = sess.table("ev")
     full = sess.execute("SELECT * FROM ev").collect()
     assert len(full) == 24 and spark_jobs() > j0
@@ -133,17 +134,25 @@ def test_point_read_trace_events(sess):
     ]
 
 
-def test_counter_read_falls_back_visibly(spark):
+def test_counter_read_is_pinned(spark, spark_jobs):
+    """A counter table's pinned read sums on the driver like any other
+    partition read: no Spark job, and the read path's trace events."""
     s = CqlSession(spark)
     s.execute("CREATE TABLE hits (k text PRIMARY KEY, n counter)")
     s.execute("UPDATE hits SET n = n + 2 WHERE k = 'a'")
+    s.execute("UPDATE hits SET n = n + 5 WHERE k = 'a'")
+    s.execute("UPDATE hits SET n = n + 1 WHERE k = 'b'")
+    s.execute("SELECT n FROM hits WHERE k = 'a'").collect()  # warm
     s.execute("TRACING ON")
-    assert s.execute("SELECT n FROM hits WHERE k = 'a'").collect()[0].n == 2
+    j0 = spark_jobs()
+    assert s.execute("SELECT n FROM hits WHERE k = 'a'").collect()[0].n == 7
+    assert spark_jobs() == j0
     s.execute("TRACING OFF")
     acts = [e.activity for e in s.trace_events().collect()]
     assert acts == [
         "Parsing SELECT",
-        "Counter table: partitions read through the Spark reconcile",
+        "Merged data from memtables and 0 sstables",
+        "Read 1 live rows and 0 tombstone cells",
         "Executing statement",
     ]
 

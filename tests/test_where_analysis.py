@@ -129,13 +129,23 @@ WARM = {
     "slice": "SELECT c, v FROM ev WHERE k = 'p2' AND c >= 2 AND c < 5",
     "2i": "SELECT k, c, v FROM ev WHERE tag = 't1'",
     "scan": "SELECT k, c FROM ev WHERE v = 'x3' ALLOW FILTERING",
+    # the projection is split and rewritten over the same masked copy
+    "proj_pinned": (
+        "SELECT token(k), 'a,b' AS t, 'token(q)' AS u, TTL(v) FROM ev "
+        "WHERE k = 'p2'"
+    ),
+    "proj_scan": (
+        "SELECT k, 'a,b' AS t, 'token(q)' AS u FROM ev "
+        "WHERE v = 'x3' ALLOW FILTERING"
+    ),
 }
 
 
 def test_each_select_masks_its_where_once_per_side(spark, tmp_path, monkeypatch):
     """After one read of each shape, ``_mask_quoted`` is counted: a
     SELECT masks its text once on the session side (guardrails, pinned
-    read, prunes) and once inside ``cql_select`` (gate and rewrite)."""
+    read, prunes) and once inside ``cql_select`` (gate, WHERE rewrite,
+    projection split and rewrite)."""
     s = CqlSession(spark, spill_dir=str(tmp_path))
     s.execute(
         "CREATE TABLE ev (k text, c int, v text, tag text, "
@@ -172,6 +182,16 @@ def test_each_select_masks_its_where_once_per_side(spark, tmp_path, monkeypatch)
         assert s.execute(stmt).collect(), shape
         assert calls["select"] <= 1, shape
         assert calls["all"] - calls["select"] <= 1, shape
+
+
+@pytest.mark.parametrize("where", ["WHERE k = 'v'", "WHERE w = 1 ALLOW FILTERING"])
+def test_projection_literals_are_values(sess, where):
+    """A comma, ``token(`` or ``/`` inside a projection literal is part
+    of the value, on the pinned read and on the scan alike."""
+    rows = sess.execute(
+        f"SELECT k, 'a,b' AS t, 'token(q)' AS u, '4/2' AS d FROM tn {where}"
+    ).collect()
+    assert [tuple(r) for r in rows] == [("v", "a,b", "token(q)", "4/2")]
 
 
 # --- INSERT JSON into a non-frozen UDT ---------------------------------------
