@@ -36,38 +36,23 @@ class TableMeta:
 
     Mirrors the split in `[C* schema/TableMetadata.java]` (unverified):
     partition_key = unit of distribution, clustering = sort within partition.
+    ``indexes`` is the one index-definition field: a session table's
+    entries are read from ``CqlSession.index_names``, and every reader
+    (the restriction gate, ANN routing) derives its per-kind view from it.
     """
 
     name: str
     partition_key: tuple[str, ...] = ()
     clustering: tuple[str, ...] = ()  # prefix "-" means DESC
     notes: str = ""
-    # secondary-indexed columns (CREATE INDEX): equality/CONTAINS on these
-    # passes the ALLOW FILTERING gate, mirroring `[C* index/internal/
-    # CassandraIndex, unverified]` — analytically an index changes only
-    # the *restriction* rule; the scan itself is Spark's job (R5/R6).
-    indexed: tuple[str, ...] = ()
-    # KEYS()-indexed map columns: CONTAINS KEY on these passes the gate
-    # (the reference's map-key 2i); a plain values index does NOT admit
-    # CONTAINS KEY, and vice versa.
-    indexed_keys: tuple[str, ...] = ()
-    # SAI/SASI (CREATE CUSTOM INDEX) columns: equality, CONTAINS, AND
-    # range restrictions pass the gate (SAI supports numeric/text ranges).
-    indexed_sai: tuple[str, ...] = ()
-    # ENTRIES()-indexed map columns: map-subscript equality
-    # (col['k'] = v) passes the gate — the reference's entry 2i kind.
-    indexed_entries: tuple[str, ...] = ()
-    # FULL()-indexed frozen collections: whole-value equality passes.
-    indexed_full: tuple[str, ...] = ()
-    # SASI (CREATE CUSTOM INDEX .. USING '..SASIIndex') columns: LIKE
-    # 'prefix%' / '%contains%' passes the gate IN ADDITION to the SAI
-    # predicate kinds — the reference's SASI is the only index class
-    # admitting arbitrary LIKE (`[C* index/sasi/SASIIndex, unverified]`).
-    indexed_sasi: tuple[str, ...] = ()
-    # per-column SASI mode from WITH OPTIONS = {'mode': ...}: (col, mode)
-    # pairs with mode in {CONTAINS, SPARSE}; absent = PREFIX (the
-    # reference default — LIKE 'pre%' only).
-    sasi_mode: tuple[tuple[str, str], ...] = ()
+    # the table's indexes, one (column, kind, option) entry each, kind in
+    # {values, keys, entries, full, sai, sasi}; option is the SASI mode
+    # or the SAI similarity function (None = the reference default).
+    # The kind decides which restrictions pass the ALLOW FILTERING gate
+    # (`[C* schema/IndexMetadata; index/internal/CassandraIndex,
+    # unverified]`) — analytically an index changes only the
+    # *restriction* rule; the scan itself is Spark's job (R5/R6).
+    indexes: tuple[tuple[str, str, str | None], ...] = ()
     # STATIC columns (per-partition values): legal SELECT DISTINCT
     # selectors alongside the full partition key (CASSANDRA-8087 lineage
     # `[C* cql3/statements/SelectStatement, unverified]`).
@@ -83,12 +68,6 @@ class TableMeta:
     # bucket-partitioned artifact (static partition pruning on the
     # multiprobe set) instead of recomputing LSH buckets per row.
     vector_index: tuple[tuple[str, str], ...] = ()
-    # per-column ANN ranking function from the SAI index's
-    # WITH OPTIONS = {'similarity_function': ...} (`[C* index/sai/
-    # VectorSimilarityFunction, unverified]`): (column, fn) pairs with
-    # fn in {cosine, euclidean, dot_product}; absent = cosine (the
-    # reference default).
-    sai_similarity: tuple[tuple[str, str], ...] = ()
 
     @property
     def clustering_cols(self) -> tuple[str, ...]:

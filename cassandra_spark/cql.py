@@ -45,6 +45,24 @@ from cassandra_spark.operators import murmur3
 
 AGG_FNS = ("count", "min", "max", "sum", "avg")
 
+# The restriction kinds each index kind admits through the ALLOW
+# FILTERING gate (the reference's 2i rule: the index KIND must match the
+# predicate). A values index admits equality / CONTAINS, a KEYS() map
+# index CONTAINS KEY, an ENTRIES() map index subscript equality
+# (col['k'] = v), a FULL() index whole-value equality. The custom
+# classes differ BY CLASS (`[C* index/sai; index/sasi/SASIIndex,
+# unverified]`): SAI admits equality / range / CONTAINS (+ CONTAINS KEY
+# and entries on maps) but not LIKE; SASI admits equality / range /
+# LIKE. Plain 2i range predicates always still need ALLOW FILTERING.
+_INDEX_ADMITS = {
+    "values": frozenset({"eq", "contains"}),
+    "keys": frozenset({"contains_key"}),
+    "entries": frozenset({"entries"}),
+    "full": frozenset({"eq"}),
+    "sai": frozenset({"eq", "range", "contains", "contains_key", "entries"}),
+    "sasi": frozenset({"eq", "range", "like"}),
+}
+
 
 class CQLError(ValueError):
     """Invalid statement — message shapes mirror the reference's."""
@@ -703,10 +721,12 @@ _SELECTOR_CALL_RE = re.compile(
 )
 
 
-def reads_cell_metadata(stmt: str) -> bool:
-    """Whether a SELECT calls a WRITETIME() / MAXWRITETIME() / TTL()
-    selector, the only readers of the shadow columns."""
-    return _SELECTOR_CALL_RE.search(stmt) is not None
+def reads_cell_metadata(s: _Stmt) -> bool:
+    """Whether the parsed SELECT ``s`` calls a WRITETIME() /
+    MAXWRITETIME() / TTL() selector, the only readers of the shadow
+    columns (searched over the literal-masked projection, so a string
+    literal that spells one is a value)."""
+    return _SELECTOR_CALL_RE.search(s.projection.masked) is not None
 
 
 def _declared_columns(df: DataFrame, columns) -> DataFrame:
@@ -1167,7 +1187,9 @@ def _compile_ann(
         py_bucket,
     )
 
-    if col in getattr(meta, "indexed_sai", ()):
+    # SAI-indexed columns → their similarity function (None = cosine)
+    sai = {c: opt for c, kind, opt in meta.indexes if kind == "sai"}
+    if col in sai:
         qvec = [float(x) for x in inner.split(",")]
         probes = multiprobe(py_bucket(qvec, N_PLANES), N_PLANES)
         vidx = dict(getattr(meta, "vector_index", ()))
@@ -1205,7 +1227,7 @@ def _compile_ann(
     # the reference default; euclidean ranks by squared L2 ascending
     # (the reference's 1/(1+d^2) similarity is order-equivalent);
     # dot_product by the raw inner product descending.
-    sim = dict(getattr(meta, "sai_similarity", ())).get(col, "cosine")
+    sim = sai.get(col) or "cosine"
     cq = F.expr(dot_spark(col, "__q"))
     if sim == "dot_product":
         score, direction = cq, F.desc
@@ -1288,6 +1310,11 @@ def cql_select(
         # processPartitionKeyRestrictions, unverified]`)
         pk_set = set(meta.partition_key)
         pk_restricted = restricted & pk_set
+        # column → {index kind → option}, read once from the table's
+        # index entries
+        by_col: dict[str, dict[str, str | None]] = {}
+        for c, kind, opt in meta.indexes:
+            by_col.setdefault(c, {})[kind] = opt
         # EXCEPT: an indexed COMPONENT of a composite partition key
         # admits a lone equality restriction without ALLOW FILTERING
         # (the reference's 2i-on-partition-component rule — indexable
@@ -1295,7 +1322,7 @@ def cql_select(
         pk_index_served = (
             len(pk_set) > 1
             and bool(pk_restricted)
-            and pk_restricted <= set(getattr(meta, "indexed", ()))
+            and all("values" in by_col.get(c, ()) for c in pk_restricted)
             and all(
                 "eq" in r.kinds(c) and r.kinds(c) <= {"eq", "entries"}
                 for c in pk_restricted
@@ -1331,74 +1358,47 @@ def cql_select(
             )
 
         # a secondary index admits restrictions on its column without
-        # ALLOW FILTERING (the reference's 2i rule), but the index KIND
-        # must match the predicate: a values index admits equality /
-        # CONTAINS (not CONTAINS KEY), a KEYS() map index admits
-        # CONTAINS KEY only, an ENTRIES() map index admits subscript
-        # equality (col['k'] = v) only, a FULL() index admits whole-value
-        # equality. The custom classes differ BY CLASS (`[C* index/sai;
-        # index/sasi/SASIIndex, unverified]`): SAI admits equality /
-        # range / CONTAINS (+ CONTAINS KEY and entries on maps) but NOT
-        # LIKE; SASI admits equality / range / LIKE. Plain 2i range
-        # predicates always still need ALLOW FILTERING.
-        val_idx = set(getattr(meta, "indexed", ()))
-        key_idx = set(getattr(meta, "indexed_keys", ()))
-        sai_idx = set(getattr(meta, "indexed_sai", ()))
-        ent_idx = set(getattr(meta, "indexed_entries", ()))
-        full_idx = set(getattr(meta, "indexed_full", ()))
-        sasi_idx = set(getattr(meta, "indexed_sasi", ()))
+        # ALLOW FILTERING when its kind admits every predicate kind on
+        # the column (_INDEX_ADMITS)
         indexed_ok = set()
         for c in non_key:
             kinds = r.kinds(c) - {"in"}
+            idx = by_col.get(c, {})
             if not kinds:
                 # the column appears in WHERE outside every recognized
                 # predicate shape (IN list, IS NOT NULL, function args):
                 # the custom index classes keep the historical
                 # any-appearance admission for those, 2i kinds do not
-                if c in sai_idx or c in sasi_idx:
+                if "sai" in idx or "sasi" in idx:
                     indexed_ok.add(c)
                 continue
-            admitted = set()
-            if c in sai_idx:
-                admitted |= {"eq", "range", "contains", "contains_key",
-                             "entries"}
-            if c in sasi_idx:
-                admitted |= {"eq", "range", "like"}
-                if "like" in kinds:
-                    # the SASI index MODE bounds the LIKE shapes it can
-                    # serve (`[C* index/sasi/conf/IndexMode,
-                    # unverified]`): PREFIX (default) = 'pre%' only,
-                    # CONTAINS = any, SPARSE (dense numerics) = none
-                    mode = dict(getattr(meta, "sasi_mode", ())).get(c)
-                    if mode == "SPARSE":
-                        raise CQLError(
-                            f"LIKE is not supported on the SPARSE-mode "
-                            f"SASI index of {c!r}"
-                        )
-                    pats = [
-                        lit[1:-1].replace("''", "'")
-                        for rel in r.rels
-                        if rel.cols == (c,) and rel.kind == "like"
-                        for lit in rel.lits(("str",)) or ()
-                    ]
-                    if mode != "CONTAINS" and any(
-                        not re.fullmatch(r"[^%]+%", p) for p in pats
-                    ):
-                        raise CQLError(
-                            f"the PREFIX-mode SASI index of {c!r} only "
-                            "supports LIKE '<prefix>%' queries (create "
-                            "the index WITH OPTIONS = {'mode': "
-                            "'CONTAINS'} for infix/suffix search)"
-                        )
-            if c in val_idx:
-                admitted |= {"eq", "contains"}
-            if c in key_idx:
-                admitted |= {"contains_key"}
-            if c in ent_idx:
-                admitted |= {"entries"}
-            if c in full_idx:
-                admitted |= {"eq"}
-            if kinds <= admitted:
+            if "like" in kinds and "sasi" in idx:
+                # the SASI index MODE bounds the LIKE shapes it can
+                # serve (`[C* index/sasi/conf/IndexMode, unverified]`):
+                # PREFIX (default) = 'pre%' only, CONTAINS = any,
+                # SPARSE (dense numerics) = none
+                mode = idx["sasi"]
+                if mode == "SPARSE":
+                    raise CQLError(
+                        f"LIKE is not supported on the SPARSE-mode "
+                        f"SASI index of {c!r}"
+                    )
+                pats = [
+                    lit[1:-1].replace("''", "'")
+                    for rel in r.rels
+                    if rel.cols == (c,) and rel.kind == "like"
+                    for lit in rel.lits(("str",)) or ()
+                ]
+                if mode != "CONTAINS" and any(
+                    not re.fullmatch(r"[^%]+%", p) for p in pats
+                ):
+                    raise CQLError(
+                        f"the PREFIX-mode SASI index of {c!r} only "
+                        "supports LIKE '<prefix>%' queries (create "
+                        "the index WITH OPTIONS = {'mode': "
+                        "'CONTAINS'} for infix/suffix search)"
+                    )
+            if kinds <= set().union(*(_INDEX_ADMITS[k] for k in idx)):
                 indexed_ok.add(c)
         if (non_key - indexed_ok) and not s.allow_filtering and not uses_token:
             raise CQLError(

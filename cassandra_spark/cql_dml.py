@@ -1131,16 +1131,23 @@ _INSERT_JSON_RE = re.compile(
     r"(?:USING\s+(?P<using>.+?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# one string literal ('' escapes included; a literal never ends right
+# before another quote, so each text splits into literals one way only).
+# The UPDATE / DELETE forms step over whole literals and _split_unquoted
+# rejoins a split inside one, so a WHERE, IF, AND or ';' inside a value
+# stays part of the value.
+_LIT = r"'[^']*(?:''[^']*)*'(?!')"
+_TEXT = rf"(?:[^']|{_LIT})+?"
 _UPDATE_RE = re.compile(
     r"^\s*UPDATE\s+(?P<table>\w+)\s*(?:USING\s+(?P<using>.+?)\s+)?"
-    r"SET\s+(?P<set>.+?)\s+WHERE\s+(?P<where>.+?)"
+    rf"SET\s+(?P<set>{_TEXT})\s+WHERE\s+(?P<where>{_TEXT})"
     r"(?:\s+IF\s+(?P<cond>.+?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _DELETE_RE = re.compile(
-    r"^\s*DELETE\s*(?P<cols>[^;]*?)\s*FROM\s+(?P<table>\w+)\s*"
-    r"(?:USING\s+TIMESTAMP\s+(?P<ts>\d+)\s+)?WHERE\s+(?P<where>.+?)"
-    r"(?:\s+IF\s+(?P<cond>.+?))?\s*;?\s*$",
+    rf"^\s*DELETE\s*(?P<cols>(?:[^;']|{_LIT})*?)\s*FROM\s+(?P<table>\w+)"
+    r"\s*(?:USING\s+TIMESTAMP\s+(?P<ts>\d+)\s+)?"
+    rf"WHERE\s+(?P<where>{_TEXT})(?:\s+IF\s+(?P<cond>.+?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _COND_RE = re.compile(r"^(\w+)\s*(=|!=|<=|>=|<|>)\s*(.+)$", re.DOTALL)
@@ -1152,12 +1159,32 @@ _BATCH_RE = re.compile(
 )
 
 
-_STMT_SEP_RE = re.compile(r";\s*")
+# separators, captured so _split_unquoted can rejoin one inside a literal
+_STMT_SEP_RE = re.compile(r"(;\s*)")
+_AND_SEP_RE = re.compile(r"(\s+AND\s+)", re.IGNORECASE)
+
+
+def _split_unquoted(text: str, sep: re.Pattern) -> list[str]:
+    """``text`` split at the separators ``sep`` matches outside string
+    literals: a part that leaves a literal open (an odd number of quotes
+    so far, an escaped '' counting twice) joins the next part again."""
+    pieces = sep.split(text)
+    parts, open_ = [pieces[0]], pieces[0].count("'") % 2
+    for i in range(1, len(pieces), 2):
+        if open_:
+            parts[-1] += pieces[i] + pieces[i + 1]
+        else:
+            parts.append(pieces[i + 1])
+        open_ ^= pieces[i + 1].count("'") % 2
+    return parts
 
 
 def batch_subs(m: re.Match) -> list[str]:
     """The sub-statements of a :data:`_BATCH_RE` match."""
-    return [sub for sub in _STMT_SEP_RE.split(m.group("body")) if sub.strip()]
+    return [
+        sub for sub in _split_unquoted(m.group("body"), _STMT_SEP_RE)
+        if sub.strip()
+    ]
 
 
 def batch_kind(m: re.Match) -> str:
@@ -2260,8 +2287,9 @@ class CqlTable:
         return ct.all_static(_lead_name(a) for a in items)
 
     def _eval_cond(self, cond: str, pk: str | None, ck) -> bool:
+        bare = re.sub(_LIT, "''", cond)  # a literal naming a column is a value
         for c in self.schema.nonfrozen:
-            if re.search(rf"\b{re.escape(c)}\b", cond, re.IGNORECASE):
+            if re.search(rf"\b{re.escape(c)}\b", bare, re.IGNORECASE):
                 raise CQLError(
                     f"IF conditions on non-frozen UDT column {c!r} are "
                     "not supported (use a frozen<> column)"
@@ -2272,7 +2300,7 @@ class CqlTable:
         if re.fullmatch(r"EXISTS", cond, re.IGNORECASE):
             return self._row_state(pk, ck) is not None
         state = self._row_state(pk, ck)
-        for part in _AND_RE.split(cond):
+        for part in _split_unquoted(cond, _AND_SEP_RE):
             m = _COND_RE.match(part.strip())
             if not m:
                 raise CQLError(f"unsupported IF condition: {part!r}")
@@ -2567,7 +2595,7 @@ class CqlTable:
         eq: dict[str, str | None] = {}
         ranges: list[tuple[str, str, str | None]] = []
         cols = self._ct.cols
-        for part in _AND_RE.split(where.strip()):
+        for part in _split_unquoted(where.strip(), _AND_SEP_RE):
             m = _REL_RE.fullmatch(part.strip())
             if not m:
                 raise CQLError(f"DML WHERE must be key relations: {part!r}")

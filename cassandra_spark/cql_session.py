@@ -433,7 +433,8 @@ _TRACING_RE = re.compile(r"^\s*TRACING\s+(ON|OFF)\s*;?\s*$", re.IGNORECASE)
 
 
 _CREATE_INDEX_RE = re.compile(
-    r"^\s*CREATE\s+(?P<custom>CUSTOM\s+)?INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+    r"^\s*CREATE\s+(?P<custom>CUSTOM\s+)?INDEX\s+"
+    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
     r"(?:(?P<name>\w+)\s+)?"
     r"ON\s+(?P<table>[\w.]+)\s*\(\s*"
     r"(?:(?P<kind>KEYS|VALUES|ENTRIES|FULL)\s*\(\s*(?P<icol>\w+)\s*\)"
@@ -842,6 +843,23 @@ def _parse_sai_options(
     return fn
 
 
+# the snapshot manifest's index_options map per custom index kind:
+# table → {column → option}
+_OPTION_MANIFEST_KEYS = {"sai": "sai_similarity", "sasi": "sasi_modes"}
+# custom index kind → (DDL class name, WITH OPTIONS key of its option)
+_CUSTOM_INDEX_DDL = {
+    "sai": ("StorageAttachedIndex", "similarity_function"),
+    "sasi": ("org.apache.cassandra.index.sasi.SASIIndex", "mode"),
+}
+
+
+def _index_target(col: str, kind: str) -> str:
+    """An index's target as DDL spells it: ``KEYS(m)`` / ``ENTRIES(m)`` /
+    ``FULL(c)`` for the collection kinds, the bare column otherwise."""
+    return f"{kind.upper()}({col})" if kind in ("keys", "entries", "full") \
+        else col
+
+
 def _parse_sasi_mode(opts: str | None) -> str | None:
     """``mode`` from CREATE CUSTOM INDEX ... WITH OPTIONS on a SASI
     index (`[C* index/sasi/conf/IndexMode, unverified]`): PREFIX (the
@@ -1144,10 +1162,9 @@ _SYSTEM_VIEWS = {
         lambda s: [
             (s._key_ks(tbl) if "." in tbl else "session",
              s._key_bare(tbl) if "." in tbl else tbl, iname,
-             "CUSTOM" if kind == "sai" else "COMPOSITES",
-             (f"{kind.upper()}({col})"
-              if kind in ("keys", "entries", "full") else col))
-            for iname, (tbl, col, kind) in sorted(s.index_names.items())
+             "CUSTOM" if kind in ("sai", "sasi") else "COMPOSITES",
+             _index_target(col, kind))
+            for iname, (tbl, col, kind, _) in sorted(s.index_names.items())
         ],
         TableMeta(
             "system_schema.indexes", ("keyspace_name",),
@@ -1306,25 +1323,8 @@ class CqlSession:
         self.functions: dict[str, tuple[list[str], str]] = {}
         # CQL UDAs: name → fully-expanded fold template with {col} hole
         self.aggregates: dict[str, str] = {}
-        self.indexes: dict[str, set[str]] = {}  # table → value-indexed cols
-        self.key_indexes: dict[str, set[str]] = {}  # table → KEYS-indexed maps
-        self.sai_indexes: dict[str, set[str]] = {}  # table → SAI-indexed cols
-        # table → SASI-indexed cols (CREATE CUSTOM INDEX .. USING
-        # '..SASIIndex'): the only index class admitting LIKE through the
-        # restriction gate (`[C* index/sasi/SASIIndex, unverified]`)
-        self.sasi_indexes: dict[str, set[str]] = {}
-        # table → {col → SASI mode} from WITH OPTIONS = {'mode': ...}:
-        # PREFIX (default) admits LIKE 'pre%' only, CONTAINS admits
-        # prefix/contains/suffix, SPARSE (dense numerics) admits no LIKE
-        # (`[C* index/sasi/conf/IndexMode, unverified]`). Like
-        # sai_similarity, not persisted in snapshots — a restored SASI
-        # index reverts to the PREFIX default (documented convention).
-        self.sasi_modes: dict[str, dict[str, str]] = {}
         # table → {vector col → persisted bucket-layout artifact dir}
         self.sai_vector_index: dict[str, dict[str, str]] = {}
-        # table → {vector col → ANN similarity function} from the SAI
-        # index's WITH OPTIONS (cosine when absent, the reference default)
-        self.sai_similarity: dict[str, dict[str, str]] = {}
         # guardrails (`[C* db/guardrails/Guardrails — the 4.1 framework,
         # unverified]`): name → (warn, fail); shared by reference with
         # every table (see create_table). Empty = all disabled, the
@@ -1332,11 +1332,13 @@ class CqlSession:
         # via pop_warnings() (the protocol's warning frame).
         self.guardrails: dict[str, tuple] = {}
         self.client_warnings: list[str] = []
-        self.entry_indexes: dict[str, set[str]] = {}  # table → ENTRIES maps
-        self.full_indexes: dict[str, set[str]] = {}  # table → FULL frozen
-        # name → (table, col, kind), kind in {"values","keys","entries",
-        # "full","sai"}
-        self.index_names: dict[str, tuple[str, str, str]] = {}
+        # the index catalog, the only index-definition state: name →
+        # (table, column, kind, option), kind in {"values", "keys",
+        # "entries", "full", "sai", "sasi"}; option is the SASI mode or
+        # the SAI similarity function (None = the reference default).
+        # The gate (_meta), the 2i prunes, DESCRIBE, system_schema.indexes
+        # and snapshots all read it (`[C* schema/Indexes, unverified]`).
+        self.index_names: dict[str, tuple[str, str, str, str | None]] = {}
         self.types: dict[str, str] = {}  # UDT name → Spark struct type
         # Cassandra 5 dynamic data masking (`[C* cql3/functions/masking/*,
         # schema/ColumnMetadata masking, unverified]`): table → col →
@@ -1538,20 +1540,50 @@ class CqlSession:
                 ("-" + c) if c in schema.clustering_desc else c
                 for c in schema.clustering
             ),
-            indexed=tuple(sorted(self.indexes.get(key, ()))),
-            indexed_keys=tuple(sorted(self.key_indexes.get(key, ()))),
-            indexed_sai=tuple(sorted(self.sai_indexes.get(key, ()))),
-            indexed_entries=tuple(
-                sorted(self.entry_indexes.get(key, ()))
-            ),
-            indexed_full=tuple(sorted(self.full_indexes.get(key, ()))),
-            indexed_sasi=tuple(sorted(self.sasi_indexes.get(key, ()))),
-            sasi_mode=tuple(sorted(self.sasi_modes.get(key, {}).items())),
+            indexes=self._table_indexes(key),
             statics=tuple(sorted(schema.static)),
-            sai_similarity=tuple(
-                sorted(self.sai_similarity.get(key, {}).items())
-            ),
         )
+
+    def _table_indexes(self, key: str) -> tuple:
+        """The (column, kind, option) entries of table ``key``'s indexes."""
+        return tuple(
+            (c, k, o) for t, c, k, o in self.index_names.values() if t == key
+        )
+
+    def _indexed_cols(self, key: str, kinds: tuple[str, ...]) -> list[str]:
+        """Table ``key``'s columns that carry an index of one of ``kinds``."""
+        return sorted(
+            {c for t, c, k, _ in self.index_names.values()
+             if t == key and k in kinds}
+        )
+
+    def _register_index(
+        self, m: re.Match, tname: str, bare: str, col: str, kind: str,
+        option: str | None,
+    ) -> bool:
+        """File one index in ``index_names`` as (table, column, kind,
+        option); ``bare`` names the table in the default index name. A
+        taken name, or a duplicate target (the same column and kind on
+        the table — `[C* cql3/statements/schema/CreateIndexStatement,
+        unverified]`), is an error, or a no-op under IF NOT EXISTS. The
+        option is not part of the target, so one column holds at most one
+        index of a kind. Returns whether the index was registered."""
+        name = (m.group("name") or f"{bare}_{col}_idx").lower()
+        dup = next(
+            (n for n, (t, c, k, _) in self.index_names.items()
+             if (t, c, k) == (tname, col, kind)),
+            None,
+        )
+        if name in self.index_names or dup is not None:
+            if m.group("ine"):
+                return False
+            if name in self.index_names:
+                raise CQLError(f"index {name!r} already exists")
+            raise CQLError(
+                f"index {name!r} is a duplicate of existing index {dup!r}"
+            )
+        self.index_names[name] = (tname, col, kind, option)
+        return True
 
     def register_trigger_class(self, name: str, fn) -> None:
         """Install an ITrigger implementation under ``name`` (the
@@ -1674,37 +1706,25 @@ class CqlSession:
                 and col not in s.clustering
             ):
                 raise CQLError(f"unknown column {col!r} in {s.name!r}")
-            name = (m.group("name") or f"{s.name}_{col}_idx").lower()
-            if name in self.index_names:
-                raise CQLError(f"index {name!r} already exists")
+            typ = (s.regular | s.static).get(col, "")
             if is_sasi:
                 # SASI indexes scalar (text/numeric) columns only — the
                 # reference never supported collections under SASI
-                if parse_coll_type((s.regular | s.static).get(col, "")):
+                if parse_coll_type(typ):
                     raise CQLError(
                         "SASI does not support collection columns "
                         f"({col!r}); use SAI or a 2i kind index"
                     )
-                self.sasi_indexes.setdefault(tname, set()).add(col)
-                self.index_names[name] = (tname, col, "sasi")
-                mode = _parse_sasi_mode(m.group("opts"))
-                if mode:
-                    self.sasi_modes.setdefault(tname, {})[col] = mode
-                return
-            self.sai_indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "sai")
-            # vector<T, n> maps to list<T> in the session schema; the
-            # float/double element bound is the vector-typed subset
-            typ = (s.regular | s.static).get(col, "")
-            fn = _parse_sai_options(
-                m.group("opts"),
-                col,
-                bool(re.match(r"(list|array)<(float|double)", typ)),
-            )
-            if fn:
-                self.sai_similarity.setdefault(tname, {})[col] = fn
-            return
-        if col in s.partition_cols:
+                kind, opt = "sasi", _parse_sasi_mode(m.group("opts"))
+            else:
+                # vector<T, n> maps to list<T> in the session schema; the
+                # float/double element bound is the vector-typed subset
+                kind, opt = "sai", _parse_sai_options(
+                    m.group("opts"),
+                    col,
+                    bool(re.match(r"(list|array)<(float|double)", typ)),
+                )
+        elif col in s.partition_cols:
             # a COMPONENT of a composite partition key is indexable
             # (`[C* cql3/statements/CreateIndexStatement — rejects only
             # the sole partition-key column, unverified]`); the gate
@@ -1721,12 +1741,16 @@ class CqlSession:
                     "partition-key component indexes take a plain "
                     "column target"
                 )
-            name = (m.group("name") or f"{s.name}_{col}_idx").lower()
-            if name in self.index_names:
-                raise CQLError(f"index {name!r} already exists")
-            self.indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "values")
-            return
+            kind, opt = "values", None
+        else:
+            kind, opt = self._check_2i_target(s, col, kind), None
+        self._register_index(m, tname, s.name, col, kind, opt)
+
+    @staticmethod
+    def _check_2i_target(s, col: str, kind: str) -> str:
+        """The registry kind of a plain (non-custom) index ``kind(col)``
+        on a regular, static or clustering column of schema ``s``,
+        after the reference's target checks."""
         if (
             col not in s.regular
             and col not in s.static
@@ -1756,21 +1780,7 @@ class CqlSession:
             raise CQLError(
                 f"VALUES() index needs a collection column, {col!r} is not one"
             )
-        name = (m.group("name") or f"{s.name}_{col}_idx").lower()
-        if name in self.index_names:
-            raise CQLError(f"index {name!r} already exists")
-        if kind == "KEYS":
-            self.key_indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "keys")
-        elif kind == "ENTRIES":
-            self.entry_indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "entries")
-        elif kind == "FULL":
-            self.full_indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "full")
-        else:
-            self.indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "values")
+        return (kind or "values").lower()
 
     def _create_catalog_index(self, m: re.Match, tname: str) -> None:
         """CREATE CUSTOM INDEX on a CATALOG (parquet-corpus) table — the
@@ -1815,32 +1825,25 @@ class CqlSession:
             raise CQLError(f"unknown column {col!r} in {tname!r}")
         if col in meta.partition_key:
             raise CQLError(f"cannot index partition key column {col!r}")
-        name = (m.group("name") or f"{tname}_{col}_idx").lower()
-        if name in self.index_names:
-            raise CQLError(f"index {name!r} already exists")
-        dtypes = {c.lower(): t for c, t in df.dtypes}
+        typ = {c.lower(): t for c, t in df.dtypes}.get(col, "")
         if "sasi" in using:
             # SASI on a corpus text/numeric column: registers the LIKE-
             # admitting kind; no persisted artifact (SASI's value is the
             # gate relaxation — the scan strategy stays Spark's)
-            if dtypes.get(col, "").startswith(("array", "map", "struct")):
+            if typ.startswith(("array", "map", "struct")):
                 raise CQLError(
                     f"SASI does not support collection columns ({col!r})"
                 )
-            self.sasi_indexes.setdefault(tname, set()).add(col)
-            self.index_names[name] = (tname, col, "sasi")
-            mode = _parse_sasi_mode(m.group("opts"))
-            if mode:
-                self.sasi_modes.setdefault(tname, {})[col] = mode
-            return
-        self.sai_indexes.setdefault(tname, set()).add(col)
-        self.index_names[name] = (tname, col, "sai")
-        fn = _parse_sai_options(
-            m.group("opts"), col, dtypes.get(col, "").startswith("array")
-        )
-        if fn:
-            self.sai_similarity.setdefault(tname, {})[col] = fn
-        if dtypes.get(col, "").startswith("array"):
+            kind, opt = "sasi", _parse_sasi_mode(m.group("opts"))
+        else:
+            kind, opt = "sai", _parse_sai_options(
+                m.group("opts"), col, typ.startswith("array")
+            )
+        if (
+            self._register_index(m, tname, tname, col, kind, opt)
+            and kind == "sai"
+            and typ.startswith("array")
+        ):
             # vector column: build the persisted SAI artifact NOW (the
             # reference builds SAI at index DDL time) — later ANN probes
             # scan only their buckets' partitions instead of recomputing
@@ -1967,9 +1970,9 @@ class CqlSession:
             per_col.append(vals)
         return [SEP.join(p) for p in product(*per_col)]
 
-    def _read_frame(self, tname: str, stmt: str, r=None) -> DataFrame:
-        """The rows a SELECT on session table ``tname`` reads (``r`` is
-        its analysed WHERE). When the
+    def _read_frame(self, tname: str, sel) -> DataFrame:
+        """The rows the parsed SELECT ``sel`` on session table ``tname``
+        reads. When the
         statement's partitions are known — pinned by the WHERE
         (:meth:`_pinned_pks`) or the candidates of a 2i probe — they
         come from ``CqlTable.partition_frame``: a driver-side reconcile
@@ -1988,6 +1991,7 @@ class CqlSession:
         stats; a probe past the table's ``index_probe_collect_cap``
         returns None and the read scans."""
         t = self.tables[tname]
+        r = sel.restrictions
         pks = self._pinned_pks(tname, r)
         if pks is None and r is not None and "in" not in r.words:
             # an indexed conjunct prunes only a pure conjunction without
@@ -2003,7 +2007,7 @@ class CqlSession:
                     break
         if pks is None:
             return t.snapshot()
-        df = t.partition_frame(pks, shadows=reads_cell_metadata(stmt))
+        df = t.partition_frame(pks, shadows=reads_cell_metadata(sel))
         if self._trace_acts is not None:
             self._trace_acts.extend(t.read_trace)
         return df
@@ -2025,13 +2029,8 @@ class CqlSession:
             parse_coll_type,
         )
 
-        eq_cols = (
-            set(self.indexes.get(tname, ()))
-            | set(self.sai_indexes.get(tname, ()))
-            | set(self.sasi_indexes.get(tname, ()))
-        )
         schema = self.tables[tname].schema
-        for col in sorted(eq_cols):
+        for col in self._indexed_cols(tname, ("values", "sai", "sasi")):
             if index_probe_type(schema, col) is None:
                 continue
             typ = schema.regular.get(col) or schema.static.get(col) or ""
@@ -2055,7 +2054,7 @@ class CqlSession:
         patterns with '_' wildcards fall back to the full-scan filter
         (correct, just unaccelerated)."""
         schema = self.tables[tname].schema
-        for col in sorted(self.sasi_indexes.get(tname, ())):
+        for col in self._indexed_cols(tname, ("sasi",)):
             typ = schema.regular.get(col) or schema.static.get(col) or ""
             if typ != "string":
                 continue
@@ -2079,11 +2078,8 @@ class CqlSession:
 
         from cassandra_spark.cql_dml import index_range_type
 
-        sai_cols = set(self.sai_indexes.get(tname, ())) | set(
-            self.sasi_indexes.get(tname, ())
-        )
         schema = self.tables[tname].schema
-        for col in sorted(sai_cols):
+        for col in self._indexed_cols(tname, ("sai", "sasi")):
             if index_range_type(schema, col) is None:
                 continue
             lo = hi = None  # (Decimal, literal str, inclusive)
@@ -2127,11 +2123,8 @@ class CqlSession:
         indexed it, else None: SELECT compilation must see the session's
         index flags (e.g. SAI → ANN probe routing), which the static
         Catalog metadata lacks."""
-        indexed = (
-            set(self.indexes) | set(self.key_indexes)
-            | set(self.sai_indexes) | set(self.sasi_indexes)
-        )
-        if self.sf_dir is None or tname not in indexed:
+        indexes = self._table_indexes(tname)
+        if self.sf_dir is None or not indexes:
             return None
         import dataclasses
 
@@ -2143,23 +2136,11 @@ class CqlSession:
         except KeyError:
             return None
 
-        def merged(field: str, registry: dict) -> tuple:
-            return tuple(
-                sorted(set(getattr(meta, field)) | registry.get(tname, set()))
-            )
-
         return df, dataclasses.replace(
             meta,
-            indexed=merged("indexed", self.indexes),
-            indexed_keys=merged("indexed_keys", self.key_indexes),
-            indexed_sai=merged("indexed_sai", self.sai_indexes),
-            indexed_sasi=merged("indexed_sasi", self.sasi_indexes),
-            sasi_mode=tuple(sorted(self.sasi_modes.get(tname, {}).items())),
+            indexes=meta.indexes + indexes,
             vector_index=tuple(
                 sorted(self.sai_vector_index.get(tname, {}).items())
-            ),
-            sai_similarity=tuple(
-                sorted(self.sai_similarity.get(tname, {}).items())
             ),
         )
 
@@ -2242,12 +2223,10 @@ class CqlSession:
                 raise CQLError(f"unknown column {src!r} in {s.name!r}")
             if dst in s.regular or dst in s.static or dst in s.key_cols:
                 raise CQLError(f"column {dst!r} already exists")
-            for idx in (
-                self.indexes, self.key_indexes, self.entry_indexes,
-                self.full_indexes, self.sai_indexes, self.sasi_indexes,
+            if any(
+                (t, c) == (key, src) for t, c, *_ in self.index_names.values()
             ):
-                if src in idx.get(key, set()):
-                    raise CQLError(f"cannot rename indexed column {src!r}")
+                raise CQLError(f"cannot rename indexed column {src!r}")
             if any(v[0] == key for v in self.mat_views.values()):
                 raise CQLError(
                     "cannot rename a column on a table with "
@@ -2341,12 +2320,6 @@ class CqlSession:
         )
         s.dropped[col] = [drop_ts, typ, was_static]
         table.drop_column_cells(col, horizon_us=drop_ts)
-        self.indexes.get(key, set()).discard(col)
-        self.key_indexes.get(key, set()).discard(col)
-        self.sai_indexes.get(key, set()).discard(col)
-        self.sasi_indexes.get(key, set()).discard(col)
-        self.entry_indexes.get(key, set()).discard(col)
-        self.full_indexes.get(key, set()).discard(col)
         self.index_names = {
             n: v
             for n, v in self.index_names.items()
@@ -3525,12 +3498,6 @@ class CqlSession:
             self.triggers.pop(name, None)
             self.masks.pop(name, None)
             self.unmasked.discard(name)
-            self.indexes.pop(name, None)
-            self.key_indexes.pop(name, None)
-            self.sai_indexes.pop(name, None)
-            self.sasi_indexes.pop(name, None)
-            self.entry_indexes.pop(name, None)
-            self.full_indexes.pop(name, None)
             self.index_names = {
                 n: v for n, v in self.index_names.items() if v[0] != name
             }
@@ -3546,19 +3513,7 @@ class CqlSession:
                 raise CQLError(f"unknown index {name!r}")
             # the reference requires ALTER on the indexed table
             self._check_perm("ALTER", self.index_names[name][0])
-            t, c, kind = self.index_names.pop(name)
-            target = {
-                "keys": self.key_indexes,
-                "sai": self.sai_indexes,
-                "sasi": self.sasi_indexes,
-                "entries": self.entry_indexes,
-                "full": self.full_indexes,
-            }.get(kind, self.indexes)
-            target.get(t, set()).discard(c)
-            if kind == "sai":
-                self.sai_similarity.get(t, {}).pop(c, None)
-            if kind == "sasi":
-                self.sasi_modes.get(t, {}).pop(c, None)
+            del self.index_names[name]
             return None
         if head.startswith("DROP FUNCTIO"):
             dm = _DROP_FUNCTION_RE.match(stmt)
@@ -3700,11 +3655,19 @@ class CqlSession:
     def _run_select(self, stmt: str) -> DataFrame | bool | None:
         """SELECT: frame only the FROM target, then compile."""
         snapshots = {}
+        # the statement is parsed once here: its FROM target, and its
+        # WHERE analysed for the guardrails, the pinned read and the
+        # index prunes; a statement the parser rejects fails in
+        # cql_select below
+        try:
+            sel = _parse(stmt)
+        except CQLError:
+            sel = None
+        key = None
         # only the FROM target is built: a write to table A must not
         # make a read of table B rebuild A's snapshot plan
-        fm_ = re.search(r"\bFROM\s+([\w.]+)", stmt, re.IGNORECASE)
-        if fm_:
-            name = fm_.group(1).lower()
+        if sel is not None:
+            name = sel.table
             key = self._resolve(name)
             if (
                 "." in name
@@ -3715,22 +3678,13 @@ class CqlSession:
                 # an explicitly-qualified name must exist under that
                 # keyspace (catalog tables are keyspace-less and
                 # always addressed bare)
-                raise CQLError(f"unknown table {fm_.group(1)!r}")
-            # the statement's WHERE is analysed once here for the
-            # guardrails, the pinned read and the index prunes; a
-            # statement the parser rejects fails in cql_select below
-            try:
-                sel = _parse(stmt)
-            except CQLError:
-                sel = None
+                raise CQLError(f"unknown table {name!r}")
             self._check_select_guardrails(sel, key)
             entry = None
             if key in self.tables:
                 self._check_perm("SELECT", key)
                 entry = (
-                    self._read_frame(
-                        key, stmt, sel.restrictions if sel else None
-                    ),
+                    self._read_frame(key, sel),
                     self._meta(self.tables[key].schema, key),
                 )
             elif key in self.mat_views:
@@ -3751,7 +3705,7 @@ class CqlSession:
                 self._expand_udfs(self._expand_udas(stmt)),
                 tables=snapshots,
             )
-            return self._apply_masks(stmt, df)
+            return self._apply_masks(key, df)
         except CQLError:
             raise
         except Exception as exc:
@@ -3904,6 +3858,14 @@ class CqlSession:
                 for n, e in bm["tables"].items()
             }
         os.makedirs(out_dir, exist_ok=True)
+
+        def options(kind: str) -> dict:
+            out: dict = {}
+            for t, c, k, o in self.index_names.values():
+                if k == kind and o is not None:
+                    out.setdefault(t, {})[c] = o
+            return out
+
         manifest: dict = {
             "types": self.types,
             "functions": {
@@ -3912,18 +3874,14 @@ class CqlSession:
             "aggregates": self.aggregates,
             "masks": self.masks,
             "indexes": {
-                n: list(v) for n, v in self.index_names.items()
+                n: [t, c, k] for n, (t, c, k, _) in self.index_names.items()
             },
             # custom-index options (round 12): SAI ANN similarity and
             # SASI mode round-trip through snapshots — a restored
             # CONTAINS-mode index must keep admitting infix LIKE
             "index_options": {
-                "sai_similarity": {
-                    t: dict(m) for t, m in self.sai_similarity.items() if m
-                },
-                "sasi_modes": {
-                    t: dict(m) for t, m in self.sasi_modes.items() if m
-                },
+                key: options(kind)
+                for kind, key in _OPTION_MANIFEST_KEYS.items()
             },
             "keyspaces": self.keyspaces,
             "table_keyspace": {
@@ -4189,7 +4147,13 @@ class CqlSession:
             t._clock, t._seq = st["clock"], st["seq"]
             t._max_wt, t._seg_counter = st["max_wt"], st["seg_counter"]
             t._pos, t._neg = st["pos"], st["neg"]
+        # custom-index options (absent in pre-round-12 manifests: those
+        # indexes revert to the defaults, the documented old behavior)
+        opts = manifest.get("index_options", {})
         for iname, (tbl, col, kind) in manifest["indexes"].items():
+            opt = opts.get(_OPTION_MANIFEST_KEYS.get(kind), {}).get(
+                tbl, {}
+            ).get(col)
             if "." not in tbl and tbl in restored_tags:
                 # pre-round-11 manifests key indexes by BARE table name
                 # while the live registries are qualified: qualify via
@@ -4200,42 +4164,20 @@ class CqlSession:
             elif "." not in tbl and f"{self.current_ks or 'session'}.{tbl}" \
                     in self.tables:
                 tbl = f"{self.current_ks or 'session'}.{tbl}"
-            self.index_names[iname] = (tbl, col, kind)
-            target = {
-                "keys": self.key_indexes,
-                "sai": self.sai_indexes,
-                "sasi": self.sasi_indexes,
-                "entries": self.entry_indexes,
-                "full": self.full_indexes,
-            }.get(kind, self.indexes)
-            target.setdefault(tbl, set()).add(col)
-        # custom-index options (absent in pre-round-12 manifests: those
-        # indexes revert to the defaults, the documented old behavior)
-        opts = manifest.get("index_options", {})
-        for t, m in opts.get("sai_similarity", {}).items():
-            self.sai_similarity.setdefault(t, {}).update(m)
-        for t, m in opts.get("sasi_modes", {}).items():
-            self.sasi_modes.setdefault(t, {}).update(m)
+            self.index_names[iname] = (tbl, col, kind, opt)
 
-    def _apply_masks(self, stmt: str, df):
+    def _apply_masks(self, key: str | None, df):
         """Rewrite plainly-projected masked columns of the SELECT result
-        with their attached mask (skipped when this session holds UNMASK on
-        the table). Post-compilation application means WHERE ran on clear
-        values — the reference's documented behavior. Pinned simplification:
-        a masked column that only appears aliased or inside an aggregate is
-        returned as computed (the reference masks those selectors too)."""
-        fm = re.search(r"\bFROM\s+([\w.]+)", stmt, re.IGNORECASE)
-        if not fm:
-            return df
-        try:
-            # qualified names (ks.table) must land on the same registry key
-            # the bare name does — otherwise SELECT ... FROM ks.t would read
-            # masked columns in the clear (round-6 ADVICE, mask bypass)
-            t = self._resolve(fm.group(1))
-        except CQLError:
-            return df
-        masks = self.masks.get(t)
-        if not masks or t in self.unmasked:
+        on registry key ``key`` (the resolved FROM target, so ks.t and
+        the bare t read the same masks) with their attached mask
+        (skipped when this session holds UNMASK on the table).
+        Post-compilation application means WHERE ran on clear values —
+        the reference's documented behavior. Pinned simplification: a
+        masked column that only appears aliased or inside an aggregate
+        is returned as computed (the reference masks those selectors
+        too)."""
+        masks = self.masks.get(key)
+        if not masks or key in self.unmasked:
             return df
         from cassandra_spark.cql import _rewrite_masks, _schema_of
 
@@ -4449,41 +4391,21 @@ class CqlSession:
             tks = self._key_ks(name)
             rows = [(tks, "table", self._key_bare(name),
                      self._table_ddl(name))]
-            for iname, (tbl, col, kind) in sorted(self.index_names.items()):
-                if tbl == name:
-                    target = (
-                        f"{kind.upper()}({col})"
-                        if kind in ("keys", "entries", "full")
-                        else col
-                    )
-                    custom = {
-                        "sai": " USING 'StorageAttachedIndex'",
-                        "sasi": (
-                            " USING "
-                            "'org.apache.cassandra.index.sasi.SASIIndex'"
-                        ),
-                    }.get(kind, "")
-                    # custom-index options re-emit so the DDL re-parses
-                    # to the same semantics (SASI mode bounds LIKE
-                    # shapes; SAI similarity picks the ANN ranking)
-                    if kind == "sasi":
-                        mode = self.sasi_modes.get(tbl, {}).get(col)
-                        if mode:
-                            custom += (
-                                f" WITH OPTIONS = {{'mode': '{mode}'}}"
-                            )
-                    elif kind == "sai":
-                        fn = self.sai_similarity.get(tbl, {}).get(col)
-                        if fn:
-                            custom += (
-                                " WITH OPTIONS = "
-                                f"{{'similarity_function': '{fn}'}}"
-                            )
-                    rows.append(
-                        (tks, "index", iname,
-                         f"CREATE {'CUSTOM ' if custom else ''}INDEX {iname} "
-                         f"ON {name} ({target}){custom};")
-                    )
+            for iname, (tbl, col, kind, opt) in sorted(
+                self.index_names.items()
+            ):
+                if tbl != name:
+                    continue
+                ddl = f"INDEX {iname} ON {name} ({_index_target(col, kind)})"
+                if kind in _CUSTOM_INDEX_DDL:
+                    # the option re-emits so the DDL re-parses to the
+                    # same semantics (SASI mode bounds LIKE shapes; SAI
+                    # similarity picks the ANN ranking)
+                    cls, opt_name = _CUSTOM_INDEX_DDL[kind]
+                    ddl = f"CUSTOM {ddl} USING '{cls}'"
+                    if opt:
+                        ddl += f" WITH OPTIONS = {{'{opt_name}': '{opt}'}}"
+                rows.append((tks, "index", iname, f"CREATE {ddl};"))
         else:  # KEYSPACE
             rows = [
                 ("session", "type", n,

@@ -358,7 +358,7 @@ def test_create_index_rejections(sess):
     # clustering columns ARE indexable (reference-faithful since r9);
     # the index admits a partition-free equality through the gate
     sess.execute("CREATE INDEX ON msgs (posted)")
-    assert "posted" in sess.indexes.get("session.msgs", set())
+    assert ("session.msgs", "posted", "values", None) in sess.index_names.values()
     with pytest.raises(CQLError, match="unknown column"):
         sess.execute("CREATE INDEX ON msgs (nope)")
     with pytest.raises(CQLError, match="counter"):
@@ -976,9 +976,9 @@ def test_catalog_index_requires_custom_class(spark):
 
 def test_catalog_sai_index_drops_cleanly(spark):
     s = _sai_session(spark)
-    assert "embeddings" in s.sai_indexes
+    assert s.index_names["emb_idx"][:3] == ("embeddings", "embedding", "sai")
     s.execute("DROP INDEX emb_idx")
-    assert not s.sai_indexes.get("embeddings") and not s.sai_indexes.get("session.embeddings")
+    assert not s.index_names
 
 
 def test_size_estimates_virtual_table(spark):
@@ -1185,6 +1185,23 @@ def test_system_schema_full_surface(spark):
         "SELECT * FROM system_schema.functions").count() == 0
 
 
+def test_system_schema_indexes_lists_custom_classes_as_custom(spark):
+    """SAI and SASI indexes are both CUSTOM kind in system_schema.indexes
+    (the reference lists every custom class so)."""
+    s = CqlSession(spark)
+    s.execute("CREATE TABLE sk (k int PRIMARY KEY, v text, n int)")
+    s.execute(
+        "CREATE CUSTOM INDEX sk_v ON sk (v) "
+        "USING 'org.apache.cassandra.index.sasi.SASIIndex'"
+    )
+    s.execute("CREATE CUSTOM INDEX sk_n ON sk (n) USING 'StorageAttachedIndex'")
+    s.execute("CREATE INDEX sk_2i ON sk (v)")
+    rows = s.execute("SELECT * FROM system_schema.indexes").collect()
+    assert {r.index_name: r.kind for r in rows} == {
+        "sk_v": "CUSTOM", "sk_n": "CUSTOM", "sk_2i": "COMPOSITES"
+    }
+
+
 def test_snapshot_restore_keyspace(spark, tmp_path):
     """nodetool-snapshot analogue: consistent image (flush + segment
     copy + manifest), restored into a fresh session with tombstones,
@@ -1210,7 +1227,7 @@ def test_snapshot_restore_keyspace(spark, tmp_path):
     rows = {r.id: r.v for r in s2.execute("SELECT id, v FROM sr_kv").collect()}
     assert set(rows) == {0, 1, 2, 4, 5, 6, 7}       # tombstone kept, 99 absent
     assert set(rows.values()) == {"X"}               # mask restored
-    assert s2.index_names["sr_v"] == ("session.sr_kv", "v", "values")
+    assert s2.index_names["sr_v"] == ("session.sr_kv", "v", "values", None)
     assert s2.execute(
         "SELECT c FROM sr_hits WHERE k = 'a'").collect()[0].c == 5
     # clocks resumed: a new write shadows the restored tombstone era
@@ -1828,7 +1845,7 @@ def test_restore_qualifies_legacy_bare_index_names(spark, tmp_path):
     s2.restore_keyspace(d)
     # the restored index must admit the equality without ALLOW FILTERING
     assert s2.execute("SELECT k FROM it WHERE v = 'a'").count() == 1
-    assert s2.indexes.get("session.it") == {"v"}
+    assert [v[:3] for v in s2.index_names.values()] == [("session.it", "v", "values")]
 
 
 def test_describe_index_ddl_qualified_once(spark):

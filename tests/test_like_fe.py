@@ -194,4 +194,4 @@ def test_index_options_roundtrip_describe_and_snapshot(spark, tmp_path):
     s2.restore_keyspace(d)
     # infix LIKE still admitted after restore (CONTAINS mode survived)
     assert s2.execute("SELECT k FROM io WHERE t LIKE '%ddl%'").count() == 1
-    assert s2.sai_similarity.get("session.io", {}).get("e") == "dot_product"
+    assert s2.index_names["ei"] == ("session.io", "e", "sai", "dot_product")

@@ -39,7 +39,7 @@ def test_component_index_admits_lone_equality(spark):
         ).collect()
     }
     assert got == {(1, 1, 10), (2, 1, 20), (1, 2, 50)}
-    assert s.index_names["pki_region"] == ("session.pki", "region", "values")
+    assert s.index_names["pki_region"] == ("session.pki", "region", "values", None)
     # full-key queries still work as point reads
     got = s.execute(
         "SELECT v FROM pki WHERE region = 'eu' AND bucket = 1 AND ck = 2"

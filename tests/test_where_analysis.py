@@ -194,6 +194,27 @@ def test_projection_literals_are_values(sess, where):
     assert [tuple(r) for r in rows] == [("v", "a,b", "token(q)", "4/2")]
 
 
+def test_select_reads_its_target_and_selectors_from_the_parse(sess):
+    """The FROM target, the table whose masks apply and the cell-metadata
+    selectors come from the parsed statement: a literal spelling
+    ``FROM b`` or ``ttl(x)`` is a value."""
+    rows = sess.execute(
+        "SELECT 'a FROM b' AS z, k FROM tn WHERE k = 'v'"
+    ).collect()
+    assert [tuple(r) for r in rows] == [("a FROM b", "v")]
+    sess.execute("ALTER TABLE tn ALTER v MASKED WITH mask_replace('***')")
+    rows = sess.execute(
+        "SELECT 'x FROM ti' AS z, v FROM tn WHERE k = 'v'"
+    ).collect()
+    assert [tuple(r) for r in rows] == [("x FROM ti", "***")]
+    assert not cql.reads_cell_metadata(
+        cql._parse("SELECT k, v FROM t WHERE k = 'ttl(x)'")
+    )
+    assert cql.reads_cell_metadata(
+        cql._parse("SELECT k, TTL(v) FROM t WHERE k = 'x'")
+    )
+
+
 # --- INSERT JSON into a non-frozen UDT ---------------------------------------
 
 
